@@ -83,6 +83,19 @@ object Registry {
           .withColumn("lat", Grid.unitLat(col(Panel.UnitCol))), args)
     }
 
+  /** Spatial op that appends its result to the input rows (the splag4d
+    * stencil, the spacetime kernel): it runs on the panel with the grid
+    * embedding under internal names, so a panel's own lon/lat columns
+    * pass through untouched, and writes `__out`, which then replaces
+    * `value` in place — no re-join on the panel key.
+    */
+  private def spatialAppendT(f: (DataFrame, Seq[Any]) => DataFrame): Transform =
+    (df, args) => {
+      val gp = df.withColumn("__lon", Grid.unitLon(col(Panel.UnitCol)))
+        .withColumn("__lat", Grid.unitLat(col(Panel.UnitCol)))
+      f(gp, args).withColumn("value", col("__out")).drop("__out", "__lon", "__lat")
+    }
+
   val transforms: Map[String, Transform] = Map(
     // names follow the reference registry (views_2.py function names)
     "identity" -> ((df, _) => df),
@@ -222,10 +235,10 @@ object Registry {
     // would dominate the lag itself at scale. The cache keys on the
     // optimised (time, unit) projection, so dispatches after value
     // transforms still share the direct API's persisted geometry.
-    "splag4d" -> spatialT("splag")((gp, a) =>
-      KernelLag.splag4d(gp, "value", a.numOpt(0).getOrElse(1.0).toInt,
-        a.numOpt(1).getOrElse(1.0).toInt, a.numOpt(2).getOrElse(0.0),
-        a.bool(3, default = false))),
+    "splag4d" -> spatialAppendT((gp, a) =>
+      KernelLag.withSplag4d(gp, Seq("value"), Seq("__out"),
+        a.numOpt(0).getOrElse(1.0).toInt, a.numOpt(1).getOrElse(1.0).toInt,
+        a.numOpt(2).getOrElse(0.0), a.bool(3, default = false), "__lon", "__lat")),
     "splag_country" -> spatialT("splag")((gp, a) => {
       val inner = a.numOpt(0).getOrElse(1.0).toInt
       val width = a.numOpt(1).getOrElse(1.0).toInt
@@ -245,18 +258,19 @@ object Registry {
       FourierLag.fourierLag(gp, "value",
         dimensionality = a.numOpt(0).getOrElse(2.0).toInt,
         embOpt = Some(GeoCache.embedding(gp)))),
-    "spacetime_dist" -> spatialT("stdist")((gp, a) =>
-      SpacetimeDist.spacetimeDistances(gp, "value",
+    "spacetime_dist" -> spatialAppendT((gp, a) =>
+      SpacetimeDist.withSpacetimeDistances(gp, "value",
         a.strOpt(0).getOrElse("distances"), a.numOpt(1).getOrElse(1.0).toInt,
         a.numOpt(2).getOrElse(1.0), a.numOpt(3).getOrElse(0.0),
-        a.numOpt(4).getOrElse(0.0))),
+        a.numOpt(4).getOrElse(0.0), "__lon", "__lat", "__out")),
     // weights-mode shorthand: get_spacetime_distances with
     // return_values='weights' (spacetime_distance.py:7) without the
     // caller spelling the mode string; args are (k, nu, power, thresh)
-    "spacetime_weights" -> spatialT("stdist")((gp, a) =>
-      SpacetimeDist.spacetimeDistances(gp, "value", "weights",
+    "spacetime_weights" -> spatialAppendT((gp, a) =>
+      SpacetimeDist.withSpacetimeDistances(gp, "value", "weights",
         a.numOpt(0).getOrElse(1.0).toInt, a.numOpt(1).getOrElse(1.0),
-        a.numOpt(2).getOrElse(0.0), a.numOpt(3).getOrElse(0.0))),
+        a.numOpt(2).getOrElse(0.0), a.numOpt(3).getOrElse(0.0),
+        "__lon", "__lat", "__out")),
     "temporal_tree_lag" -> outT("treelag")((df, a) =>
       temporal.TreeLag.treeLag(df, "value", a.numOpt(0).getOrElse(0.8),
         a.strOpt(1).getOrElse("uniform"), a.numOpt(2).getOrElse(1.0))),

@@ -1,6 +1,6 @@
 package graft.spatial
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** PRIO-GRID geometry (reference utilities.py:145-216): the global 0.5°
@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * (PG_STRIDE=720, utilities.py:158,167-168). All spatial operators work
   * in (lon, lat) cell coordinates; the reference's centred power-of-two
   * embedding is an FFT/quadtree execution detail, not semantics — the
-  * join formulations here only need cell coordinates.
+  * operators here only need cell coordinates.
   */
 object Grid {
   val PgStride = 720
@@ -51,12 +51,6 @@ object Grid {
       val total = cells.map(_._3).sum
       cells.map { case (dx, dy, w) => (dx, dy, w / total) }
     } else cells
-  }
-
-  def kernelDf(spark: SparkSession, inner: Int, width: Int, power: Double,
-               norm: Boolean): DataFrame = {
-    import spark.implicits._
-    kernelOffsets(inner, width, power, norm).toDF("dx", "dy", "w")
   }
 
   /** The same kernel as a SQL VALUES list `(dx, dy, w)` for the oracle. */

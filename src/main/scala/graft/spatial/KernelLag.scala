@@ -1,8 +1,9 @@
 package graft.spatial
 
 import graft.Panel
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** First/nth-order grid spatial lag — reference get_splag4d
   * (splag4d.py:9-192): per-(month, feature) 2-D convolution of the panel
@@ -10,21 +11,24 @@ import org.apache.spark.sql.functions._
   * optional normalisation), zero-padded at the grid boundary
   * (ndimage.convolve mode='constant' cval=0, splag4d.py:140).
   *
-  * Spark-first formulation: convolution-as-join. The kernel is a tiny
-  * broadcast offsets table (dx, dy, w); each cell joins its offset
-  * neighbours on exact (lon+dx, lat+dy) coordinates — joining in
-  * coordinate space (not pgid arithmetic) so grid-row wraparound can't
-  * manufacture false neighbours — and aggregates `sum(value·w)`.
-  * Missing neighbours contribute nothing, which is exactly the zero
-  * padding. Cost: |panel| × |kernel| rows through one hash aggregation —
-  * no N² pairs, no dense tensor; scales linearly in data and kernel
-  * size, and Catalyst broadcasts the kernel automatically.
+  * Spark-first formulation: a per-month stencil behind ONE hash
+  * exchange on month_id (`groupBy(month).as[...].flatMapGroups`, the
+  * [[FourierLag]] idiom). Each month's cells are indexed by their exact
+  * (lon, lat) coordinate, and every cell sums `value·w` over the kernel
+  * offsets ([[Grid.kernelOffsets]]) found in that index — coordinate
+  * space, not pgid arithmetic, so grid-row wraparound can't manufacture
+  * false neighbours. A missing neighbour contributes nothing (the zero
+  * padding), a null value is skipped, and a cell whose sum is NaN or
+  * that has no non-null neighbour gets 0.0. Cost: |panel| × |kernel|
+  * hash probes inside the month's task — no join, no aggregation
+  * exchange, no dense tensor.
   */
 object KernelLag {
 
   /** @param lonCol/latCol cell coordinates of each unit
     * @param out output column (reference returns input names unchanged;
     *            we name explicitly for composability)
+    * @return (month_id, unit_id, out)
     */
   def splag4d(panel: DataFrame, valueCol: String,
               inner: Int, width: Int, power: Double, norm: Boolean,
@@ -33,43 +37,72 @@ object KernelLag {
     splag4dMulti(panel, Seq(valueCol), inner, width, power, norm, lonCol, latCol)
       .withColumnRenamed(s"splag_$valueCol", out)
 
-  /** Multi-feature form: all features convolved in ONE pass — the same
-    * join produces one weighted sum per feature (the reference loops
-    * features over tensor slices, splag4d.py:134-140; here they share
-    * the join and the aggregation hash table). Outputs `splag_<c>`.
+  /** Multi-feature form: all features convolved in ONE pass over each
+    * month's index (the reference loops features over tensor slices,
+    * splag4d.py:134-140). Outputs (month_id, unit_id, `splag_<c>`…).
     */
   def splag4dMulti(panel: DataFrame, valueCols: Seq[String],
                    inner: Int, width: Int, power: Double, norm: Boolean,
                    lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
-    val spark = panel.sparkSession
     val T = Panel.TimeCol
     val U = Panel.UnitCol
-    val kernel = Grid.kernelDf(spark, inner, width, power, norm)
-
+    val outs = valueCols.map(c => s"splag_$c")
+    // only the columns the stencil reads cross the month exchange
     val cells = panel.select(
       col(T) +: col(U) +: col(lonCol) +: col(latCol) +: valueCols.map(col): _*)
-    // Every (target cell, kernel offset) pair, keyed by the neighbour
-    // coordinate it needs.
-    val wanted = cells.select(col(T), col(U), col(lonCol), col(latCol))
-      .crossJoin(broadcast(kernel))
-      .select(col(T), col(U),
-        (col(lonCol) + col("dx")).as("n_lon"),
-        (col(latCol) + col("dy")).as("n_lat"),
-        col("w"))
-    val neigh = cells.select(
-      col(T).as("n_t") +: col(lonCol).as("n_lon") +: col(latCol).as("n_lat") +:
-        valueCols.map(c => col(c).as(s"n_$c")): _*)
-    val aggs = valueCols.map(c => sum(col(s"n_$c") * col("w")).as(s"splag_$c"))
-    val contrib = wanted.join(neigh,
-      wanted(T) === neigh("n_t") &&
-        wanted("n_lon") === neigh("n_lon") && wanted("n_lat") === neigh("n_lat"),
-      "inner")
-      .groupBy(wanted(T), wanted(U))
-      .agg(aggs.head, aggs.tail: _*)
-    // Dense-output contract (splag4d 'from_product' reindex): every input
-    // cell appears, cells with no in-range neighbours get 0.
-    panel.select(col(T), col(U))
-      .join(contrib, Seq(T, U), "left")
-      .na.fill(0.0, valueCols.map(c => s"splag_$c"))
+    withSplag4d(cells, valueCols, outs, inner, width, power, norm, lonCol, latCol)
+      .select(col(T) +: col(U) +: outs.map(col): _*)
+  }
+
+  /** The stencil itself: every input row comes back with one
+    * non-null double column `outs(i)` appended per `valueCols(i)`.
+    */
+  def withSplag4d(panel: DataFrame, valueCols: Seq[String], outs: Seq[String],
+                  inner: Int, width: Int, power: Double, norm: Boolean,
+                  lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
+    require(valueCols.size == outs.size, "one output column per value column")
+    val T = Panel.TimeCol
+    val schema = panel.schema
+    val lonI = schema.fieldIndex(lonCol)
+    val latI = schema.fieldIndex(latCol)
+    val vI = valueCols.map(schema.fieldIndex).toArray
+    val nf = vI.length
+    val kernel = Grid.kernelOffsets(inner, width, power, norm).toArray
+    val outSchema = StructType(schema.fields ++
+      outs.map(StructField(_, DoubleType, nullable = false)))
+    def num(r: Row, i: Int): Double = r.get(i).asInstanceOf[Number].doubleValue
+
+    panel.groupBy(col(T))
+      .as(Encoders.row(StructType(Seq(schema(T)))), Encoders.row(schema))
+      .flatMapGroups { (month: Row, rows: Iterator[Row]) =>
+        val cells = rows.toArray
+        // (lon, lat) → this month's cells there (a well-formed panel has
+        // one; duplicates all contribute, as rows of a join would)
+        val at = cells.indices
+          .filter(i => !cells(i).isNullAt(lonI) && !cells(i).isNullAt(latI))
+          .groupBy(i => (num(cells(i), lonI), num(cells(i), latI)))
+        cells.iterator.map { r =>
+          val sums = new Array[Double](nf)
+          val seen = new Array[Boolean](nf)
+          if (!month.isNullAt(0) && !r.isNullAt(lonI) && !r.isNullAt(latI)) {
+            val lon = num(r, lonI)
+            val lat = num(r, latI)
+            kernel.foreach { case (dx, dy, w) =>
+              at.get((lon + dx, lat + dy)).foreach(_.foreach { j =>
+                var f = 0
+                while (f < nf) {
+                  if (!cells(j).isNullAt(vI(f))) {
+                    sums(f) += num(cells(j), vI(f)) * w
+                    seen(f) = true
+                  }
+                  f += 1
+                }
+              })
+            }
+          }
+          Row.fromSeq(r.toSeq ++
+            sums.indices.map(f => if (!seen(f) || sums(f).isNaN) 0.0 else sums(f)))
+        }
+      }(Encoders.row(outSchema))
   }
 }

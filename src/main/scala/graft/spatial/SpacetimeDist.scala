@@ -1,9 +1,10 @@
 package graft.spatial
 
 import graft.Panel
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Spacetime k-nearest-event distances — reference
   * get_spacetime_distances (spacetime_distance.py:7-211): for every
@@ -15,20 +16,22 @@ import org.apache.spark.sql.functions._
   * when d = 0). Cells with no events yet get the 999.0 sentinel
   * (spacetime_distance.py:151).
   *
-  * Spark-first plan, tuned for scale (two-stage, broadcast O(E)):
-  *  1. Per (unit, event-month) spatial top-k against the broadcast RAW
-  *     event set — within one event-month the time term is constant, so
-  *     only the k spatially-nearest events of that month can ever reach
-  *     the unit's global top-k at any t (exact pruning). The broadcast
-  *     never depends on month count; the product streams into bounded
-  *     partial aggregation, never across a shuffle.
-  *  2. The as-of predicate `e_t <= t` rides a shuffled EQUI-join keyed
-  *     by unit (k·event-months candidate rows per unit), reduced
-  *     map-side by a second bounded top-k (or codegen'd min for k=1
-  *     distances).
-  *  - Ties in distance break by (event month, event unit); the
-  *    reference's KD-tree tie order is arbitrary, so determinism is our
-  *    choice.
+  * Two execution paths, chosen by the event count (see [[chooseBand]]):
+  *  - KERNEL (at most [[AutoBandEvents]] events): the filtered event set
+  *    is collected once and broadcast, and ONE hash exchange on unit_id
+  *    feeds a per-unit local top-k (REPOSE-style: the search runs inside
+  *    the partition, not through distributed joins). Per unit, stage 1
+  *    keeps the k spatially-nearest events of every event month —
+  *    within one event-month the time term is constant, so only those
+  *    can ever reach the unit's top-k at any later t (an exact pruning);
+  *    stage 2 ranks, for each of the unit's months t, the stage-1
+  *    candidates with e_t <= t by their full spacetime distance.
+  *  - BANDED (more events, or an explicit [[Band]]): ring-bounded
+  *    candidate generation with a per-cell completeness certificate,
+  *    then the as-of top-k as a unit-keyed equi-join into a bounded
+  *    top-k aggregation.
+  *  - Both paths order candidates by (d, e_t, e_u); the reference's
+  *    KD-tree tie order is arbitrary, so determinism is our choice.
   */
 object SpacetimeDist {
 
@@ -92,13 +95,13 @@ object SpacetimeDist {
     require(ring >= 1, "ring must be >= 1")
   }
 
-  /** Event count past which the O(E) broadcast product stops being the
-    * right stage-1 plan and the ring-bounded banded generator takes
-    * over. The broadcast path ships every event to every task and
-    * streams a units×E product into the top-k aggregation — fine while
-    * E is broadcast-sized (tens of MB), a bottleneck when the event
-    * set itself is data-scale. 2M events ≈ 80 MB broadcast at 5
-    * doubles/row — the upper edge of comfortable.
+  /** Event count past which the kernel path stops being the right plan
+    * and the ring-bounded banded generator takes over. The kernel path
+    * collects every event to the driver, broadcasts it to every task
+    * and scans units × E candidates there — fine while E is
+    * broadcast-sized (tens of MB), a bottleneck when the event set
+    * itself is data-scale. 2M events ≈ 80 MB broadcast at 5 primitive
+    * columns — the upper edge of comfortable.
     */
   val AutoBandEvents: Long = 2000000L
 
@@ -119,31 +122,29 @@ object SpacetimeDist {
     banded.orElse(
       if (eventCount > autoBandEvents) Some(DefaultBand) else None)
 
-  /** EAGER on the banded path (ADVICE r15): when the banded generator
-    * dispatches (explicitly or by the event-count auto-dispatch), the
-    * level-0 `pending0.isEmpty` probe runs Spark jobs at PLAN
-    * CONSTRUCTION time — it materializes the persisted ring0 stream
-    * (~(2R+1)²·E rows) and its certificate even if the caller never
-    * consumes the returned DataFrame. Same contract as
-    * [[graft.ops.Ranking.globalCumsum]]: the probe is the deliberate
-    * price of skipping the 3r/9r ladder and the salted fallback at
-    * event-dense scale; callers needing a lazy frame must use the
-    * broadcast path (`autoBandEvents = Long.MaxValue`).
+  /** EAGER on both paths: the dispatch collects the filtered event set
+    * (at most `autoBandEvents + 1` rows) at PLAN CONSTRUCTION time, and
+    * on the banded path (ADVICE r15) the level-0 `pending0.isEmpty`
+    * probe materializes the persisted ring0 stream (~(2R+1)²·E rows)
+    * and its certificate even if the caller never consumes the returned
+    * DataFrame. Same contract as [[graft.ops.Ranking.globalCumsum]]: the
+    * collect is what the kernel path broadcasts, and the probe is the
+    * deliberate price of skipping the 3r/9r ladder and the salted
+    * fallback at event-dense scale.
     *
     * @param monthCap compat quirk: the reference processes only the
     * first 600 months (`times[0:600]`, spacetime_distance.py:127);
     * pass Some(600) to replicate (months beyond the cap keep their
-    * rows but are never computed — they get the 999.0 sentinel).
-    * @param banded Some(Band(...)) swaps the stage-1 O(E)-broadcast
-    * candidate generator for the ring-bounded banded one (identical
-    * results by construction; see [[Band]]). None defers to the
-    * auto-dispatch: the broadcast product is cheaper for sparse event
-    * sets, the band join once event density makes O(units×E) the
-    * bottleneck.
-    * @param autoBandEvents event-count threshold for the automatic
-    * banded dispatch when `banded` is None (one count job over the
-    * filtered event set — negligible next to the candidate product it
-    * sizes). `Long.MaxValue` pins the broadcast path.
+    * rows but are never computed — they get the 999.0 sentinel). The
+    * capped month set is collected eagerly too.
+    * @param banded Some(Band(...)) forces the ring-bounded banded path
+    * (identical results by construction; see [[Band]]) without the
+    * event collect. None defers to the auto-dispatch.
+    * @param autoBandEvents event-count bound of the kernel path when
+    * `banded` is None: more filtered events than this take the banded
+    * path. A bound of Int.MaxValue or more (e.g. `Long.MaxValue`) pins
+    * the kernel path and collects the event set without a limit.
+    * @return (month_id, unit_id, out)
     */
   def spacetimeDistances(panel: DataFrame, valueCol: String,
                          returnValues: String, k: Int, nu: Double, power: Double,
@@ -153,73 +154,240 @@ object SpacetimeDist {
                          monthCap: Option[Int] = None,
                          banded: Option[Band] = None,
                          autoBandEvents: Long = AutoBandEvents): DataFrame = {
-    val spark = panel.sparkSession
+    val T = Panel.TimeCol
+    val U = Panel.UnitCol
+    // only the columns the operator reads cross its exchange
+    val cells = panel.select(col(T), col(U), col(lonCol).as("__lon"),
+      col(latCol).as("__lat"), col(valueCol).as("__v"))
+    withSpacetimeDistances(cells, "__v", returnValues, k, nu, power,
+      eventThreshold, "__lon", "__lat", out, monthCap, banded, autoBandEvents)
+      .select(col(T), col(U), col(out))
+  }
+
+  /** [[spacetimeDistances]] appended to the input rows: every row comes
+    * back with a non-null double column `out`.
+    */
+  def withSpacetimeDistances(panel: DataFrame, valueCol: String,
+                             returnValues: String, k: Int, nu: Double, power: Double,
+                             eventThreshold: Double = 0.0,
+                             lonCol: String = "lon", latCol: String = "lat",
+                             out: String = "stdist",
+                             monthCap: Option[Int] = None,
+                             banded: Option[Band] = None,
+                             autoBandEvents: Long = AutoBandEvents): DataFrame = {
     val T = Panel.TimeCol
     val U = Panel.UnitCol
     require(returnValues == "distances" || returnValues == "weights",
       s"return_values must be 'distances' or 'weights', got $returnValues")
+    require(k >= 1, s"k must be >= 1, got $k")
 
-    // The bounded-buffer aggregate lives in ObjectHashAggregate, whose
-    // default sort-based fallback kicks in at 128 groups — far below a
-    // panel's (month, cell) cardinality. Raise the threshold only if
-    // the session still has the default, so we never clobber an
-    // operator-external tuning choice; sessions built by Bench/Verify
-    // set it explicitly.
+    val months = monthCap.map(cap =>
+      panel.select(col(T)).distinct().orderBy(col(T)).limit(cap))
+    val events = {
+      val ev = panel.filter(col(valueCol) > eventThreshold)
+      months.fold(ev)(m => ev.join(broadcast(m), T, "left_semi"))
+        .select(col(T).as("e_t"), col(lonCol).as("e_lon"),
+          col(latCol).as("e_lat"), col(valueCol).as("e_size"), col(U).as("e_u"))
+    }
+    // explicit request skips the collect; otherwise one bounded collect
+    // of the filtered events both sizes the dispatch and, under the
+    // bound, is the event set the kernel broadcasts
+    val collected: Option[Array[Row]] =
+      if (banded.isDefined) None
+      else {
+        val typed = events
+          .filter(col("e_t").isNotNull && col("e_u").isNotNull &&
+            col("e_lon").isNotNull && col("e_lat").isNotNull)
+          .select(col("e_t").cast("long"), col("e_lon").cast("double"),
+            col("e_lat").cast("double"), col("e_size").cast("double"),
+            col("e_u").cast("long"))
+        val probe =
+          if (autoBandEvents < Int.MaxValue) typed.limit(autoBandEvents.toInt + 1)
+          else typed
+        Some(probe.collect())
+      }
+    chooseBand(collected.fold(0L)(_.length.toLong), banded, autoBandEvents) match {
+      case Some(band) =>
+        val cells = months.fold(panel.select(col(T), col(U)))(m =>
+          panel.select(col(T), col(U)).join(broadcast(m), T, "left_semi"))
+        panel
+          .join(bandedDistances(panel, cells, events, band, returnValues, k, nu,
+            power, lonCol, latCol, out), Seq(T, U), "left")
+          .na.fill(999.0, Seq(out))
+      case None =>
+        val capped = months.map(_.collect().map(_.get(0).asInstanceOf[Number].longValue).toSet)
+        kernel(panel, collected.get, capped, returnValues, k, nu, power,
+          lonCol, latCol, out)
+    }
+  }
+
+  /** The kernel path: per-unit local top-k against the broadcast event
+    * set, behind one hash exchange on unit_id, with no join. `events`
+    * rows are (e_t, e_lon, e_lat, e_size, e_u) as (long, double,
+    * double, double, long). Arithmetic mirrors the banded path's Spark
+    * expressions operation for operation (squared distances through the
+    * ranking, StrictMath.pow as Spark's pow, means summed in rank order,
+    * NaN results folded into the sentinel as `na.fill` does), so both
+    * paths agree bit for bit.
+    */
+  private def kernel(panel: DataFrame, events: Array[Row], capped: Option[Set[Long]],
+                     returnValues: String, k: Int, nu: Double, power: Double,
+                     lonCol: String, latCol: String, out: String): DataFrame = {
+    val T = Panel.TimeCol
+    val U = Panel.UnitCol
+    val byMonth = events.sortBy(_.getLong(0))
+    val ev = panel.sparkSession.sparkContext.broadcast((
+      byMonth.map(_.getLong(0)), byMonth.map(_.getDouble(1)), byMonth.map(_.getDouble(2)),
+      byMonth.map(_.getDouble(3)), byMonth.map(_.getLong(4))))
+    val schema = panel.schema
+    val tI = schema.fieldIndex(T)
+    val lonI = schema.fieldIndex(lonCol)
+    val latI = schema.fieldIndex(latCol)
+    val outSchema = schema.add(StructField(out, DoubleType, nullable = false))
+    val weights = returnValues == "weights"
+    val halfPower = power / 2.0
+    def num(r: Row, i: Int): Double = r.get(i).asInstanceOf[Number].doubleValue
+
+    panel.groupBy(col(U))
+      .as[Row, Row](Encoders.row(StructType(Seq(schema(U)))), Encoders.row(schema))
+      .flatMapGroups { (_: Row, rows: Iterator[Row]) =>
+        val (eT, eLon, eLat, eSize, eU) = ev.value
+        val cells = rows.toArray
+        // one geo row per unit, even if a panel carries inconsistent or
+        // time-varying unit coordinates
+        val geo = cells.head
+        val located = !geo.isNullAt(lonI) && !geo.isNullAt(latI)
+        // stage 1: each event month's k spatially-nearest events
+        // (within a month e_t ties, so the order is (sd², e_u)), as
+        // indices into the event arrays, in ascending month order
+        val cand = scala.collection.mutable.ArrayBuffer.empty[Int]
+        val cSd2 = scala.collection.mutable.ArrayBuffer.empty[Double]
+        if (located) {
+          val lon = num(geo, lonI)
+          val lat = num(geo, latI)
+          val top = new TopBuf(k)
+          var i = 0
+          while (i < eT.length) {
+            top.clear()
+            val month = eT(i)
+            while (i < eT.length && eT(i) == month) {
+              val sdx = (lon - eLon(i)) * 0.5
+              val sdy = (lat - eLat(i)) * 0.5
+              top.offer(sdx * sdx + sdy * sdy, month, eU(i), i)
+              i += 1
+            }
+            var j = 0
+            while (j < top.size) { cand += top.idx(j); cSd2 += top.d(j); j += 1 }
+          }
+        }
+        // stage 2: per month t, the top-k of the candidates with e_t <= t
+        val top = new TopBuf(k)
+        cells.iterator.map { r =>
+          var v = 999.0
+          if (!r.isNullAt(tI) && cand.nonEmpty) {
+            val t = r.get(tI).asInstanceOf[Number].longValue
+            if (capped.forall(_.contains(t))) {
+              top.clear()
+              var j = 0
+              while (j < cand.length && eT(cand(j)) <= t) {
+                val e = cand(j)
+                val dt = (t - eT(e)) * nu
+                top.offer(cSd2(j) + dt * dt, eT(e), eU(e), e)
+                j += 1
+              }
+              if (top.size > 0) {
+                var sum = 0.0
+                j = 0
+                while (j < top.size) {
+                  val d2 = top.d(j)
+                  val size = eSize(top.idx(j))
+                  sum += (if (!weights) math.sqrt(d2)
+                          else if (d2 == 0.0) size
+                          else size / StrictMath.pow(d2, halfPower))
+                  j += 1
+                }
+                // reference fidelity: cKDTree.query pads missing
+                // neighbours with inf when fewer than k events exist
+                // yet, so the distance mean is inf for months with
+                // 0 < count < k (spacetime_distance.py:160-186). The
+                // reference's weights path crashes there (IndexError
+                // swallowed by a bare except, leaving np.empty garbage);
+                // we deliberately return the mean of the available
+                // weights instead (SURVEY §7.3 bug list).
+                val m =
+                  if (!weights && top.size < k) Double.PositiveInfinity
+                  else sum / top.size
+                if (!m.isNaN) v = m
+              }
+            }
+          }
+          Row.fromSeq(r.toSeq :+ v)
+        }
+      }(Encoders.row(outSchema))
+  }
+
+  /** Bounded top-k buffer ordered by (d, e_t, e_u) — the [[TopK]] order —
+    * carrying each entry's event index; insertion-sorted, O(1)
+    * rejection once full.
+    */
+  private final class TopBuf(k: Int) {
+    val d = new Array[Double](k)
+    private val t = new Array[Long](k)
+    private val u = new Array[Long](k)
+    val idx = new Array[Int](k)
+    var size = 0
+    def clear(): Unit = size = 0
+    private def before(d1: Double, t1: Long, u1: Long, j: Int): Boolean = {
+      val c = java.lang.Double.compare(d1, d(j))
+      c < 0 || (c == 0 && (t1 < t(j) || (t1 == t(j) && u1 < u(j))))
+    }
+    def offer(d1: Double, t1: Long, u1: Long, i1: Int): Unit =
+      if (size < k || before(d1, t1, u1, size - 1)) {
+        var j = if (size < k) size else size - 1
+        while (j > 0 && before(d1, t1, u1, j - 1)) {
+          d(j) = d(j - 1); t(j) = t(j - 1); u(j) = u(j - 1); idx(j) = idx(j - 1)
+          j -= 1
+        }
+        d(j) = d1; t(j) = t1; u(j) = u1; idx(j) = i1
+        if (size < k) size += 1
+      }
+  }
+
+  /** The banded path's (month_id, unit_id, out) for the cells that have
+    * at least one past event; the caller left-joins it onto the panel.
+    * Its bounded-buffer aggregates live in ObjectHashAggregate, whose
+    * default sort-based fallback kicks in at 128 groups — far below a
+    * panel's (month, cell) cardinality — so this path (and only this
+    * path) raises `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
+    * for the session, and only when it still has the default, so an
+    * operator-external tuning choice is never clobbered.
+    */
+  private def bandedDistances(panel: DataFrame, cells: DataFrame, events: DataFrame,
+                              band: Band, returnValues: String, k: Int, nu: Double,
+                              power: Double, lonCol: String, latCol: String,
+                              out: String): DataFrame = {
+    val spark = panel.sparkSession
+    val T = Panel.TimeCol
+    val U = Panel.UnitCol
     val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     if (spark.conf.getOption(key).forall(_ == "128"))
       spark.conf.set(key, "4000000")
 
-    val allCells = panel.select(col(T), col(U))
-    val (cells, events) = monthCap match {
-      case Some(cap) =>
-        val months = panel.select(col(T)).distinct().orderBy(col(T)).limit(cap)
-        (allCells.join(broadcast(months), T, "left_semi"),
-          panel.filter(col(valueCol) > eventThreshold)
-            .join(broadcast(months), T, "left_semi")
-            .select(col(T).as("e_t"), col(lonCol).as("e_lon"),
-              col(latCol).as("e_lat"), col(valueCol).as("e_size"), col(U).as("e_u")))
-      case None =>
-        (allCells,
-          panel.filter(col(valueCol) > eventThreshold)
-            .select(col(T).as("e_t"), col(lonCol).as("e_lon"),
-              col(latCol).as("e_lat"), col(valueCol).as("e_size"), col(U).as("e_u")))
-    }
-
-    // Stage 1 — per (unit, event-month) spatial top-k. Within one
-    // event-month the time term is constant across candidates, so the
-    // spatial order IS the full order: only the k spatially-nearest
-    // events of each month can ever reach a unit's global top-k at any
-    // later t (an exact pruning, not an approximation). The broadcast
-    // is the RAW event set — O(E), independent of month count — and
-    // the product never crosses a shuffle: it streams straight into
-    // the bounded top-k partial aggregation.
-    //
-    // Squared distance through the hot path: d² orders identically to
-    // d, needs only multiplications (Spark's pow is StrictMath.pow —
-    // an order of magnitude slower than x*x); sqrt/pow run only on the
-    // ~k rows per cell that survive aggregation.
-    // one geo row per unit, even if a panel carries inconsistent or
+    // Stage 1 — per (unit, event-month) spatial top-k over ring-bounded
+    // candidates. Squared distance through the hot path: d² orders
+    // identically to d, needs only multiplications (Spark's pow is
+    // StrictMath.pow — an order of magnitude slower than x*x); sqrt/pow
+    // run only on the ~k rows per cell that survive aggregation.
+    // One geo row per unit, even if a panel carries inconsistent or
     // time-varying unit coordinates — a distinct on (unit, lon, lat)
-    // would emit duplicate per-month candidates and corrupt the k>1 mean
+    // would emit duplicate per-month candidates and corrupt the k>1 mean.
     val unitGeo = panel.groupBy(col(U))
       .agg(first(col(lonCol)).as(lonCol), first(col(latCol)).as(latCol))
     val sdx = (col(lonCol) - col("e_lon")) * 0.5
     val sdy = (col(latCol) - col("e_lat")) * 0.5
     val topk = udaf(new TopK(k))
-    // explicit request short-circuits the count job; otherwise one
-    // count over the filtered events decides broadcast vs banded
-    val dispatch: Option[Band] =
-      if (banded.isDefined) banded
-      else if (autoBandEvents == Long.MaxValue) None
-      else chooseBand(events.count(), banded, autoBandEvents)
-    val perMonthTop: DataFrame = dispatch match {
-      case None =>
-        unitGeo.crossJoin(broadcast(events))
-          .withColumn("sd2", sdx * sdx + sdy * sdy)
-          .groupBy(col(U), col("e_t"))
-          .agg(topk(col("sd2"), col("e_t"), col("e_u"), col("e_size")).as("cs"))
-          .select(col(U), col("cs"))
-      case Some(Band(b, r)) =>
+    val perMonthTop: DataFrame = band match {
+      case Band(b, r) =>
         // Ring-bounded candidates with the PER-CELL certificate (see
         // [[Band]]): prove whole band cells complete — proof work
         // scales with occupied cells × months — escalate uncertified
@@ -486,9 +654,6 @@ object SpacetimeDist {
           // instead of reproducing that bug (SURVEY §7.3 bug list)
           per.groupBy(col(T), col(U)).agg(avg(perEvent).as(out))
       }
-
-    allCells
-      .join(agg, Seq(T, U), "left")
-      .na.fill(999.0, Seq(out))
+    agg
   }
 }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   *    for exactly the panel data the reference models.
   *
   * Both use binary queen contiguity (the 8-neighbour kernel, Gi* with
-  * self), materialised the splag4d way: convolution-as-join against a
-  * broadcast offsets table on exact grid coordinates — |panel|×9 rows
+  * self), materialised as a convolution-join against a broadcast
+  * offsets table on exact grid coordinates — |panel|×9 rows
   * through hash aggregations, no N² pair set, no dense matrix.
   *
   * Determinism (the gate discipline): values are fixed to 1e-6

@@ -32,10 +32,17 @@ class PlanSpec extends SparkSpec {
     assert(plan.split("Exchange").length - 1 == 1, plan)
   }
 
-  test("splag4d joins the kernel via broadcast, never a shuffled kernel side") {
+  /** Hash exchanges in `plan`, and whether it joins at all. */
+  private def exchangesAndJoins(plan: String): (Seq[String], Boolean) = (
+    plan.split("\n").toSeq.filter(_.contains("Exchange hashpartitioning")),
+    plan.contains("Join") || plan.contains("CartesianProduct"))
+
+  test("splag4d is one month_id hash exchange into the per-month stencil, no join") {
     val plan = KernelLag.splag4d(gridPanel, "value", 1, 1, 1.0, norm = false)
       .queryExecution.executedPlan.toString()
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"), plan)
+    val (exchanges, joins) = exchangesAndJoins(plan)
+    assert(exchanges.size == 1 && exchanges.head.contains(s"hashpartitioning($T#"), plan)
+    assert(!joins, plan)
   }
 
   test("tree lag's geometry tables broadcast; node values aggregate hash-side") {
@@ -277,19 +284,13 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
-  test("spacetime kNN broadcasts raw events only; as-of join is unit-keyed") {
+  test("spacetime kernel path is one unit_id hash exchange into the per-unit top-k, no join") {
     val plan = spatial.SpacetimeDist.spacetimeDistances(
         gridPanel, "value", "distances", k = 1, nu = 1.0, power = 0.0)
       .queryExecution.executedPlan.toString()
-    // the old shape broadcast events x month-pairs (O(E x T)) and hash-
-    // joined on month_id; the new shape must not join events on month
-    assert(!plan.contains("BroadcastHashJoin [month_id"), plan)
-    // stage 1 is the units x raw-events product (broadcast side O(E))
-    assert(plan.contains("BroadcastNestedLoopJoin"), plan)
-    // stage 2 joins candidates to cells as an equi join keyed by unit
-    val unitJoin = plan.split("\n").exists(l =>
-      (l.contains("HashJoin") || l.contains("SortMergeJoin")) && l.contains("unit_id"))
-    assert(unitJoin, plan)
+    val (exchanges, joins) = exchangesAndJoins(plan)
+    assert(exchanges.size == 1 && exchanges.head.contains(s"hashpartitioning($U#"), plan)
+    assert(!joins, plan)
   }
 
   test("DSIR weights: linear fit (no product joins), score joins broadcast lr") {

@@ -1,0 +1,228 @@
+package graft
+
+import graft.spatial.{Grid, KernelLag, SpacetimeDist}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** The local spatial kernels — the per-month splag4d stencil and the
+  * per-unit spacetime top-k — against plain-Scala models of the join
+  * semantics they replace and against the banded spacetime path, plus
+  * the job budget of their wire-format entries.
+  */
+class SpatialKernelSpec extends SparkSpec {
+  import spark.implicits._
+  private val T = Panel.TimeCol
+  private val U = Panel.UnitCol
+
+  private def withGrid(df: DataFrame): DataFrame =
+    df.withColumn("lon", Grid.unitLon(col(U))).withColumn("lat", Grid.unitLat(col(U)))
+
+  // ---- splag4d stencil ----------------------------------------------
+
+  /** Stencil rows: a 6×4 block with a hole at (2, 1), the grid-row seam
+    * (lon 39 next to lon 0 of the following row in pgid order), a cell
+    * with no neighbour present, null and NaN values, over two months.
+    */
+  private val stencilRows: Seq[(Long, Long, Option[Double], Option[Double])] = {
+    val block = for (lat <- 0L until 4L; lon <- 0L until 6L if !(lon == 2L && lat == 1L))
+      yield lat * 40L + lon
+    val units = block ++ Seq(39L, 79L, 40L * 20L + 20L)
+    for (m <- Seq(1L, 2L); u <- units) yield {
+      val h = (u * 7L + m * 3L) % 13L
+      val v = if (h == 0L) None else if (h == 1L) Some(Double.NaN) else Some(u.toDouble + m)
+      val v2 = if (h == 2L) None else Some((u % 5L) * 0.5 - m)
+      (m, u, v, v2)
+    }
+  }
+
+  /** The join semantics: sum of neighbour value·w over kernel offsets in
+    * coordinate space, null neighbours skipped, 0.0 when the sum is NaN
+    * or no non-null neighbour exists.
+    */
+  private def stencilModel(inner: Int, width: Int, power: Double, norm: Boolean,
+                           feature: ((Long, Long, Option[Double], Option[Double])) => Option[Double])
+      : Map[(Long, Long), Double] = {
+    val kernel = Grid.kernelOffsets(inner, width, power, norm)
+    val at = stencilRows.map(r => (r._1, r._2 % 40L, r._2 / 40L) -> r).toMap
+    stencilRows.map { r =>
+      val terms = kernel.flatMap { case (dx, dy, w) =>
+        at.get((r._1, r._2 % 40L + dx, r._2 / 40L + dy)).flatMap(feature).map(_ * w)
+      }
+      val s = terms.foldLeft(0.0)(_ + _)
+      (r._1, r._2) -> (if (terms.isEmpty || s.isNaN) 0.0 else s)
+    }.toMap
+  }
+
+  private def stencilPanel: DataFrame =
+    withGrid(stencilRows.toDF(T, U, "value", "value2"))
+
+  private def assertSame(got: Map[(Long, Long), Double], want: Map[(Long, Long), Double],
+                         what: String): Unit = {
+    assert(got.keySet == want.keySet, what)
+    want.foreach { case (key, w) =>
+      val g = got(key)
+      assert(g == w || math.abs(g - w) <= 1e-12 * math.max(1.0, math.abs(w)),
+        s"$what at $key: $g, want $w")
+    }
+  }
+
+  test("splag4d stencil equals the join semantics: holes, borders, seam, null, NaN, isolated") {
+    val got = KernelLag.splag4d(stencilPanel, "value", 1, 1, 1.0, norm = false)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val want = stencilModel(1, 1, 1.0, norm = false, _._3)
+    assertSame(got, want, "splag4d")
+    // the cases are really there: the isolated cell and the seam cells
+    // see nothing across the gap, NaN neighbourhoods fold to 0.0
+    assert(got((1L, 820L)) == 0.0 && got((2L, 820L)) == 0.0)
+    assert(stencilRows.exists(_._3.exists(_.isNaN)) && stencilRows.exists(_._3.isEmpty))
+  }
+
+  test("splag4dMulti convolves two features with their own null/NaN handling") {
+    val got = KernelLag.splag4dMulti(stencilPanel, Seq("value", "value2"), 1, 1, 1.0,
+        norm = false)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getDouble(2), r.getDouble(3)))
+      .toMap
+    assertSame(got.map { case (k, v) => k -> v._1 }, stencilModel(1, 1, 1.0, false, _._3),
+      "splag_value")
+    assertSame(got.map { case (k, v) => k -> v._2 }, stencilModel(1, 1, 1.0, false, _._4),
+      "splag_value2")
+  }
+
+  test("splag4d stencil with inner=1, width=2, power=2, norm=true equals the model") {
+    val got = KernelLag.splag4d(stencilPanel, "value", 1, 2, 2.0, norm = true)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assertSame(got, stencilModel(1, 2, 2.0, norm = true, _._3), "splag4d norm")
+  }
+
+  // ---- spacetime kernel vs the banded path ---------------------------
+
+  /** 8×8 block with a hole; no event in month 1, a single event in
+    * month 2 (so k > 1 sees fewer than k events), scattered events from
+    * month 3 on, NaN cells (Spark's `NaN > x` is true: they are events)
+    * and null cells (never events).
+    */
+  private def spacetimePanel: DataFrame = {
+    val units = for (y <- 0L until 8L; x <- 0L until 8L if !(x == 3L && y == 4L))
+      yield y * 40L + x
+    val rows = for (m <- 1L to 6L; u <- units) yield {
+      val v: Option[Double] =
+        if (m == 1L) Some(1.0)
+        else if (m == 2L) Some(if (u == 41L) 700.0 else 1.0)
+        else if ((u * 7L + m * 13L) % 11L == 0L) Some(500.0 + (u % 9L))
+        else if ((u + m) % 17L == 0L) Some(Double.NaN)
+        else if ((u + m) % 19L == 0L) None
+        else Some(1.0)
+      (m, u, v)
+    }
+    withGrid(rows.toDF(T, U, "value"))
+  }
+
+  private def keyed(df: DataFrame): Map[(Long, Long), Double] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+
+  private def kernelVsBanded(rv: String, k: Int, nu: Double, power: Double,
+                             monthCap: Option[Int] = None): Map[(Long, Long), Double] = {
+    val p = spacetimePanel
+    val kern = keyed(SpacetimeDist.spacetimeDistances(p, "value", rv, k, nu, power,
+      eventThreshold = 400.0, monthCap = monthCap))
+    val band = keyed(SpacetimeDist.spacetimeDistances(p, "value", rv, k, nu, power,
+      eventThreshold = 400.0, monthCap = monthCap, banded = Some(SpacetimeDist.Band(2.0, 1))))
+    assert(kern.keySet == band.keySet)
+    // the kernel mirrors the banded path's arithmetic: equal to the bit
+    band.foreach { case (key, b) =>
+      assert(kern(key) == b, s"$rv k=$k cap=$monthCap at $key: ${kern(key)} vs $b")
+    }
+    kern
+  }
+
+  test("spacetime kernel equals the banded path: distances k=1 and k=5") {
+    val k1 = kernelVsBanded("distances", 1, 1.0, 0.0)
+    assert(k1((1L, 0L)) == 999.0)                  // before the first event
+    assert(k1((2L, 41L)) == 0.0)                   // at the event
+    assert(math.abs(k1((2L, 42L)) - 0.5) < 1e-12)  // one cell away
+    val k5 = kernelVsBanded("distances", 5, 2.0, 0.0)
+    assert(k5((1L, 0L)) == 999.0)
+    assert(k5((2L, 0L)).isPosInfinity)             // 1 past event < k
+    assert(k5.exists { case ((m, _), v) => m >= 4L && !v.isInfinite && v != 999.0 })
+  }
+
+  test("spacetime kernel equals the banded path: weights k=3, power 2, NaN events") {
+    val w = kernelVsBanded("weights", 3, 1.0, 2.0)
+    assert(w((2L, 41L)) == 700.0)                  // d = 0 gives the size
+    assert(w((1L, 41L)) == 999.0)
+    // NaN events are events: their weights poison the mean, which the
+    // sentinel fill turns into 999.0 on both paths
+    val nanCells = spacetimePanel.filter(isnan(col("value")))
+      .select(T, U).as[(Long, Long)].collect()
+    assert(nanCells.nonEmpty && nanCells.forall(c => w(c) == 999.0))
+  }
+
+  test("spacetime kernel equals the banded path under monthCap = Some(2)") {
+    val capped = kernelVsBanded("distances", 1, 1.0, 0.0, monthCap = Some(2))
+    assert(capped((2L, 42L)) == 0.5)
+    assert(capped.collect { case ((m, _), v) if m > 2L => v }.forall(_ == 999.0))
+  }
+
+  // ---- wire-format job budget ----------------------------------------
+
+  /** Spark jobs started while `body` runs. A marker job run afterwards
+    * flushes the listener: job-start events arrive in submission order.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = s"jobs-marker-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          flushed.countDown()
+        else if (flushed.getCount > 0) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener not flushed")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A 12×10 grid over 6 months, built by a Spark job (not a local
+    * relation, which Catalyst would fold away), with own lon/lat columns
+    * that must pass through the wire ops untouched.
+    */
+  private def wirePanel: DataFrame =
+    spark.range(0L, 720L, 1L, 2).select(
+      (floor(col("id") / 120L) + 1L).as(T),
+      (floor(col("id") % 120L / 12L) * 40L + col("id") % 12L).as(U),
+      when(col("id") % 7L === 0L, 3.0).otherwise(0.0).as("value"),
+      lit(-1L).as("lon"), lit(-1L).as("lat"))
+
+  test("splag4d on the wire runs at most 3 jobs and replaces value in place") {
+    val p = wirePanel
+    var out: Array[org.apache.spark.sql.Row] = null
+    val n = jobsOf {
+      out = Registry.run(p, """[{"type":"splag4d","args":[1,1,0]}]""").collect()
+    }
+    assert(n <= 3, s"$n jobs")
+    assert(out.head.schema.fieldNames.toSeq == p.columns.toSeq)
+    assert(out.length == 720 && out.forall(r => r.getLong(3) == -1L && r.getLong(4) == -1L))
+  }
+
+  test("spacetime_dist on the wire runs at most 5 jobs and replaces value in place") {
+    val p = wirePanel
+    var out: Array[org.apache.spark.sql.Row] = null
+    val n = jobsOf {
+      out = Registry.run(p,
+        """[{"type":"spacetime_dist","args":["distances",1,1,0,0]}]""").collect()
+    }
+    assert(n <= 5, s"$n jobs")
+    assert(out.head.schema.fieldNames.toSeq == p.columns.toSeq)
+    val direct = keyed(SpacetimeDist.spacetimeDistances(withGrid(p.drop("lon", "lat")),
+      "value", "distances", 1, 1.0, 0.0))
+    assert(out.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap == direct)
+  }
+}
