@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** BENCH main: runs every SparkEntry query against SPARK_GRAFT_SF_DIR
@@ -32,18 +33,24 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // bounded top-k aggregators over panel-cardinality groups
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-bench")
+    // opt-in stderr trace: interleaves query boundaries and one line per
+    // Spark job (wall, stage count, call site) with Spark's WARN lines,
+    // so a "large task binary" / codegen warning or a job storm can be
+    // attributed to the query that caused it (stderr only — the
+    // driver's stdout-tail capture never sees it)
+    val trace = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
+    if (trace) spark.sparkContext.addSparkListener(new SparkListener {
+      private val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        starts.put(js.jobId, (System.nanoTime(),
+          js.stageInfos.lastOption.map(_.name.take(90)).getOrElse("?"), js.stageIds.length))
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        Option(starts.remove(je.jobId)).foreach { case (t0, site, nStages) =>
+          val sec = (System.nanoTime() - t0) / 1e9
+          System.err.println(f"[job] id=${je.jobId}%4d $sec%7.3f s stages=$nStages%3d  $site")
+        }
+    })
 
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -98,11 +105,6 @@ object Bench {
         else (-orderCosts.getOrElse(n, Double.MaxValue), n)
       }
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    // opt-in stderr trace: interleaves query boundaries with Spark's
-    // WARN lines so a "large task binary" / codegen warning can be
-    // attributed to the query that logged it (stderr only — the
-    // driver's stdout-tail capture never sees it)
-    val trace = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
     def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       if (trace) System.err.println(s"[bench] begin $name")
       val t0 = System.nanoTime()

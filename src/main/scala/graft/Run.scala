@@ -33,38 +33,39 @@ object Run {
       if (specArg.trim.startsWith("[")) specArg
       else new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(specArg)), "UTF-8")
-    val spark = SparkSession.builder()
-      .appName(s"graft-run-$kind")
-      // local default for standalone use; spark-submit's --master wins
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    try {
-      val df = spark.read.parquet(in)
-      val result = kind match {
-        case "panel" => Registry.run(df, spec)
-        case "corpus" => Registry.runCorpus(df, spec)
-        case "embeddings" => Registry.runEmbeddings(df, spec)
-        case "events" => Registry.runEvents(Panel.normalizeTs(df), spec)
-        case "graph" => Registry.runGraph(df, spec)
-        case other => throw new IllegalArgumentException(
-          s"unknown frame kind '$other' " +
-            "(want panel|corpus|embeddings|events|graph)")
-      }
-      // pre-submit plan lint: surface scale-breaking shapes BEFORE the
-      // job burns cluster hours. Findings go to stderr; fatals abort
-      // unless the caller opts out (SPARK_GRAFT_LINT=warn) — a spec
-      // that plans a cartesian on a notebook sample will plan one on
-      // the full corpus too.
-      val findings = plans.PlanLint.lint(result)
-      findings.foreach(f =>
-        System.err.println(s"[lint:${f.severity}] ${f.node}: ${f.detail}"))
-      val fatals = findings.filter(_.severity == "fatal")
-      if (fatals.nonEmpty && !sys.env.get("SPARK_GRAFT_LINT").contains("warn"))
-        throw new IllegalStateException(
-          s"plan lint found ${fatals.size} fatal shape(s); " +
-            "set SPARK_GRAFT_LINT=warn to run anyway")
-      result.write.mode("overwrite").parquet(out)
-    } finally spark.stop()
+    val spark = LocalSession(s"graft-run-$kind")
+    try run(spark, in, spec, out, kind) finally spark.stop()
+  }
+
+  /** Read `in`, apply the JSON `spec` in the `kind` namespace, lint the
+    * plan and write `out`. Leaves the session open.
+    */
+  def run(spark: SparkSession, in: String, spec: String, out: String,
+          kind: String): Unit = {
+    val df = spark.read.parquet(in)
+    val result = kind match {
+      case "panel" => Registry.run(df, spec)
+      case "corpus" => Registry.runCorpus(df, spec)
+      case "embeddings" => Registry.runEmbeddings(df, spec)
+      case "events" => Registry.runEvents(Panel.normalizeTs(df), spec)
+      case "graph" => Registry.runGraph(df, spec)
+      case other => throw new IllegalArgumentException(
+        s"unknown frame kind '$other' " +
+          "(want panel|corpus|embeddings|events|graph)")
+    }
+    // pre-submit plan lint: surface scale-breaking shapes BEFORE the
+    // job burns cluster hours. Findings go to stderr; fatals abort
+    // unless the caller opts out (SPARK_GRAFT_LINT=warn) — a spec
+    // that plans a cartesian on a notebook sample will plan one on
+    // the full corpus too.
+    val findings = plans.PlanLint.lint(result)
+    findings.foreach(f =>
+      System.err.println(s"[lint:${f.severity}] ${f.node}: ${f.detail}"))
+    val fatals = findings.filter(_.severity == "fatal")
+    if (fatals.nonEmpty && !sys.env.get("SPARK_GRAFT_LINT").contains("warn"))
+      throw new IllegalStateException(
+        s"plan lint found ${fatals.size} fatal shape(s); " +
+          "set SPARK_GRAFT_LINT=warn to run anyway")
+    result.write.mode("overwrite").parquet(out)
   }
 }

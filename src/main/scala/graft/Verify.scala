@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardCopyOption}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -11,7 +10,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * timeout zeroed the round's correctness artifact with no trace.
   * Two defenses here:
   *   - wall time: SPARK_GRAFT_VERIFY_THREADS-way concurrency
-  *     (default min(8, cpus));
+  *     (default min(8, the session's default parallelism));
   *   - evidence: progress.json is atomically rewritten after EVERY
   *     completed query (name → elapsed ms), so a truncated run leaves
   *     a diagnosable partial record instead of silence.
@@ -22,14 +21,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Local-iteration subset (the driver leaves this unset → full run).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -89,7 +81,7 @@ object Verify {
     val selected = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val threads = sys.env.get("SPARK_GRAFT_VERIFY_THREADS").map(_.toInt)
-      .getOrElse(math.min(8, cpus.toInt))
+      .getOrElse(math.min(8, spark.sparkContext.defaultParallelism))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     val futures = selected.map { case (name, fn) =>
       pool.submit(new Runnable {

@@ -565,9 +565,9 @@ object Dedup {
     * arrays), the loop is replaced by a single-task exact union-find
     * over the same edge set. The loop's per-pass cost at small scale is
     * pure scheduling latency — each pass is an eager localCheckpoint
-    * plus a convergence count, ~8 AQE sub-jobs of 5-100 ms (JobProbe
-    * r16: q_split_no_leakage ran ~60 jobs summing 1.3 s against a
-    * 3.4 s wall) — while union-find with min-id roots computes the
+    * plus a convergence count, ~8 AQE sub-jobs of 5-100 ms (per-job
+    * trace, r16: q_split_no_leakage ran ~60 jobs summing 1.3 s against
+    * a 3.4 s wall) — while union-find with min-id roots computes the
     * identical labelling (both are exact min-id-per-component) in one
     * bounded task. The dispatch itself is two count jobs: the edge
     * count materializes the cache pass 1 would build anyway, and the
