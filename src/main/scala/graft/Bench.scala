@@ -349,9 +349,9 @@ object Bench {
         f"approxTotalS=${t.getCount * t.getSnapshot.getMean / 1000.0}%.1f " +
         f"generatedClasses=${cm.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount}")
     } catch { case _: Throwable => () }
-    // release the memoized projection broadcasts this session owns
-    // (the memo outlives stopped sessions otherwise — ADVICE r12)
-    graft.functions.MatVecProject.clearBroadcasts(spark)
+    // free everything the session cached (the registry would otherwise
+    // keep the stopped session and its blocks reachable)
+    OpCache.clear(spark)
     spark.stop()
   }
 }

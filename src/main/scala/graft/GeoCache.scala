@@ -3,10 +3,10 @@ package graft
 import graft.spatial.{CountryLag, TreeLag}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped cache for value-independent spatial geometry: the
-  * quadtree embedding, the country adjacency, and the BFS ring sets.
+/** Value-independent spatial geometry, cached for the session in
+  * [[OpCache]]: the quadtree embedding, the country adjacency, and the
+  * BFS ring sets.
   *
   * All three are pure functions of the panel's unit/month universe —
   * not of the value columns — yet each derivation costs a distinct
@@ -14,107 +14,67 @@ import org.apache.spark.storage.StorageLevel
   * At 100 TB a pipeline that re-derives them per operator invocation
   * spends more on geometry than on the lag itself, so every caller —
   * the direct operator API and the JSON wire-format dispatch alike —
-  * shares one persisted copy per (session, unit universe).
+  * shares one copy per (session, unit universe).
   *
   * Keying: two inputs share geometry iff their panels' (time, unit)
-  * projections optimise to semantically-equal plans. Using the
-  * OPTIMISED plan's semantic hash makes the key blind to value-column
-  * transforms: `panel.select(T, U, f(value))` prunes back to the same
+  * projections optimise to equal canonicalized plans. Using the
+  * OPTIMISED plan makes the key blind to value-column transforms:
+  * `panel.select(T, U, f(value))` prunes back to the same
   * `Project(T, U, scan)` as the raw panel, so a pipeline step that
   * runs after pointwise/temporal transforms still hits the cache
   * built by a direct query. A miss is only a recompute — never an
-  * incorrect reuse (different universes hash differently; the Int
-  * hash's collision risk over a handful of live panels is
-  * negligible).
+  * incorrect reuse.
   *
-  * Lifetime: entries persist until [[clear]]. Handles to every
-  * persisted DataFrame are retained here, so — unlike a fire-and-
-  * forget `persist` inside an operator — a long-lived session can
-  * always release the blocks.
+  * Lifetime: session — entries survive `OpCache.release` and are freed
+  * by [[clear]]; the adjacency and ring frames own their persisted
+  * plans (a request-lifetime persist of an equal plan is promoted).
   */
 object GeoCache {
 
-  private final case class Key(session: SparkSession, planHash: Int)
-
-  // plan-idempotent persist (the OpCache discipline): a ring set can
-  // optimise to a plan CacheManager already holds (order-1 ring ==
-  // the adjacency), and re-persisting an equal plan is a warning +
-  // double bookkeeping, never a second cache.
-  //
-  // The idempotence cuts both ways: the cache entry this memo leans on
-  // can be OWNED by an OpCache handle for an equal plan, and a foreign
-  // `OpCache.release` (Bench runs one per query) then unpersists it
-  // while the memo lives on — a silent recompute-forever cliff. Every
-  // memoized READ therefore re-checks the storage level and re-persists
-  // when a foreign release stranded it (see [[adjacency]]/[[ring]]).
-  private def persistIdem(df: DataFrame): DataFrame =
-    if (df.storageLevel != StorageLevel.NONE) df
-    else df.persist(StorageLevel.MEMORY_AND_DISK)
-
-  private def keyOf(panel: DataFrame): Key =
-    Key(panel.sparkSession,
-      panel.select(col(Panel.TimeCol), col(Panel.UnitCol))
-        .queryExecution.optimizedPlan.semanticHash())
-
-  private val embs =
-    scala.collection.concurrent.TrieMap.empty[Key, TreeLag.Embedding]
-  private val adjs =
-    scala.collection.concurrent.TrieMap.empty[Key, DataFrame]
-  private val cents =
-    scala.collection.concurrent.TrieMap.empty[Key, DataFrame]
-  private val rings =
-    scala.collection.concurrent.TrieMap.empty[(Key, Int, Int), DataFrame]
-  private val pairSets =
-    scala.collection.concurrent.TrieMap.empty[Key, Seq[(Long, Long)]]
+  private def universe(panel: DataFrame) =
+    panel.select(col(Panel.TimeCol), col(Panel.UnitCol))
+      .queryExecution.optimizedPlan.canonicalized
 
   /** Quadtree cell embedding of `gridPanel` (must carry lon/lat cell
     * columns) — one distinct+collect per unit universe, shared across
     * the tree/grid/fourier/mesh operators.
     */
-  def embedding(gridPanel: DataFrame,
-                lonCol: String = "lon", latCol: String = "lat"): TreeLag.Embedding =
-    embs.getOrElseUpdate(keyOf(gridPanel),
-      TreeLag.embedOf(gridPanel, lonCol, latCol))
+  def embedding(gridPanel: DataFrame): TreeLag.Embedding =
+    OpCache.memo(gridPanel.sparkSession, ("embedding", universe(gridPanel)))(
+      TreeLag.embedOf(gridPanel))
 
   /** Month-replicated queen adjacency of the panel's unit grid,
-    * persisted with a retained handle.
+    * persisted for the session.
     */
   def adjacency(panel: DataFrame): DataFrame =
-    persistIdem(adjs.getOrElseUpdate(keyOf(panel),
-      persistIdem(CountryLag.gridAdjacency(panel, persist = false))))
+    OpCache.memoPersisted(panel.sparkSession, ("adjacency", universe(panel)))(
+      CountryLag.gridAdjacency(panel))
 
-  /** Unit centroids (country_id, lon, lat) for the country lag. */
-  def centroids(panel: DataFrame): DataFrame =
-    cents.getOrElseUpdate(keyOf(panel), CountryLag.gridCentroids(panel))
+  /** Unit centroids (country_id, lon, lat) for the country lag — a plan
+    * with no job to derive it, so nothing is cached.
+    */
+  def centroids(panel: DataFrame): DataFrame = CountryLag.gridCentroids(panel)
 
-  /** BFS ring set for a (inner, width) kernel shape, persisted with a
-    * retained handle. The cached geometry is the derived GRID adjacency
-    * — month-invariant by construction — so the BFS runs on the driver
+  /** BFS ring set for a (inner, width) kernel shape, persisted for the
+    * session. The cached geometry is the derived GRID adjacency —
+    * month-invariant by construction — so the BFS runs on the driver
     * over the static (a_id, b_id) pair list and the finished ring is
     * replicated per month (`ringSetStatic`), instead of expanding a
     * months-replicated frontier through `months ×` the join work. A
     * truly month-varying adjacency must go through
     * `CountryLag.ringSet` instead.
     */
-  def ring(panel: DataFrame, inner: Int, width: Int): DataFrame =
-    persistIdem(rings.getOrElseUpdate((keyOf(panel), inner, width), {
-      val pairs = pairSets.getOrElseUpdate(keyOf(panel),
-        CountryLag.gridAdjacencyPairsLocal(panel))
-      persistIdem(CountryLag.ringSetStatic(panel, pairs, inner, width))
-    }))
-
-  /** Release every cached block owned by `session` and drop the
-    * entries (other sessions' caches are untouched).
-    */
-  def clear(session: SparkSession): Unit = {
-    def owned[K](m: scala.collection.concurrent.TrieMap[K, DataFrame])(sel: K => SparkSession): Unit =
-      m.keys.filter(k => sel(k) == session).foreach { k =>
-        m.remove(k).foreach(_.unpersist())
-      }
-    owned(adjs)(_.session)
-    owned(rings)(_._1.session)
-    cents.keys.filter(_.session == session).foreach(cents.remove)
-    embs.keys.filter(_.session == session).foreach(embs.remove)
-    pairSets.keys.filter(_.session == session).foreach(pairSets.remove)
+  def ring(panel: DataFrame, inner: Int, width: Int): DataFrame = {
+    val s = panel.sparkSession
+    val u = universe(panel)
+    OpCache.memoPersisted(s, ("ring", u, inner, width)) {
+      val pairs = OpCache.memo(s, ("pairs", u))(CountryLag.gridAdjacencyPairsLocal(panel))
+      CountryLag.ringSetStatic(panel, pairs, inner, width)
+    }
   }
+
+  /** Free every cached value of `session` — geometry and the rest of
+    * the session's [[OpCache]] entries.
+    */
+  def clear(session: SparkSession): Unit = OpCache.clear(session)
 }

@@ -1,57 +1,109 @@
 package graft
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped registry of operator-internal persisted DataFrames
-  * (the cached shingle tables of Dedup.minhashLsh /
-  * Contamination.boilerplateRatio).
+/** The session-scoped registry of everything the library caches:
+  * persisted DataFrames (operator intermediates, the harness panels,
+  * the spatial geometry), broadcasts (the projection matrices) and
+  * driver-side values (the quadtree embedding, the adjacency pairs).
+  * An operator never fire-and-forgets a `persist` or a broadcast — in
+  * a long-lived session those blocks would accumulate with no way to
+  * free them — it registers here instead.
   *
-  * Same retained-handle rule as [[GeoCache]]: an operator must never
-  * fire-and-forget a `persist` — in a long-lived session those blocks
-  * accumulate until teardown with no way to release them. Operators
-  * register here instead, and a service calls [[release]] between
-  * requests (or callers opt out of caching and manage their own
-  * materialisation).
+  * Two lifetimes:
+  *  - request: [[persist]]; freed by [[release]], which a service calls
+  *    between requests;
+  *  - session: [[memo]] and [[memoPersisted]]; survive [[release]] and
+  *    are freed by [[clear]].
+  *
+  * One owner per plan. A persisted plan has exactly one entry, keyed on
+  * (session, canonicalized plan) — the plan CacheManager itself matches
+  * cached data on, so the registry and CacheManager agree on which
+  * frames share blocks. A session-lifetime request for a plan a request
+  * entry already cached promotes that entry, so a [[release]] never
+  * unpersists blocks a session entry still serves; a request-lifetime
+  * request for a session plan leaves it session-lifetime.
+  *
+  * Racing first callers of a [[memo]] may both compute; one value is
+  * installed and the loser's is freed.
   */
 object OpCache {
 
-  private val handles =
-    new java.util.concurrent.ConcurrentLinkedQueue[(SparkSession, DataFrame)]
-
-  /** Persist `df` and retain a releasable handle to it.
-    *
-    * Idempotent on the *plan*, not the handle: operators that share an
-    * intermediate (the dedup family reuses one shingle/signature frame
-    * across queries) re-request the same analyzed plan through fresh
-    * DataFrame objects, and CacheManager keys the cache off the plan —
-    * a second `df.persist` is a no-op that logs "Asked to cache
-    * already cached data" and would double-register a handle whose
-    * release unpersists blocks another owner still needs.
-    * `df.storageLevel` consults CacheManager for this plan, so an
-    * already-cached plan is returned as-is with no new handle.
+  /** `free` gives back what the value holds: a plan entry unpersists its
+    * frame, a memoized broadcast is destroyed, other memoized values
+    * (a memoized frame's blocks belong to its plan entry) hold nothing.
     */
-  def persist(df: DataFrame,
-              level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    if (df.storageLevel != StorageLevel.NONE) df
-    else {
-      val p = df.persist(level)
-      handles.add((df.sparkSession, p))
-      p
+  private final class Entry(val value: Any, val free: () => Unit, var forSession: Boolean)
+
+  // mutations (and their frees) under the object's lock; hits read lock-free
+  private val entries =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, Any), Entry]
+
+  private def own(df: DataFrame, forSession: Boolean): DataFrame = {
+    val k = (df.sparkSession, df.queryExecution.normalized.canonicalized)
+    synchronized {
+      entries.get(k) match {
+        case Some(e) => e.forSession ||= forSession
+        // a plan cached outside the registry stays its owner's
+        case None if df.storageLevel != StorageLevel.NONE => ()
+        case None =>
+          entries(k) = new Entry(df, () => df.unpersist(), forSession)
+          df.persist(StorageLevel.MEMORY_AND_DISK)
+      }
     }
+    df
   }
 
-  /** Unpersist every handle owned by `session` and drop it (other
-    * sessions' handles are untouched).
+  /** Persist `df` for the current request (until [[release]]).
+    * Idempotent on the plan: operators re-request shared intermediates
+    * through fresh DataFrame objects, and an equal plan is persisted
+    * and owned once.
     */
-  def release(session: SparkSession): Unit = {
-    val it = handles.iterator()
-    while (it.hasNext) {
-      val (s, df) = it.next()
-      if (s == session) {
-        df.unpersist()
-        it.remove()
+  def persist(df: DataFrame): DataFrame = own(df, forSession = false)
+
+  /** The value of `compute` for (`session`, `key`), computed on first
+    * use and kept until [[clear]].
+    */
+  def memo[V](session: SparkSession, key: Any)(compute: => V): V = {
+    val k = (session, key)
+    entries.get(k).getOrElse {
+      val v = compute
+      val fresh = new Entry(v, () => v match {
+        case b: Broadcast[_] => b.destroy()
+        case _ => ()
+      }, forSession = true)
+      synchronized {
+        entries.get(k) match {
+          case Some(winner) => fresh.free(); winner
+          case None => entries(k) = fresh; fresh
+        }
+      }
+    }.value.asInstanceOf[V]
+  }
+
+  /** [[memo]] of a frame whose plan stays persisted until [[clear]]. */
+  def memoPersisted(session: SparkSession, key: Any)(build: => DataFrame): DataFrame =
+    memo(session, key)(own(build, forSession = true))
+
+  private def drop(session: SparkSession, all: Boolean): Unit = synchronized {
+    entries.foreach { case (k, e) =>
+      if (k._1 == session && (all || !e.forSession)) {
+        entries.remove(k)
+        e.free()
       }
     }
   }
+
+  /** Free `session`'s request-lifetime entries (other sessions' and
+    * session-lifetime entries are untouched).
+    */
+  def release(session: SparkSession): Unit = drop(session, all = false)
+
+  /** Free every entry of `session`, both lifetimes (other sessions'
+    * entries are untouched). Plans built before the clear must not run
+    * after it: the broadcasts they carry are destroyed.
+    */
+  def clear(session: SparkSession): Unit = drop(session, all = true)
 }

@@ -33,17 +33,12 @@ object SparkEntry {
     * materialises the panel once via PanelIO; this is the in-session
     * equivalent).
     *
-    * Lifetime note: entries are never evicted — this object is the
-    * driver-contract harness, whose sessions are few and process-scoped.
-    * A long-lived service should materialise panels via PanelIO instead
-    * of this cache.
+    * Lifetime: the session (an `OpCache` entry, freed by
+    * `OpCache.clear`). A long-lived service should materialise panels
+    * via PanelIO instead of this cache.
     */
-  private val panelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def cachedPanel(s: SparkSession, dir: String): DataFrame =
-    panelCache.getOrElseUpdate((s, dir),
-      Panel.densePanel(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    OpCache.memoPersisted(s, ("panel", dir))(Panel.densePanel(s, dir))
 
   private def onPanel(f: DataFrame => DataFrame): (SparkSession, String) => DataFrame =
     (s, dir) => f(cachedPanel(s, dir))
@@ -54,12 +49,8 @@ object SparkEntry {
     * re-quantizing consumer turns into a cross-engine hash flip, so
     * the 1e-9 family reads a panel that never left integer space.
     */
-  private val panel9Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def cachedPanel9(s: SparkSession, dir: String): DataFrame =
-    panel9Cache.getOrElseUpdate((s, dir),
-      Panel.densePanel9(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    OpCache.memoPersisted(s, ("panel9", dir))(Panel.densePanel9(s, dir))
 
   private def onMissing(f: DataFrame => DataFrame): (SparkSession, String) => DataFrame =
     (s, dir) => f(Panel.withMissing(cachedPanel(s, dir)))
@@ -2089,22 +2080,13 @@ object SparkEntry {
       .withColumn("lon", Grid.unitLon(col(U)))
       .withColumn("lat", Grid.unitLat(col(U)))))
 
-  /** Grid panel + session-cached quadtree embedding: the embedding is a
-    * pure function of the distinct unit set, but deriving it costs a
-    * distinct pass over the panel — share it across the tree / grid /
-    * fourier / mesh queries instead of re-collecting per query.
+  /** Grid panel + the session's quadtree embedding (`GeoCache`): the
+    * embedding is a pure function of the distinct unit set, but deriving
+    * it costs a distinct pass over the panel — share it across the tree /
+    * grid / fourier / mesh queries instead of re-collecting per query.
     */
-  private val embCache =
-    scala.collection.concurrent.TrieMap.empty[DataFrame, (DataFrame, TreeLag.Embedding)]
   private def onGridE(f: (DataFrame, TreeLag.Embedding) => DataFrame): (SparkSession, String) => DataFrame =
-    onPanel { p =>
-      val (gp, emb) = embCache.getOrElseUpdate(p, {
-        val g = p.withColumn("lon", Grid.unitLon(col(U)))
-          .withColumn("lat", Grid.unitLat(col(U)))
-        (g, TreeLag.embedOf(g))
-      })
-      f(gp, emb)
-    }
+    onGrid(gp => f(gp, GeoCache.embedding(gp)))
 
   /** Every CTE in every oracle is pinned MATERIALIZED (r12): DuckDB
     * 1.0 inlines plain CTEs once PER REFERENCE, so any oracle whose

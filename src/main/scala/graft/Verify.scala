@@ -140,9 +140,9 @@ object Verify {
         System.err.println(s"[verify] ${errors.size} queries FAILED: " +
           errors.keySet.asScala.toSeq.sorted.mkString(", "))
       }
-      // release the memoized projection broadcasts this session owns
-      // (the memo outlives stopped sessions otherwise — ADVICE r12)
-      graft.functions.MatVecProject.clearBroadcasts(spark)
+      // free everything the session cached (the registry would otherwise
+      // keep the stopped session and its blocks reachable)
+      OpCache.clear(spark)
       spark.stop()
     }
   }

@@ -72,46 +72,19 @@ case class MatVecProject(child: Expression,
 
 object MatVecProject {
 
-  // broadcast memo, keyed by (session, matrix VALUE): repeated
-  // randomProject calls in a long-lived session (Bench warm+retime
-  // loops, serving sessions) would otherwise register a fresh
-  // block-manager broadcast per CALL and never free it — an unbounded
-  // leak OpCache.release cannot see. One broadcast per distinct matrix
-  // per session is the steady state a serving session expects; the
-  // memo is the owner, so [[clearBroadcasts]] can destroy them.
-  private val bcMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Seq[Seq[Double]]),
-           Broadcast[Array[Array[Double]]]]
-
   /** Column wrapper: `v` must be array<double>; `rows` is the matrix
     * (one row per output component), broadcast once per (session,
-    * matrix) — repeated calls reuse the memoized broadcast.
+    * matrix) and kept as a session-lifetime `OpCache` memo: repeated
+    * randomProject calls in a long-lived session (Bench warm+retime
+    * loops, serving sessions) reuse it instead of registering a fresh
+    * block-manager broadcast per call, and `OpCache.clear` destroys it.
     */
   def project(session: org.apache.spark.sql.SparkSession, v: Column,
               rows: Seq[Seq[Double]], scale: Double,
               roundScale: Int): Column = {
-    // putIfAbsent, not getOrElseUpdate: TrieMap.getOrElseUpdate may
-    // evaluate the thunk in TWO racing first-callers, and the loser's
-    // broadcast would be an untracked block-manager leak no registry
-    // owns — create eagerly, install atomically, destroy the loser
-    val key = (session, rows)
-    val bc = bcMemo.get(key).getOrElse {
-      val fresh = session.sparkContext.broadcast(rows.map(_.toArray).toArray)
-      bcMemo.putIfAbsent(key, fresh) match {
-        case Some(winner) => fresh.destroy(); winner
-        case None         => fresh
-      }
-    }
+    val bc = graft.OpCache.memo(session, ("matvec", rows))(
+      session.sparkContext.broadcast(rows.map(_.toArray).toArray))
     CatalystBridge.column(MatVecProject(
       CatalystBridge.expression(v), bc, scale, roundScale))
   }
-
-  /** Destroy every memoized broadcast owned by `session` (other
-    * sessions' entries untouched). Plans built before the clear must
-    * not run after it — the broadcast handle they carry is gone.
-    */
-  def clearBroadcasts(session: org.apache.spark.sql.SparkSession): Unit =
-    bcMemo.keys.filter(_._1 == session).foreach { k =>
-      bcMemo.remove(k).foreach(_.destroy())
-    }
 }

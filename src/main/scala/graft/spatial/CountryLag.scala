@@ -59,12 +59,8 @@ object CountryLag {
     * running several kernels over the same adjacency (e.g. the plain
     * and normalised variants) can compute and persist it once.
     */
-  /** @param persist cache the twice-read inner set (callers running the
-    * derivation once and discarding it — e.g. a pipeline dispatch —
-    * should pass false to avoid unreleasable persisted blocks)
-    */
   def ringSet(panel: DataFrame, adjacency: DataFrame,
-              inner: Int, width: Int, persist: Boolean = true): DataFrame = {
+              inner: Int, width: Int): DataFrame = {
     val T = Panel.TimeCol
     val U = Panel.UnitCol
     val ninner = inner - 1
@@ -78,15 +74,10 @@ object CountryLag {
     // build outer incrementally from inner (outer ⊇ inner by
     // construction) instead of two from-scratch BFS runs; the inner
     // set is read twice (outer base + ring anti-join) so persist it
+    // for the request
     else if (ninner < 0) orderSet(adjacency, seeds, nouter)
     else {
-      val innerSet0 = orderSet(adjacency, seeds, ninner)
-      val innerSet =
-        if (persist &&
-            innerSet0.storageLevel ==
-              org.apache.spark.storage.StorageLevel.NONE)
-          innerSet0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else innerSet0
+      val innerSet = graft.OpCache.persist(orderSet(adjacency, seeds, ninner))
       if (nouter - ninner == 1) {
         // common kernel shapes (width = 1): the ring is just the
         // frontier — one join + distinct + anti-join, never
@@ -167,13 +158,9 @@ object CountryLag {
     * (O(units·8), no O(units²) crossJoin) and replicated over the months.
     * Real deployments supply adjacency as an input table instead.
     */
-  def gridAdjacency(panel: DataFrame, persist: Boolean = true): DataFrame = {
+  def gridAdjacency(panel: DataFrame): DataFrame = {
     val months = panel.select(col(Panel.TimeCol)).distinct()
-    val adj = broadcast(months).crossJoin(broadcast(gridAdjacencyPairs(panel)))
-    if (persist &&
-        adj.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      adj.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else adj
+    broadcast(months).crossJoin(broadcast(gridAdjacencyPairs(panel)))
   }
 
   /** The month-invariant (a_id, b_id) queen-adjacency pairs of the unit

@@ -86,9 +86,9 @@ class SpatialSpec extends SparkSpec {
     val rows = for (m <- Seq(1L, 2L); u <- units) yield (m, u, 1.0)
     val p = rows.toDF(T, U, "value")
     val pairsLocal = CountryLag.gridAdjacencyPairsLocal(p)
-    val adj = CountryLag.gridAdjacency(p, persist = false)
+    val adj = CountryLag.gridAdjacency(p)
     for ((inner, width) <- Seq((0, 0), (0, 1), (1, 1), (1, 2), (2, 1), (3, 1))) {
-      val dist = CountryLag.ringSet(p, adj, inner, width, persist = false)
+      val dist = CountryLag.ringSet(p, adj, inner, width)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val static = CountryLag.ringSetStatic(p, pairsLocal, inner, width)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
