@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.graphs.Edges
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -559,47 +560,34 @@ object Dedup {
     * not an extra join job). The 64-pass bound is a backstop: 2^64
     * exceeds any component diameter.
     *
-    * SCALE DISPATCH (r16, the [[graft.spatial.SpacetimeDist.chooseBand]]
-    * pattern): when BOTH the edge and node counts fit one task
-    * (`smallGraphRows`, default 2M each — tens of MB of primitive
-    * arrays), the loop is replaced by a single-task exact union-find
-    * over the same edge set. The loop's per-pass cost at small scale is
-    * pure scheduling latency — each pass is an eager localCheckpoint
-    * plus a convergence count, ~8 AQE sub-jobs of 5-100 ms (per-job
-    * trace, r16: q_split_no_leakage ran ~60 jobs summing 1.3 s against
-    * a 3.4 s wall) — while union-find with min-id roots computes the
-    * identical labelling (both are exact min-id-per-component) in one
-    * bounded task. The dispatch itself is two count jobs: the edge
-    * count materializes the cache pass 1 would build anyway, and the
-    * node count runs only when the edge count already passed. On any
-    * cluster a graph this small is cheaper in one task than in
-    * O(log D) distributed passes; at data scale either count trips the
-    * bound and the loop runs unchanged. EAGER either way (the loop
-    * checkpoints per pass; the dispatch counts up front).
+    * Small graphs — Long ids, a null-free edge list
+    * ([[graft.graphs.Edges.cleanCount]]; empty allowed) and a node count
+    * both within the bound — run a single-task union-find with min-id roots instead
+    * ([[graft.graphs.Edges.inOneTask]]), the identical labelling (both
+    * are exact min-id-per-component) without O(log D) scheduled passes.
     *
     * @param nodes one row per document (isolated docs become their own
     *   singleton cluster)
     * @param smallGraphRows single-task dispatch bound on edge AND node
-    *   counts (`0` pins the distributed loop; ids must be LongType for
-    *   the local path, any other id type keeps the loop)
+    *   counts (`<= 0` pins the distributed loop; ids must be LongType
+    *   for the local path, any other id type keeps the loop)
     * @return (idCol, cluster_id, cluster_size)
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
                           idCol: String = "doc_id",
-                          smallGraphRows: Long = SmallGraphRows): DataFrame = {
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .cache()
+                          smallGraphRows: Long = Edges.SmallGraphRows): DataFrame = {
+    val edges = graft.OpCache.persist(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+        .distinct())
     val idIsLong = nodes.select(col(idCol)).schema.head.dataType ==
       org.apache.spark.sql.types.LongType
-    val useLocal = idIsLong && smallGraphRows > 0 &&
-      edges.count() <= smallGraphRows && nodes.count() <= smallGraphRows
-    if (useLocal) {
-      val labels = localMinLabels(nodes, edges, idCol)
-      edges.unpersist()
-      return finishComponents(labels, idCol)
-    }
+    // unlike the other graph operators, an empty pair list (a corpus
+    // with no near-duplicates) is valid union-find input: all singletons
+    if (idIsLong && smallGraphRows > 0 &&
+        Edges.cleanCount(edges).exists(_ <= smallGraphRows) &&
+        nodes.count() <= smallGraphRows)
+      return finishComponents(localMinLabels(nodes, edges, idCol), idCol)
     var labels = nodes.select(col(idCol).as("node"), col(idCol).as("cluster_id"))
       .localCheckpoint()
     var converged = false
@@ -640,7 +628,6 @@ object Dedup {
       converged = changed == 0
       pass += 1
     }
-    edges.unpersist()
     finishComponents(labels, idCol)
   }
 
@@ -655,14 +642,6 @@ object Dedup {
       .select(col("node").as(idCol), col("cluster_id"), col("cluster_size"))
   }
 
-  /** Edge/node count past which [[connectedComponents]] stops running
-    * the single-task union-find and iterates distributed min-label
-    * propagation instead. 2M rows ≈ 32 MB of primitive id arrays plus
-    * a ~2M-entry LongMap — comfortably one task on any executor, far
-    * cheaper there than O(log D) scheduled passes.
-    */
-  val SmallGraphRows: Long = 2000000L
-
   /** Single-task exact labelling for [[connectedComponents]]'s
     * small-graph dispatch: union-find where the smaller root always
     * wins, so every component's root — and therefore every label — is
@@ -673,58 +652,36 @@ object Dedup {
     * caller error on EITHER path): null node ids emit nothing (the
     * loop drops them in the final size join), and edges with either
     * endpoint missing from `nodes` propagate nothing (the loop's
-    * label joins ignore them). The keyless repartition(1) keeps the upstream pair
-    * pipeline parallel and ships only (long, long) rows to the one
-    * task; the result is checkpointed so both downstream consumers
-    * (size aggregation and the final join) read it instead of
-    * re-running the task.
+    * label joins ignore them).
     */
   private def localMinLabels(nodes: DataFrame, edges: DataFrame,
                              idCol: String): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    val rows = nodes
-      .select(col(idCol).cast("long").as("a"),
-        lit(null).cast("long").as("b"), lit(false).as("e"))
-      .unionByName(edges.select(col("src").cast("long").as("a"),
-        col("dst").cast("long").as("b"), lit(true).as("e")))
-    rows.repartition(1).as[(Option[Long], Option[Long], Boolean)]
-      .mapPartitions { it =>
-        val nodesB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val srcB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val dstB = scala.collection.mutable.ArrayBuilder.make[Long]
-        it.foreach {
-          case (Some(a), _, false)       => nodesB += a
-          case (Some(a), Some(b), true)  => srcB += a; dstB += b
-          case _                         => () // null ids: parity with the loop
-        }
-        val nodeArr = nodesB.result()
-        val srcArr = srcB.result()
-        val dstArr = dstB.result()
-        val parent = new scala.collection.mutable.LongMap[Long](
-          math.max(16, nodeArr.length * 2))
-        nodeArr.foreach(n => if (!parent.contains(n)) parent(n) = n)
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        var i = 0
-        while (i < srcArr.length) {
-          val s = srcArr(i); val d = dstArr(i)
-          if (parent.contains(s) && parent.contains(d)) {
-            val rs = find(s); val rd = find(d)
-            if (rs < rd) parent(rd) = rs
-            else if (rd < rs) parent(rs) = rd
-          }
-          i += 1
-        }
-        nodeArr.iterator.map(n => (n, find(n)))
+    Edges.inOneTask(Edges.withNodes(nodes, col(idCol), lit(null), edges),
+      "node", "cluster_id") { (it: Iterator[(Option[Long], Option[Long], Boolean)]) =>
+      val g = Edges.readNodesAndEdges(it)
+      val nodeArr = g.ids; val srcArr = g.src; val dstArr = g.dst
+      val parent = new scala.collection.mutable.LongMap[Long](
+        math.max(16, nodeArr.length * 2))
+      nodeArr.foreach(n => if (!parent.contains(n)) parent(n) = n)
+      def find(x: Long): Long = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var c = x
+        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+        r
       }
-      .toDF("node", "cluster_id")
-      .localCheckpoint()
+      var i = 0
+      while (i < srcArr.length) {
+        val s = srcArr(i); val d = dstArr(i)
+        if (parent.contains(s) && parent.contains(d)) {
+          val rs = find(s); val rd = find(d)
+          if (rs < rd) parent(rd) = rs
+          else if (rd < rs) parent(rs) = rd
+        }
+        i += 1
+      }
+      nodeArr.iterator.map(n => (n, find(n)))
+    }
   }
 
   /** Cluster-size histogram over a [[connectedComponents]] labelling —

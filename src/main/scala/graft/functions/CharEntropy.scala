@@ -61,11 +61,9 @@ object CharEntropyExpr {
     val it = counts.values().iterator()
     while (it.hasNext) {
       val p = it.next()(0).toDouble / n.toDouble
-      sumNano += java.math.BigDecimal.valueOf(p * math.log(p) * -1e9)
-        .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
+      sumNano += SparkRound(p * math.log(p) * -1e9, 0).toLong
     }
-    java.math.BigDecimal.valueOf(sumNano.toDouble / 1e9)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    SparkRound(sumNano.toDouble / 1e9, 6)
   }
 
   def charEntropy(c: Column): Column =

@@ -24,8 +24,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Arithmetic is BIT-IDENTICAL to the literal formulation (pinned by
   * SimilaritySpec): per output row j, the same left-to-right fold
   * Σ_i v_i·m_{j,i} over min(|v|, inDim) terms, multiplied by `scale`,
-  * then Spark's `round(x, roundScale)` (BigDecimal.valueOf, HALF_UP) —
-  * so oracle SQL built from the same matrix stays engine-exact.
+  * then Spark's `round(x, roundScale)` ([[SparkRound]]: NaN and ±Inf
+  * pass through) — so oracle SQL built from the same matrix stays
+  * engine-exact.
   */
 case class MatVecProject(child: Expression,
                          matrix: Broadcast[Array[Array[Double]]],
@@ -48,9 +49,7 @@ case class MatVecProject(child: Expression,
       var s = 0.0
       var i = 0
       while (i < n) { s += v.getDouble(i) * row(i); i += 1 }
-      // Spark Round(DoubleType) semantics: BigDecimal.valueOf + HALF_UP
-      out(j) = java.math.BigDecimal.valueOf(s * scale)
-        .setScale(roundScale, java.math.RoundingMode.HALF_UP).doubleValue()
+      out(j) = SparkRound(s * scale, roundScale)
       j += 1
     }
     new GenericArrayData(out)

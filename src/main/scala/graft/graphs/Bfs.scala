@@ -37,12 +37,8 @@ object Bfs {
     val init = sym.select(col("src").as("id")).distinct()
       .select(col("id"),
         when(seedPred(col("id")), 0L).cast("long").as("hops"))
-    // SCALE DISPATCH (r16, the connectedComponents pattern): hop
-    // counts are pure integers, so below Edges.SmallGraphRows the
-    // maxHops scheduled join/aggregate passes run as one bounded task
-    // computing the identical synchronous relaxation. The seed
-    // predicate is still evaluated by Spark (in `init`); null
-    // endpoints or scale keep the loop.
+    // below the bound: the same relaxation in one task; the seed
+    // predicate is still evaluated by Spark (in `init`)
     if (Edges.smallEnough(sym, smallGraphRows))
       return bfsLocal(sym, init, maxHops)
     var dist = init.localCheckpoint()
@@ -65,54 +61,38 @@ object Bfs {
     * same synchronous recurrence (per hop, relax every node from its
     * neighbours' PREVIOUS-round hops, then min with its own) over
     * primitive arrays. The Spark-evaluated seed frame rides the same
-    * one-task union as the edges (the connectedComponents plumbing),
-    * so arbitrary Column seed predicates need no local re-evaluation.
+    * one-task union as the edges (seeds are the tagged nodes), so
+    * arbitrary Column seed predicates need no local re-evaluation.
     */
   private def bfsLocal(sym: DataFrame, init: DataFrame,
                        maxHops: Int): DataFrame = {
-    val spark = sym.sparkSession
-    import spark.implicits._
-    val rows = init
-      .select(col("id").as("a"), col("hops").as("b"), lit(false).as("e"))
-      .unionByName(sym.select(col("src").as("a"), col("dst").as("b"),
-        lit(true).as("e")))
-    rows.repartition(1).as[(Long, Option[Long], Boolean)]
-      .mapPartitions { it =>
-        val idB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val seedB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val srcB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val dstB = scala.collection.mutable.ArrayBuilder.make[Long]
-        it.foreach {
-          case (a, b, true)  => srcB += a; dstB += b.get
-          case (a, b, false) => idB += a; if (b.isDefined) seedB += a
-        }
-        val ids = idB.result(); val src = srcB.result()
-        val dst = dstB.result()
-        var hops = new scala.collection.mutable.LongMap[Long]()
-        seedB.result().foreach(s => hops(s) = 0L)
-        var h = 1
-        while (h <= maxHops) {
-          val prev = hops
-          val next = new scala.collection.mutable.LongMap[Long]()
-          prev.foreach { case (id, v) => next(id) = v }
-          // for each directed edge (s, d): d's previous hops + 1
-          // relaxes s (the loop joins dist on dst and aggregates min
-          // per src, then least()s with the node's own value)
-          var i = 0
-          while (i < src.length) {
-            prev.get(dst(i)).foreach { dv =>
-              val cand = dv + 1L
-              if (next.get(src(i)).forall(cand < _)) next(src(i)) = cand
-            }
-            i += 1
+    Edges.inOneTask(Edges.withNodes(init, col("id"), col("hops"), sym),
+      "id", "hops") { (it: Iterator[(Option[Long], Option[Long], Boolean)]) =>
+      val g = Edges.readNodesAndEdges(it)
+      val src = g.src; val dst = g.dst
+      var hops = new scala.collection.mutable.LongMap[Long]()
+      g.tagged.foreach(s => hops(s) = 0L)
+      var h = 1
+      while (h <= maxHops) {
+        val prev = hops
+        val next = new scala.collection.mutable.LongMap[Long]()
+        prev.foreach { case (id, v) => next(id) = v }
+        // for each directed edge (s, d): d's previous hops + 1
+        // relaxes s (the loop joins dist on dst and aggregates min
+        // per src, then least()s with the node's own value)
+        var i = 0
+        while (i < src.length) {
+          prev.get(dst(i)).foreach { dv =>
+            val cand = dv + 1L
+            if (next.get(src(i)).forall(cand < _)) next(src(i)) = cand
           }
-          hops = next
-          h += 1
+          i += 1
         }
-        val fin = hops
-        ids.iterator.map(id => (id, fin.get(id)))
+        hops = next
+        h += 1
       }
-      .toDF("id", "hops")
-      .localCheckpoint()
+      val fin = hops
+      g.ids.iterator.map(id => (id, fin.get(id)))
+    }
   }
 }

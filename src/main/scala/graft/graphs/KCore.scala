@@ -38,11 +38,6 @@ object KCore {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val sym = graft.OpCache.persist(
       Edges.symmetrize(pairs, srcCol, dstCol))
-    // SCALE DISPATCH (r16, the connectedComponents pattern): the peel
-    // is a pure integer function of (edges, k, rounds), so below
-    // Edges.SmallGraphRows the R scheduled semi-join/aggregate passes
-    // are replaced by one bounded task running the identical
-    // synchronous recurrence. Null endpoints or scale keep the loop.
     if (Edges.smallEnough(sym, smallGraphRows))
       return kcoreLocal(sym, k, rounds)
     // degree table of the current surviving subgraph; edges survive
@@ -74,50 +69,39 @@ object KCore {
   /** Single-task exact peel for the small-graph dispatch: the same
     * synchronous recurrence (degree table → keep ≥ k → re-derive
     * degrees from the doubly-surviving edge list) over primitive
-    * arrays, including the loop's fixpoint test. The keyless
-    * repartition(1) keeps the upstream pair pipeline parallel and
-    * ships only (long, long) rows to the one task; localCheckpoint so
-    * downstream consumers read the result instead of re-running it.
+    * arrays, including the loop's fixpoint test.
     */
   private def kcoreLocal(sym: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val spark = sym.sparkSession
-    import spark.implicits._
-    sym.repartition(1).as[(Long, Long)]
-      .mapPartitions { it =>
-        val srcB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val dstB = scala.collection.mutable.ArrayBuilder.make[Long]
-        it.foreach { case (s, d) => srcB += s; dstB += d }
-        val src = srcB.result(); val dst = dstB.result()
-        var deg = new scala.collection.mutable.LongMap[Long]()
-        var i = 0
-        while (i < src.length) {
-          deg(src(i)) = deg.getOrElse(src(i), 0L) + 1L; i += 1
-        }
-        var converged = false
-        var round = 1
-        while (round <= rounds) {
-          // keep = nodes with deg >= k in the CURRENT table; an edge
-          // survives when BOTH endpoints are kept (the two semi-joins)
-          val cur = deg
-          def kept(x: Long): Boolean = cur.get(x).exists(_ >= k)
-          var keepCount = 0L
-          cur.foreachValue(v => if (v >= k) keepCount += 1L)
-          val next = new scala.collection.mutable.LongMap[Long]()
-          i = 0
-          while (i < src.length) {
-            if (kept(src(i)) && kept(dst(i)))
-              next(src(i)) = next.getOrElse(src(i), 0L) + 1L
-            i += 1
-          }
-          converged = keepCount == next.size &&
-            next.valuesIterator.forall(_ >= k)
-          deg = next
-          round += 1
-        }
-        val conv = converged
-        deg.iterator.collect { case (id, d) if d >= k => (id, d, conv) }
+    Edges.inOneTask(sym, "id", "deg", "converged") { (it: Iterator[(Long, Long)]) =>
+      val (src, dst) = Edges.readEdges(it)
+      var deg = new scala.collection.mutable.LongMap[Long]()
+      var i = 0
+      while (i < src.length) {
+        deg(src(i)) = deg.getOrElse(src(i), 0L) + 1L; i += 1
       }
-      .toDF("id", "deg", "converged")
-      .localCheckpoint()
+      var converged = false
+      var round = 1
+      while (round <= rounds) {
+        // keep = nodes with deg >= k in the CURRENT table; an edge
+        // survives when BOTH endpoints are kept (the two semi-joins)
+        val cur = deg
+        def kept(x: Long): Boolean = cur.get(x).exists(_ >= k)
+        var keepCount = 0L
+        cur.foreachValue(v => if (v >= k) keepCount += 1L)
+        val next = new scala.collection.mutable.LongMap[Long]()
+        i = 0
+        while (i < src.length) {
+          if (kept(src(i)) && kept(dst(i)))
+            next(src(i)) = next.getOrElse(src(i), 0L) + 1L
+          i += 1
+        }
+        converged = keepCount == next.size &&
+          next.valuesIterator.forall(_ >= k)
+        deg = next
+        round += 1
+      }
+      val conv = converged
+      deg.iterator.collect { case (id, d) if d >= k => (id, d, conv) }
+    }
   }
 }

@@ -31,12 +31,6 @@ object LabelProp {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val sym = graft.OpCache.persist(
       Edges.symmetrize(pairs, srcCol, dstCol))
-    // SCALE DISPATCH (r16, the connectedComponents pattern): the
-    // synchronous LPA recurrence is pure integer counting with a
-    // deterministic (count desc, label asc) argmax, so below
-    // Edges.SmallGraphRows the per-round join + count + window passes
-    // run as one bounded task computing the identical rounds. Null
-    // endpoints or scale keep the loop.
     if (Edges.smallEnough(sym, smallGraphRows))
       return lpaLocal(sym, iters)
     var labels = sym.select(col("src").as("id")).distinct()
@@ -61,51 +55,41 @@ object LabelProp {
     * PREVIOUS-round labels, ties to the smallest label — the identical
     * synchronous recurrence over primitive arrays. Nodes keep a label
     * every round (each has ≥ 1 neighbour in a symmetrized list).
-    * localCheckpoint so multi-consumer callers (modularity joins the
-    * labelling twice) read the result instead of re-running the task.
     */
   private def lpaLocal(sym: DataFrame, iters: Int): DataFrame = {
-    val spark = sym.sparkSession
-    import spark.implicits._
-    sym.repartition(1).as[(Long, Long)]
-      .mapPartitions { it =>
-        val srcB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val dstB = scala.collection.mutable.ArrayBuilder.make[Long]
-        it.foreach { case (s, d) => srcB += s; dstB += d }
-        val src = srcB.result(); val dst = dstB.result()
-        var labels = new scala.collection.mutable.LongMap[Long]()
-        var i = 0
-        while (i < src.length) { labels(src(i)) = src(i); i += 1 }
-        var round = 1
-        while (round <= iters) {
-          val prev = labels
-          // per-node neighbour-label counts from the previous round
-          val counts = new scala.collection.mutable.LongMap[
-            scala.collection.mutable.LongMap[Long]]()
-          i = 0
-          while (i < src.length) {
-            val m = counts.getOrElseUpdate(src(i),
-              new scala.collection.mutable.LongMap[Long]())
-            val l = prev(dst(i))
-            m(l) = m.getOrElse(l, 0L) + 1L
-            i += 1
-          }
-          val next = new scala.collection.mutable.LongMap[Long]()
-          counts.foreach { case (id, m) =>
-            var bestLabel = Long.MaxValue; var bestN = 0L
-            m.foreach { case (l, n) =>
-              if (n > bestN || (n == bestN && l < bestLabel)) {
-                bestLabel = l; bestN = n
-              }
-            }
-            next(id) = bestLabel
-          }
-          labels = next
-          round += 1
+    Edges.inOneTask(sym, "id", "label") { (it: Iterator[(Long, Long)]) =>
+      val (src, dst) = Edges.readEdges(it)
+      var labels = new scala.collection.mutable.LongMap[Long]()
+      var i = 0
+      while (i < src.length) { labels(src(i)) = src(i); i += 1 }
+      var round = 1
+      while (round <= iters) {
+        val prev = labels
+        // per-node neighbour-label counts from the previous round
+        val counts = new scala.collection.mutable.LongMap[
+          scala.collection.mutable.LongMap[Long]]()
+        i = 0
+        while (i < src.length) {
+          val m = counts.getOrElseUpdate(src(i),
+            new scala.collection.mutable.LongMap[Long]())
+          val l = prev(dst(i))
+          m(l) = m.getOrElse(l, 0L) + 1L
+          i += 1
         }
-        labels.iterator
+        val next = new scala.collection.mutable.LongMap[Long]()
+        counts.foreach { case (id, m) =>
+          var bestLabel = Long.MaxValue; var bestN = 0L
+          m.foreach { case (l, n) =>
+            if (n > bestN || (n == bestN && l < bestLabel)) {
+              bestLabel = l; bestN = n
+            }
+          }
+          next(id) = bestLabel
+        }
+        labels = next
+        round += 1
       }
-      .toDF("id", "label")
-      .localCheckpoint()
+      labels.iterator
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.graphs
 
+import graft.functions.SparkRound
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -39,13 +40,6 @@ object PageRank {
       sym.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     val n = deg.count()
     require(n > 0, "pageRank needs a non-empty edge list")
-    // SCALE DISPATCH (r16, the connectedComponents pattern): the
-    // recurrence is already layout-proof — contributions are exact
-    // 1e-15-unit integer summands (order-free) and every rounding is
-    // BigDecimal HALF_UP, which one task reproduces bit-for-bit — so
-    // below Edges.SmallGraphRows the iters scheduled join/aggregate
-    // passes run as one bounded task. Null endpoints or scale keep
-    // the loop.
     if (Edges.smallEnough(sym, smallGraphRows)) {
       val c0 = (1.0 - damping) / n
       val nL = n
@@ -100,9 +94,6 @@ object PageRank {
       sym.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     val nSeeds = deg.filter(col("src") < maxSeedId).count()
     require(nSeeds > 0, s"no seed nodes below $maxSeedId in the graph")
-    // SCALE DISPATCH: same layout-proof argument as [[pageRank]]; the
-    // seed mass is a pure function of (id, maxSeedId, nSeeds), all
-    // primitives the task captures.
     if (Edges.smallEnough(sym, smallGraphRows)) {
       val sm = (id: Long) => if (id < maxSeedId) 1.0 / nSeeds else 0.0
       val d = damping
@@ -130,22 +121,13 @@ object PageRank {
     ranks.select(col("id"), round(col("rank"), 6).as("ppr"))
   }
 
-  /** Spark's Round on DoubleType: BigDecimal.valueOf → setScale
-    * HALF_UP → doubleValue (what both the interpreted and codegen
-    * paths execute) — the local recurrence must round EXACTLY the way
-    * the distributed expressions do.
-    */
-  private def bdRound(d: Double, scale: Int): Double =
-    java.math.BigDecimal.valueOf(d)
-      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
-
   /** Single-task exact power iteration for [[pageRank]] /
     * [[personalizedPageRank]]'s small-graph dispatch, reproducing the
     * distributed recurrence bit-for-bit: per iteration each node's
     * contribution is fixed to a 1e-15-unit long BEFORE the per-dst sum
     * (integer sums are order-free, so one task and a 32-way shuffle
-    * agree exactly), and every rounding is the same BigDecimal HALF_UP
-    * the Round expression applies.
+    * agree exactly), and every rounding is [[SparkRound]], what the
+    * Round expression applies.
     *
     * @param init pre-round initial rank (the recurrence rounds it to
     *   1e-9, exactly like the distributed seed frame)
@@ -155,43 +137,35 @@ object PageRank {
   private def powerIterLocal(sym: DataFrame, iters: Int, damping: Double,
                              init: Long => Double, base: Long => Double,
                              outCol: String): DataFrame = {
-    val spark = sym.sparkSession
-    import spark.implicits._
-    sym.repartition(1).as[(Long, Long)]
-      .mapPartitions { it =>
-        val srcB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val dstB = scala.collection.mutable.ArrayBuilder.make[Long]
-        it.foreach { case (s, d) => srcB += s; dstB += d }
-        val src = srcB.result(); val dst = dstB.result()
-        val deg = new scala.collection.mutable.LongMap[Long]()
-        var i = 0
-        while (i < src.length) {
-          deg(src(i)) = deg.getOrElse(src(i), 0L) + 1L; i += 1
-        }
-        var rank = new scala.collection.mutable.LongMap[Double]()
-        deg.foreachKey(id => rank(id) = bdRound(init(id), 9))
-        var iter = 1
-        while (iter <= iters) {
-          val ci = new scala.collection.mutable.LongMap[Long]()
-          i = 0
-          while (i < src.length) {
-            val s = src(i)
-            val term = bdRound(rank(s) / deg(s) * 1e15, 0).toLong
-            ci(dst(i)) = ci.getOrElse(dst(i), 0L) + term
-            i += 1
-          }
-          val next = new scala.collection.mutable.LongMap[Double]()
-          deg.foreachKey { id =>
-            next(id) =
-              bdRound(base(id) + ci.getOrElse(id, 0L) / 1e15 * damping, 9)
-          }
-          rank = next
-          iter += 1
-        }
-        val fin = rank
-        deg.keysIterator.map(id => (id, bdRound(fin(id), 6)))
+    Edges.inOneTask(sym, "id", outCol) { (it: Iterator[(Long, Long)]) =>
+      val (src, dst) = Edges.readEdges(it)
+      val deg = new scala.collection.mutable.LongMap[Long]()
+      var i = 0
+      while (i < src.length) {
+        deg(src(i)) = deg.getOrElse(src(i), 0L) + 1L; i += 1
       }
-      .toDF("id", outCol)
-      .localCheckpoint()
+      var rank = new scala.collection.mutable.LongMap[Double]()
+      deg.foreachKey(id => rank(id) = SparkRound(init(id), 9))
+      var iter = 1
+      while (iter <= iters) {
+        val ci = new scala.collection.mutable.LongMap[Long]()
+        i = 0
+        while (i < src.length) {
+          val s = src(i)
+          val term = SparkRound(rank(s) / deg(s) * 1e15, 0).toLong
+          ci(dst(i)) = ci.getOrElse(dst(i), 0L) + term
+          i += 1
+        }
+        val next = new scala.collection.mutable.LongMap[Double]()
+        deg.foreachKey { id =>
+          next(id) =
+            SparkRound(base(id) + ci.getOrElse(id, 0L) / 1e15 * damping, 9)
+        }
+        rank = next
+        iter += 1
+      }
+      val fin = rank
+      deg.keysIterator.map(id => (id, SparkRound(fin(id), 6)))
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.SparkRound
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Aggregator
@@ -31,7 +32,7 @@ import org.apache.spark.sql.expressions.Aggregator
   *  - the trim filter compares with SQLOrderingUtil.compareDoubles —
   *    the exact comparator Catalyst codegen emits for double >=/<=
   *    (NaN greatest, -0.0 == 0.0).
-  *  - cents ride `BigDecimal.valueOf(x).setScale(0, HALF_UP)` then a
+  *  - cents ride `SparkRound(x, 0)` (BigDecimal.valueOf, HALF_UP) then a
   *    truncating long cast — Round's DoubleType codegen and the
   *    non-ANSI double→long Cast — summed exactly (BigInteger = the
   *    decimal(38,0) sum), and the mean replays Cast(dec→double) /
@@ -53,13 +54,6 @@ object TrimmedMean {
   final case class Out(q_lo: Double, q_hi: Double, n_kept: Long,
                        trimmed_mean: Double)
 
-  private def bdRound(d: Double, scale: Int): Double =
-    // Round's DoubleType codegen: NaN/Infinity pass through, else
-    // BigDecimal.valueOf + HALF_UP (PageRank.bdRound with the guard)
-    if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) d
-    else java.math.BigDecimal.valueOf(d)
-      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
-
   class Agg(lo: Double, hi: Double)
       extends Aggregator[Double, Buf, Out] {
     override def zero: Buf = ExactPercentile.emptyBuf()
@@ -78,7 +72,7 @@ object TrimmedMean {
         if (SQLOrderingUtil.compareDoubles(x, qLo) >= 0 &&
             SQLOrderingUtil.compareDoubles(x, qHi) <= 0) {
           kept += 1
-          val c = bdRound(x * 100, 0).toLong
+          val c = SparkRound(x * 100, 0).toLong
           try centsSmall = Math.addExact(centsSmall, c)
           catch {
             case _: ArithmeticException =>
@@ -91,9 +85,9 @@ object TrimmedMean {
       cents = cents.add(java.math.BigInteger.valueOf(centsSmall))
       val mean =
         if (kept == 0L) 0.0
-        else bdRound(new java.math.BigDecimal(cents).doubleValue() /
+        else SparkRound(new java.math.BigDecimal(cents).doubleValue() /
           kept.toDouble / 100.0, 6)
-      Out(bdRound(qLo, 6), bdRound(qHi, 6), kept, mean)
+      Out(SparkRound(qLo, 6), SparkRound(qHi, 6), kept, mean)
     }
     override def bufferEncoder: Encoder[Buf] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()

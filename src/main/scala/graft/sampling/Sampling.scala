@@ -1,5 +1,7 @@
 package graft.sampling
 
+import graft.functions.SparkRound
+import graft.graphs.Edges
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -545,13 +547,12 @@ object Sampling {
     *
     * EAGER: the coverage check below collects the observed category
     * values at construction time (bounded by the chi2Test
-    * category-cardinality contract). The iterations themselves run as
-    * ONE bounded task (r16): the cell table is ≤ |targetsA|·|targetsB|
-    * rows at ANY data scale — the coverage contract caps it, unlike
-    * the data-sized graph dispatches — and every scaling step is
-    * order-free (integer 1e-9 marginal sums, per-cell HALF_UP rounds),
-    * so the single-task replay is bit-identical to the former
-    * 2·iters checkpointed distributed passes it replaces.
+    * category-cardinality contract), and the iterations run as ONE
+    * bounded task ([[Edges.inOneTask]]): the cell table is
+    * ≤ |targetsA|·|targetsB| rows at ANY data scale, and every scaling
+    * step is order-free (integer 1e-9 marginal sums, per-cell
+    * [[SparkRound]]s), so the single-task replay is bit-identical to
+    * the former 2·iters checkpointed distributed passes it replaces.
     *
     * @param targetsA target share per value of `colA` (must cover
     *   every observed value, each value at most once; shares needn't
@@ -599,66 +600,54 @@ object Sampling {
     val tA = targetsA.toMap
     val tB = targetsB.toMap
     val nIters = iters
-    cells.repartition(1).as[(String, String, Long)]
-      .mapPartitions { it =>
-        val arr = it.toArray
-        val cn = arr.length
-        val as = arr.map(_._1); val bs = arr.map(_._2)
-        val ns = arr.map(_._3)
-        val totD = ns.sum.toDouble // == cells.agg(sum(__n)): exact long
-        val w = Array.fill(cn)(1.0)
-        val wNull = Array.fill(cn)(false) // mirrors SQL null propagation
-        // one scaling step: marginal mass per key in exact 1e-9 units
-        // (sum skips SQL-null weights like Spark's sum), then the
-        // 1e-9-rounded per-cell update; division by a zero/null mass
-        // yields SQL null exactly like Spark's non-ANSI Divide
-        def scale(keyOf: Int => String, tgt: String => Double): Unit = {
-          val m9 = scala.collection.mutable.HashMap.empty[String, Long]
-          var i = 0
-          while (i < cn) {
-            if (!wNull(i)) {
-              val k = keyOf(i)
-              val term = bdRound(ns(i) * w(i) * 1e9, 0).toLong
-              m9(k) = m9.getOrElse(k, 0L) + term
-            }
-            i += 1
+    Edges.inOneTask(cells, colA, colB, "n", "weight") { (it: Iterator[(String, String, Long)]) =>
+      val arr = it.toArray
+      val cn = arr.length
+      val as = arr.map(_._1); val bs = arr.map(_._2)
+      val ns = arr.map(_._3)
+      val totD = ns.sum.toDouble // == cells.agg(sum(__n)): exact long
+      val w = Array.fill(cn)(1.0)
+      val wNull = Array.fill(cn)(false) // mirrors SQL null propagation
+      // one scaling step: marginal mass per key in exact 1e-9 units
+      // (sum skips SQL-null weights like Spark's sum), then the
+      // 1e-9-rounded per-cell update; division by a zero/null mass
+      // yields SQL null exactly like Spark's non-ANSI Divide
+      def scale(keyOf: Int => String, tgt: String => Double): Unit = {
+        val m9 = scala.collection.mutable.HashMap.empty[String, Long]
+        var i = 0
+        while (i < cn) {
+          if (!wNull(i)) {
+            val k = keyOf(i)
+            val term = SparkRound(ns(i) * w(i) * 1e9, 0).toLong
+            m9(k) = m9.getOrElse(k, 0L) + term
           }
-          i = 0
-          while (i < cn) {
-            if (!wNull(i)) {
-              val k = keyOf(i)
-              m9.get(k) match {
-                case Some(m) if m != 0L =>
-                  w(i) = bdRound(w(i) * (tgt(k) * totD) / (m.toDouble / 1e9), 9)
-                case _ => wNull(i) = true
-              }
+          i += 1
+        }
+        i = 0
+        while (i < cn) {
+          if (!wNull(i)) {
+            val k = keyOf(i)
+            m9.get(k) match {
+              case Some(m) if m != 0L =>
+                w(i) = SparkRound(w(i) * (tgt(k) * totD) / (m.toDouble / 1e9), 9)
+              case _ => wNull(i) = true
             }
-            i += 1
           }
-        }
-        var r = 1
-        while (r <= nIters) {
-          scale(i => as(i), tA)
-          scale(i => bs(i), tB)
-          r += 1
-        }
-        arr.indices.iterator.map { i =>
-          (as(i), bs(i), ns(i),
-            if (wNull(i)) None else Some(bdRound(w(i), 6)))
+          i += 1
         }
       }
-      .toDF(colA, colB, "n", "weight")
+      var r = 1
+      while (r <= nIters) {
+        scale(i => as(i), tA)
+        scale(i => bs(i), tB)
+        r += 1
+      }
+      arr.indices.iterator.map { i =>
+        (as(i), bs(i), ns(i),
+          if (wNull(i)) None else Some(SparkRound(w(i), 6)))
+      }
+    }
   }
-
-  /** Spark's `round(col, scale)` on DoubleType: BigDecimal.valueOf →
-    * setScale HALF_UP → doubleValue (the PageRank.bdRound mirror —
-    * the local fixpoint must round EXACTLY the way the distributed
-    * expressions did).
-    */
-  private def bdRound(d: Double, scale: Int): Double =
-    java.math.BigDecimal.valueOf(d)
-      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
-
 
   /** [[rake]] toward UNIFORM marginals on both axes — the "flatten
     * this mixture" convenience (targets 1/k per observed value; the

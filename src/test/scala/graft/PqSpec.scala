@@ -203,10 +203,19 @@ class PqSpec extends SparkSpec {
     val comps = signs.map { row =>
       round(dot(v, array(row.map(s => lit(s.toDouble)): _*)) * invSqrt, 6)
     }
-    val viaLits = corpus.select(col("vec_id"), array(comps: _*).as("proj"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val viaBc = Similarity.randomProject(corpus, outDim = outDim)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    // plus a NaN and a +Inf element: Spark's round passes both through
+    val withNonFinite = corpus.union(Seq(
+      (100L, Seq.tabulate(inDim)(i => if (i == 2) Float.NaN else 1.0f)),
+      (101L, Seq.tabulate(inDim)(i => if (i == 5) Float.PositiveInfinity else 1.0f))
+    ).toDF("vec_id", "embedding"))
+    // bit patterns, so NaN equals NaN
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)
+        .map(java.lang.Double.doubleToLongBits)).toMap
+    val viaLits = bits(withNonFinite.select(col("vec_id"), array(comps: _*).as("proj")))
+    val viaBc = bits(Similarity.randomProject(withNonFinite, outDim = outDim))
+    assert(viaBc.size === 26)
+    assert(viaBc(100L).forall(_ == java.lang.Double.doubleToLongBits(Double.NaN)))
     assert(viaBc === viaLits) // EXACT equality — same fold, same round
     // and the plan carries no sign literals: O(1) in outDim. A parquet
     // scan, not the LocalRelation corpus — ConvertToLocalRelation

@@ -24,13 +24,19 @@ class R16CcDispatchSpec extends SparkSpec {
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 5L), (3L, 4L), (7L, 99L), (3L, 3L))
       .toDF("id_a", "id_b")
-    val local = Dedup.connectedComponents(nodes, pairs)
-    val loop = Dedup.connectedComponents(nodes, pairs,
-      smallGraphRows = 0)
-    assert(canon(local) == canon(loop))
-    assert(canon(local) == Seq(
-      (1L, 1L, 3L), (2L, 1L, 3L), (3L, 3L, 2L), (4L, 3L, 2L),
-      (5L, 1L, 3L), (6L, 6L, 1L), (7L, 7L, 1L)))
+    // the same graph plus a pair with a null endpoint (joins nothing;
+    // the probe sends it to the loop)
+    val withNull = pairs.union(
+      Seq((Some(6L), Option.empty[Long])).toDF("id_a", "id_b"))
+    for (ps <- Seq(pairs, withNull)) {
+      val local = Dedup.connectedComponents(nodes, ps)
+      val loop = Dedup.connectedComponents(nodes, ps,
+        smallGraphRows = 0)
+      assert(canon(local) == canon(loop))
+      assert(canon(local) == Seq(
+        (1L, 1L, 3L), (2L, 1L, 3L), (3L, 3L, 2L), (4L, 3L, 2L),
+        (5L, 1L, 3L), (6L, 6L, 1L), (7L, 7L, 1L)))
+    }
   }
 
   // No duplicate-node-row parity test: the contract is one row per

@@ -1,6 +1,7 @@
 package graft
 
-import graft.graphs.{Bfs, KCore, LabelProp, PageRank}
+import graft.dedup.Dedup
+import graft.graphs.{Bfs, Edges, KCore, LabelProp, PageRank}
 import org.apache.spark.sql.functions._
 
 /** r16: the iterative graph operators' small-graph dispatch
@@ -109,5 +110,49 @@ class R16GraphDispatchSpec extends SparkSpec {
       rows(KCore.kcore(pairs, 1, 2, smallGraphRows = 0)))
     assert(rows(LabelProp.labelPropagation(pairs, 2)) ==
       rows(LabelProp.labelPropagation(pairs, 2, smallGraphRows = 0)))
+  }
+
+  test("Edges.smallEnough: non-empty, null-free and within a positive bound") {
+    val two = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
+    assert(!Edges.smallEnough(Seq.empty[(Long, Long)].toDF("src", "dst"), 10))
+    assert(!Edges.smallEnough(
+      Seq((Some(1L), Some(2L)), (Some(2L), None)).toDF("src", "dst"), 10))
+    assert(!Edges.smallEnough(
+      Seq((Some(1L), Some(2L)), (None, Some(1L))).toDF("src", "dst"), 10))
+    assert(Edges.smallEnough(two, 2))
+    assert(!Edges.smallEnough(two, 1))
+    assert(!Edges.smallEnough(two, 0))
+    assert(!Edges.smallEnough(two, -1))
+  }
+
+  test("the local paths stay within their Spark job budgets") {
+    // a Spark-built graph (a local relation would be folded away) that
+    // no other test builds, so no cached plan shortens the count
+    def graph(salt: Long) = spark.range(0L, 150L, 1L, 2).select(
+      (col("id") % 50L + salt).as("id_a"),
+      ((col("id") * 7L + 3L) % 50L + salt).as("id_b"))
+    // (jobs to build the result, jobs to read it once)
+    def jobs(build: => org.apache.spark.sql.DataFrame): (Int, Int) = {
+      var out: org.apache.spark.sql.DataFrame = null
+      val b = jobsOf { out = build }
+      (b, jobsOf { out.collect() })
+    }
+    val lp = jobs(LabelProp.labelPropagation(graph(1000L), 3))
+    val pr = jobs(PageRank.pageRank(graph(2000L), iters = 5))
+    val cc = jobs(Dedup.connectedComponents(
+      spark.range(3000L, 3060L, 1L, 2).select(col("id").as("doc_id")),
+      graph(3000L)))
+    // a corpus with no near-duplicates: an empty pair list
+    val ccEmpty = jobs(Dedup.connectedComponents(
+      spark.range(4000L, 4060L, 1L, 2).select(col("id").as("doc_id")),
+      graph(4000L).filter(col("id_a") < 0L)))
+    // what one probe and one checkpointed task cost: an extra probe
+    // raises the total, a lost checkpoint moves the task into the read
+    def within(j: (Int, Int), total: Int, read: Int): Boolean =
+      j._1 + j._2 <= total && j._2 <= read
+    assert(within(lp, 7, 1), s"labelPropagation: $lp jobs")
+    assert(within(pr, 11, 1), s"pageRank: $pr jobs")
+    assert(within(cc, 11, 3), s"connectedComponents: $cc jobs")
+    assert(within(ccEmpty, 10, 3), s"connectedComponents, no pairs: $ccEmpty jobs")
   }
 }

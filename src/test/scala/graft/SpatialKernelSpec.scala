@@ -1,7 +1,6 @@
 package graft
 
 import graft.spatial.{Grid, KernelLag, SpacetimeDist}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -165,30 +164,6 @@ class SpatialKernelSpec extends SparkSpec {
   }
 
   // ---- wire-format job budget ----------------------------------------
-
-  /** Spark jobs started while `body` runs. A marker job run afterwards
-    * flushes the listener: job-start events arrive in submission order.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val marker = s"jobs-marker-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
-          flushed.countDown()
-        else if (flushed.getCount > 0) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener not flushed")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** A 12×10 grid over 6 months, built by a Spark job (not a local
     * relation, which Catalyst would fold away), with own lon/lat columns

@@ -29,6 +29,8 @@ import duckdb
 import pandas as pd
 import numpy as np
 
+from canon import NonScalarColumn, canon
+
 argv = [a for a in sys.argv[1:] if a not in ("--strict", "--profile")]
 strict = "--strict" in sys.argv[1:]
 profile = "--profile" in sys.argv[1:]
@@ -47,38 +49,6 @@ for f in glob.glob(f"{sfdir}/*.parquet"):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{f}')")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-
-class NonScalarColumn(Exception):
-    pass
-
-def canon(df):
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            # the driver's compare CRASHES on array/list cells inside
-            # sort_values (unhashable ndarray) — r12's q_embed_rp red
-            # row. This harness used to stringify them, which is
-            # exactly how that divergence hid locally: under --strict
-            # (the driver mirror), a non-scalar cell is a FAIL here
-            # too, so the wire rule can never silently regress.
-            if strict and df[c].map(
-                    lambda v: isinstance(v, (np.ndarray, list, dict, tuple))
-                ).any():
-                raise NonScalarColumn(
-                    f"column {c!r} holds array/list cells — the driver "
-                    f"compare cannot sort these; explode to scalar rows")
-            df[c] = df[c].astype(str)
-        elif np.issubdtype(df[c].dtype, np.floating):
-            df[c] = df[c].astype(float).round(6 if strict else 9)
-        elif str(df[c].dtype) == 'bool':
-            df[c] = df[c].astype(int)
-        else:
-            try:
-                df[c] = pd.to_numeric(df[c])
-            except Exception:
-                df[c] = df[c].astype(str)
-    df = df.sort_values(by=list(df.columns), na_position='first').reset_index(drop=True)
-    return df
 
 fails = 0
 timings = {}
@@ -116,7 +86,7 @@ for name, sql in sorted(oracle.items()):
         fails += 1
         continue
     try:
-        a, b = canon(spark_df), canon(duck_df)
+        a, b = canon(spark_df, strict), canon(duck_df, strict)
     except NonScalarColumn as e:
         print(f"FAIL {name}: {e}")
         fails += 1

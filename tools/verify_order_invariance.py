@@ -20,8 +20,9 @@ Usage: verify_order_invariance.py <sfDir> <outDir-with-oracle_sql.json> [query..
 """
 import json, sys, glob, os
 import duckdb
-import pandas as pd
 import numpy as np
+
+from canon import canon
 
 argv = [a for a in sys.argv[1:]]
 sfdir = argv[0] if len(argv) > 0 else "/root/testdata/sf0.01"
@@ -44,25 +45,13 @@ for f in glob.glob(f"{sfdir}/*.parquet"):
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 
-def canon(df):
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        elif np.issubdtype(df[c].dtype, np.floating):
-            df[c] = df[c].astype(float).round(6)  # the driver's grid
-        elif str(df[c].dtype) == 'bool':
-            df[c] = df[c].astype(int)
-    return df.sort_values(by=list(df.columns), na_position='first') \
-             .reset_index(drop=True)
-
 lucky, errors, ok = [], [], 0
 for name, sql in sorted(oracle.items()):
     if only and name not in only:
         continue
     try:
-        a = canon(con_a.execute(sql).df())
-        b = canon(con_b.execute(sql).df())
+        a = canon(con_a.execute(sql).df(), strict=True)  # the driver's grid
+        b = canon(con_b.execute(sql).df(), strict=True)
     except Exception as e:
         errors.append(name)
         print(f"ERR  {name}: {e}")
