@@ -9,6 +9,13 @@ import org.apache.spark.sql.SparkSession
   * arrives as that system property) is kept as is. Otherwise the session
   * runs `local[n]` with `n` = `SPARK_GRAFT_CPUS`, defaulting to the
   * host's processor count, and `n` shuffle partitions.
+  *
+  * The library sizes its own keyed exchanges from their input
+  * ([[Shuffle]]), so the panel transforms, the spatial kernels, the
+  * global ranking and the shingle repartition run the same under a
+  * preset master's 200 partitions. The shuffle-partition setting still
+  * governs the joins and aggregations Spark plans itself (re-joins,
+  * `groupBy`s, distincts), and it caps [[Shuffle.width]].
   */
 object LocalSession {
 

@@ -4,17 +4,22 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
+import scala.reflect.ClassTag
+
 /** The session-scoped registry of everything the library caches:
   * persisted DataFrames (operator intermediates, the harness panels,
-  * the spatial geometry), broadcasts (the projection matrices) and
-  * driver-side values (the quadtree embedding, the adjacency pairs).
+  * the spatial geometry), broadcasts (the projection matrices, the
+  * geometry tables of the tree and Fourier lags, the spacetime event
+  * set) and driver-side values (the quadtree embedding, the adjacency
+  * pairs, the corpus scan's partition count).
   * An operator never fire-and-forgets a `persist` or a broadcast — in
   * a long-lived session those blocks would accumulate with no way to
   * free them — it registers here instead.
   *
   * Two lifetimes:
-  *  - request: [[persist]]; freed by [[release]], which a service calls
-  *    between requests;
+  *  - request: [[persist]] and [[broadcast]]; freed by [[release]],
+  *    which a service calls between requests (a plan carrying a request
+  *    broadcast must run before it);
   *  - session: [[memo]] and [[memoPersisted]]; survive [[release]] and
   *    are freed by [[clear]].
   *
@@ -63,6 +68,15 @@ object OpCache {
     */
   def persist(df: DataFrame): DataFrame = own(df, forSession = false)
 
+  /** Broadcast `value` for the current request (destroyed by
+    * [[release]]).
+    */
+  def broadcast[V: ClassTag](session: SparkSession, value: V): Broadcast[V] = {
+    val b = session.sparkContext.broadcast(value)
+    synchronized { entries((session, b)) = new Entry(b, () => b.destroy(), forSession = false) }
+    b
+  }
+
   /** The value of `compute` for (`session`, `key`), computed on first
     * use and kept until [[clear]].
     */
@@ -81,6 +95,24 @@ object OpCache {
         }
       }
     }.value.asInstanceOf[V]
+  }
+
+  /** [[memo]] of a key in `family` that keeps at most `bound` keys of
+    * the family per session: a new key past the bound first frees the
+    * family's other entries. For memos whose keys grow with the inputs a
+    * long-lived session sees, not with its geometry.
+    */
+  def memo[V](session: SparkSession, family: String, bound: Int, key: Any)(
+      compute: => V): V = {
+    val k = (family, key)
+    if (!entries.contains((session, k))) synchronized {
+      val kin = entries.keys.filter {
+        case (s, (f, _)) => s == session && f == family
+        case _ => false
+      }
+      if (kin.size >= bound) kin.foreach(entries.remove(_).foreach(_.free()))
+    }
+    memo(session, k)(compute)
   }
 
   /** [[memo]] of a frame whose plan stays persisted until [[clear]]. */

@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * (`{"type":"tlag","args":[10]}`, reference README.md:28-30), composed
   * left-to-right. Here the same spec builds a single lazy Catalyst plan
   * over the panel's `value` column: composing transforms never
-  * materialises intermediates, and Catalyst collapses the stacked
-  * windows (all share the unit partitioning) into a plan with one
-  * shuffle for the whole chain.
+  * materialises intermediates, and the stacked windows (all share the
+  * unit partitioning) sit over one input-sized `unit_id` exchange
+  * ([[Shuffle.by]]) for the whole chain.
   */
 object Registry {
 
@@ -801,13 +801,44 @@ object Registry {
         s"unknown $what transform '${step.name}'; known: ${reg.keys.toSeq.sorted.mkString(", ")}"))
       .apply(df, step.args)
 
-  /** Apply a named panel transform. */
-  def apply(df: DataFrame, step: Step): DataFrame =
-    applyIn(transforms, "panel")(df, step)
+  /** Panel transforms that are per-unit windows: each needs its input
+    * clustered on `unit_id`, and its output stays clustered so.
+    */
+  private val unitWindowed: Set[String] = Set(
+    "tlag", "tlead", "delta", "moving_average", "moving_sum", "rollmax",
+    "mean", "demean", "winsorize", "robust_scale", "ewma", "cusum",
+    "decompose", "trend", "rolling_corr", "onset_possible", "onset",
+    "temporal_entropy", "cweq", "time_since", "tlags3d", "fill",
+    "extrapolate", "tick_time_since")
 
-  /** Compose a whole pipeline left-to-right into one lazy plan. */
+  /** Row-local panel transforms: they keep their input's partitioning. */
+  private val rowLocal: Set[String] = Set(
+    "identity", "ge", "le", "in_range", "ln", "decay", "replace_na",
+    "add_column", "subtract_column", "multiply_column", "divide_column")
+
+  /** Apply a named panel transform to `df`; `keyed`: `df` is already
+    * clustered on `unit_id` by an earlier step's [[Shuffle.by]].
+    */
+  private def applyPanel(df: DataFrame, step: Step, keyed: Boolean): DataFrame = {
+    val in =
+      if (unitWindowed(step.name) && !keyed) Shuffle.by(df, col(Panel.UnitCol))
+      else df
+    applyIn(transforms, "panel")(in, step)
+  }
+
+  /** Apply a named panel transform. */
+  def apply(df: DataFrame, step: Step): DataFrame = applyPanel(df, step, keyed = false)
+
+  /** Compose a whole pipeline left-to-right into one lazy plan. A run of
+    * per-unit windows, with row-local steps between them, shares one
+    * `unit_id` exchange: it is added where the run starts, not per step
+    * (an exchange of another width would not be planned away).
+    */
   def pipeline(df: DataFrame, steps: Seq[Step]): DataFrame =
-    steps.foldLeft(df)(apply)
+    steps.foldLeft((df, false)) { case ((d, keyed), step) =>
+      (applyPanel(d, step, keyed),
+        unitWindowed(step.name) || (keyed && rowLocal(step.name)))
+    }._1
 
   /** Compose a corpus pipeline left-to-right into one lazy plan. */
   def corpusPipeline(df: DataFrame, steps: Seq[Step]): DataFrame =

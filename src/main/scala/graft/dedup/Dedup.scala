@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.{OpCache, Shuffle}
 import graft.graphs.Edges
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
@@ -48,31 +49,18 @@ object Dedup {
         col("is_duplicate"))
   }
 
-  /** Memoised input-parallelism probe for [[shingles]]' conditional
+  /** Input-parallelism probe for [[shingles]]' conditional
     * repartition. `df.rdd.getNumPartitions` forces a full physical
     * planning of the input, so a long-lived service dispatching the
     * same corpus through the wire format repeatedly would re-plan the
-    * scan on every call — the probe result is cached per
-    * (session, canonicalised logical plan) instead: one plan
-    * conversion per distinct input. The cache stores only an Int per
-    * plan hash and is cleared wholesale past a backstop size, so it
-    * cannot grow with corpus size, only with distinct query shapes.
+    * scan on every call — the count is a session `OpCache` memo per
+    * canonicalized plan instead: one plan conversion per distinct input,
+    * at most 1,024 inputs per session.
     */
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Int]()
-
-  private def inputPartitions(docs: DataFrame): Int = {
-    val key = (System.identityHashCode(docs.sparkSession),
-      docs.queryExecution.logical.semanticHash())
-    val cached = probeCache.get(key)
-    if (cached != 0) cached
-    else {
-      if (probeCache.size > 1024) probeCache.clear()
-      val n = math.max(docs.rdd.getNumPartitions, 1)
-      probeCache.put(key, n)
-      n
-    }
-  }
+  private def inputPartitions(docs: DataFrame): Int =
+    OpCache.memo(docs.sparkSession, "dedup.inputPartitions", 1024,
+      docs.queryExecution.normalized.canonicalized)(
+      math.max(docs.rdd.getNumPartitions, 1))
 
   /** Word n-gram shingles of the normalised text, one row per distinct
     * (id, shingle) pair — SET semantics per id, even when the same id
@@ -102,7 +90,7 @@ object Dedup {
     * The cross-row set union (r6 review, duplicate-id inputs): the
     * id-keyed `collect_list` aggregation shuffles one compact shingle
     * ARRAY per input row, keyed by id — after the conditional
-    * `repartition(target, id)` the child partitioning already
+    * `Shuffle.by(docs, id)` the child partitioning already
     * satisfies the aggregation's distribution, so the common
     * underfilled-scan path adds NO extra shuffle (measured parity
     * with the r6 per-row shape at sf0.1); a well-split scan pays one
@@ -116,15 +104,13 @@ object Dedup {
     */
   def shingles(docs: DataFrame, n: Int, idCol: String = "doc_id",
                textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
-    val target = spark.sessionState.conf.numShufflePartitions
     // only repartition when the input underfills the cluster (the
     // single-file local layout); a well-split scan stays put. A
     // streaming frame cannot be probed (no RDD before execution) and
     // the stateful consumers repartition by their own keys anyway.
     val base =
       if (docs.isStreaming) docs
-      else if (inputPartitions(docs) < target) docs.repartition(target, col(idCol))
+      else if (inputPartitions(docs) < Shuffle.width(docs)) Shuffle.by(docs, col(idCol))
       else docs
     val words = split(TextOps.normalize(col(textCol)), " ")
     base.select(col(idCol),

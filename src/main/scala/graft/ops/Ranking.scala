@@ -55,12 +55,14 @@ object Ranking {
     * (partition id << 33) | record-number-in-partition, and the record
     * number follows the sorted iterator order. Partitions are capped
     * at 2^33 rows by that layout — far above any sane partition size.
+    * `numPartitions` 0 sizes the range exchange from the input
+    * ([[graft.Shuffle.width]]).
     */
   def globalRank(df: DataFrame, order: Seq[Column],
                  rankCol: String = "rank",
                  numPartitions: Int = 0): DataFrame = {
     val n = if (numPartitions > 0) numPartitions
-            else df.sparkSession.sessionState.conf.numShufflePartitions
+            else graft.Shuffle.width(df)
     // eager checkpoint: both branches below MUST observe the same
     // physical partition boundaries (see the object doc)
     val parted = df.repartitionByRange(n, order: _*).localCheckpoint()
@@ -178,7 +180,7 @@ object Ranking {
                     numPartitions: Int = 0): (DataFrame, DataFrame, DataFrame) = {
     require(vals.nonEmpty, "globalCumsumN needs at least one value column")
     val n = if (numPartitions > 0) numPartitions
-            else df.sparkSession.sessionState.conf.numShufflePartitions
+            else graft.Shuffle.width(df)
     // eager checkpoint: the per-partition-sum branch and the running-sum
     // branch must observe the same boundaries (see the object doc)
     val parted = df.repartitionByRange(n, order: _*).localCheckpoint()
@@ -241,7 +243,7 @@ object Ranking {
     val spark = df.sparkSession
     import spark.implicits._
     val Dec = "decimal(38,0)"
-    val n = spark.sessionState.conf.numShufflePartitions
+    val n = graft.Shuffle.width(df)
     val parted = df.repartitionByRange(n, order: _*)
       .sortWithinPartitions(order: _*)
       .select(col(xCol).isNull.as("__isnull"),

@@ -1,6 +1,6 @@
 package graft.spatial
 
-import graft.Panel
+import graft.{OpCache, Panel, Shuffle}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,8 +15,9 @@ import org.apache.spark.sql.types._
   * (fourier_lag.py:303).
   *
   * Spark-first: months are independent, so this is a
-  * `groupByKey(month).mapGroups` dense-grid kernel — embarrassingly
-  * parallel over months, one shuffle on month_id. The FFT is an
+  * `groupBy(month).as[...].flatMapGroups` dense-grid kernel —
+  * embarrassingly parallel over months, one input-sized shuffle on
+  * month_id ([[graft.Shuffle.by]]). The FFT is an
   * in-house iterative radix-2 (the grid side is a power of two by
   * construction); per-month cost O(G² log G) matches the reference.
   */
@@ -311,15 +312,16 @@ object FourierLag {
     val U = Panel.UnitCol
 
     val emb = embOpt.getOrElse(TreeLag.embedOf(panel, lonCol, latCol))
-    val bc = spark.sparkContext.broadcast((emb.cells, emb.ncells))
+    val bc = OpCache.memo(spark, ("fourier.cells", emb))(
+      spark.sparkContext.broadcast((emb.cells, emb.ncells)))
     val nf = valueCols.size
 
-    val ds = panel.select(col(T), col(U),
+    val cells = panel.select(col(T), col(U),
         array(valueCols.map(c => col(c).cast("double")): _*).as("__vs"))
-      .as[(Long, Long, Seq[Double])]
     val solver: (Array[Double], Int) => Array[Double] =
       if (dimensionality == 3) solveSlice3d else solveSlice
-    val solvedDs = ds.groupByKey(_._1)
+    val solvedDs = Shuffle.by(cells, col(T)).groupBy(col(T))
+      .as[Long, (Long, Long, Seq[Double])]
       .flatMapGroups { (month: Long, rows: Iterator[(Long, Long, Seq[Double])]) =>
         val (cells, nc) = bc.value
         val grids = Array.fill(nf)(new Array[Double](nc * nc))

@@ -1,6 +1,6 @@
 package graft.spatial
 
-import graft.Panel
+import graft.{Panel, Shuffle}
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
@@ -11,13 +11,14 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * optional normalisation), zero-padded at the grid boundary
   * (ndimage.convolve mode='constant' cval=0, splag4d.py:140).
   *
-  * Spark-first formulation: a per-month stencil behind ONE hash
-  * exchange on month_id (`groupBy(month).as[...].flatMapGroups`, the
-  * [[FourierLag]] idiom). Each month's cells are indexed by their exact
-  * (lon, lat) coordinate, and every cell sums `value·w` over the kernel
-  * offsets ([[Grid.kernelOffsets]]) found in that index — coordinate
-  * space, not pgid arithmetic, so grid-row wraparound can't manufacture
-  * false neighbours. A missing neighbour contributes nothing (the zero
+  * Spark-first formulation: a per-month stencil behind ONE input-sized
+  * hash exchange on month_id ([[graft.Shuffle.by]], then
+  * `groupBy(month).as[...].flatMapGroups`, the [[FourierLag]] idiom).
+  * Each month's cells are indexed by their exact (lon, lat) coordinate,
+  * and every cell sums `value·w` over the kernel offsets
+  * ([[Grid.kernelOffsets]]) found in that index — coordinate space,
+  * not pgid arithmetic, so grid-row wraparound can't manufacture false
+  * neighbours. A missing neighbour contributes nothing (the zero
   * padding), a null value is skipped, and a cell whose sum is NaN or
   * that has no non-null neighbour gets 0.0. Cost: |panel| × |kernel|
   * hash probes inside the month's task — no join, no aggregation
@@ -72,7 +73,7 @@ object KernelLag {
       outs.map(StructField(_, DoubleType, nullable = false)))
     def num(r: Row, i: Int): Double = r.get(i).asInstanceOf[Number].doubleValue
 
-    panel.groupBy(col(T))
+    Shuffle.by(panel, col(T)).groupBy(col(T))
       .as(Encoders.row(StructType(Seq(schema(T)))), Encoders.row(schema))
       .flatMapGroups { (month: Row, rows: Iterator[Row]) =>
         val cells = rows.toArray

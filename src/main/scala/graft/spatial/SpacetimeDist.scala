@@ -1,6 +1,6 @@
 package graft.spatial
 
-import graft.Panel
+import graft.{OpCache, Panel, Shuffle}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -222,9 +222,10 @@ object SpacetimeDist {
   }
 
   /** The kernel path: per-unit local top-k against the broadcast event
-    * set, behind one hash exchange on unit_id, with no join. `events`
-    * rows are (e_t, e_lon, e_lat, e_size, e_u) as (long, double,
-    * double, double, long). Arithmetic mirrors the banded path's Spark
+    * set (a request-lifetime [[OpCache.broadcast]]), behind one
+    * input-sized hash exchange on unit_id ([[Shuffle.by]]), with no
+    * join. `events` rows are (e_t, e_lon, e_lat, e_size, e_u) as (long,
+    * double, double, double, long). Arithmetic mirrors the banded path's Spark
     * expressions operation for operation (squared distances through the
     * ranking, StrictMath.pow as Spark's pow, means summed in rank order,
     * NaN results folded into the sentinel as `na.fill` does), so both
@@ -236,7 +237,7 @@ object SpacetimeDist {
     val T = Panel.TimeCol
     val U = Panel.UnitCol
     val byMonth = events.sortBy(_.getLong(0))
-    val ev = panel.sparkSession.sparkContext.broadcast((
+    val ev = OpCache.broadcast(panel.sparkSession, (
       byMonth.map(_.getLong(0)), byMonth.map(_.getDouble(1)), byMonth.map(_.getDouble(2)),
       byMonth.map(_.getDouble(3)), byMonth.map(_.getLong(4))))
     val schema = panel.schema
@@ -248,7 +249,7 @@ object SpacetimeDist {
     val halfPower = power / 2.0
     def num(r: Row, i: Int): Double = r.get(i).asInstanceOf[Number].doubleValue
 
-    panel.groupBy(col(U))
+    Shuffle.by(panel, col(U)).groupBy(col(U))
       .as[Row, Row](Encoders.row(StructType(Seq(schema(U)))), Encoders.row(schema))
       .flatMapGroups { (_: Row, rows: Iterator[Row]) =>
         val (eT, eLon, eLat, eSize, eU) = ev.value
@@ -396,7 +397,7 @@ object SpacetimeDist {
         // event table feeds several consumers (two ring expansions,
         // month totals, distinct months, final fallback) — persist it
         // once instead of re-filtering the panel per consumer.
-        val ev = graft.OpCache.persist(events
+        val ev = OpCache.persist(events
           .withColumn("ebx", floor(col("e_lon") / b).cast("long"))
           .withColumn("eby", floor(col("e_lat") / b).cast("long")))
         // event-side ring expansion: each event fans out to the
@@ -448,7 +449,7 @@ object SpacetimeDist {
         // persisted: the unit-cell table feeds the level-0/1 unit
         // joins, the fallback join, and the occupied-cell universe —
         // four consumers, each otherwise a fresh panel aggregation
-        val unitCell = graft.OpCache.persist(unitGeo
+        val unitCell = OpCache.persist(unitGeo
           .withColumn("cbx", floor(col(lonCol) / b).cast("long"))
           .withColumn("cby", floor(col(latCol) / b).cast("long")))
         // tiny frames: occupied unit cells × event months, and the
@@ -489,7 +490,7 @@ object SpacetimeDist {
         // (measured 28 s → 5.4 s at the 10× fixture). A
         // REPARTITION_BY_NUM shuffle is not coalescible, the cache
         // preserves its layout, and the join reuses it.
-        val nPart = spark.sessionState.conf.numShufflePartitions
+        val nPart = Shuffle.width(ringEv(r))
         // r16 (verdict #2 phase 2): the per-unit top-k groups by
         // (cbx, cby, U, e_t) rather than (U, e_t) — a unit lives in
         // exactly ONE band cell (unitCell is one row per unit by
@@ -549,9 +550,9 @@ object SpacetimeDist {
         // fit the 8 GB broadcast cap; a deployment in that regime
         // should widen `bandCells` (fewer, coarser cells) rather than
         // let the hint force an oversized broadcast.
-        val ring0 = graft.OpCache.persist(
+        val ring0 = OpCache.persist(
           ringEv(r).repartition(nPart, col("cbx"), col("cby")))
-        val cert0 = graft.OpCache.persist(certify(ring0, r))
+        val cert0 = OpCache.persist(certify(ring0, r))
         val safe0 = cert0.filter(col("__safe")).drop("__safe")
         val top0 = unitTop(ring0.join(broadcast(safe0), Seq("cbx", "cby", "e_t")))
         val pending0 = cellMonths.join(cert0.filter(col("__safe")),
@@ -561,10 +562,10 @@ object SpacetimeDist {
           val (tops, residue) = Seq(3 * r, 9 * r)
             .foldLeft((List(top0), pending0)) {
               case ((acc, pending), rr) =>
-                val ring = graft.OpCache.persist(
+                val ring = OpCache.persist(
                   ringFor(pending, rr)
                     .repartition(nPart, col("cbx"), col("cby")))
-                val cert = graft.OpCache.persist(certify(ring, rr))
+                val cert = OpCache.persist(certify(ring, rr))
                 val safe = cert.filter(col("__safe")).drop("__safe")
                 val top = unitTop(
                   ring.join(broadcast(safe), Seq("cbx", "cby", "e_t")))

@@ -1,6 +1,6 @@
 package graft.spatial
 
-import graft.Panel
+import graft.{OpCache, Panel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -198,8 +198,8 @@ object TreeLag {
     // never a driver-side collection; its join strategy is left to
     // AQE, which broadcasts it at runtime whenever the actual size is
     // small.
-    val bcGeom = spark.sparkContext.broadcast(
-      (packedNodeKeys(emb), emb.ncells, emb.power))
+    val bcGeom = OpCache.memo(spark, ("treelag.nodes", emb))(spark.sparkContext.broadcast(
+      (packedNodeKeys(emb), emb.ncells, emb.power)))
     val fns = weightFns.map(_._2).toArray
     val tc = thetacrit
     val ilDf = emb.cells.toSeq.map { case (u, (ex, ey)) => (u, ex, ey) }
@@ -327,12 +327,11 @@ object TreeLag {
     require(weightFns.nonEmpty, "at least one weight function required")
 
     val emb = embOpt.getOrElse(embedOf(panel, lonCol, latCol))
-    // driver-side geometry (unit → embedded cell), broadcast once;
-    // sorted so block slicing is deterministic
-    val targetArr = emb.cells.toSeq.map { case (u, (ex, ey)) => (u, ex, ey) }
-      .sortBy(_._1).toArray
-    val bcTargets = spark.sparkContext.broadcast(targetArr)
-    val nBlocks = math.max(1, (targetArr.length + GridLagBlock - 1) / GridLagBlock)
+    // driver-side geometry (unit → embedded cell), broadcast once per
+    // embedding for the session; sorted so block slicing is deterministic
+    val bcTargets = OpCache.memo(spark, ("gridlag.targets", emb))(spark.sparkContext.broadcast(
+      emb.cells.toSeq.map { case (u, (ex, ey)) => (u, ex, ey) }.sortBy(_._1).toArray))
+    val nBlocks = math.max(1, (emb.cells.size + GridLagBlock - 1) / GridLagBlock)
     val power = emb.power
     val block = GridLagBlock
     val fns = weightFns.map(_._2).toArray

@@ -87,6 +87,25 @@ class OpCacheSpec extends SparkSpec {
     assert(destroyed(bc))
   }
 
+  test("release destroys request broadcasts; a memo family past its bound starts over") {
+    val s = spark.newSession()
+    val req = OpCache.broadcast(s, Array(7, 8))
+    val kept = OpCache.memo(s, "bc")(s.sparkContext.broadcast(Array(9)))
+    assert(req.value.sameElements(Array(7, 8)))
+    OpCache.release(s)
+    assert(destroyed(req) && kept.value.sameElements(Array(9)))
+    val computed = new java.util.concurrent.atomic.AtomicInteger
+    def probe(k: Int): Int = OpCache.memo(s, "family", 2, k) { computed.incrementAndGet(); k * 10 }
+    assert(probe(1) == 10 && probe(2) == 20 && probe(1) == 10 && computed.get == 2)
+    // a third key frees the family's two entries first
+    assert(probe(3) == 30 && computed.get == 3)
+    assert(probe(1) == 10 && computed.get == 4)
+    assert(probe(3) == 30 && computed.get == 4)
+    assert(kept.value.sameElements(Array(9)), "other memos are untouched")
+    OpCache.clear(s)
+    assert(destroyed(kept))
+  }
+
   test("release and clear leave another session's entries untouched") {
     val a = spark.newSession()
     val b = spark.newSession()
