@@ -15,16 +15,19 @@ import org.apache.spark.sql.functions._
   * tensorisation.
   *
   * At 100 TB the panel arrives partitioned by `month_id` (partition
-  * pruning) and the per-unit window family below induces exactly one
-  * hash-partition shuffle on `unit_id`, after which every window op in a
-  * chain reuses the same partitioning (Catalyst collapses adjacent Window
-  * nodes over the same spec).
+  * pruning) and the per-unit family induces one hash-partition shuffle
+  * on `unit_id`, after which every per-unit op in a chain reuses the same
+  * partitioning. Catalyst merges only independent window expressions
+  * over one spec into one Window node; a window over another window's
+  * output is a Window node of its own, so a chain of dependent windows
+  * stacks one operator per step. The lag/moving/cweq family therefore
+  * runs as one per-unit scan (`graft.ops.UnitScan`) instead.
   */
 object Panel {
   val TimeCol = "month_id"
   val UnitCol = "unit_id"
 
-  /** Per-unit time window — the single shuffle all temporal ops share. */
+  /** Per-unit time window — the order every per-unit op shares. */
   def w: WindowSpec =
     Window.partitionBy(UnitCol).orderBy(TimeCol)
 

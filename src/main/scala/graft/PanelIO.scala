@@ -12,9 +12,12 @@ import org.apache.spark.sql.functions._
   *   - `partitionBy(month_id)` → directory-level partition pruning: a
   *     transform over months [a, b] reads only those directories
   *     (`PartitionFilters` in the scan, zero I/O elsewhere);
-  *   - `bucketBy(n, unit_id)` (table form) → unit-hash co-location: the
-  *     one shuffle every window op needs is pre-paid at write time, and
-  *     unit-keyed joins between two bucketed panels are shuffle-free.
+  *   - `bucketBy(n, unit_id)` (table form) → unit-hash co-location: a
+  *     per-unit window operator (`TemporalOps`) called on the table
+  *     plans no exchange, nor does the per-unit scan (`UnitScan`) or a
+  *     registry pipeline when `n` equals their exchange's width
+  *     ([[Shuffle.width]]); unit-keyed joins between two bucketed
+  *     panels are shuffle-free.
   *
   * Parquet column pruning + min/max row-group statistics come free.
   */

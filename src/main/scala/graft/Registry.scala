@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{MissingOps, PointwiseOps, TemporalOps}
+import graft.ops.{MissingOps, PointwiseOps, TemporalOps, UnitScan}
 import graft.spatial.{CountryLag, FourierLag, Grid, KernelLag, SpacetimeDist, TreeLag}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -11,9 +11,11 @@ import org.apache.spark.sql.functions._
   * (`{"type":"tlag","args":[10]}`, reference README.md:28-30), composed
   * left-to-right. Here the same spec builds a single lazy Catalyst plan
   * over the panel's `value` column: composing transforms never
-  * materialises intermediates, and the stacked windows (all share the
-  * unit partitioning) sit over one input-sized `unit_id` exchange
-  * ([[Shuffle.by]]) for the whole chain.
+  * materialises intermediates. A run of per-unit series steps
+  * (lag/lead/delta/moving/cweq/time_since/tick, mean/demean) compiles to
+  * one [[UnitScan]] — one input-sized `unit_id` exchange
+  * ([[Shuffle.by]]), one sort, one pass over each unit's rows — and the
+  * remaining per-unit windows share one such exchange per run.
   */
 object Registry {
 
@@ -96,6 +98,27 @@ object Registry {
       f(gp, args).withColumn("value", col("__out")).drop("__out", "__lon", "__lat")
     }
 
+  /** Panel transforms that are steps of the per-unit scan: name → the
+    * scan steps its args compile to.
+    */
+  private val scanSteps: Map[String, Seq[Any] => Seq[UnitScan.Step]] = Map(
+    "tlag" -> (a => Seq(UnitScan.Lag(a.num(0).toInt))),
+    "tlead" -> (a => Seq(UnitScan.Lead(a.num(0).toInt))),
+    "delta" -> (a => Seq(UnitScan.Delta(a.num(0).toInt))),
+    "moving_average" -> (a => Seq(UnitScan.MovingAverage(a.num(0).toInt))),
+    "moving_sum" -> (a => Seq(UnitScan.MovingSum(a.num(0).toInt))),
+    "rollmax" -> (a => Seq(UnitScan.RollMax(a.num(0).toInt))),
+    "mean" -> (_ => Seq(UnitScan.Mean)),
+    "demean" -> (_ => Seq(UnitScan.Demean)),
+    // args: [v, seed?]
+    "cweq" -> (a => Seq(UnitScan.Cweq(a.num(0), a.numOpt(1).map(_.toInt)))),
+    // args: [v?, seed?]
+    "time_since" -> (a =>
+      UnitScan.timeSince(a.numOpt(0).getOrElse(0.0), a.numOpt(1).map(_.toInt))),
+    // incremental tick (views_2.py:385-418) — the q_tick composition
+    "tick_time_since" -> (_ => Seq(UnitScan.TickTimeSince)))
+
+  /** Panel transforms that are not scan steps. */
   val transforms: Map[String, Transform] = Map(
     // names follow the reference registry (views_2.py function names)
     "identity" -> ((df, _) => df),
@@ -104,16 +127,8 @@ object Registry {
     "in_range" -> colT((c, a) => PointwiseOps.inRange(c, a.num(0), a.num(1)).cast("double")),
     "ln" -> colT((c, _) => PointwiseOps.ln(c)),
     "decay" -> colT((c, a) => PointwiseOps.decay(c, a.num(0))),
-    "tlag" -> colT((c, a) => TemporalOps.tlag(c, a.num(0).toInt)),
-    "tlead" -> colT((c, a) => TemporalOps.tlead(c, a.num(0).toInt)),
-    "delta" -> colT((c, a) => TemporalOps.delta(c, a.num(0).toInt)),
-    "moving_average" -> colT((c, a) => TemporalOps.movingAverage(c, a.num(0).toInt)),
-    "moving_sum" -> colT((c, a) => TemporalOps.movingSum(c, a.num(0).toInt)),
-    "rollmax" -> colT((c, a) => TemporalOps.rollmax(c, a.num(0).toInt)),
-    "mean" -> colT((c, _) => TemporalOps.meanOverTime(c)),
-    "demean" -> colT((c, _) => TemporalOps.demean(c)),
-    // extensions: quantile clip + robust standardisation (same unit
-    // partitioning as mean/demean — chains at one shuffle)
+    // extensions: quantile clip + robust standardisation (per-unit
+    // windows over the unit's whole series)
     "winsorize" -> colT((c, a) => TemporalOps.winsorize(c, a.num(0), a.num(1))),
     "robust_scale" -> colT((c, _) => TemporalOps.robustScale(c)),
     // args: [alpha, span] — truncated exponentially weighted mean
@@ -174,15 +189,6 @@ object Registry {
     "onset_possible" -> colT((c, a) => TemporalOps.onsetPossible(c, a.num(0).toInt).cast("double")),
     "onset" -> colT((c, a) => TemporalOps.onset(c, a.num(0).toInt).cast("double")),
     "temporal_entropy" -> colT((c, a) => TemporalOps.temporalEntropy(c, a.num(0).toInt, a.num(1))),
-    "cweq" -> ((df, a) => {
-      TemporalOps.cweq(df, "value", a.num(0), a.numOpt(1).map(_.toInt), out = "__cw")
-        .withColumn("value", col("__cw").cast("double")).drop("__cw")
-    }),
-    "time_since" -> ((df, a) => {
-      TemporalOps.timeSince(df, "value", a.numOpt(0).getOrElse(0.0),
-        a.numOpt(1).map(_.toInt), out = "__ts")
-        .withColumn("value", col("__ts").cast("double")).drop("__ts")
-    }),
     // multi-lag family (tlag3d.py:6): appends a 0-filled `tlag_<k>`
     // column per requested lag; `value` rides through unchanged, so
     // later steps still compose on the series
@@ -219,14 +225,6 @@ object Registry {
     "subtract_column" -> colT2(PointwiseOps.subtractColumn),
     "multiply_column" -> colT2(PointwiseOps.multiplyColumn),
     "divide_column" -> colT2(PointwiseOps.divideColumn),
-
-    // incremental tick (views_2.py:385-418) — the q_tick composition
-    "tick_time_since" -> ((df, _) => {
-      val tis = TemporalOps.timeSince(df, "value", 0.0, out = "__ts")
-        .withColumn("__ts", col("__ts").cast("double"))
-      tis.withColumn("value",
-        TemporalOps.tickTimeSince(col("value"), col("__ts"))).drop("__ts")
-    }),
 
     // spatial family — args follow the reference's positional order.
     // Geometry (embedding / adjacency / rings) comes from the shared
@@ -794,51 +792,66 @@ object Registry {
   /** One step of a pipeline spec. */
   final case class Step(name: String, args: Seq[Any])
 
-  private def applyIn(reg: Map[String, Transform], what: String)(
+  private def applyIn(reg: Map[String, Transform], what: String,
+                      alsoKnown: Iterable[String] = Nil)(
       df: DataFrame, step: Step): DataFrame =
     reg.getOrElse(step.name,
-      throw new IllegalArgumentException(
-        s"unknown $what transform '${step.name}'; known: ${reg.keys.toSeq.sorted.mkString(", ")}"))
+      throw new IllegalArgumentException(s"unknown $what transform '${step.name}'; known: " +
+        (reg.keys ++ alsoKnown).toSeq.sorted.mkString(", ")))
       .apply(df, step.args)
 
   /** Panel transforms that are per-unit windows: each needs its input
     * clustered on `unit_id`, and its output stays clustered so.
     */
   private val unitWindowed: Set[String] = Set(
-    "tlag", "tlead", "delta", "moving_average", "moving_sum", "rollmax",
-    "mean", "demean", "winsorize", "robust_scale", "ewma", "cusum",
-    "decompose", "trend", "rolling_corr", "onset_possible", "onset",
-    "temporal_entropy", "cweq", "time_since", "tlags3d", "fill",
-    "extrapolate", "tick_time_since")
+    "winsorize", "robust_scale", "ewma", "cusum", "decompose", "trend",
+    "rolling_corr", "onset_possible", "onset", "temporal_entropy", "tlags3d",
+    "fill", "extrapolate")
 
   /** Row-local panel transforms: they keep their input's partitioning. */
   private val rowLocal: Set[String] = Set(
     "identity", "ge", "le", "in_range", "ln", "decay", "replace_na",
     "add_column", "subtract_column", "multiply_column", "divide_column")
 
-  /** Apply a named panel transform to `df`; `keyed`: `df` is already
-    * clustered on `unit_id` by an earlier step's [[Shuffle.by]].
+  /** Apply a named panel transform that is not a scan step; `keyed`: `df`
+    * is already clustered on `unit_id` by an earlier step's [[Shuffle.by]].
     */
   private def applyPanel(df: DataFrame, step: Step, keyed: Boolean): DataFrame = {
     val in =
       if (unitWindowed(step.name) && !keyed) Shuffle.by(df, col(Panel.UnitCol))
       else df
-    applyIn(transforms, "panel")(in, step)
+    applyIn(transforms, "panel", scanSteps.keys)(in, step)
   }
 
   /** Apply a named panel transform. */
-  def apply(df: DataFrame, step: Step): DataFrame = applyPanel(df, step, keyed = false)
+  def apply(df: DataFrame, step: Step): DataFrame = pipeline(df, Seq(step))
 
-  /** Compose a whole pipeline left-to-right into one lazy plan. A run of
-    * per-unit windows, with row-local steps between them, shares one
-    * `unit_id` exchange: it is added where the run starts, not per step
-    * (an exchange of another width would not be planned away).
+  /** Compose a whole pipeline left-to-right into one lazy plan.
+    *
+    * Each maximal run of scan steps ([[UnitScan]]) becomes one scan: one
+    * `unit_id` exchange, one sort and one grouped map for the whole
+    * run. A run of the remaining per-unit windows, with row-local steps
+    * between them, shares one `unit_id` exchange, added where the run
+    * starts (an exchange of another width would not be planned away).
+    * Spark cannot see a scan's output clustering, and a scan does not
+    * reuse a clustering it did not make, so a switch between the two
+    * kinds — a window step after a scan or a scan after a window, with
+    * or without row-local steps between — pays one more [[Shuffle.by]]
+    * exchange, and so does each scan run when row-local steps split one.
     */
-  def pipeline(df: DataFrame, steps: Seq[Step]): DataFrame =
-    steps.foldLeft((df, false)) { case ((d, keyed), step) =>
-      (applyPanel(d, step, keyed),
-        unitWindowed(step.name) || (keyed && rowLocal(step.name)))
-    }._1
+  def pipeline(df: DataFrame, steps: Seq[Step]): DataFrame = {
+    def flush(d: DataFrame, run: Seq[UnitScan.Step]) =
+      if (run.isEmpty) d else UnitScan(d, run)
+    val (out, _, run) = steps.foldLeft((df, false, Vector.empty[UnitScan.Step])) {
+      case ((d, keyed, run), step) => scanSteps.get(step.name) match {
+        case Some(compile) => (d, false, run ++ compile(step.args))
+        case None =>
+          (applyPanel(flush(d, run), step, keyed),
+            unitWindowed(step.name) || (keyed && rowLocal(step.name)), Vector.empty)
+      }
+    }
+    flush(out, run)
+  }
 
   /** Compose a corpus pipeline left-to-right into one lazy plan. */
   def corpusPipeline(df: DataFrame, steps: Seq[Step]): DataFrame =

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{MissingOps, PointwiseOps, TemporalOps}
+import graft.ops.{MissingOps, PointwiseOps, TemporalOps, UnitScan}
 import graft.spatial.{CountryLag, FourierLag, Grid, KernelLag, SpacetimeDist, TreeLag}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,9 +22,8 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     val p = Panel.densePanel(spark, "/root/testdata/sf0.001")
-    TemporalOps.timeSince(p, "value", 0.0, out = "ts_ev")
-      .select(col(T), col(U),
-        PointwiseOps.decay(col("ts_ev").cast("double"), 12.0).as("decayed"))
+    UnitScan(p, UnitScan.timeSince(0.0))
+      .select(col(T), col(U), PointwiseOps.decay(col("value"), 12.0).as("decayed"))
   }
 
   /** The dense panel is the shared input of every panel query — persist
@@ -59,6 +58,16 @@ object SparkEntry {
   private def colQ(name: String, expr: Column): (SparkSession, String) => DataFrame =
     onPanel(p => p.select(col(T), col(U), expr.as(name)))
 
+  /** Select (month_id, unit_id, the scanned `value` as name) on the
+    * dense panel.
+    */
+  private def scanQ(name: String, steps: UnitScan.Step*): (SparkSession, String) => DataFrame =
+    onPanel(p => UnitScan(p, steps).select(col(T), col(U), col("value").as(name)))
+
+  /** [[scanQ]] of a counter: the count as an int column. */
+  private def scanCountQ(name: String, steps: UnitScan.Step*): (SparkSession, String) => DataFrame =
+    onPanel(p => UnitScan(p, steps).select(col(T), col(U), col("value").cast("int").as(name)))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.2 pointwise
     "q_identity" -> onPanel(p => p.select(col(T), col(U), col("value"), col("value2"))),
@@ -74,22 +83,22 @@ object SparkEntry {
       .select(col(T), col(U), PointwiseOps.divideColumn(col("value"), col("value2")).as("divided"))),
 
     // §2.5 temporal windows
-    "q_tlag" -> colQ("tlag_2", TemporalOps.tlag(col("value"), 2)),
+    "q_tlag" -> scanQ("tlag_2", UnitScan.Lag(2)),
     "q_tlags3d" -> onPanel(p =>
       TemporalOps.tlags(p, "value", Seq(1, 3, 6))
         .select(col(T), col(U), col("tlag_1"), col("tlag_3"), col("tlag_6"))),
-    "q_tlead" -> colQ("tlead_2", TemporalOps.tlead(col("value"), 2)),
-    "q_delta" -> colQ("delta_1", TemporalOps.delta(col("value"), 1)),
-    "q_mavg" -> colQ("mavg_3", TemporalOps.movingAverage(col("value"), 3)),
-    "q_msum" -> colQ("msum_5", TemporalOps.movingSum(col("value"), 5)),
-    "q_rollmax" -> colQ("rollmax_4", TemporalOps.rollmax(col("value"), 4)),
+    "q_tlead" -> scanQ("tlead_2", UnitScan.Lead(2)),
+    "q_delta" -> scanQ("delta_1", UnitScan.Delta(1)),
+    "q_mavg" -> scanQ("mavg_3", UnitScan.MovingAverage(3)),
+    "q_msum" -> scanQ("msum_5", UnitScan.MovingSum(5)),
+    "q_rollmax" -> scanQ("rollmax_4", UnitScan.RollMax(4)),
     // r9: outlier-robust rolling smoother (pandas rolling(7).median())
     "q_rolling_median" -> colQ("rmed",
       round(TemporalOps.rollingMedian(col("value"), 7), 6)),
-    "q_mean" -> colQ("mean_val", TemporalOps.meanOverTime(col("value"))),
-    "q_demean" -> colQ("demeaned", TemporalOps.demean(col("value"))),
+    "q_mean" -> scanQ("mean_val", UnitScan.Mean),
+    "q_demean" -> scanQ("demeaned", UnitScan.Demean),
     // r8 extensions: quantile clip + outlier-insensitive scaling, both
-    // on the same per-unit partitioning as mean/demean
+    // per-unit windows over the unit's whole series
     // (rounded 1e-6 in-query on both sides: quantile interpolation may
     // differ in the last float bits across engines)
     "q_winsorize" -> colQ("winsorized",
@@ -171,23 +180,12 @@ object SparkEntry {
         round(d.getField("seasonal"), 6).as("seasonal"),
         round(d.getField("residual"), 6).as("residual"))
     },
-    "q_cweq" -> onPanel(p =>
-      TemporalOps.cweq(p, "value", 0.0, out = "cweq")
-        .select(col(T), col(U), col("cweq"))),
-    "q_cweq_seed" -> onPanel(p =>
-      TemporalOps.cweq(p, "value", 0.0, seed = Some(12), out = "cweq")
-        .select(col(T), col(U), col("cweq"))),
-    "q_time_since" -> onPanel(p =>
-      TemporalOps.timeSince(p, "value", 0.0, out = "time_since")
-        .select(col(T), col(U), col("time_since"))),
+    "q_cweq" -> scanCountQ("cweq", UnitScan.Cweq(0.0)),
+    "q_cweq_seed" -> scanCountQ("cweq", UnitScan.Cweq(0.0, seed = Some(12))),
+    "q_time_since" -> scanCountQ("time_since", UnitScan.timeSince(0.0): _*),
     "q_onset_possible" -> colQ("onset_possible", TemporalOps.onsetPossible(col("value"), 6)),
     "q_onset" -> colQ("onset", TemporalOps.onset(col("value"), 6)),
-    "q_tick" -> onPanel { p =>
-      val tis = TemporalOps.timeSince(p, "value", 0.0, out = "time_since")
-        .withColumn("time_since", col("time_since").cast("double"))
-      tis.select(col(T), col(U),
-        TemporalOps.tickTimeSince(col("value"), col("time_since")).as("tick"))
-    },
+    "q_tick" -> scanQ("tick", UnitScan.TickTimeSince),
     "q_entropy" -> colQ("entropy", TemporalOps.temporalEntropy(col("value"), 12, 1.0)),
 
     // §2.10 missing data

@@ -5,33 +5,21 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Per-unit time-series window operators (SURVEY §2.5) — the core of the
-  * reference library. Every op partitions by `unit_id` and orders by
-  * `month_id`; a chain of them costs exactly one shuffle because all
-  * windows share the same partitioning spec.
+/** Per-unit time-series window operators (SURVEY §2.5). Every op
+  * partitions by `unit_id` (most also order by `month_id`), so a chain of
+  * them needs one `unit_id` exchange; each op is still its own `Window`
+  * operator, because a window over another window's output never
+  * collapses into it. The lag/lead/delta/moving/max/mean/cweq/
+  * time_since/tick steps of the reference are not here: they run as one
+  * per-unit scan, [[UnitScan]].
   *
-  * Reference: views_2.py (lag/lead/delta/moving/cweq/onset/tick),
+  * Reference: views_2.py (onset), tlag3d.py (multi-lag),
   * temporal_entropy.py (windowed Shannon entropy).
   */
 object TemporalOps {
   private def w = Panel.w
   private def trailing(n: Int) = Panel.trailing(n)
   private def cum = Panel.cumulative
-
-  /** Shift back `t` steps (t >= 1) — views_2.py:82-97. */
-  def tlag(c: Column, t: Int): Column = {
-    require(t >= 1, s"tlag requires time >= 1, got $t")
-    lag(c, t).over(w)
-  }
-
-  /** Shift forward `t` steps (t >= 1) — views_2.py:100-115. */
-  def tlead(c: Column, t: Int): Column = {
-    require(t >= 1, s"tlead requires time >= 1, got $t")
-    lead(c, t).over(w)
-  }
-
-  /** s − tlag(s, t) — views_2.py:12-24. */
-  def delta(c: Column, t: Int): Column = c - tlag(c, t)
 
   /** Multi-lag in one pass — tlag3d.py:6-134: one output column per
     * requested lag. Out-of-range positions are 0.0, not null — a
@@ -45,17 +33,8 @@ object TemporalOps {
     */
   def tlags(df: DataFrame, valueCol: String, lags: Seq[Int]): DataFrame =
     lags.foldLeft(df) { (d, l) =>
-      d.withColumn(s"tlag_$l", coalesce(tlag(col(valueCol), l), lit(0.0)))
+      d.withColumn(s"tlag_$l", coalesce(lag(col(valueCol), l).over(w), lit(0.0)))
     }
-
-  /** Rolling mean over trailing `t` rows, `min_periods=0` (expanding at
-    * the series start, never inducing NaN) — views_2.py:117-142. Spark's
-    * shrinking frames at partition start give this for free.
-    */
-  def movingAverage(c: Column, t: Int): Column = avg(c).over(trailing(t))
-
-  /** Rolling sum, same frame rules — views_2.py:144-169. */
-  def movingSum(c: Column, t: Int): Column = sum(c).over(trailing(t))
 
   /** Rolling MEDIAN over trailing `t` rows (min_periods=0, expanding
     * at the series start) — the outlier-robust smoother pandas
@@ -69,27 +48,14 @@ object TemporalOps {
     percentile(c, lit(0.5)).over(trailing(t))
   }
 
-  /** Rolling max, min_periods=0 — views_2.py:337-352. */
-  def rollmax(c: Column, win: Int): Column = max(c).over(trailing(win))
-
-  /** Per-unit mean over all time, broadcast to every row —
-    * views_2.py:295-306 (`transform("mean")`).
-    */
-  def meanOverTime(c: Column): Column =
-    avg(c).over(Window.partitionBy(Panel.UnitCol))
-
-  /** s − per-unit mean — views_2.py:321-335. */
-  def demean(c: Column): Column = c - meanOverTime(c)
-
   /** Winsorize: clip to the unit's own [pLow, pHigh] quantiles
     * (linear-interpolated, the SQL `percentile` ≡ DuckDB
     * `quantile_cont` definition). The standard outlier guard before
     * scaling/standardising panel features; extension — no reference
     * counterpart.
     *
-    * Shares the per-unit partitioning of the mean/demean family (an
-    * unbounded window, no join back), so chains with them at one
-    * shuffle total.
+    * An unbounded per-unit window (no join back), so it chains with the
+    * other per-unit windows at one shuffle total.
     */
   def winsorize(c: Column, pLow: Double, pHigh: Double): Column = {
     require(pLow >= 0.0 && pHigh <= 1.0 && pLow <= pHigh,
@@ -714,59 +680,6 @@ object TemporalOps {
       (c - trend - seasonal).as("residual"))
   }
 
-  /** Run-length counter — count consecutive timesteps while `valueCol ==
-    * v`, resetting to 0 whenever the condition breaks; NaN rows are
-    * dropped before counting (views_2.py:172-242).
-    *
-    * Implementation mirrors the reference's block-grouper trick
-    * relationally: `block = cumsum(!mask)` per unit is constant across a
-    * consecutive true-spell, so a second cumulative sum of the mask
-    * partitioned by (unit, block) restarts per spell. Two stacked window
-    * passes over the same unit partitioning — one shuffle.
-    *
-    * `seed`: the count injected at the panel's first timestep when the
-    * condition already holds there ("assumed prior history",
-    * views_2.py:186-201). Matching the reference's falsy check
-    * (`if seed:` views_2.py:232), seed == 0 or None is ignored.
-    */
-  def cweq(df: DataFrame, valueCol: String, v: Double,
-           seed: Option[Int] = None, out: String = "cweq"): DataFrame = {
-    val kept = df.filter(col(valueCol).isNotNull)
-    val mask = when(col(valueCol) === v, 1).otherwise(0)
-    val withBlock = kept.withColumn("__block",
-      sum(when(col(valueCol) === v, 0).otherwise(1)).over(cum))
-    // Seeding needs the panel-wide first timestep (reference uses the
-    // global index minimum, views_2.py:202-205). A broadcast 1-row
-    // aggregate keeps this fully distributed — never an empty-partition
-    // window, which would funnel the whole panel through one task.
-    val seeded = seed.filter(_ != 0) match {
-      case Some(s) =>
-        withBlock
-          .crossJoin(broadcast(kept.agg(min(col(Panel.TimeCol)).as("__t0"))))
-          .withColumn("__cnt",
-            when(col(Panel.TimeCol) === col("__t0") && mask === 1, s)
-              .otherwise(mask))
-          .drop("__t0")
-      case None => withBlock.withColumn("__cnt", mask)
-    }
-    val w2 = Window.partitionBy(col(Panel.UnitCol), col("__block"))
-      .orderBy(Panel.TimeCol).rowsBetween(Window.unboundedPreceding, 0)
-    seeded
-      .withColumn(out, sum(col("__cnt")).over(w2).cast("int"))
-      .drop("__block", "__cnt")
-  }
-
-  /** time_since = cweq(tlag(s,1), value, seed) — views_2.py:244-277. The
-    * lag keeps the counter from being simultaneous with the event; the
-    * first timestep per unit (lag undefined) is dropped, mirroring the
-    * reference's dropna inside cweq.
-    */
-  def timeSince(df: DataFrame, valueCol: String, v: Double = 0.0,
-                seed: Option[Int] = None, out: String = "time_since"): DataFrame = {
-    val lagged = df.withColumn("__lagged", tlag(col(valueCol), 1))
-    cweq(lagged, "__lagged", v, seed, out).drop("__lagged")
-  }
-
   /** 1 iff no event in the preceding `win` steps (rolling max of the
     * 1-lagged, 0-filled series is 0); the first step is always possible —
     * views_2.py:354-367.
@@ -779,15 +692,6 @@ object TemporalOps {
   /** onset = onset_possible AND s != 0 — views_2.py:369-383. */
   def onset(c: Column, win: Int): Column =
     when(onsetPossible(c, win) === 1 && c =!= 0.0, 1).otherwise(0)
-
-  /** O(1)-per-step incremental time_since update for simulation loops —
-    * views_2.py:385-418: 0 if the previous step had an event, else
-    * previous time_since + 1. Batch formulation; the streaming version
-    * lives in graft.streaming (flatMapGroupsWithState keyed by unit).
-    */
-  def tickTimeSince(eventCol: Column, timeSinceCol: Column): Column =
-    when(lag(eventCol, 1).over(w) =!= 0.0, 0.0)
-      .otherwise(lag(timeSinceCol, 1).over(w) + 1.0)
 
   /** Shannon entropy over the trailing `win` rows (truncated at the
     * series start), with `offset` added to every value to dodge 0·log 0 —

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Verifies the scale-layout claims: month partitioning actually prunes
-  * and bucketing actually removes the window shuffle.
+  * and bucketing actually removes the per-unit shuffle.
   */
 class PanelIOSpec extends SparkSpec {
   import spark.implicits._
@@ -37,14 +37,28 @@ class PanelIOSpec extends SparkSpec {
     }
     val p = (for (m <- 1L to 5L; u <- 1L to 8L) yield (m, u, m + u * 1.0))
       .toDF(T, U, "value")
-    PanelIO.writeBucketed(p, "panel_bucketed", buckets = 4)
+    // as many buckets as the scan's exchange would have partitions
+    val buckets = Shuffle.width(p)
+    PanelIO.writeBucketed(p, "panel_bucketed", buckets)
     val t = spark.table("panel_bucketed")
+    assert(Shuffle.width(t) == buckets)
+    def exchanges(df: org.apache.spark.sql.DataFrame): (Int, String) = {
+      val plan = df.queryExecution.executedPlan.toString()
+      (plan.split("\n").count(_.contains("Exchange")), plan)
+    }
+    // a per-unit window operator reads the buckets as they lie
     val windowed = t.select(col(T), col(U),
-      ops.TemporalOps.movingSum(col("value"), 3).as("ms"))
-    val plan = windowed.queryExecution.executedPlan.toString()
-    val exchanges = plan.split("\n").count(_.contains("Exchange"))
-    assert(exchanges == 0,
-      s"bucketed window should be shuffle-free, got $exchanges exchanges:\n$plan")
+      ops.TemporalOps.ewma(col("value"), 0.5, 3).as("ew"))
+    val (n, plan) = exchanges(windowed)
+    assert(n == 0, s"bucketed window should be shuffle-free, got $n exchanges:\n$plan")
     assert(windowed.count() == 40)
+    // so does the per-unit scan, and each unit's rows stay together
+    val scanned = Registry.apply(t, Registry.Step("tlag", Seq(1.0)))
+    val (ns, scanPlan) = exchanges(scanned)
+    assert(ns == 0, s"bucketed scan should be shuffle-free, got $ns exchanges:\n$scanPlan")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(T, U, "value").collect().map(_.toString).sorted.toSeq
+    assert(rows(scanned) ==
+      rows(t.withColumn("value", WindowReference.tlag(col("value"), 1))))
   }
 }

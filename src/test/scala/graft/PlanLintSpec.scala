@@ -123,7 +123,7 @@ class PlanLintSpec extends SparkSpec {
     // a bounded trailing float sum feeding a rounded output is fine:
     // k-term noise has no t-amplification (moving_sum family)
     val msum = panel.select(col(Panel.TimeCol), col(Panel.UnitCol),
-      round(graft.ops.TemporalOps.movingSum(col("value"), 3), 6).as("ms"))
+      round(WindowReference.movingSum(col("value"), 3), 6).as("ms"))
     assert(PlanLint.floatGateFatal(msum).isEmpty,
       PlanLint.floatGate(msum).mkString("; "))
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.TemporalOps
+import graft.ops.{TemporalOps, UnitScan}
 import graft.spatial.{Grid, KernelLag}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,9 +39,8 @@ class PropertySpec extends AnyFunSuite {
     forAll(gen2(seriesGen, Gen.chooseNum(1, 3))) { case (vs, k) =>
       if (vs.length > k) {
         val p = panel1(vs)
-        val out = p.select(col(T),
-            TemporalOps.tlead(TemporalOps.tlag(col("value"), k), k).as("r"))
-          .orderBy(T).collect()
+        val out = UnitScan(p, Seq(UnitScan.Lag(k), UnitScan.Lead(k)))
+          .select(col(T), col("value").as("r")).orderBy(T).collect()
         // interior rows (those with both shifts defined) must round-trip
         vs.indices.drop(k).dropRight(k).foreach { i =>
           assert(out(i).getDouble(1) == vs(i), s"row $i of $vs")
@@ -55,14 +54,14 @@ class PropertySpec extends AnyFunSuite {
       case (vs, a, b) =>
       val w = a + b
       val p = panel1(vs)
-      val out = p.select(col(T), col("value"),
-          TemporalOps.movingSum(col("value"), w).as("mw"),
-          (TemporalOps.movingSum(col("value"), b) +
-            coalesce(TemporalOps.tlag(TemporalOps.movingSum(col("value"), a), b), lit(0.0))).as("split"))
-        .orderBy(T).collect()
-      out.foreach { r =>
-        assert(math.abs(r.getDouble(2) - r.getDouble(3)) < 1e-9,
-          s"additivity failed for $vs a=$a b=$b")
+      def series(steps: UnitScan.Step*): Seq[Double] =
+        UnitScan(p, steps).orderBy(T).collect()
+          .map(r => if (r.isNullAt(2)) 0.0 else r.getDouble(2)).toSeq
+      val mw = series(UnitScan.MovingSum(w))
+      val split = series(UnitScan.MovingSum(b)).zip(
+        series(UnitScan.MovingSum(a), UnitScan.Lag(b))).map { case (x, y) => x + y }
+      mw.zip(split).foreach { case (x, y) =>
+        assert(math.abs(x - y) < 1e-9, s"additivity failed for $vs a=$a b=$b")
       }
     }
   }
@@ -70,8 +69,8 @@ class PropertySpec extends AnyFunSuite {
   test("cweq: value equal to v increments or resets; counter bounded by prefix") {
     forAll(seriesGen) { vs =>
       val p = panel1(vs)
-      val out = TemporalOps.cweq(p, "value", 0.0).orderBy(T)
-        .select("cweq").collect().map(_.getInt(0))
+      val out = UnitScan(p, Seq(UnitScan.Cweq(0.0))).orderBy(T)
+        .select(col("value").cast("int")).collect().map(_.getInt(0))
       var run = 0
       vs.zip(out).foreach { case (v, c) =>
         run = if (v == 0.0) run + 1 else 0

@@ -545,8 +545,7 @@ class RegistrySpec extends SparkSpec {
     val p = (1L to 15L).map(m => (m, 0L, m.toDouble)).toDF(T, U, "value")
     val viaWire = Registry.run(p, """[{"type":"tlag","args":[10]}]""")
       .orderBy(T).collect().map(r => Option(r.get(2)))
-    val direct = p.select(col(T), col(U),
-        graft.ops.TemporalOps.tlag(col("value"), 10).as("value"))
+    val direct = graft.ops.UnitScan(p, Seq(graft.ops.UnitScan.Lag(10)))
       .orderBy(T).collect().map(r => Option(r.get(2)))
     assert(viaWire.toSeq == direct.toSeq)
     // months 1..10 have no lag-10 predecessor; 11..15 carry 1..5

@@ -2,8 +2,10 @@ package graft
 
 import graft.spatial.Grid
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 /** [[Shuffle]]'s width rule, and the panel family's keyed exchanges in a
@@ -70,6 +72,31 @@ class ShuffleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def run(s: SparkSession, spec: String): (DataFrame, Seq[String]) = {
     val df = Registry.run(s.read.parquet(panelPath), spec)
     (df, bits(df.collect()))
+  }
+
+  /** (exchanges, sorts, windows) in `df`'s final plan, after running it. */
+  private def shape(df: DataFrame): (Int, Int, Int) = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    def count(pf: PartialFunction[SparkPlan, SparkPlan]) = collectWithSubqueries(plan)(pf).size
+    (count { case e: ShuffleExchangeExec => e }, count { case s: SortExec => s },
+      count { case w: WindowExec => w })
+  }
+
+  test("the wire-path temporal chain is one exchange, one sort and no window " +
+      "operator; so is Registry.apply of one scan step") {
+    val s200 = spark.newSession()
+    s200.conf.set("spark.sql.shuffle.partitions", "200")
+    try Seq("suite" -> spark, "200-partition" -> s200).foreach { case (name, s) =>
+      val chain = Registry.run(s.read.parquet(panelPath), specs.head._2)
+      assert(shape(chain) == ((1, 1, 0)), s"$name session:\n${chain.queryExecution.executedPlan}")
+      Seq(Registry.Step("tlag", Seq(1.0)), Registry.Step("moving_average", Seq(12.0)),
+          Registry.Step("time_since", Seq(0.0))).foreach { st =>
+        val one = Registry.apply(s.read.parquet(panelPath), st)
+        assert(shape(one) == ((1, 1, 0)),
+          s"$name session, ${st.name}:\n${one.queryExecution.executedPlan}")
+      }
+    } finally OpCache.clear(s200)
   }
 
   test("panel wire requests in a 200-partition session: one input-sized exchange " +

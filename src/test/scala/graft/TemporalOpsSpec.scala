@@ -1,6 +1,7 @@
 package graft
 
-import graft.ops.{MissingOps, PointwiseOps, TemporalOps}
+import graft.ops.{MissingOps, PointwiseOps, TemporalOps, UnitScan}
+import graft.ops.UnitScan._
 import org.apache.spark.sql.functions._
 
 /** Golden tests for the temporal window family, from the reference's own
@@ -22,30 +23,38 @@ class TemporalOpsSpec extends SparkSpec {
   private def outDoubles(df: org.apache.spark.sql.DataFrame, c: String): Seq[Any] =
     df.orderBy(T).select(c).collect().map(r => if (r.isNullAt(0)) null else r.getDouble(0)).toSeq
 
+  /** The panel after a scan of `steps`, the series as `out`. */
+  private def scan(p: org.apache.spark.sql.DataFrame, out: String, steps: UnitScan.Step*) =
+    UnitScan(p, steps).withColumnRenamed("value", out)
+
+  /** A counting scan's series as an int column `out`, like the direct queries. */
+  private def count(p: org.apache.spark.sql.DataFrame, out: String, steps: UnitScan.Step*) =
+    UnitScan(p, steps).withColumn(out, col("value").cast("int"))
+
   test("cweq matches the worked example views_2.py:255-266") {
     // event  : 0, 0, 1, 1, 0, 0 -> cweq_0 : 1, 2, 0, 0, 1, 2
     val p = panel1(0, 0, 1, 1, 0, 0)
-    assert(outInts(TemporalOps.cweq(p, "value", 0.0), "cweq") == Seq(1, 2, 0, 0, 1, 2))
+    assert(outInts(count(p, "cweq", Cweq(0.0)), "cweq") == Seq(1, 2, 0, 0, 1, 2))
   }
 
   test("time_since matches the worked example (first row dropped)") {
     // tisiev : ., 1, 2, 0, 0, 1
     val p = panel1(0, 0, 1, 1, 0, 0)
-    val out = TemporalOps.timeSince(p, "value")
+    val out = count(p, "time_since", UnitScan.timeSince(): _*)
     assert(outInts(out, "time_since") == Seq(1, 2, 0, 0, 1))
     assert(out.count() == 5) // month 1 dropped (lag undefined -> dropna)
   }
 
   test("cweq seed injects prior history at the panel's first timestep") {
     val p = panel1(0, 0, 1, 0, 0, 0)
-    assert(outInts(TemporalOps.cweq(p, "value", 0.0, seed = Some(10)), "cweq")
+    assert(outInts(count(p, "cweq", Cweq(0.0, seed = Some(10))), "cweq")
       == Seq(10, 11, 0, 1, 2, 3))
     // seed ignored when the first step doesn't satisfy the condition
     val p2 = panel1(1, 0, 0, 0, 0, 0)
-    assert(outInts(TemporalOps.cweq(p2, "value", 0.0, seed = Some(10)), "cweq")
+    assert(outInts(count(p2, "cweq", Cweq(0.0, seed = Some(10))), "cweq")
       == Seq(0, 1, 2, 3, 4, 5))
     // seed=0 is falsy in the reference (views_2.py:232) -> ignored
-    assert(outInts(TemporalOps.cweq(p, "value", 0.0, seed = Some(0)), "cweq")
+    assert(outInts(count(p, "cweq", Cweq(0.0, seed = Some(0))), "cweq")
       == Seq(1, 2, 0, 1, 2, 3))
   }
 
@@ -53,25 +62,25 @@ class TemporalOpsSpec extends SparkSpec {
     val p = Seq((1L, 1L, Some(0.0)), (2L, 1L, None), (3L, 1L, Some(0.0)))
       .toDF(T, U, "value")
     // NaN row removed -> consecutive run continues across the gap
-    assert(outInts(TemporalOps.cweq(p, "value", 0.0), "cweq") == Seq(1, 2))
+    assert(outInts(count(p, "cweq", Cweq(0.0)), "cweq") == Seq(1, 2))
   }
 
   test("cweq resets independently per unit") {
     val p = Seq(
       (1L, 1L, 0.0), (2L, 1L, 5.0), (3L, 1L, 0.0),
       (1L, 2L, 0.0), (2L, 2L, 0.0), (3L, 2L, 0.0)).toDF(T, U, "value")
-    val out = TemporalOps.cweq(p, "value", 0.0)
+    val out = count(p, "cweq", Cweq(0.0))
       .orderBy(U, T).select("cweq").collect().map(_.getInt(0)).toSeq
     assert(out == Seq(1, 0, 1, 1, 2, 3))
   }
 
   test("moving ops use min_periods=0 expanding starts (views_2.py:135-137)") {
     val p = panel1(1, 2, 3, 4)
-    assert(outDoubles(p.select(col(T), TemporalOps.movingAverage(col("value"), 3).as("m")), "m")
+    assert(outDoubles(scan(p, "m", MovingAverage(3)), "m")
       == Seq(1.0, 1.5, 2.0, 3.0))
-    assert(outDoubles(p.select(col(T), TemporalOps.movingSum(col("value"), 2).as("m")), "m")
+    assert(outDoubles(scan(p, "m", MovingSum(2)), "m")
       == Seq(1.0, 3.0, 5.0, 7.0))
-    assert(outDoubles(p.select(col(T), TemporalOps.rollmax(col("value"), 2).as("m")), "m")
+    assert(outDoubles(scan(p, "m", RollMax(2)), "m")
       == Seq(1.0, 2.0, 3.0, 4.0))
     // rolling median ignores a spike the moving average would chase:
     // series 1,100,3,5 window 3 -> 1, 50.5 (interp of 2), 3, 5
@@ -83,13 +92,13 @@ class TemporalOpsSpec extends SparkSpec {
 
   test("tlag/tlead/delta") {
     val p = panel1(1, 2, 4, 8)
-    assert(outDoubles(p.select(col(T), TemporalOps.tlag(col("value"), 1).as("m")), "m")
+    assert(outDoubles(scan(p, "m", Lag(1)), "m")
       == Seq(null, 1.0, 2.0, 4.0))
-    assert(outDoubles(p.select(col(T), TemporalOps.tlead(col("value"), 2).as("m")), "m")
+    assert(outDoubles(scan(p, "m", Lead(2)), "m")
       == Seq(4.0, 8.0, null, null))
-    assert(outDoubles(p.select(col(T), TemporalOps.delta(col("value"), 1).as("m")), "m")
+    assert(outDoubles(scan(p, "m", Delta(1)), "m")
       == Seq(null, 1.0, 2.0, 4.0))
-    intercept[IllegalArgumentException](TemporalOps.tlag(col("value"), 0))
+    intercept[IllegalArgumentException](Lag(0))
   }
 
   test("onset semantics (views_2.py:354-383)") {
@@ -117,10 +126,7 @@ class TemporalOpsSpec extends SparkSpec {
 
   test("tick_time_since reproduces time_since one step ahead (views_2.py:385-418)") {
     val p = panel1(0, 0, 1, 1, 0, 0)
-    val tis = TemporalOps.timeSince(p, "value", 0.0)
-      .withColumn("time_since", col("time_since").cast("double"))
-    val tick = outDoubles(tis.select(col(T), col(U),
-      TemporalOps.tickTimeSince(col("value"), col("time_since")).as("tk")), "tk")
+    val tick = outDoubles(scan(p, "tk", TickTimeSince), "tk")
     // months 2..6; lag within kept rows: tick = ., 2, 0, 0, 1
     assert(tick == Seq(null, 2.0, 0.0, 0.0, 1.0))
   }

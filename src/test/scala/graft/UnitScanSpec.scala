@@ -1,0 +1,192 @@
+package graft
+
+import graft.ops.UnitScan
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions._
+
+/** [[UnitScan]] against the window formulation ([[WindowReference]]),
+  * bit for bit: doubles by `doubleToLongBits`, everything else exactly.
+  * The panels have several units, nulls, NaN, ±0.0 and ±Inf, units with
+  * one row and gaps in the months.
+  */
+class UnitScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+  import spark.implicits._
+  private val T = Panel.TimeCol
+  private val U = Panel.UnitCol
+
+  private val specials = Array(Double.NaN, 0.0, -0.0, Double.PositiveInfinity,
+    Double.NegativeInfinity, 1.0, -2.5)
+
+  /** A seeded random panel: 12 units over months 1..30 with gaps; unit 0
+    * has one row, unit 1 one null row, unit 2 starts on month 1 with a
+    * zero. Values: 15% null, 35% zeros (runs for cweq), 15% specials, the
+    * rest Gaussian. Shuffled over three partitions.
+    */
+  private def randomPanel(seed: Long): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    def value(): Option[Double] = {
+      val r = rnd.nextDouble()
+      if (r < 0.15) None
+      else if (r < 0.50) Some(0.0)
+      else if (r < 0.65) Some(specials(rnd.nextInt(specials.length)))
+      else Some(rnd.nextGaussian() * 10.0)
+    }
+    val rows = Seq((7L, 0L, Some(3.0)), (4L, 1L, None), (1L, 2L, Some(0.0))) ++
+      (for {
+        u <- 2L until 12L
+        m <- 2L to 30L if rnd.nextDouble() < 0.75
+      } yield (m, u, value()))
+    rnd.shuffle(rows).toDF(T, U, "value").repartition(3)
+  }
+
+  /** Rows as sorted strings, doubles by their bits. */
+  private def bits(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToLongBits(d).toHexString
+      case x => String.valueOf(x)
+    }.mkString("|")).toSeq.sorted
+
+  private def assertSame(name: String, got: DataFrame, want: DataFrame): Unit = {
+    assert(got.schema.map(f => (f.name, f.dataType)) == want.schema.map(f => (f.name, f.dataType)),
+      s"$name: schema ${got.schema.simpleString} vs ${want.schema.simpleString}")
+    val (g, w) = (bits(got), bits(want))
+    assert(g.nonEmpty || w.isEmpty, name)
+    assert(g == w, s"$name: ${g.diff(w).take(3)} vs ${w.diff(g).take(3)}")
+  }
+
+  private def step(t: String, args: Any*): String = {
+    val a = args.map { case s: String => "\"" + s + "\""; case x => x.toString }
+    s"""{"type":"$t","args":[${a.mkString(",")}]}"""
+  }
+  private def spec(steps: String*): String = steps.mkString("[", ",", "]")
+
+  private val single = Seq(
+    step("tlag", 1), step("tlag", 3), step("tlead", 1), step("tlead", 2),
+    step("delta", 1), step("delta", 2), step("moving_average", 1),
+    step("moving_average", 3), step("moving_average", 12), step("moving_sum", 1),
+    step("moving_sum", 5), step("rollmax", 1), step("rollmax", 4), step("rollmax", 24),
+    step("cweq", 0), step("cweq", 1), step("time_since", 0), step("time_since", 1),
+    step("tick_time_since"))
+
+  test("every scan step alone equals its window, bit for bit") {
+    Seq(1L, 2L, 3L).foreach { seed =>
+      val p = randomPanel(seed).cache()
+      single.foreach { s =>
+        val st = Registry.parse(spec(s)).head
+        assertSame(s"seed $seed $s", Registry.apply(p, st), WindowReference.step(p, st))
+      }
+      p.unpersist()
+    }
+  }
+
+  test("an int or long value is read as double; a non-numeric value is rejected") {
+    val finite = randomPanel(10L).withColumn("value",
+      when(col("value").isNaN || abs(col("value")) === Double.PositiveInfinity, lit(null))
+        .otherwise(col("value")))
+    Seq("int", "bigint").foreach { t =>
+      val p = finite.withColumn("value", col("value").cast(t)).cache()
+      (single :+ step("mean") :+ step("demean")).foreach { s =>
+        val st = Registry.parse(spec(s)).head
+        assertSame(s"$t $s", Registry.apply(p, st),
+          WindowReference.step(p, st).withColumn("value", col("value").cast("double")))
+      }
+      val sp = chains.head._2
+      assertSame(s"$t ${chains.head._1}", Registry.run(p, sp), WindowReference.pipeline(p, sp))
+      p.unpersist()
+    }
+    val e = intercept[IllegalArgumentException](Registry.apply(
+      finite.withColumn("value", col("value").cast("string")), Registry.Step("tlag", Seq(1.0))))
+    assert(e.getMessage.contains("numeric `value`"), e.getMessage)
+  }
+
+  test("cweq on NaN and the direct scan API equal the window form") {
+    val p = randomPanel(4L)
+    assertSame("cweq NaN",
+      UnitScan(p, Seq(UnitScan.Cweq(Double.NaN))).withColumn("value", col("value").cast("int")),
+      WindowReference.cweq(p, "value", Double.NaN, out = "__c")
+        .withColumn("value", col("__c")).drop("__c"))
+    assertSame("tlag(2) then tlead(2)",
+      UnitScan(p, Seq(UnitScan.Lag(2), UnitScan.Lead(2))),
+      p.withColumn("value", WindowReference.tlag(col("value"), 2))
+        .withColumn("value", WindowReference.tlead(col("value"), 2)))
+  }
+
+  private val chains = Seq(
+    "panel_batch temporal chain" -> spec(step("replace_na", 0), step("tlag", 1),
+      step("moving_average", 12), step("delta", 1), step("time_since", 0), step("decay", 12)),
+    "wire time_since_decay" -> spec(step("replace_na", 0), step("delta", 1),
+      step("time_since", 0), step("decay", 12)),
+    "wire moving_average" -> spec(step("replace_na", 0), step("moving_average", 3)),
+    "lag, moving average, demean" -> spec(step("tlag", 1), step("moving_average", 3),
+      step("demean")),
+    "a row-local step between two scan runs (two scans)" -> spec(step("tlag", 1), step("ge", 0),
+      step("moving_sum", 3), step("cweq", 1), step("rollmax", 2)),
+    "a filtering step mid-run" -> spec(step("time_since", 0), step("tlag", 1),
+      step("tick_time_since"), step("moving_average", 2)))
+
+  test("pipelines of scan and row-local steps equal their window form") {
+    Seq(5L, 6L).foreach { seed =>
+      val p = randomPanel(seed).cache()
+      chains.foreach { case (name, sp) =>
+        assertSame(s"seed $seed $name", Registry.run(p, sp), WindowReference.pipeline(p, sp))
+      }
+      p.unpersist()
+    }
+  }
+
+  /** Unit 10 keeps month 1 (the panel's first) with a zero; unit 11's
+    * first kept month is 2 with a zero; unit 12 starts on a null at
+    * month 1, then zeros; unit 13 starts on month 1 with a non-zero.
+    */
+  private lazy val seedPanel: DataFrame = Seq(
+    (1L, 10L, Some(0.0)), (2L, 10L, Some(0.0)), (3L, 10L, Some(4.0)), (4L, 10L, Some(0.0)),
+    (2L, 11L, Some(0.0)), (3L, 11L, Some(0.0)), (4L, 11L, Some(0.0)),
+    (1L, 12L, None), (2L, 12L, Some(0.0)), (3L, 12L, Some(0.0)), (4L, 12L, Some(1.0)),
+    (1L, 13L, Some(2.0)), (2L, 13L, Some(0.0)), (3L, 13L, Some(0.0)))
+    .toDF(T, U, "value")
+
+  test("seeded cweq and time_since: on and off the panel's first kept month") {
+    val cw = Registry.apply(seedPanel, Registry.parse(spec(step("cweq", 0, 5))).head)
+    // unit 10's run starts on month 1, the panel's first: 5, 6, 0, 1;
+    // unit 11's starts on month 2: no seed
+    assert(cw.filter(col(U) === 10L).orderBy(T).collect().map(_.getDouble(2)).toSeq ==
+      Seq(5.0, 6.0, 0.0, 1.0))
+    assert(cw.filter(col(U) === 11L).orderBy(T).collect().map(_.getDouble(2)).toSeq ==
+      Seq(1.0, 2.0, 3.0))
+    val seeded = Seq(step("cweq", 0, 5), step("cweq", 0, 1), step("cweq", 2, 7),
+      step("time_since", 0, 5), step("time_since", 0, 0))
+    val panels = Seq("seed panel" -> seedPanel, "random panel" -> randomPanel(7L))
+    for ((pn, p) <- panels; s <- seeded) {
+      val st = Registry.parse(spec(s)).head
+      assertSame(s"$pn $s", Registry.apply(p, st), WindowReference.step(p, st))
+    }
+    // a seeded step mid-pipeline ends its scan; the rest scans again
+    val sp = spec(step("time_since", 0, 5), step("tlag", 1), step("decay", 12))
+    for ((pn, p) <- panels)
+      assertSame(s"$pn $sp", Registry.run(p, sp), WindowReference.pipeline(p, sp))
+  }
+
+  test("a scan step next to a window step gives the window rows, at one more exchange") {
+    val p = randomPanel(8L)
+    val sp = spec(step("tlag", 1), step("ewma", 0.5, 3))
+    val out = Registry.run(p, sp)
+    assertSame(sp, out, WindowReference.pipeline(p, sp))
+    val plan = out.queryExecution.executedPlan
+    // the unit_id exchanges (the random panel adds a round-robin one)
+    val byUnit = collectWithSubqueries(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(byUnit.size == 2, plan)
+  }
+
+  test("the direct queries' output columns keep their types") {
+    val p = randomPanel(9L)
+    val cw = UnitScan(p, Seq(UnitScan.Cweq(0.0))).select(col("value").cast("int").as("cweq"))
+    val want = WindowReference.cweq(p, "value", 0.0).select("cweq")
+    assert(cw.schema == want.schema)
+    assertSame("cweq as int", cw, want)
+  }
+}
