@@ -12,7 +12,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * explosion at scale (r15 measurement: the join dominated
   * q_emerging_hotspots). The series length T is panel-bounded
   * (≤ ~600 months by the panel contract — the same boundedness
-  * argument as collect_list and the spacetime TopK buffer), so the
+  * argument as collect_list and `text.Index`'s MinK buffer), so the
   * right shape is one bounded-buffer aggregation: buffer the (t, v)
   * pairs, sort by t at finish, and run the O(T²) sign loop row-local
   * in the JVM. No pair table exists anywhere in the plan.

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: one explode (distinct shingles per doc, map-side) and
   * one hash aggregation keyed by shingle — the same single-shuffle
   * profile as exact dedup. Posting lists are built by a BOUNDED min-k
-  * aggregator (the `SpacetimeDist.TopK` pattern): a stop-gram's
+  * aggregator (capped on both reduce and merge): a stop-gram's
   * postings would otherwise grow an O(corpus) `collect_list` buffer in
   * one aggregation cell — the classic skew cell; here partial AND
   * merged buffers never exceed `maxPostings` ids. The full document

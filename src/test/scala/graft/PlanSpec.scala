@@ -90,7 +90,13 @@ class PlanSpec extends SparkSpec {
       assert(!broadcastCols.exists(c => c == "e_lon" || c == "e_size"),
         s"event columns crossed a nested-loop join: $broadcastCols")
     }
-    assert(exec.toString().contains("cbx"), exec.toString().take(4000))
+    // the event-month kernel: no join at all, events exchanged on their
+    // month, panel rows and candidates on unit_id
+    val (exchanges, joins) = exchangesAndJoins(exec.toString())
+    assert(!joins && bnlj.isEmpty, exec.toString())
+    assert(exchanges.exists(_.contains("hashpartitioning(e_t#")) &&
+      exchanges.forall(e => e.contains("hashpartitioning(e_t#") ||
+        e.contains(s"hashpartitioning($U#")), exec.toString())
   }
 
   test("spacetime auto-dispatch: broadcast under the event threshold, banded above") {
@@ -104,16 +110,24 @@ class PlanSpec extends SparkSpec {
     // an explicit request always wins over the count
     assert(SpacetimeDist.chooseBand(1L, Some(SpacetimeDist.Band(2.0, 1)),
       SpacetimeDist.AutoBandEvents).contains(SpacetimeDist.Band(2.0, 1)))
-    // plan-level: threshold 0 flips stage 1 to the band equi-join
-    // (cbx ring key in the plan); MaxValue pins the broadcast product
+    // plan-level: threshold 0 flips stage 1 to the event-month kernel
+    // (an e_t exchange besides unit_id); MaxValue pins the broadcast
+    // path (unit_id only). Neither plans a join.
     val auto = SpacetimeDist.spacetimeDistances(
       gridPanel, "value", "distances", k = 1, nu = 1.0, power = 0.0,
       eventThreshold = 30.0, autoBandEvents = 0L)
-    assert(auto.queryExecution.executedPlan.toString().contains("cbx"))
+    val autoPlan = auto.queryExecution.executedPlan.toString()
+    val (autoExchanges, autoJoins) = exchangesAndJoins(autoPlan)
+    assert(!autoJoins && autoExchanges.exists(_.contains("hashpartitioning(e_t#")) &&
+      autoExchanges.forall(e => e.contains("hashpartitioning(e_t#") ||
+        e.contains(s"hashpartitioning($U#")), autoPlan)
     val bcast = SpacetimeDist.spacetimeDistances(
       gridPanel, "value", "distances", k = 1, nu = 1.0, power = 0.0,
       eventThreshold = 30.0, autoBandEvents = Long.MaxValue)
-    assert(!bcast.queryExecution.executedPlan.toString().contains("cbx"))
+    val bcastPlan = bcast.queryExecution.executedPlan.toString()
+    val (bcastExchanges, bcastJoins) = exchangesAndJoins(bcastPlan)
+    assert(!bcastJoins && bcastExchanges.nonEmpty &&
+      bcastExchanges.forall(_.contains(s"hashpartitioning($U#")), bcastPlan)
   }
 
   test("minhash LSH candidates join on band buckets, never all-pairs") {

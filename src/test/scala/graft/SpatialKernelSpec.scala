@@ -163,6 +163,36 @@ class SpatialKernelSpec extends SparkSpec {
     assert(capped.collect { case ((m, _), v) if m > 2L => v }.forall(_ == 999.0))
   }
 
+  test("banded spacetime builds and reads in at most 5 jobs") {
+    val p = spacetimePanel
+    val n = jobsOf {
+      SpacetimeDist.spacetimeDistances(p, "value", "distances", 5, 2.0, 0.0,
+        eventThreshold = 400.0, banded = Some(SpacetimeDist.Band(4.0, 1))).collect()
+    }
+    assert(n <= 5, s"$n jobs")
+  }
+
+  test("banded spacetime leaves the session conf alone") {
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try {
+      SpacetimeDist.spacetimeDistances(spacetimePanel, "value", "distances", 5, 2.0, 0.0,
+        eventThreshold = 400.0, banded = Some(SpacetimeDist.Band(4.0, 1))).collect()
+      assert(!spark.conf.getAll.contains(key), spark.conf.getOption(key))
+    } finally prev.foreach(spark.conf.set(key, _))
+  }
+
+  test("spacetime bound check: passes at AutoBandEvents, names bound and size above it") {
+    val bound = SpacetimeDist.AutoBandEvents
+    SpacetimeDist.checkBound("event month 7", bound)
+    val e = intercept[IllegalArgumentException] {
+      SpacetimeDist.checkBound("event month 7", bound + 1)
+    }
+    assert(e.getMessage.contains("event month 7") && e.getMessage.contains(s"${bound + 1}") &&
+      e.getMessage.contains("AutoBandEvents") && e.getMessage.contains(s"$bound"), e.getMessage)
+  }
+
   // ---- wire-format job budget ----------------------------------------
 
   /** A 12×10 grid over 6 months, built by a Spark job (not a local
