@@ -35,13 +35,14 @@ object GeoCache {
     panel.select(col(Panel.TimeCol), col(Panel.UnitCol))
       .queryExecution.optimizedPlan.canonicalized
 
-  /** Quadtree cell embedding of `gridPanel` (must carry lon/lat cell
-    * columns) — one distinct+collect per unit universe, shared across
-    * the tree/grid/fourier/mesh operators.
+  /** Quadtree cell embedding of `gridPanel` (must carry the grid's cell
+    * columns, named `lonCol`/`latCol`) — one distinct+collect per unit
+    * universe, shared across the tree/grid/fourier/mesh operators.
     */
-  def embedding(gridPanel: DataFrame): TreeLag.Embedding =
+  def embedding(gridPanel: DataFrame, lonCol: String = "lon",
+                latCol: String = "lat"): TreeLag.Embedding =
     OpCache.memo(gridPanel.sparkSession, ("embedding", universe(gridPanel)))(
-      TreeLag.embedOf(gridPanel))
+      TreeLag.embedOf(gridPanel, lonCol, latCol))
 
   /** Month-replicated queen adjacency of the panel's unit grid,
     * persisted for the session.

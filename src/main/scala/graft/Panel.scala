@@ -131,6 +131,19 @@ object Panel {
       case _ => ev
     }
 
+  /** `panel`'s own rows, in its column order, with `lag`'s `outs`
+    * columns appended by (month_id, unit_id) in place of any panel
+    * column of the same name: one left join, so `lag` must hold at most
+    * one row per key. A row whose key has no lag row (a null key
+    * included) or whose lag is NaN gets 0.0.
+    */
+  def appendByKey(panel: DataFrame, lag: DataFrame, outs: Seq[String]): DataFrame = {
+    val keyed = lag.select(col(TimeCol).as("__t") +: col(UnitCol).as("__u") +: outs.map(col): _*)
+    panel.drop(outs: _*)
+      .join(keyed, col(TimeCol) === col("__t") && col(UnitCol) === col("__u"), "left")
+      .drop("__t", "__u").na.fill(0.0, outs)
+  }
+
   /** Dense cross-product reindex: every (month, unit) pair present,
     * missing feature cells filled with `fill` (reference transforms
     * coerce `fillna(0.0)` on entry — spatial_tree.py:29, splag4d.py:51).

@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions._
   * (lag/lead/delta/moving/cweq/time_since/tick, mean/demean) compiles to
   * one [[UnitScan]] — one input-sized `unit_id` exchange
   * ([[Shuffle.by]]), one sort, one pass over each unit's rows — and the
-  * remaining per-unit windows share one such exchange per run.
+  * remaining per-unit windows share one such exchange per run. Every
+  * column-producing panel lag appends its column to the panel's own
+  * rows and writes it into `value` through one wrapper
+  * ([[spatialAppendT]]): no step re-joins its result on the panel key.
   */
 object Registry {
 
@@ -58,38 +61,17 @@ object Registry {
     (df, args) => df.withColumn("value",
       f(col("value"), col(args.strOpt(0).getOrElse("value2"))))
 
-  /** Whole-panel op whose result lands in `out`: run it, then restore
-    * the pipeline contract (same columns, transformed series in
-    * `value`) by re-joining on the panel key — ops like the tree/grid
-    * lags return only (time, unit, out).
-    */
-  private def outT(out: String)(f: (DataFrame, Seq[Any]) => DataFrame): Transform =
-    (df, args) => {
-      val T = Panel.TimeCol
-      val U = Panel.UnitCol
-      val res = f(df, args).select(col(T), col(U), col(out).as("__v"))
-      df.drop("value").join(res, Seq(T, U), "left")
-        .withColumn("value", col("__v")).drop("__v")
-    }
-
   private def withGrid(df: DataFrame): DataFrame =
     df.withColumn("lon", Grid.unitLon(col(Panel.UnitCol)))
       .withColumn("lat", Grid.unitLat(col(Panel.UnitCol)))
 
-  /** Spatial op: derive the grid embedding columns the same way the
-    * driver harness does (Grid.unitLon/unitLat), run, re-join.
-    */
-  private def spatialT(out: String)(f: (DataFrame, Seq[Any]) => DataFrame): Transform =
-    outT(out) { (df, args) =>
-      f(df.withColumn("lon", Grid.unitLon(col(Panel.UnitCol)))
-          .withColumn("lat", Grid.unitLat(col(Panel.UnitCol))), args)
-    }
-
-  /** Spatial op that appends its result to the input rows (the splag4d
-    * stencil, the spacetime kernel): it runs on the panel with the grid
-    * embedding under internal names, so a panel's own lon/lat columns
-    * pass through untouched, and writes `__out`, which then replaces
-    * `value` in place — no re-join on the panel key.
+  /** Panel lag (every column-producing one: the spatial and Fourier
+    * lags, the spacetime kernel, the temporal tree lag): it runs on the
+    * panel with the grid embedding under internal names (`__lon`,
+    * `__lat`), so a panel's own lon/lat columns pass through untouched,
+    * and appends its result to the panel's own rows as `__out`, which
+    * then replaces `value` in place — the panel keeps its rows and
+    * column order, and nothing re-joins on the panel key.
     */
   private def spatialAppendT(f: (DataFrame, Seq[Any]) => DataFrame): Transform =
     (df, args) => {
@@ -179,7 +161,7 @@ object Registry {
     // terminal per-unit level-shift changepoint argmax
     "changepoint" -> ((df, _) => TemporalOps.changepoint(df, "value")),
     // terminal spatial-autocorrelation statistics (grid geometry
-    // derived the spatialT way)
+    // derived from unit_id, as the panel lags derive theirs)
     "moran_i" -> ((df, _) => spatial.SpatialStats.moranI(withGrid(df), "value")),
     "geary_c" -> ((df, _) => spatial.SpatialStats.gearyC(withGrid(df), "value")),
     "getis_ord" -> ((df, _) =>
@@ -237,25 +219,25 @@ object Registry {
       KernelLag.withSplag4d(gp, Seq("value"), Seq("__out"),
         a.numOpt(0).getOrElse(1.0).toInt, a.numOpt(1).getOrElse(1.0).toInt,
         a.numOpt(2).getOrElse(0.0), a.bool(3, default = false), "__lon", "__lat")),
-    "splag_country" -> spatialT("splag")((gp, a) => {
+    "splag_country" -> spatialAppendT((gp, a) => {
       val inner = a.numOpt(0).getOrElse(1.0).toInt
       val width = a.numOpt(1).getOrElse(1.0).toInt
-      CountryLag.splagCountry(gp, "value", GeoCache.adjacency(gp),
+      CountryLag.withSplagCountry(gp, "value", GeoCache.adjacency(gp),
         GeoCache.centroids(gp), inner, width,
-        a.numOpt(2).getOrElse(0.0), a.bool(3, default = false),
+        a.numOpt(2).getOrElse(0.0), a.bool(3, default = false), "__out",
         ringOpt = Some(GeoCache.ring(gp, inner, width)))
     }),
-    "tree_lag" -> spatialT("treelag")((gp, a) =>
-      TreeLag.treeLag(gp, "value", a.numOpt(0).getOrElse(0.5),
-        a.numOpt(1).getOrElse(0.0).toInt,
-        embOpt = Some(GeoCache.embedding(gp)))),
-    "grid_lag" -> spatialT("gridlag")((gp, a) =>
-      TreeLag.gridLag(gp, "value", a.num(0), a.numOpt(1).getOrElse(0.0).toInt,
-        embOpt = Some(GeoCache.embedding(gp)))),
-    "fourier_lag" -> spatialT("flag_value")((gp, a) =>
-      FourierLag.fourierLag(gp, "value",
-        dimensionality = a.numOpt(0).getOrElse(2.0).toInt,
-        embOpt = Some(GeoCache.embedding(gp)))),
+    "tree_lag" -> spatialAppendT((gp, a) =>
+      TreeLag.withTreeLag(gp, "value", a.numOpt(0).getOrElse(0.5),
+        Seq("__out" -> TreeLag.dfunction(a.numOpt(1).getOrElse(0.0).toInt)),
+        "__lon", "__lat", Some(GeoCache.embedding(gp, "__lon", "__lat")))),
+    "grid_lag" -> spatialAppendT((gp, a) =>
+      TreeLag.withGridLag(gp, "value", a.num(0),
+        Seq("__out" -> TreeLag.dfunction(a.numOpt(1).getOrElse(0.0).toInt)),
+        "__lon", "__lat", Some(GeoCache.embedding(gp, "__lon", "__lat")))),
+    "fourier_lag" -> spatialAppendT((gp, a) =>
+      FourierLag.withFourierLag(gp, Seq("value"), Seq("__out"),
+        a.numOpt(0).getOrElse(2.0).toInt, GeoCache.embedding(gp, "__lon", "__lat"))),
     "spacetime_dist" -> spatialAppendT((gp, a) =>
       SpacetimeDist.withSpacetimeDistances(gp, "value",
         a.strOpt(0).getOrElse("distances"), a.numOpt(1).getOrElse(1.0).toInt,
@@ -269,9 +251,9 @@ object Registry {
         a.numOpt(0).getOrElse(1.0).toInt, a.numOpt(1).getOrElse(1.0),
         a.numOpt(2).getOrElse(0.0), a.numOpt(3).getOrElse(0.0),
         "__lon", "__lat", "__out")),
-    "temporal_tree_lag" -> outT("treelag")((df, a) =>
-      temporal.TreeLag.treeLag(df, "value", a.numOpt(0).getOrElse(0.8),
-        a.strOpt(1).getOrElse("uniform"), a.numOpt(2).getOrElse(1.0))),
+    "temporal_tree_lag" -> spatialAppendT((gp, a) =>
+      temporal.TreeLag.withTreeLag(gp, "value", a.numOpt(0).getOrElse(0.8),
+        a.strOpt(1).getOrElse("uniform"), a.numOpt(2).getOrElse(1.0), "__out")),
   )
 
   /** Corpus-pipeline registry: the SAME JSON wire format dispatched

@@ -101,52 +101,60 @@ object CountryLag {
     * @param centroids (country_id, lat, lon)
     * @param ringOpt precomputed ringSet(panel, adjacency, inner, width)
     *   (e.g. a session cache shared across kernels); None derives it
+    * @return (month_id, unit_id, out) — [[withSplagCountry]] projected
     */
   def splagCountry(panel: DataFrame, valueCol: String,
                    adjacency: DataFrame, centroids: DataFrame,
                    inner: Int, width: Int, power: Double, norm: Boolean,
                    out: String = "splag",
-                   ringOpt: Option[DataFrame] = None): DataFrame = {
+                   ringOpt: Option[DataFrame] = None): DataFrame =
+    withSplagCountry(panel, valueCol, adjacency, centroids, inner, width, power, norm,
+      out, ringOpt).select(col(Panel.TimeCol), col(Panel.UnitCol), col(out))
+
+  /** The panel's own rows with the lag appended as `out`
+    * ([[graft.Panel.appendByKey]]).
+    */
+  def withSplagCountry(panel: DataFrame, valueCol: String,
+                       adjacency: DataFrame, centroids: DataFrame,
+                       inner: Int, width: Int, power: Double, norm: Boolean,
+                       out: String, ringOpt: Option[DataFrame] = None): DataFrame = {
     val T = Panel.TimeCol
     val U = Panel.UnitCol
     val ninner = inner - 1
     val nouter = ninner + width
 
-    val result =
-      if (nouter < 0) {
-        // ring is empty everywhere -> all zeros
-        panel.select(col(T), col(U), lit(0.0).as(out))
-      } else {
-        val ring = ringOpt.getOrElse(ringSet(panel, adjacency, inner, width))
+    if (nouter < 0) {
+      // ring is empty everywhere -> all zeros
+      panel.withColumn(out, lit(0.0))
+    } else {
+      val ring = ringOpt.getOrElse(ringSet(panel, adjacency, inner, width))
 
-        val cs = broadcast(centroids.select(col("country_id").as("seed"),
-          col("lat").as("s_lat"), col("lon").as("s_lon")))
-        val cm = broadcast(centroids.select(col("country_id").as("member"),
-          col("lat").as("m_lat"), col("lon").as("m_lon")))
-        val withDist = ring.join(cs, "seed").join(cm, "member")
-          .withColumn("d", sqrt(
-            pow(col("s_lat") - col("m_lat"), 2.0) +
-              pow(col("s_lon") - col("m_lon"), 2.0)))
-          .withColumn("w", pow(col("d"), power))
-        val weighted =
-          if (norm)
-            withDist.withColumn("w",
-              col("w") / sum(col("w")).over(
-                org.apache.spark.sql.expressions.Window.partitionBy(col(T), col("seed"))))
-          else withDist
+      val cs = broadcast(centroids.select(col("country_id").as("seed"),
+        col("lat").as("s_lat"), col("lon").as("s_lon")))
+      val cm = broadcast(centroids.select(col("country_id").as("member"),
+        col("lat").as("m_lat"), col("lon").as("m_lon")))
+      val withDist = ring.join(cs, "seed").join(cm, "member")
+        .withColumn("d", sqrt(
+          pow(col("s_lat") - col("m_lat"), 2.0) +
+            pow(col("s_lon") - col("m_lon"), 2.0)))
+        .withColumn("w", pow(col("d"), power))
+      val weighted =
+        if (norm)
+          withDist.withColumn("w",
+            col("w") / sum(col("w")).over(
+              org.apache.spark.sql.expressions.Window.partitionBy(col(T), col("seed"))))
+        else withDist
 
-        val vals = panel.select(col(T).as("v_t"), col(U).as("member"),
-          // reference zeroes infinities before summing (splag_country.py:289)
-          when(col(valueCol) === Double.PositiveInfinity, 0.0)
-            .otherwise(col(valueCol)).as("v"))
-        val lag = weighted.join(vals,
-          weighted(T) === vals("v_t") && weighted("member") === vals("member"))
-          .groupBy(weighted(T), col("seed").as(U))
-          .agg(sum(col("v") * col("w")).as(out))
-        panel.select(col(T), col(U)).join(lag, Seq(T, U), "left")
-          .na.fill(0.0, Seq(out))
-      }
-    result
+      val vals = panel.select(col(T).as("v_t"), col(U).as("member"),
+        // reference zeroes infinities before summing (splag_country.py:289)
+        when(col(valueCol) === Double.PositiveInfinity, 0.0)
+          .otherwise(col(valueCol)).as("v"))
+      val lag = weighted.join(vals,
+        weighted(T) === vals("v_t") && weighted("member") === vals("member"))
+        .groupBy(weighted(T), col("seed").as(U))
+        .agg(sum(col("v") * col("w")).as(out))
+      Panel.appendByKey(panel, lag, Seq(out))
+    }
   }
 
   /** Derived adjacency for the testdata unit grid (queen adjacency on

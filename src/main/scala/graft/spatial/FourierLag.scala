@@ -1,7 +1,7 @@
 package graft.spatial
 
 import graft.{OpCache, Panel, Shuffle}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,7 +17,9 @@ import org.apache.spark.sql.types._
   * Spark-first: months are independent, so this is a
   * `groupBy(month).as[...].flatMapGroups` dense-grid kernel —
   * embarrassingly parallel over months, one input-sized shuffle on
-  * month_id ([[graft.Shuffle.by]]). The FFT is an
+  * month_id ([[graft.Shuffle.by]]). Each month's rows cross that
+  * exchange whole and come back with the lag appended
+  * ([[withFourierLag]]): no join on the panel key. The FFT is an
   * in-house iterative radix-2 (the grid side is a power of two by
   * construction); per-month cost O(G² log G) matches the reference.
   */
@@ -299,50 +301,64 @@ object FourierLag {
     * independently within the same per-month group.
     *
     * @param panel dense panel with `lon`/`lat` cell-coordinate columns
+    * @return (month_id, unit_id, `flag_<c>`…)
     */
   def fourierLagMulti(panel: DataFrame, valueCols: Seq[String],
                       lonCol: String = "lon", latCol: String = "lat",
                       dimensionality: Int = 2,
                       embOpt: Option[TreeLag.Embedding] = None): DataFrame = {
-    require(dimensionality == 2 || dimensionality == 3,
-      s"dimensionality must be 2 or 3, got $dimensionality")
-    val spark = panel.sparkSession
-    import spark.implicits._
     val T = Panel.TimeCol
     val U = Panel.UnitCol
-
+    val outs = valueCols.map(c => s"flag_$c")
     val emb = embOpt.getOrElse(TreeLag.embedOf(panel, lonCol, latCol))
+    // only the columns the kernel reads cross the month exchange
+    val cells = panel.select(col(T) +: col(U) +: valueCols.map(col): _*)
+    withFourierLag(cells, valueCols, outs, dimensionality, emb)
+      .select(col(T) +: col(U) +: outs.map(col): _*)
+  }
+
+  /** The kernel itself: every input row comes back with one non-null
+    * double column `outs(i)` appended per `valueCols(i)` — its cell of
+    * the month's solved slice (a unit's cell is its place in `emb`). A
+    * null value is an empty cell; a row without a month gets 0.0.
+    */
+  def withFourierLag(panel: DataFrame, valueCols: Seq[String], outs: Seq[String],
+                     dimensionality: Int, emb: TreeLag.Embedding): DataFrame = {
+    require(dimensionality == 2 || dimensionality == 3,
+      s"dimensionality must be 2 or 3, got $dimensionality")
+    require(valueCols.size == outs.size, "one output column per value column")
+    val spark = panel.sparkSession
+    val T = Panel.TimeCol
+    val schema = panel.schema
+    val uI = schema.fieldIndex(Panel.UnitCol)
+    val vI = valueCols.map(schema.fieldIndex).toArray
+    val nf = vI.length
     val bc = OpCache.memo(spark, ("fourier.cells", emb))(
       spark.sparkContext.broadcast((emb.cells, emb.ncells)))
-    val nf = valueCols.size
-
-    val cells = panel.select(col(T), col(U),
-        array(valueCols.map(c => col(c).cast("double")): _*).as("__vs"))
     val solver: (Array[Double], Int) => Array[Double] =
       if (dimensionality == 3) solveSlice3d else solveSlice
-    val solvedDs = Shuffle.by(cells, col(T)).groupBy(col(T))
-      .as[Long, (Long, Long, Seq[Double])]
-      .flatMapGroups { (month: Long, rows: Iterator[(Long, Long, Seq[Double])]) =>
+    val outSchema = StructType(schema.fields ++
+      outs.map(StructField(_, DoubleType, nullable = false)))
+
+    Shuffle.by(panel, col(T)).groupBy(col(T))
+      .as(Encoders.row(StructType(Seq(schema(T)))), Encoders.row(schema))
+      .flatMapGroups { (key: Row, rows: Iterator[Row]) =>
         val (cells, nc) = bc.value
-        val grids = Array.fill(nf)(new Array[Double](nc * nc))
-        val present = scala.collection.mutable.ArrayBuffer.empty[Long]
-        rows.foreach { case (_, u, vs) =>
-          val (ex, ey) = cells(u)
-          var f = 0
-          while (f < nf) { grids(f)(ex * nc + ey) = vs(f); f += 1 }
-          present += u
-        }
-        val solved = grids.map(g => solver(g, nc))
-        present.iterator.map { u =>
-          val (ex, ey) = cells(u)
-          (month, u, solved.map(_(ex * nc + ey)).toSeq)
-        }
-      }
-    solvedDs.toDF(T, U, "__flags")
-      .select(col(T) +: col(U) +:
-        valueCols.zipWithIndex.map { case (c, i) =>
-          element_at(col("__flags"), i + 1).as(s"flag_$c")
-        }: _*)
+        val month = rows.toArray
+        val at = month.map(r => cells(r.getLong(uI)) match { case (ex, ey) => ex * nc + ey })
+        val solved =
+          if (key.isNullAt(0)) Array.fill(nf)(new Array[Double](nc * nc))
+          else Array.tabulate(nf) { f =>
+            val grid = new Array[Double](nc * nc)
+            month.indices.foreach { i =>
+              if (!month(i).isNullAt(vI(f)))
+                grid(at(i)) = month(i).get(vI(f)).asInstanceOf[Number].doubleValue
+            }
+            solver(grid, nc)
+          }
+        month.indices.iterator.map(i =>
+          Row.fromSeq(month(i).toSeq ++ solved.map(_(at(i)))))
+      }(Encoders.row(outSchema))
   }
 
   /** Single-feature convenience wrapper. */

@@ -159,6 +159,16 @@ object TreeLag {
     treeLagWith(panel, valueCol, thetacrit,
       Seq(out -> dfunction(dfunctionOption)), lonCol, latCol, embOpt)
 
+  /** @return (month_id, unit_id, one column per weight function) —
+    * [[withTreeLag]] projected
+    */
+  def treeLagWith(panel: DataFrame, valueCol: String, thetacrit: Double,
+                  weightFns: Seq[(String, Double => Double)],
+                  lonCol: String = "lon", latCol: String = "lat",
+                  embOpt: Option[Embedding] = None): DataFrame =
+    withTreeLag(panel, valueCol, thetacrit, weightFns, lonCol, latCol, embOpt)
+      .select(col(Panel.TimeCol) +: col(Panel.UnitCol) +: weightFns.map(f => col(f._1)): _*)
+
   /** Derive the embedding from a panel's distinct unit cells (one small
     * aggregation + collect — geometry is O(distinct cells), the global
     * PRIO grid is ~260k cells). Cache the result across operators on
@@ -175,9 +185,11 @@ object TreeLag {
     * function (spatial_tree.py:48-79, tree_lag outputs
     * nweightfunctions columns per feature). Every function shares the
     * SAME interaction lists and node values: one walk, one broadcast
-    * join, one aggregation with N weighted sums.
+    * join, one aggregation with N weighted sums. The panel's own rows
+    * come back with one column per function appended
+    * ([[graft.Panel.appendByKey]]).
     */
-  def treeLagWith(panel: DataFrame, valueCol: String, thetacrit: Double,
+  def withTreeLag(panel: DataFrame, valueCol: String, thetacrit: Double,
                   weightFns: Seq[(String, Double => Double)],
                   lonCol: String = "lon", latCol: String = "lat",
                   embOpt: Option[Embedding] = None): DataFrame = {
@@ -227,8 +239,7 @@ object TreeLag {
     val lag = nodevals.join(ilDf, Seq("level", "nx", "ny"))
       .groupBy(col(T), col("target").as(U))
       .agg(aggs.head, aggs.tail: _*)
-    panel.select(col(T), col(U)).join(lag, Seq(T, U), "left")
-      .na.fill(0.0, weightFns.map(_._1))
+    Panel.appendByKey(panel, lag, weightFns.map(_._1))
   }
 
   /** Adaptive-mesh grid lag — reference get_grid_lag
@@ -296,6 +307,16 @@ object TreeLag {
     gridLagWith(panel, valueCol, threshold,
       Seq(out -> dfunction(dfunctionOption)), lonCol, latCol, embOpt)
 
+  /** @return (month_id, unit_id, one column per weight function) —
+    * [[withGridLag]] projected
+    */
+  def gridLagWith(panel: DataFrame, valueCol: String, threshold: Double,
+                  weightFns: Seq[(String, Double => Double)],
+                  lonCol: String = "lon", latCol: String = "lat",
+                  embOpt: Option[Embedding] = None): DataFrame =
+    withGridLag(panel, valueCol, threshold, weightFns, lonCol, latCol, embOpt)
+      .select(col(Panel.TimeCol) +: col(Panel.UnitCol) +: weightFns.map(f => col(f._1)): _*)
+
   /** Targets per dense-kernel block: bounds task size (and the
     * mesh-row replication factor) so parallelism is months × blocks,
     * not just months.
@@ -314,9 +335,11 @@ object TreeLag {
     * broadcast target geometry — the same shape as FourierLag's
     * per-month kernel. Shuffled volume is O(M × blocks) mesh rows +
     * O(U) result rows, independent of the product size; wall-clock
-    * parallelism is months × ceil(U / 8192) tasks.
+    * parallelism is months × ceil(U / 8192) tasks. The panel's own rows
+    * come back with one column per function appended
+    * ([[graft.Panel.appendByKey]]).
     */
-  def gridLagWith(panel: DataFrame, valueCol: String, threshold: Double,
+  def withGridLag(panel: DataFrame, valueCol: String, threshold: Double,
                   weightFns: Seq[(String, Double => Double)],
                   lonCol: String = "lon", latCol: String = "lat",
                   embOpt: Option[Embedding] = None): DataFrame = {
@@ -337,7 +360,8 @@ object TreeLag {
     val fns = weightFns.map(_._2).toArray
     val nW = fns.length
 
-    val mesh = adaptiveMesh(panel, valueCol, threshold, emb)
+    // a row without a month has no mesh: it gets 0.0 from the append
+    val mesh = adaptiveMesh(panel.where(col(T).isNotNull), valueCol, threshold, emb)
     val lag = mesh
       .select(col(T), col("level"), col("nx"), col("ny"), col("v"), col("s"))
       .as[(Long, Int, Int, Int, Double, Double)]
@@ -373,7 +397,6 @@ object TreeLag {
       .select(col(T) +: col(U) +: weightFns.zipWithIndex.map { case ((name, _), k) =>
         col("ws")(k).as(name)
       }: _*)
-    panel.select(col(T), col(U)).join(lag, Seq(T, U), "left")
-      .na.fill(0.0, weightFns.map(_._1))
+    Panel.appendByKey(panel, lag, weightFns.map(_._1))
   }
 }

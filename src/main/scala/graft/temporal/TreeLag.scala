@@ -1,8 +1,9 @@
 package graft.temporal
 
-import graft.Panel
-import org.apache.spark.sql.DataFrame
+import graft.{Panel, Shuffle}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Barnes-Hut temporal tree lag — reference temporal_tree.py:6-456: a
   * binary interval tree over the (power-of-two padded) time axis, node
@@ -14,9 +15,11 @@ import org.apache.spark.sql.functions._
   * tree reduces to an effective weight matrix W(tnow, month) =
   * Σ_{accepted nodes covering month} w(node, tnow), computed on the
   * driver by a literal port of the reference walk and broadcast. The lag
-  * is then one broadcast join + hash aggregation:
-  * lag(tnow, unit) = Σ_m W(tnow, m) · x(m, unit). No tree exists at
-  * runtime; cost is independent of thetacrit and linear in the panel.
+  * is then a per-unit kernel behind one input-sized `unit_id` exchange
+  * ([[graft.Shuffle.by]]): lag(tnow, unit) = Σ_m W(tnow, m) · x(m, unit)
+  * over each unit's rows, appended to those rows ([[withTreeLag]]) —
+  * no join, no aggregation exchange. No tree exists at runtime; cost is
+  * independent of thetacrit and linear in the panel.
   *
   * Reference quirks preserved: the time axis is padded to a power of two
   * BEFORE the earliest time (temporal_tree.py:131-136), and the final
@@ -191,20 +194,52 @@ object TreeLag {
       .toSeq
   }
 
+  /** @return (month_id, unit_id, out) */
   def treeLag(panel: DataFrame, valueCol: String,
               thetacrit: Double, fname: String, sigma: Double = 1.0,
               out: String = "treelag"): DataFrame = {
-    val spark = panel.sparkSession
-    import spark.implicits._
     val T = Panel.TimeCol
     val U = Panel.UnitCol
-    val times = panel.select(col(T)).distinct().collect().map(_.getLong(0)).toSeq.sorted
-    val wm = broadcast(weightMatrix(times, thetacrit, fname, sigma)
-      .toDF("tnow", T, "w"))
-    val lag = panel.join(wm, T)
-      .groupBy(col("tnow").as(T), col(U))
-      .agg(sum(col(valueCol) * col("w")).as(out))
-    panel.select(col(T), col(U)).join(lag, Seq(T, U), "left")
-      .na.fill(0.0, Seq(out))
+    withTreeLag(panel.select(col(T), col(U), col(valueCol)), valueCol,
+      thetacrit, fname, sigma, out).select(col(T), col(U), col(out))
+  }
+
+  /** The per-unit kernel: every input row comes back with the non-null
+    * double column `out` appended, lag(tnow) = Σ_m W(tnow, m) · x(m)
+    * over its unit's rows. Null values and months are skipped; a row
+    * with no term (the final timestep, a null month) or a NaN sum gets
+    * 0.0.
+    */
+  def withTreeLag(panel: DataFrame, valueCol: String,
+                  thetacrit: Double, fname: String, sigma: Double,
+                  out: String): DataFrame = {
+    val T = Panel.TimeCol
+    val U = Panel.UnitCol
+    val times = panel.select(col(T)).where(col(T).isNotNull).distinct()
+      .collect().map(_.getLong(0)).toSeq.sorted
+    // W's rows: tnow → (month, weight), months ascending
+    val wm: Map[Long, Seq[(Long, Double)]] = weightMatrix(times, thetacrit, fname, sigma)
+      .groupBy(_._1).map { case (tnow, ws) => tnow -> ws.map(w => (w._2, w._3)).sortBy(_._1) }
+    val schema = panel.schema
+    val tI = schema.fieldIndex(T)
+    val vI = schema.fieldIndex(valueCol)
+    val outSchema = StructType(schema.fields :+ StructField(out, DoubleType, nullable = false))
+
+    Shuffle.by(panel, col(U)).groupBy(col(U))
+      .as(Encoders.row(StructType(Seq(schema(U)))), Encoders.row(schema))
+      .flatMapGroups { (_: Row, rows: Iterator[Row]) =>
+        val series = rows.toArray
+        // month → the unit's values there, sorted so that the sum does
+        // not depend on row order (a well-formed panel has one)
+        val at = series.filter(r => !r.isNullAt(tI) && !r.isNullAt(vI))
+          .groupMap(_.getLong(tI))(_.get(vI).asInstanceOf[Number].doubleValue)
+          .map { case (m, xs) => m -> xs.sortWith(java.lang.Double.compare(_, _) < 0) }
+        series.iterator.map { r =>
+          val terms = (if (r.isNullAt(tI)) Nil else wm.getOrElse(r.getLong(tI), Nil))
+            .flatMap { case (m, w) => at.getOrElse(m, Array.empty[Double]).map(w * _) }
+          val s = terms.foldLeft(0.0)(_ + _)
+          Row.fromSeq(r.toSeq :+ (if (terms.isEmpty || s.isNaN) 0.0 else s))
+        }
+      }(Encoders.row(outSchema))
   }
 }

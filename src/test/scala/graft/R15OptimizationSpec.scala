@@ -136,16 +136,15 @@ class R15OptimizationSpec extends SparkSpec {
       s"found unit-only self-join(s) in emergingHotspots: $unitOnly")
   }
 
-  // ---- spacetime banded ladder: short-circuit path still exact
+  // ---- spacetime event-month search: one-cell grid still exact
 
   test("banded spacetime with a fully-certified level-0 ladder (short-" +
     "circuited escalations + skipped fallback) matches broadcast") {
-    // every unit sits in ONE 40°-wide band cell, so each month's ring
-    // holds ALL of that month's events — the level-0 certificate
-    // covers every (cell, month) via the all-events arm, pending is
-    // empty after level 0, and the r15 short-circuit skips the 3r/9r
-    // rings and the salted fallback outright. Values must still equal
-    // the broadcast path bit-for-bit.
+    // every unit sits in ONE 40°-wide band cell, so each month's first
+    // ring already covers every occupied cell and holds ALL of that
+    // month's events: the event-month search stops there without
+    // widening. Values must still equal the broadcast path
+    // bit-for-bit.
     val units = for (y <- 0L until 3L; x <- 0L until 3L) yield y * 40L + x
     val rows = for (m <- 1L to 4L; u <- units) yield
       (m, u, if ((u + m) % 4L == 0L) 500.0 + (u % 7L) else 1.0)

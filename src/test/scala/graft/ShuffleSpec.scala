@@ -60,7 +60,8 @@ class ShuffleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       """{"type":"time_since","args":[0]},{"type":"decay","args":[12]}]"""),
     "splag4d" -> """[{"type":"splag4d","args":[1,1,0]}]""",
     "spacetime_dist" -> """[{"type":"spacetime_dist","args":["distances",1,1,0,0]}]""",
-    "fourier_lag" -> """[{"type":"replace_na","args":[0]},{"type":"fourier_lag","args":[2]}]""")
+    "fourier_lag" -> """[{"type":"replace_na","args":[0]},{"type":"fourier_lag","args":[2]}]""",
+    "temporal_tree_lag" -> """[{"type":"temporal_tree_lag","args":[0.8,"expon",4]}]""")
 
   /** Rows as sorted strings, doubles by their bits. */
   private def bits(rows: Array[Row]): Seq[String] =

@@ -1,15 +1,20 @@
 package graft
 
-import graft.spatial.{Grid, KernelLag, SpacetimeDist}
+import graft.spatial.{CountryLag, FourierLag, Grid, KernelLag, SpacetimeDist, TreeLag}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 /** The local spatial kernels — the per-month splag4d stencil and the
   * per-unit spacetime top-k — against plain-Scala models of the join
   * semantics they replace and against the banded spacetime path, plus
-  * the job budget of their wire-format entries.
+  * the plan shapes, job budgets and row contract of the panel lags'
+  * wire-format entries.
   */
-class SpatialKernelSpec extends SparkSpec {
+class SpatialKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
   private val T = Panel.TimeCol
   private val U = Panel.UnitCol
@@ -229,5 +234,87 @@ class SpatialKernelSpec extends SparkSpec {
     val direct = keyed(SpacetimeDist.spacetimeDistances(withGrid(p.drop("lon", "lat")),
       "value", "distances", 1, 1.0, 0.0))
     assert(out.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap == direct)
+  }
+
+  /** The other five column-producing panel lags, with the `wirePanel`
+    * shape each must have: hash exchanges (None: not pinned), joins,
+    * and a job budget for a warm run. The budgets are what the re-join
+    * form these steps replaced took on this panel (with 1, 3, 4, 4 and 5
+    * joins), so appending in place may not cost a job more.
+    */
+  private val panelLags = Seq(
+    ("fourier_lag", """[{"type":"replace_na","args":[0]},{"type":"fourier_lag"}]""",
+      Some(1), 0, 3),
+    ("temporal_tree_lag", """[{"type":"temporal_tree_lag","args":[0.8,"uniform"]}]""",
+      Some(1), 0, 7),
+    ("tree_lag", """[{"type":"tree_lag","args":[0.5,0]}]""", None, 3, 8),
+    ("grid_lag", """[{"type":"grid_lag","args":[2000,0]}]""", None, 3, 10),
+    ("splag_country", """[{"type":"splag_country","args":[1,1,0,false]}]""", None, 4, 8))
+
+  test("panel lags on the wire: the Fourier and temporal tree kernels are one hash " +
+      "exchange and no join, the relational lags join once, all within the job budget") {
+    val p = wirePanel
+    panelLags.foreach { case (name, spec, hashExchanges, joins, budget) =>
+      Registry.run(p, spec).collect() // warm the geometry caches
+      var df: DataFrame = null
+      val n = jobsOf { df = Registry.run(p, spec); df.collect() }
+      val plan = df.queryExecution.executedPlan
+      val hashed = collectWithSubqueries(plan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+      }
+      hashExchanges.foreach(h => assert(hashed.size == h, s"$name:\n$plan"))
+      assert(collectWithSubqueries(plan) { case j: BaseJoinExec => j }.size == joins,
+        s"$name:\n$plan")
+      assert(n <= budget, s"$name: $n jobs")
+    }
+  }
+
+  /** The row contract's edge cases: columns out of the usual order, an
+    * extra column, the panel's own lon/lat (not the grid's), a
+    * duplicate (month, unit) key and a row without a month.
+    */
+  private def edgePanel: DataFrame = {
+    val units = Seq(0L, 1L, 2L, 40L, 41L, 42L)
+    val rows = (for (m <- 1L to 4L; u <- units)
+        yield (s"e$m-$u", (u % 5L) * 100.0 + m * 30.0, Option(m), 100L + u, u, 200L + u)) ++
+      Seq(("dup", 160.0, Option(2L), 141L, 41L, 241L),
+          ("no-month", 77.0, Option.empty[Long], 101L, 1L, 201L))
+    rows.toDF("extra", "value", T, "lon", U, "lat")
+  }
+
+  test("panel lags on the wire keep the panel's rows and columns: a duplicate key " +
+      "gets its lag once per row, a row without a month gets 0.0") {
+    val p = edgePanel
+    val gp = withGrid(p.drop("lon", "lat"))
+    def direct(df: DataFrame): Map[(Long, Long), Double] =
+      df.collect().filter(!_.isNullAt(0))
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val want = Map(
+      "fourier_lag" -> direct(FourierLag.fourierLag(gp, "value")),
+      "temporal_tree_lag" -> direct(temporal.TreeLag.treeLag(p, "value", 0.8, "uniform")),
+      "tree_lag" -> direct(TreeLag.treeLag(gp, "value", 0.5, 0)),
+      "grid_lag" -> direct(TreeLag.gridLag(gp, "value", 300.0, 0)),
+      "splag_country" -> direct(CountryLag.splagCountry(p, "value", GeoCache.adjacency(p),
+        GeoCache.centroids(p), 1, 1, 0.0, norm = false)))
+    // uniform weights sum every earlier month: both copies of the key count
+    assert(want("temporal_tree_lag")((2L, 41L)) == 130.0 + 2 * 160.0)
+    val specs = panelLags.map(l => l._1 -> l._2).toMap +
+      ("grid_lag" -> """[{"type":"grid_lag","args":[300,0]}]""")
+    specs.foreach { case (name, spec) =>
+      val out = Registry.run(p, spec)
+      assert(out.columns.toSeq == p.columns.toSeq, name)
+      val rows = out.collect()
+      assert(rows.map(_.getString(0)).sorted.toSeq == p.collect().map(_.getString(0)).sorted.toSeq,
+        s"$name: one output row per input row")
+      rows.foreach { r =>
+        val u = r.getLong(4)
+        assert(r.getLong(3) == 100L + u && r.getLong(5) == 200L + u, s"$name: own lon/lat $r")
+        val v = r.getDouble(1)
+        if (r.isNullAt(2)) assert(v == 0.0, s"$name: $r")
+        else assert(v == want(name)((r.getLong(2), u)), s"$name: $r")
+      }
+      val dup = rows.filter(r => !r.isNullAt(2) && r.getLong(2) == 2L && r.getLong(4) == 41L)
+      assert(dup.map(_.getString(0)).sorted.toSeq == Seq("dup", "e2-41"), name)
+    }
   }
 }

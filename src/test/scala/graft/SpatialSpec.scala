@@ -150,9 +150,10 @@ class SpatialSpec extends SparkSpec {
 
   test("banded spacetime candidates reproduce the broadcast path exactly") {
     // dense 10x10 block, events scattered so a tight band (b=2, r=1)
-    // exercises BOTH branches: clustered units resolve in-ring (safe:
-    // kth distance under the ring bound), sparse corners trip the
-    // distance-bound check and recompute via the month fallback
+    // exercises both ends of the event-month ring search: clustered
+    // units stop at the first ring (kth distance under the ring
+    // bound), sparse corners widen the ring until the bound or the
+    // month's occupied cells are covered
     val units = for (y <- 0L until 10L; x <- 0L until 10L) yield y * 40L + x
     val rows = for (m <- 1L to 6L; u <- units) yield {
       val v = if ((u * 7L + m * 13L) % 11L == 0L) 500.0 + (u % 9L) else 1.0
