@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * remaining per-unit windows share one such exchange per run. Every
   * column-producing panel lag appends its column to the panel's own
   * rows and writes it into `value` through one wrapper
-  * ([[spatialAppendT]]): no step re-joins its result on the panel key.
+  * ([[appendT]]): no step re-joins its result on the panel key.
   */
 object Registry {
 
@@ -66,19 +66,21 @@ object Registry {
       .withColumn("lat", Grid.unitLat(col(Panel.UnitCol)))
 
   /** Panel lag (every column-producing one: the spatial and Fourier
-    * lags, the spacetime kernel, the temporal tree lag): it runs on the
-    * panel with the grid embedding under internal names (`__lon`,
-    * `__lat`), so a panel's own lon/lat columns pass through untouched,
-    * and appends its result to the panel's own rows as `__out`, which
-    * then replaces `value` in place — the panel keeps its rows and
-    * column order, and nothing re-joins on the panel key.
+    * lags, the spacetime kernel, the temporal tree lag): it appends its
+    * result to the panel's own rows as `__out`, which then replaces
+    * `value` in place — the panel keeps its rows and column order, and
+    * nothing re-joins on the panel key.
+    */
+  private def appendT(f: (DataFrame, Seq[Any]) => DataFrame): Transform =
+    (df, args) => f(df, args).withColumn("value", col("__out")).drop("__out")
+
+  /** A panel lag that reads the grid embedding ([[appendT]]): it runs on
+    * the panel with the grid columns under internal names (`__lon`,
+    * `__lat`), so a panel's own lon/lat columns pass through untouched.
     */
   private def spatialAppendT(f: (DataFrame, Seq[Any]) => DataFrame): Transform =
-    (df, args) => {
-      val gp = df.withColumn("__lon", Grid.unitLon(col(Panel.UnitCol)))
-        .withColumn("__lat", Grid.unitLat(col(Panel.UnitCol)))
-      f(gp, args).withColumn("value", col("__out")).drop("__out", "__lon", "__lat")
-    }
+    appendT((df, args) => f(df.withColumn("__lon", Grid.unitLon(col(Panel.UnitCol)))
+      .withColumn("__lat", Grid.unitLat(col(Panel.UnitCol))), args).drop("__lon", "__lat"))
 
   /** Panel transforms that are steps of the per-unit scan: name → the
     * scan steps its args compile to.
@@ -251,8 +253,8 @@ object Registry {
         a.numOpt(0).getOrElse(1.0).toInt, a.numOpt(1).getOrElse(1.0),
         a.numOpt(2).getOrElse(0.0), a.numOpt(3).getOrElse(0.0),
         "__lon", "__lat", "__out")),
-    "temporal_tree_lag" -> spatialAppendT((gp, a) =>
-      temporal.TreeLag.withTreeLag(gp, "value", a.numOpt(0).getOrElse(0.8),
+    "temporal_tree_lag" -> appendT((p, a) =>
+      temporal.TreeLag.withTreeLag(p, "value", a.numOpt(0).getOrElse(0.8),
         a.strOpt(1).getOrElse("uniform"), a.numOpt(2).getOrElse(1.0), "__out")),
   )
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.relational.Funnel
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -12,14 +13,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * inherently streaming; state is k longs per ACTIVE user — bounded
   * by the audience, not the event history.
   *
-  * Equivalence to the batch operator: scanning a user's events in
-  * ascending event-time and setting stage i+1 at the first step-(i+1)
-  * event strictly after stage i's time computes exactly
-  * `min {t : type = step_{i+1}, t > t_i}` — the batch funnelTimes
-  * recurrence — so a batch replay matches the batch funnel row for
-  * row and one oracle pins both. Feed in-order per-user micro-batches
-  * (the AsofStream watermark-replay discipline applies upstream for
-  * out-of-order logs).
+  * Equivalence to the batch operator: both run the one funnel
+  * recurrence, [[graft.relational.Funnel.Position]], over a user's
+  * events in ascending event-time — the batch kernel over the user's
+  * whole history, this state machine over each micro-batch in turn,
+  * resuming from the stored stage times — so a batch replay matches the
+  * batch funnel row for row and one oracle pins both. Feed in-order
+  * per-user micro-batches (the AsofStream watermark-replay discipline
+  * applies upstream for out-of-order logs). A null-time event advances
+  * no stage and is dropped on entry; the null user is a group of its
+  * own (hence the boxed user id) and reaches the first stage at most.
   *
   * Emission: one row per user per micro-batch IN WHICH the user's
   * stage vector advanced (append-mode-friendly; the latest row per
@@ -27,33 +30,30 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object FunnelStream {
 
-  case class EventRow(user_id: Long, t: Long, step_idx: Int)
+  case class EventRow(user_id: java.lang.Long, t: Long, step_idx: Int)
   case class FunnelState(times: Seq[Option[Long]])
-  case class FunnelOut(user_id: Long, reached: Int, times: Seq[Option[Long]])
+  case class FunnelOut(user_id: java.lang.Long, reached: Int, times: Seq[Option[Long]])
 
   def updateGroup(nSteps: Int)(
-      user: Long, rows: Iterator[EventRow],
+      user: java.lang.Long, rows: Iterator[EventRow],
       state: GroupState[FunnelState]): Iterator[FunnelOut] = {
-    val times = state.getOption.map(_.times.toArray)
-      .getOrElse(Array.fill[Option[Long]](nSteps)(None))
+    val pos = new Funnel.Position(nSteps, user == null, None)
+    // the stored times are a valid position: replaying them restores it
+    state.getOption.foreach(_.times.flatten.zipWithIndex.foreach {
+      case (t, i) => pos.advance(i, t)
+    })
     var changed = false
-    rows.toSeq.sortBy(_.t).foreach { e =>
-      val i = e.step_idx
-      if (i >= 0 && i < nSteps && times(i).isEmpty &&
-        (i == 0 || times(i - 1).exists(e.t > _))) {
-        times(i) = Some(e.t)
-        changed = true
-      }
-    }
-    state.update(FunnelState(times.toSeq))
-    if (changed)
-      Iterator.single(FunnelOut(user, times.count(_.nonEmpty), times.toSeq))
+    rows.toSeq.sortBy(_.t).foreach(e => changed |= pos.advance(e.step_idx, e.t))
+    val times = (0 until nSteps).map(pos.time)
+    state.update(FunnelState(times))
+    if (changed) Iterator.single(FunnelOut(user, pos.stagesReached, times))
     else Iterator.empty
   }
 
   /** Batch or streaming: per-user funnel positions. In batch mode every
-    * user's full history lands in one group, so the result equals
-    * [[graft.relational.Funnel.funnelTimes]] exactly.
+    * user's full history lands in one group, so a user's times equal its
+    * [[graft.relational.Funnel.funnelTimes]] row (a user that reaches no
+    * stage emits no row).
     */
   def funnelPositions(events: DataFrame, steps: Seq[String],
                       userCol: String = "user_id",
@@ -71,7 +71,7 @@ object FunnelStream {
     events
       .select(col(userCol).cast("long").as("user_id"),
         unix_micros(col(tsCol)).as("t"), idx.as("step_idx"))
-      .filter(col("step_idx") >= 0)
+      .filter(col("step_idx") >= 0 && col("t").isNotNull)
       .as[EventRow]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,

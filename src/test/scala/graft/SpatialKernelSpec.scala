@@ -269,6 +269,18 @@ class SpatialKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("temporal_tree_lag on the wire exchanges the panel's own columns only: " +
+      "no grid column crosses its unit_id exchange") {
+    val df = Registry.run(wirePanel, panelLags(1)._2)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val carried = collectWithSubqueries(plan) {
+      case e: ShuffleExchangeExec => e.child.output.map(_.name)
+    }
+    assert(carried.nonEmpty && carried.forall(_.forall(n => n != "__lon" && n != "__lat")),
+      s"$carried\n$plan")
+  }
+
   /** The row contract's edge cases: columns out of the usual order, an
     * extra column, the panel's own lon/lat (not the grid's), a
     * duplicate (month, unit) key and a row without a month.
