@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Canonical panel abstraction: a long/tidy table keyed by
   * `(month_id, unit_id)` with one or more double-typed feature columns.
@@ -142,6 +144,87 @@ object Panel {
     panel.drop(outs: _*)
       .join(keyed, col(TimeCol) === col("__t") && col(UnitCol) === col("__u"), "left")
       .drop("__t", "__u").na.fill(0.0, outs)
+  }
+
+  /** One panel kernel: `df`'s rows grouped on `key` behind one
+    * input-sized [[Shuffle.by]] exchange (sorted by `orderBy` within each
+    * group when given), and `f` run once per group ([[Group]]). Each row
+    * `f` emits ([[Emit]]) is built once, with the `appends` double
+    * columns set: an append named like an input column replaces it in
+    * place, others go at the end, non-null unless `nullable`. The grouped
+    * map declares its `key` clustering, so a `bucketBy(key)` table is
+    * read by bucket without an exchange (a `mapPartitions` would split
+    * groups across partitions there).
+    */
+  def kernel(df: DataFrame, key: String, orderBy: Option[String], reads: Seq[String],
+             appends: Seq[String], nullable: Boolean = false)(f: Group => Emit): DataFrame = {
+    val codec = new Codec(df.schema, reads, appends, nullable)
+    val grouped = Shuffle.by(df, col(key)).groupBy(col(key))
+      .as[Row, Row](Encoders.row(StructType(Seq(df.schema(key)))), Encoders.row(df.schema))
+    val run = (_: Row, rows: Iterator[Row]) => codec(rows)(f)
+    orderBy match {
+      case Some(o) => grouped.flatMapSortedGroups(col(o))(run)(Encoders.row(codec.schema))
+      case None => grouped.flatMapGroups(run)(Encoders.row(codec.schema))
+    }
+  }
+
+  /** How a [[kernel]] decodes a keyed group of `in`'s rows and encodes
+    * the rows it emits; a grouped map of another shape (a cogroup) that
+    * runs a kernel's function uses it the same way.
+    */
+  final class Codec(in: StructType, reads: Seq[String], appends: Seq[String],
+                    nullable: Boolean) extends Serializable {
+    private val at = reads.map(in.fieldIndex).toArray
+
+    /** `in` with the replaced columns retyped, then the added ones. */
+    val schema: StructType = StructType(in.fields.map(c =>
+      if (appends.contains(c.name)) c.copy(dataType = DoubleType, nullable = nullable) else c) ++
+      appends.filterNot(in.fieldNames.contains).map(StructField(_, DoubleType, nullable)))
+    /** Each appended column's place in the output row. */
+    private val slot = appends.map(schema.fieldIndex).toArray
+
+    /** `f` run on one keyed group of rows: the rows it emits. */
+    def apply(rows: Iterator[Row])(f: Group => Emit): Iterator[Row] = {
+      val group = rows.toArray
+      val e = f(new Group(group, at))
+      Iterator.tabulate(e.n) { k =>
+        val r = group(e.rows(k))
+        val out = new Array[Any](schema.length)
+        var j = 0
+        while (j < r.length) { out(j) = r.get(j); j += 1 }
+        j = 0
+        while (j < slot.length) { out(slot(j)) = if (e.nulls(j)(k)) null else e.values(j)(k); j += 1 }
+        new GenericRow(out)
+      }
+    }
+  }
+
+  /** One keyed group of rows as a kernel reads it: `n` rows in the
+    * group's order, and each of the kernel's `reads` columns (by its
+    * place in `reads`) as a primitive array on demand. A null cell reads
+    * as 0 and is flagged in [[nulls]]. Numbers are read through
+    * `Number.doubleValue`, or `longValue` for month and unit ids.
+    */
+  final class Group private[Panel] (rows: Array[Row], at: Array[Int]) {
+    val n: Int = rows.length
+    def nulls(c: Int): Array[Boolean] = Array.tabulate(n)(rows(_).isNullAt(at(c)))
+    def doubles(c: Int): Array[Double] = Array.tabulate(n)(num(_, c).doubleValue)
+    def longs(c: Int): Array[Long] = Array.tabulate(n)(num(_, c).longValue)
+    private def num(r: Int, c: Int): Number =
+      if (rows(r).isNullAt(at(c))) Int.box(0) else rows(r).get(at(c)).asInstanceOf[Number]
+  }
+
+  /** A kernel's answer for one group: `n` rows to emit, the `k`th being
+    * the group's row `rows(k)`, with appended column `j` set to
+    * `values(j)(k)`, or to null where `nulls(j)(k)`.
+    */
+  final class Emit(val n: Int, val rows: Array[Int], val values: Array[Array[Double]],
+                   val nulls: Array[Array[Boolean]])
+
+  object Emit {
+    /** Every row of the group, in order, with non-null `values`. */
+    def apply(values: Array[Double]*): Emit = new Emit(values.head.length,
+      values.head.indices.toArray, values.toArray, values.map(v => new Array[Boolean](v.length)).toArray)
   }
 
   /** Dense cross-product reindex: every (month, unit) pair present,

@@ -61,26 +61,28 @@ object Registry {
     (df, args) => df.withColumn("value",
       f(col("value"), col(args.strOpt(0).getOrElse("value2"))))
 
-  private def withGrid(df: DataFrame): DataFrame =
-    df.withColumn("lon", Grid.unitLon(col(Panel.UnitCol)))
-      .withColumn("lat", Grid.unitLat(col(Panel.UnitCol)))
+  private def withGrid(df: DataFrame, lon: String = "lon", lat: String = "lat"): DataFrame =
+    df.withColumn(lon, Grid.unitLon(col(Panel.UnitCol)))
+      .withColumn(lat, Grid.unitLat(col(Panel.UnitCol)))
 
-  /** Panel lag (every column-producing one: the spatial and Fourier
-    * lags, the spacetime kernel, the temporal tree lag): it appends its
-    * result to the panel's own rows as `__out`, which then replaces
-    * `value` in place — the panel keeps its rows and column order, and
-    * nothing re-joins on the panel key.
+  /** Panel lag (every column-producing one): it runs on long month and
+    * unit ids and appends its result to the panel's own rows as `__out`,
+    * which then replaces `value` in place — the panel keeps its rows,
+    * column order and key types, and nothing re-joins on the panel key.
     */
-  private def appendT(f: (DataFrame, Seq[Any]) => DataFrame): Transform =
-    (df, args) => f(df, args).withColumn("value", col("__out")).drop("__out")
+  private def appendT(f: (DataFrame, Seq[Any]) => DataFrame): Transform = (df, args) => {
+    val keys = Seq(Panel.TimeCol, Panel.UnitCol)
+    val out = f(keys.foldLeft(df)((d, k) => d.withColumn(k, col(k).cast("long"))), args)
+      .withColumn("value", col("__out")).drop("__out")
+    keys.foldLeft(out)((d, k) => d.withColumn(k, col(k).cast(df.schema(k).dataType)))
+  }
 
-  /** A panel lag that reads the grid embedding ([[appendT]]): it runs on
-    * the panel with the grid columns under internal names (`__lon`,
-    * `__lat`), so a panel's own lon/lat columns pass through untouched.
+  /** A panel lag that reads the grid columns ([[appendT]]): it runs on
+    * the panel with them under internal names (`__lon`, `__lat`), so a
+    * panel's own lon/lat columns pass through untouched.
     */
   private def spatialAppendT(f: (DataFrame, Seq[Any]) => DataFrame): Transform =
-    appendT((df, args) => f(df.withColumn("__lon", Grid.unitLon(col(Panel.UnitCol)))
-      .withColumn("__lat", Grid.unitLat(col(Panel.UnitCol))), args).drop("__lon", "__lat"))
+    appendT((df, args) => f(withGrid(df, "__lon", "__lat"), args).drop("__lon", "__lat"))
 
   /** Panel transforms that are steps of the per-unit scan: name → the
     * scan steps its args compile to.
@@ -237,9 +239,9 @@ object Registry {
       TreeLag.withGridLag(gp, "value", a.num(0),
         Seq("__out" -> TreeLag.dfunction(a.numOpt(1).getOrElse(0.0).toInt)),
         "__lon", "__lat", Some(GeoCache.embedding(gp, "__lon", "__lat")))),
-    "fourier_lag" -> spatialAppendT((gp, a) =>
-      FourierLag.withFourierLag(gp, Seq("value"), Seq("__out"),
-        a.numOpt(0).getOrElse(2.0).toInt, GeoCache.embedding(gp, "__lon", "__lat"))),
+    "fourier_lag" -> appendT((p, a) =>
+      FourierLag.withFourierLag(p, Seq("value"), Seq("__out"),
+        a.numOpt(0).getOrElse(2.0).toInt, GeoCache.embedding(withGrid(p)))),
     "spacetime_dist" -> spatialAppendT((gp, a) =>
       SpacetimeDist.withSpacetimeDistances(gp, "value",
         a.strOpt(0).getOrElse("distances"), a.numOpt(1).getOrElse(1.0).toInt,

@@ -1,10 +1,9 @@
 package graft.ops
 
-import graft.{Panel, Shuffle}
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.catalyst.expressions.GenericRow
+import graft.Panel
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, NumericType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, NumericType}
 
 /** The per-unit series steps of the temporal family (views_2.py lag,
   * lead, delta, moving, mean, cweq, time_since, tick) as ONE scan over each
@@ -12,21 +11,13 @@ import org.apache.spark.sql.types.{DoubleType, NumericType, StructField, StructT
   * stacks the panel into a time × unit tensor and shifts/rolls along
   * time) applied per unit instead of per panel.
   *
-  * Plan shape: one input-sized `unit_id` exchange ([[Shuffle.by]]), one
-  * sort by (unit_id, month_id) and one grouped map
-  * (`flatMapSortedGroups`) that reads each unit's rows once into
-  * primitive arrays and applies every step in order. A chain of steps is
-  * one operator, where the window formulation stacked one `Window`
-  * operator per step (dependent windows never collapse: each reads its
-  * predecessor's output).
-  *
-  * The grouped map declares that it needs its input clustered on
-  * `unit_id`, so Spark keeps whatever provides that. On a
-  * `bucketBy(unit_id)` table whose bucket count equals the exchange's
-  * width, Spark drops the exchange as redundant and reads the table by
-  * bucket. A plain `mapPartitions` declares nothing: Spark would still
-  * drop the exchange, then read the table unbucketed, and split units
-  * across partitions.
+  * Plan shape: one [[Panel.kernel]] on `unit_id`, sorted by month — one
+  * input-sized exchange, one sort and one grouped map that reads each
+  * unit's values once into primitive arrays and applies every step in
+  * order. A chain of steps is one operator, where the window formulation
+  * stacked one `Window` operator per step (dependent windows never
+  * collapse: each reads its predecessor's output). A `bucketBy(unit_id)`
+  * table is scanned by bucket without an exchange.
   *
   * Every value equals the window formulation's bit for bit:
   *  - lag/lead are positional over the unit's rows in month order;
@@ -140,7 +131,7 @@ object UnitScan {
   }
 
   /** `df`'s `value` series after `steps`, per unit in month order: one
-    * [[Shuffle.by]] exchange on `unit_id`, one sort, one scan.
+    * [[Panel.kernel]] exchange on `unit_id`, one sort, one scan.
     */
   def apply(df: DataFrame, steps: Seq[Step]): DataFrame = {
     require(steps.nonEmpty, "a scan needs at least one step")
@@ -150,11 +141,10 @@ object UnitScan {
       case t => throw new IllegalArgumentException(
         s"the per-unit scan reads a numeric `$V` column, got ${t.simpleString}")
     }
-    val keyed = Shuffle.by(in, col(U))
     val cut = steps.indexWhere(seeded)
-    if (cut < 0) scan(keyed, steps, seedMark = false)
+    if (cut < 0) scan(in, steps, seedMark = false)
     else {
-      val out = withSeed(scan(keyed, steps.take(cut + 1), seedMark = true),
+      val out = withSeed(scan(in, steps.take(cut + 1), seedMark = true),
         steps(cut).asInstanceOf[Cweq].seedValue.get)
       if (cut + 1 == steps.size) out else apply(out, steps.drop(cut + 1))
     }
@@ -171,45 +161,23 @@ object UnitScan {
       .drop(SeedCol, "__t0")
   }
 
-  /** One grouped map per unit over `df`'s double `value`: Spark sorts
-    * each unit's rows by month and reuses `df`'s `unit_id` clustering.
+  /** One [[Panel.kernel]] per unit, in month order: each kept row with
+    * `value` replaced (with `seedMark`, also the unit's first kept month
+    * as a double, on the rows of its first run).
     */
   private def scan(df: DataFrame, steps: Seq[Step], seedMark: Boolean): DataFrame = {
-    val in = df.schema
-    val fields = in.fields.map(f => if (f.name == V) f.copy(nullable = true) else f)
-    val schema = StructType(
-      if (seedMark) fields :+ StructField(SeedCol, in(T).dataType, nullable = true)
-      else fields)
-    val iT = in.fieldIndex(T)
-    val iV = in.fieldIndex(V)
     val stepArr = steps.toArray
-    df.groupBy(col(U)).as[Row, Row](Encoders.row(StructType(Seq(in(U)))), Encoders.row(in))
-      .flatMapSortedGroups(col(T))((_, rows) =>
-        unit(rows.toArray, stepArr, iT, iV, seedMark))(Encoders.row(schema))
-  }
-
-  /** One unit's rows, in month order, after the steps. */
-  private def unit(rows: Array[Row], steps: Array[Step], iT: Int, iV: Int,
-                   seedMark: Boolean): Iterator[Row] = {
-    val s = new Series(rows.length)
-    var i = 0
-    while (i < s.n) {
-      val r = rows(i)
-      s.nul(i) = r.isNullAt(iV)
-      s.v(i) = if (s.nul(i)) 0.0 else r.getDouble(iV)
-      s.idx(i) = i
-      i += 1
-    }
-    steps.foreach(s.run)
-    val width = rows(0).length
-    Iterator.tabulate(s.n) { k =>
-      val r = rows(s.idx(k))
-      val out = new Array[Any](if (seedMark) width + 1 else width)
-      var j = 0
-      while (j < width) { out(j) = r.get(j); j += 1 }
-      out(iV) = if (s.nul(k)) null else s.v(k)
-      if (seedMark) out(width) = if (s.first(k)) rows(s.idx(0)).get(iT) else null
-      new GenericRow(out)
+    Panel.kernel(df, U, Some(T), Seq(V, T), if (seedMark) Seq(V, SeedCol) else Seq(V),
+        nullable = true) { g =>
+      val s = new Series(g.doubles(0), g.nulls(0))
+      stepArr.foreach(s.run)
+      if (!seedMark) new Panel.Emit(s.n, s.idx, Array(s.v), Array(s.nul))
+      else {
+        val (t, tNul) = (g.doubles(1), g.nulls(1))
+        val at = if (s.n > 0) s.idx(0) else 0
+        new Panel.Emit(s.n, s.idx, Array(s.v, Array.fill(s.n)(t(at))),
+          Array(s.nul, Array.tabulate(s.n)(k => !s.first(k) || tNul(at))))
+      }
     }
   }
 
@@ -218,16 +186,14 @@ object UnitScan {
     * input rows. A step writes the next state into the `*2` arrays and
     * swaps them in.
     */
-  private final class Series(size: Int) {
-    var n = size
-    var v = new Array[Double](size)
-    var nul = new Array[Boolean](size)
-    var idx = new Array[Int](size)
-    var v2 = new Array[Double](size)
-    var nul2 = new Array[Boolean](size)
-    var idx2 = new Array[Int](size)
+  private final class Series(var v: Array[Double], var nul: Array[Boolean]) {
+    var n = v.length
+    var idx = Array.range(0, n)
+    var v2 = new Array[Double](n)
+    var nul2 = new Array[Boolean](n)
+    var idx2 = new Array[Int](n)
     /** Rows of the run that starts at the unit's first kept row (seeded cweq). */
-    val first = new Array[Boolean](size)
+    val first = new Array[Boolean](n)
 
     private def swap(n2: Int): Unit = {
       val a = v; v = v2; v2 = a

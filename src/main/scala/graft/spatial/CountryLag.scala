@@ -177,7 +177,7 @@ object CountryLag {
     * same design bound as the quadtree embedding; SURVEY §2.8).
     */
   def gridAdjacencyPairsLocal(panel: DataFrame): Seq[(Long, Long)] = {
-    val units = panel.select(col(Panel.UnitCol)).distinct()
+    val units = panel.select(col(Panel.UnitCol).cast("long")).distinct()
       .collect().map(_.getLong(0))
     val cellToUnit = units.map(u => ((u % Grid.UnitCols, u / Grid.UnitCols), u)).toMap
     for {
@@ -218,7 +218,7 @@ object CountryLag {
     val ninner = inner - 1
     val nouter = ninner + width
     val months = broadcast(panel.select(col(T)).distinct())
-    val seeds = panel.select(col(U)).distinct().collect().map(_.getLong(0))
+    val seeds = panel.select(col(U).cast("long")).distinct().collect().map(_.getLong(0))
 
     val nbrs: Map[Long, Array[Long]] =
       pairs.groupBy(_._1).map { case (a, bs) => a -> bs.map(_._2).toArray }

@@ -1,9 +1,8 @@
 package graft.spatial
 
-import graft.{OpCache, Panel, Shuffle}
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import graft.{OpCache, Panel}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Fourier (Poisson-equation) spatial lag — reference get_fourier_lag,
   * 2-D path (fourier_lag.py:78-155): per (month, feature) slice on the
@@ -14,11 +13,10 @@ import org.apache.spark.sql.types._
   * resulting weighting is ~−ln(d). Output columns are prefixed `flag_`
   * (fourier_lag.py:303).
   *
-  * Spark-first: months are independent, so this is a
-  * `groupBy(month).as[...].flatMapGroups` dense-grid kernel —
-  * embarrassingly parallel over months, one input-sized shuffle on
-  * month_id ([[graft.Shuffle.by]]). Each month's rows cross that
-  * exchange whole and come back with the lag appended
+  * Spark-first: months are independent, so this is a dense-grid
+  * [[graft.Panel.kernel]] keyed on month_id — embarrassingly parallel
+  * over months, one input-sized shuffle on month_id. Each month's rows
+  * cross that exchange whole and come back with the lag appended
   * ([[withFourierLag]]): no join on the panel key. The FFT is an
   * in-house iterative radix-2 (the grid side is a power of two by
   * construction); per-month cost O(G² log G) matches the reference.
@@ -328,37 +326,27 @@ object FourierLag {
       s"dimensionality must be 2 or 3, got $dimensionality")
     require(valueCols.size == outs.size, "one output column per value column")
     val spark = panel.sparkSession
-    val T = Panel.TimeCol
-    val schema = panel.schema
-    val uI = schema.fieldIndex(Panel.UnitCol)
-    val vI = valueCols.map(schema.fieldIndex).toArray
-    val nf = vI.length
     val bc = OpCache.memo(spark, ("fourier.cells", emb))(
       spark.sparkContext.broadcast((emb.cells, emb.ncells)))
     val solver: (Array[Double], Int) => Array[Double] =
       if (dimensionality == 3) solveSlice3d else solveSlice
-    val outSchema = StructType(schema.fields ++
-      outs.map(StructField(_, DoubleType, nullable = false)))
 
-    Shuffle.by(panel, col(T)).groupBy(col(T))
-      .as(Encoders.row(StructType(Seq(schema(T)))), Encoders.row(schema))
-      .flatMapGroups { (key: Row, rows: Iterator[Row]) =>
-        val (cells, nc) = bc.value
-        val month = rows.toArray
-        val at = month.map(r => cells(r.getLong(uI)) match { case (ex, ey) => ex * nc + ey })
-        val solved =
-          if (key.isNullAt(0)) Array.fill(nf)(new Array[Double](nc * nc))
-          else Array.tabulate(nf) { f =>
-            val grid = new Array[Double](nc * nc)
-            month.indices.foreach { i =>
-              if (!month(i).isNullAt(vI(f)))
-                grid(at(i)) = month(i).get(vI(f)).asInstanceOf[Number].doubleValue
-            }
-            solver(grid, nc)
-          }
-        month.indices.iterator.map(i =>
-          Row.fromSeq(month(i).toSeq ++ solved.map(_(at(i)))))
-      }(Encoders.row(outSchema))
+    Panel.kernel(panel, Panel.TimeCol, None, Seq(Panel.TimeCol, Panel.UnitCol) ++ valueCols,
+        outs) { g =>
+      val (cells, nc) = bc.value
+      require(!g.nulls(1).contains(true), "the Fourier lag needs a unit on every row")
+      val at = g.longs(1).map(u => cells(u) match { case (ex, ey) => ex * nc + ey })
+      val solved =
+        if (g.nulls(0)(0)) Array.fill(valueCols.size)(new Array[Double](nc * nc))
+        else Array.tabulate(valueCols.size) { f =>
+          val grid = new Array[Double](nc * nc)
+          val (x, xNul) = (g.doubles(2 + f), g.nulls(2 + f))
+          var i = 0
+          while (i < g.n) { if (!xNul(i)) grid(at(i)) = x(i); i += 1 }
+          solver(grid, nc)
+        }
+      Panel.Emit(solved.map(s => at.map(s(_))): _*)
+    }
   }
 
   /** Single-feature convenience wrapper. */

@@ -1,9 +1,8 @@
 package graft.spatial
 
-import graft.{Panel, Shuffle}
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import graft.Panel
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** First/nth-order grid spatial lag — reference get_splag4d
   * (splag4d.py:9-192): per-(month, feature) 2-D convolution of the panel
@@ -11,9 +10,9 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * optional normalisation), zero-padded at the grid boundary
   * (ndimage.convolve mode='constant' cval=0, splag4d.py:140).
   *
-  * Spark-first formulation: a per-month stencil behind ONE input-sized
-  * hash exchange on month_id ([[graft.Shuffle.by]], then
-  * `groupBy(month).as[...].flatMapGroups`, the [[FourierLag]] idiom).
+  * Spark-first formulation: a per-month stencil in one
+  * [[graft.Panel.kernel]] keyed on month_id — ONE input-sized hash
+  * exchange and one grouped map, as [[FourierLag]] runs.
   * Each month's cells are indexed by their exact (lon, lat) coordinate,
   * and every cell sums `value·w` over the kernel offsets
   * ([[Grid.kernelOffsets]]) found in that index — coordinate space,
@@ -62,48 +61,29 @@ object KernelLag {
                   inner: Int, width: Int, power: Double, norm: Boolean,
                   lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
     require(valueCols.size == outs.size, "one output column per value column")
-    val T = Panel.TimeCol
-    val schema = panel.schema
-    val lonI = schema.fieldIndex(lonCol)
-    val latI = schema.fieldIndex(latCol)
-    val vI = valueCols.map(schema.fieldIndex).toArray
-    val nf = vI.length
     val kernel = Grid.kernelOffsets(inner, width, power, norm).toArray
-    val outSchema = StructType(schema.fields ++
-      outs.map(StructField(_, DoubleType, nullable = false)))
-    def num(r: Row, i: Int): Double = r.get(i).asInstanceOf[Number].doubleValue
 
-    Shuffle.by(panel, col(T)).groupBy(col(T))
-      .as(Encoders.row(StructType(Seq(schema(T)))), Encoders.row(schema))
-      .flatMapGroups { (month: Row, rows: Iterator[Row]) =>
-        val cells = rows.toArray
-        // (lon, lat) → this month's cells there (a well-formed panel has
-        // one; duplicates all contribute, as rows of a join would)
-        val at = cells.indices
-          .filter(i => !cells(i).isNullAt(lonI) && !cells(i).isNullAt(latI))
-          .groupBy(i => (num(cells(i), lonI), num(cells(i), latI)))
-        cells.iterator.map { r =>
-          val sums = new Array[Double](nf)
-          val seen = new Array[Boolean](nf)
-          if (!month.isNullAt(0) && !r.isNullAt(lonI) && !r.isNullAt(latI)) {
-            val lon = num(r, lonI)
-            val lat = num(r, latI)
-            kernel.foreach { case (dx, dy, w) =>
-              at.get((lon + dx, lat + dy)).foreach(_.foreach { j =>
-                var f = 0
-                while (f < nf) {
-                  if (!cells(j).isNullAt(vI(f))) {
-                    sums(f) += num(cells(j), vI(f)) * w
-                    seen(f) = true
-                  }
-                  f += 1
-                }
-              })
-            }
+    Panel.kernel(panel, Panel.TimeCol, None, Seq(Panel.TimeCol, lonCol, latCol) ++ valueCols,
+        outs) { g =>
+      val month = g.nulls(0)
+      val (lon, lonNul) = (g.doubles(1), g.nulls(1))
+      val (lat, latNul) = (g.doubles(2), g.nulls(2))
+      // (lon, lat) → this month's cells there (a well-formed panel has
+      // one; duplicates all contribute, as rows of a join would)
+      val at = (0 until g.n).filter(i => !lonNul(i) && !latNul(i)).groupBy(i => (lon(i), lat(i)))
+      Panel.Emit(Array.tabulate(valueCols.size) { f =>
+        val (v, vNul) = (g.doubles(3 + f), g.nulls(3 + f))
+        Array.tabulate(g.n) { i =>
+          var sum = 0.0
+          var seen = false
+          if (!month(i) && !lonNul(i) && !latNul(i)) kernel.foreach { case (dx, dy, w) =>
+            at.get((lon(i) + dx, lat(i) + dy)).foreach(_.foreach { j =>
+              if (!vNul(j)) { sum += v(j) * w; seen = true }
+            })
           }
-          Row.fromSeq(r.toSeq ++
-            sums.indices.map(f => if (!seen(f) || sums(f).isNaN) 0.0 else sums(f)))
+          if (!seen || sum.isNaN) 0.0 else sum
         }
-      }(Encoders.row(outSchema))
+      }: _*)
+    }
   }
 }

@@ -193,56 +193,43 @@ object SpacetimeDist {
 
   /** The broadcast path: each unit's stage 1 scans the broadcast event
     * set (a request-lifetime [[OpCache.broadcast]]) inside the one
-    * input-sized hash exchange on unit_id ([[Shuffle.by]]) that feeds
-    * its stage 2.
+    * [[Panel.kernel]] on unit_id that runs its stage 2.
     */
   private def broadcastEvents(panel: DataFrame, events: Array[Row], q: Query,
                               lonCol: String, latCol: String, out: String): DataFrame = {
-    val U = Panel.UnitCol
     val byMonth = events.sortBy(_.getLong(0))
     val ev = OpCache.broadcast(panel.sparkSession, (
       byMonth.map(_.getLong(0)), byMonth.map(_.getDouble(1)), byMonth.map(_.getDouble(2)),
       byMonth.map(_.getDouble(3)), byMonth.map(_.getLong(4))))
-    val schema = panel.schema
-    val tI = schema.fieldIndex(Panel.TimeCol)
-    val lonI = schema.fieldIndex(lonCol)
-    val latI = schema.fieldIndex(latCol)
-    def num(r: Row, i: Int): Double = r.get(i).asInstanceOf[Number].doubleValue
 
-    Shuffle.by(panel, col(U)).groupBy(col(U))
-      .as[Row, Row](Encoders.row(StructType(Seq(schema(U)))), Encoders.row(schema))
-      .flatMapGroups { (_: Row, rows: Iterator[Row]) =>
-        val (eT, eLon, eLat, eSize, eU) = ev.value
-        val cells = rows.toArray
-        // one geo row per unit, even if a panel carries inconsistent or
-        // time-varying unit coordinates
-        val geo = cells.head
-        val cT = Array.newBuilder[Long]
-        val cSd2 = Array.newBuilder[Double]
-        val cU = Array.newBuilder[Long]
-        val cSize = Array.newBuilder[Double]
-        if (!geo.isNullAt(lonI) && !geo.isNullAt(latI)) {
-          val lon = num(geo, lonI)
-          val lat = num(geo, latI)
-          val top = new TopBuf(q.k)
-          var i = 0
-          while (i < eT.length) {
-            top.clear()
-            val month = eT(i)
-            while (i < eT.length && eT(i) == month) {
-              top.offer(sd2(lon, lat, eLon(i), eLat(i)), month, eU(i), i)
-              i += 1
-            }
-            var j = 0
-            while (j < top.size) {
-              cT += month; cSd2 += top.d(j); cU += eU(top.idx(j)); cSize += eSize(top.idx(j))
-              j += 1
-            }
+    Panel.kernel(panel, Panel.UnitCol, None, Seq(Panel.TimeCol, lonCol, latCol), Seq(out)) { g =>
+      val (eT, eLon, eLat, eSize, eU) = ev.value
+      val cT = Array.newBuilder[Long]
+      val cSd2 = Array.newBuilder[Double]
+      val cU = Array.newBuilder[Long]
+      val cSize = Array.newBuilder[Double]
+      // one geo row per unit, even if a panel carries inconsistent or
+      // time-varying unit coordinates
+      if (!g.nulls(1)(0) && !g.nulls(2)(0)) {
+        val (lon, lat) = (g.doubles(1)(0), g.doubles(2)(0))
+        val top = new TopBuf(q.k)
+        var i = 0
+        while (i < eT.length) {
+          top.clear()
+          val month = eT(i)
+          while (i < eT.length && eT(i) == month) {
+            top.offer(sd2(lon, lat, eLon(i), eLat(i)), month, eU(i), i)
+            i += 1
+          }
+          var j = 0
+          while (j < top.size) {
+            cT += month; cSd2 += top.d(j); cU += eU(top.idx(j)); cSize += eSize(top.idx(j))
+            j += 1
           }
         }
-        asOf(cells.iterator, new Cands(cT.result(), cSd2.result(), cU.result(), cSize.result()),
-          tI, q)
-      }(Encoders.row(schema.add(StructField(out, DoubleType, nullable = false))))
+      }
+      Panel.Emit(asOf(g, new Cands(cT.result(), cSd2.result(), cU.result(), cSize.result()), q))
+    }
   }
 
   /** The event-month path. Stage 1: events exchanged on e_t, the unit
@@ -250,7 +237,8 @@ object SpacetimeDist {
     * broadcast path takes it) broadcast, and in each month's task a
     * grid index over that month's events answers every located unit's
     * top-k with the ring search of [[Band]]. Stage 2: panel rows and
-    * candidates cogrouped on unit_id into [[asOf]].
+    * candidates cogrouped on unit_id into [[asOf]], the panel rows
+    * decoded and encoded by the kernel's [[Panel.Codec]].
     */
   private def eventMonth(panel: DataFrame, events: DataFrame, band: Band, q: Query,
                          lonCol: String, latCol: String, out: String): DataFrame = {
@@ -335,15 +323,16 @@ object SpacetimeDist {
     // both sides at one width, so the cogroup plans no exchange of its own
     val n = Shuffle.width(panel)
     val keyEnc = Encoders.row(StructType(Seq(schema(U))))
-    val tI = schema.fieldIndex(Panel.TimeCol)
+    val codec = new Panel.Codec(schema, Seq(Panel.TimeCol), Seq(out), nullable = false)
     panel.repartition(n, col(U)).groupBy(col(U)).as[Row, Row](keyEnc, Encoders.row(schema))
       .cogroup(cands.repartition(n, col(U)).groupBy(col(U))
         .as[Row, Row](keyEnc, Encoders.row(candSchema))) {
         (_: Row, rows: Iterator[Row], cs: Iterator[Row]) =>
           val c = cs.toArray.sortBy(_.getLong(1))
-          asOf(rows, new Cands(c.map(_.getLong(1)), c.map(_.getDouble(2)),
-            c.map(_.getLong(3)), c.map(_.getDouble(4))), tI, q)
-      }(Encoders.row(schema.add(StructField(out, DoubleType, nullable = false))))
+          val cands = new Cands(c.map(_.getLong(1)), c.map(_.getDouble(2)),
+            c.map(_.getLong(3)), c.map(_.getDouble(4)))
+          codec(rows)(g => Panel.Emit(asOf(g, cands, q)))
+      }(Encoders.row(codec.schema))
   }
 
   /** Squared spatial distance in degrees (PGID_TO_DEGREES = 0.5), the
@@ -355,55 +344,54 @@ object SpacetimeDist {
     sdx * sdx + sdy * sdy
   }
 
-  /** Stage 2 of both paths: each of a unit's rows with its month t
-    * gets the mean distance (or weight) of the top-k by (d², e_t, e_u)
-    * of the unit's candidates with e_t <= t, 999.0 when there are none.
+  /** Stage 2 of both paths: each of a unit's rows (`g`, whose first
+    * read is the month) with its month t gets the mean distance (or
+    * weight) of the top-k by (d², e_t, e_u) of the unit's candidates
+    * with e_t <= t, 999.0 when there are none.
     * Squared distances rank (d² orders as d does), StrictMath.pow is
     * Spark's pow, means sum in rank order, and NaN results fold into the
     * sentinel.
     */
-  private def asOf(rows: Iterator[Row], c: Cands, tI: Int, q: Query): Iterator[Row] = {
+  private def asOf(g: Panel.Group, c: Cands, q: Query): Array[Double] = {
+    val (t, tNul) = (g.longs(0), g.nulls(0))
     val top = new TopBuf(q.k)
     val halfPower = q.power / 2.0
-    rows.map { r =>
+    Array.tabulate(g.n) { r =>
       var v = 999.0
-      if (!r.isNullAt(tI) && c.t.nonEmpty) {
-        val t = r.get(tI).asInstanceOf[Number].longValue
-        if (q.capped.forall(_.contains(t))) {
-          top.clear()
-          var j = 0
-          while (j < c.t.length && c.t(j) <= t) {
-            val dt = (t - c.t(j)) * q.nu
-            top.offer(c.sd2(j) + dt * dt, c.t(j), c.u(j), j)
+      if (!tNul(r) && c.t.nonEmpty && q.capped.forall(_.contains(t(r)))) {
+        top.clear()
+        var j = 0
+        while (j < c.t.length && c.t(j) <= t(r)) {
+          val dt = (t(r) - c.t(j)) * q.nu
+          top.offer(c.sd2(j) + dt * dt, c.t(j), c.u(j), j)
+          j += 1
+        }
+        if (top.size > 0) {
+          var sum = 0.0
+          j = 0
+          while (j < top.size) {
+            val d2 = top.d(j)
+            val size = c.size(top.idx(j))
+            sum += (if (!q.weights) math.sqrt(d2)
+                    else if (d2 == 0.0) size
+                    else size / StrictMath.pow(d2, halfPower))
             j += 1
           }
-          if (top.size > 0) {
-            var sum = 0.0
-            j = 0
-            while (j < top.size) {
-              val d2 = top.d(j)
-              val size = c.size(top.idx(j))
-              sum += (if (!q.weights) math.sqrt(d2)
-                      else if (d2 == 0.0) size
-                      else size / StrictMath.pow(d2, halfPower))
-              j += 1
-            }
-            // reference fidelity: cKDTree.query pads missing
-            // neighbours with inf when fewer than k events exist
-            // yet, so the distance mean is inf for months with
-            // 0 < count < k (spacetime_distance.py:160-186). The
-            // reference's weights path crashes there (IndexError
-            // swallowed by a bare except, leaving np.empty garbage);
-            // we deliberately return the mean of the available
-            // weights instead (SURVEY §7.3 bug list).
-            val m =
-              if (!q.weights && top.size < q.k) Double.PositiveInfinity
-              else sum / top.size
-            if (!m.isNaN) v = m
-          }
+          // reference fidelity: cKDTree.query pads missing
+          // neighbours with inf when fewer than k events exist
+          // yet, so the distance mean is inf for months with
+          // 0 < count < k (spacetime_distance.py:160-186). The
+          // reference's weights path crashes there (IndexError
+          // swallowed by a bare except, leaving np.empty garbage);
+          // we deliberately return the mean of the available
+          // weights instead (SURVEY §7.3 bug list).
+          val m =
+            if (!q.weights && top.size < q.k) Double.PositiveInfinity
+            else sum / top.size
+          if (!m.isNaN) v = m
         }
       }
-      Row.fromSeq(r.toSeq :+ v)
+      v
     }
   }
 

@@ -177,7 +177,7 @@ object TreeLag {
     */
   def embedOf(panel: DataFrame, lonCol: String = "lon",
               latCol: String = "lat"): Embedding =
-    embed(panel.select(col(Panel.UnitCol), col(lonCol), col(latCol)).distinct()
+    embed(panel.select(Seq(Panel.UnitCol, lonCol, latCol).map(col(_).cast("long")): _*).distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1).toInt, r.getLong(2).toInt)).toSeq)
 
   /** Multi-weight-function form — the reference's extension point is a

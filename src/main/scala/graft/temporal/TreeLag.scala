@@ -1,9 +1,8 @@
 package graft.temporal
 
-import graft.{Panel, Shuffle}
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import graft.Panel
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Barnes-Hut temporal tree lag — reference temporal_tree.py:6-456: a
   * binary interval tree over the (power-of-two padded) time axis, node
@@ -15,8 +14,8 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * tree reduces to an effective weight matrix W(tnow, month) =
   * Σ_{accepted nodes covering month} w(node, tnow), computed on the
   * driver by a literal port of the reference walk and broadcast. The lag
-  * is then a per-unit kernel behind one input-sized `unit_id` exchange
-  * ([[graft.Shuffle.by]]): lag(tnow, unit) = Σ_m W(tnow, m) · x(m, unit)
+  * is then a per-unit [[graft.Panel.kernel]] behind one input-sized
+  * `unit_id` exchange: lag(tnow, unit) = Σ_m W(tnow, m) · x(m, unit)
   * over each unit's rows, appended to those rows ([[withTreeLag]]) —
   * no join, no aggregation exchange. No tree exists at runtime; cost is
   * independent of thetacrit and linear in the panel.
@@ -214,32 +213,25 @@ object TreeLag {
                   thetacrit: Double, fname: String, sigma: Double,
                   out: String): DataFrame = {
     val T = Panel.TimeCol
-    val U = Panel.UnitCol
-    val times = panel.select(col(T)).where(col(T).isNotNull).distinct()
+    val times = panel.where(col(T).isNotNull).select(col(T).cast("long")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
     // W's rows: tnow → (month, weight), months ascending
     val wm: Map[Long, Seq[(Long, Double)]] = weightMatrix(times, thetacrit, fname, sigma)
       .groupBy(_._1).map { case (tnow, ws) => tnow -> ws.map(w => (w._2, w._3)).sortBy(_._1) }
-    val schema = panel.schema
-    val tI = schema.fieldIndex(T)
-    val vI = schema.fieldIndex(valueCol)
-    val outSchema = StructType(schema.fields :+ StructField(out, DoubleType, nullable = false))
 
-    Shuffle.by(panel, col(U)).groupBy(col(U))
-      .as(Encoders.row(StructType(Seq(schema(U)))), Encoders.row(schema))
-      .flatMapGroups { (_: Row, rows: Iterator[Row]) =>
-        val series = rows.toArray
-        // month → the unit's values there, sorted so that the sum does
-        // not depend on row order (a well-formed panel has one)
-        val at = series.filter(r => !r.isNullAt(tI) && !r.isNullAt(vI))
-          .groupMap(_.getLong(tI))(_.get(vI).asInstanceOf[Number].doubleValue)
-          .map { case (m, xs) => m -> xs.sortWith(java.lang.Double.compare(_, _) < 0) }
-        series.iterator.map { r =>
-          val terms = (if (r.isNullAt(tI)) Nil else wm.getOrElse(r.getLong(tI), Nil))
-            .flatMap { case (m, w) => at.getOrElse(m, Array.empty[Double]).map(w * _) }
-          val s = terms.foldLeft(0.0)(_ + _)
-          Row.fromSeq(r.toSeq :+ (if (terms.isEmpty || s.isNaN) 0.0 else s))
-        }
-      }(Encoders.row(outSchema))
+    Panel.kernel(panel, Panel.UnitCol, None, Seq(T, valueCol), Seq(out)) { g =>
+      val (t, tNul) = (g.longs(0), g.nulls(0))
+      val (x, xNul) = (g.doubles(1), g.nulls(1))
+      // month → the unit's values there, sorted so that the sum does
+      // not depend on row order (a well-formed panel has one)
+      val at = (0 until g.n).filter(i => !tNul(i) && !xNul(i)).groupMap(t(_))(x(_))
+        .map { case (m, xs) => m -> xs.sortWith(java.lang.Double.compare(_, _) < 0) }
+      Panel.Emit(Array.tabulate(g.n) { i =>
+        val terms = (if (tNul(i)) Nil else wm.getOrElse(t(i), Nil))
+          .flatMap { case (m, w) => at.getOrElse(m, Nil).map(w * _) }
+        val s = terms.foldLeft(0.0)(_ + _)
+        if (terms.isEmpty || s.isNaN) 0.0 else s
+      })
+    }
   }
 }

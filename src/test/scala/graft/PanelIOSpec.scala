@@ -60,5 +60,13 @@ class PanelIOSpec extends SparkSpec {
       df.select(T, U, "value").collect().map(_.toString).sorted.toSeq
     assert(rows(scanned) ==
       rows(t.withColumn("value", WindowReference.tlag(col("value"), 1))))
+    // the unit-keyed kernels of the other panel lags read it the same way
+    Seq(Registry.Step("temporal_tree_lag", Seq(0.8, "uniform")),
+        Registry.Step("spacetime_dist", Seq("distances", 2.0, 1.0, 0.0, 5.0))).foreach { step =>
+      val lagged = Registry.apply(t, step)
+      val (nk, kernelPlan) = exchanges(lagged)
+      assert(nk == 0, s"bucketed ${step.name} should be shuffle-free, got $nk exchanges:\n$kernelPlan")
+      assert(rows(lagged) == rows(Registry.apply(p, step)), step.name)
+    }
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** The local spatial kernels — the per-month splag4d stencil and the
   * per-unit spacetime top-k — against plain-Scala models of the join
@@ -271,14 +272,17 @@ class SpatialKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("temporal_tree_lag on the wire exchanges the panel's own columns only: " +
       "no grid column crosses its unit_id exchange") {
-    val df = Registry.run(wirePanel, panelLags(1)._2)
-    df.collect()
-    val plan = df.queryExecution.executedPlan
-    val carried = collectWithSubqueries(plan) {
-      case e: ShuffleExchangeExec => e.child.output.map(_.name)
+    // the Fourier lag reads the grid only for its embedding
+    Seq(panelLags(1), panelLags(0)).foreach { case (name, spec, _, _, _) =>
+      val df = Registry.run(wirePanel, spec)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val carried = collectWithSubqueries(plan) {
+        case e: ShuffleExchangeExec => e.child.output.map(_.name)
+      }
+      assert(carried.nonEmpty && carried.forall(_.forall(n => n != "__lon" && n != "__lat")),
+        s"$name: $carried\n$plan")
     }
-    assert(carried.nonEmpty && carried.forall(_.forall(n => n != "__lon" && n != "__lat")),
-      s"$carried\n$plan")
   }
 
   /** The row contract's edge cases: columns out of the usual order, an
@@ -297,6 +301,7 @@ class SpatialKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("panel lags on the wire keep the panel's rows and columns: a duplicate key " +
       "gets its lag once per row, a row without a month gets 0.0") {
     val p = edgePanel
+    val intKeyed = p.withColumn(T, col(T).cast("int")).withColumn(U, col(U).cast("int"))
     val gp = withGrid(p.drop("lon", "lat"))
     def direct(df: DataFrame): Map[(Long, Long), Double] =
       df.collect().filter(!_.isNullAt(0))
@@ -327,6 +332,12 @@ class SpatialKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }
       val dup = rows.filter(r => !r.isNullAt(2) && r.getLong(2) == 2L && r.getLong(4) == 41L)
       assert(dup.map(_.getString(0)).sorted.toSeq == Seq("dup", "e2-41"), name)
+      // int month and unit ids: the same values, the keys kept as int
+      val outInt = Registry.run(intKeyed, spec)
+      assert(outInt.columns.toSeq == p.columns.toSeq && outInt.schema(T).dataType == IntegerType &&
+        outInt.schema(U).dataType == IntegerType, s"$name: ${outInt.schema}")
+      assert(outInt.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap ==
+        rows.map(r => r.getString(0) -> r.getDouble(1)).toMap, name)
     }
   }
 }
