@@ -83,7 +83,7 @@ object Oracle {
   val qDecay: String =
     s"$panel SELECT month_id, unit_id, POWER(2.0, (value * -1.0) / 12.0) AS decay_12 FROM panel"
 
-  /** Winsorize / robust-scale (TemporalOps.winsorize/robustScale):
+  /** Winsorize / robust-scale (UnitScan.Winsorize/RobustScale):
     * per-unit quantile_cont ≡ Spark's linear-interpolating
     * `percentile`; the 1e-6 in-query rounding (both engines) absorbs
     * any interpolation-formula float noise in the last bits.
@@ -108,7 +108,7 @@ object Oracle {
        |  CASE WHEN iqr = 0.0 THEN 0.0
        |       ELSE round((value - med) / iqr, 6) END AS scaled FROM q""".stripMargin
 
-  /** EWMA (TemporalOps.ewma, α=0.5 span=6): the lag-stack formulation
+  /** EWMA (UnitScan.Ewma, α=0.5 span=6): the lag-stack formulation
     * verbatim — αʲ weights are exact binary fractions at α=0.5, so the
     * only float noise is summation (absorbed by the 1e-6 rounding the
     * Spark side applies too).
@@ -128,7 +128,7 @@ object Oracle {
        |FROM panel""".stripMargin
   }
 
-  /** CUSUM (TemporalOps.cusumFixed over Panel.densePanel9, h=3):
+  /** CUSUM (UnitScan.Cusum over Panel.densePanel9, h=3):
     * running deviation sum + breach at h unit-σ. Mirrors the impl's
     * r14 integer wire exactly: the panel input itself never leaves
     * integer space — `v9` is an integer SUM of PER-EVENT 1e-9 fixings
@@ -197,7 +197,7 @@ object Oracle {
        |FROM cs""".stripMargin
   }
 
-  /** Per-unit OLS trend (TemporalOps.trendFit): slope/intercept from
+  /** Per-unit OLS trend (UnitScan.Trend): slope/intercept from
     * the closed-form normal equations, both rounded 1e-9 before the
     * t-multiplying fit and the intercept derived from the rounded
     * slope — identical arithmetic to the Spark side.
@@ -228,7 +228,7 @@ object Oracle {
        |  round(value - (slope * t + icept), 6) AS detrended
        |FROM fit2""".stripMargin
 
-  /** Trailing-window Pearson correlation (TemporalOps.rollingCorr):
+  /** Trailing-window Pearson correlation (UnitScan.RollingCorr):
     * the explicit-sums formula with 1e-9-rounded variance guards —
     * same arithmetic as the Spark side, never an engine-native corr.
     */
@@ -291,7 +291,7 @@ object Oracle {
        |FROM t2""".stripMargin
   }
 
-  /** Additive seasonal decomposition (TemporalOps.decompose). */
+  /** Additive seasonal decomposition (UnitScan.Decompose). */
   def qDecompose(period: Int = 7, half: Int = 2): String =
     s"""$panel, t AS (
        |  SELECT month_id, unit_id, value,
@@ -468,7 +468,7 @@ object Oracle {
        |       ELSE CAST(LAG(zrun) OVER ($wuo) AS DOUBLE) END AS tick
        |FROM r""".stripMargin
 
-  /** Bit-exact parity with TemporalOps.temporalEntropy: LN-ratio (Spark's
+  /** Bit-exact parity with UnitScan.TemporalEntropy: LN-ratio (Spark's
     * log(2.0, x) = ln x / ln 2, and DuckDB's LOG2 differs from it in the
     * last ulp) and left-to-right list-folds for the trailing sums (Spark's
     * sliding window frame recomputes the aggregate in frame order, while

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 /** Canonical panel abstraction: a long/tidy table keyed by
   * `(month_id, unit_id)` with one or more double-typed feature columns.
@@ -17,13 +17,12 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * tensorisation.
   *
   * At 100 TB the panel arrives partitioned by `month_id` (partition
-  * pruning) and the per-unit family induces one hash-partition shuffle
-  * on `unit_id`, after which every per-unit op in a chain reuses the same
-  * partitioning. Catalyst merges only independent window expressions
-  * over one spec into one Window node; a window over another window's
-  * output is a Window node of its own, so a chain of dependent windows
-  * stacks one operator per step. The lag/moving/cweq family therefore
-  * runs as one per-unit scan (`graft.ops.UnitScan`) instead.
+  * pruning), and a run of per-unit steps costs one hash-partition
+  * shuffle on `unit_id`. Catalyst merges only independent window
+  * expressions into one Window node — a chain of dependent windows
+  * stacks one operator per step — so every per-unit series step is a
+  * step of one per-unit scan (`graft.ops.UnitScan`) that applies a whole
+  * run in one pass.
   */
 object Panel {
   val TimeCol = "month_id"
@@ -149,16 +148,16 @@ object Panel {
   /** One panel kernel: `df`'s rows grouped on `key` behind one
     * input-sized [[Shuffle.by]] exchange (sorted by `orderBy` within each
     * group when given), and `f` run once per group ([[Group]]). Each row
-    * `f` emits ([[Emit]]) is built once, with the `appends` double
-    * columns set: an append named like an input column replaces it in
-    * place, others go at the end, non-null unless `nullable`. The grouped
-    * map declares its `key` clustering, so a `bucketBy(key)` table is
-    * read by bucket without an exchange (a `mapPartitions` would split
-    * groups across partitions there).
+    * `f` emits ([[Emit]]) is built once, with the `appends` columns set
+    * (double or int, each with its own nullability): an append named
+    * like an input column replaces it in place, others go at the end.
+    * The grouped map declares its `key` clustering, so a
+    * `bucketBy(key)` table is read by bucket without an exchange (a
+    * `mapPartitions` would split groups across partitions there).
     */
   def kernel(df: DataFrame, key: String, orderBy: Option[String], reads: Seq[String],
-             appends: Seq[String], nullable: Boolean = false)(f: Group => Emit): DataFrame = {
-    val codec = new Codec(df.schema, reads, appends, nullable)
+             appends: Seq[StructField])(f: Group => Emit): DataFrame = {
+    val codec = new Codec(df.schema, reads, appends)
     val grouped = Shuffle.by(df, col(key)).groupBy(col(key))
       .as[Row, Row](Encoders.row(StructType(Seq(df.schema(key)))), Encoders.row(df.schema))
     val run = (_: Row, rows: Iterator[Row]) => codec(rows)(f)
@@ -168,20 +167,26 @@ object Panel {
     }
   }
 
+  /** Non-null double appends of a [[kernel]]. */
+  def doubles(names: String*): Seq[StructField] = names.map(StructField(_, DoubleType, nullable = false))
+
   /** How a [[kernel]] decodes a keyed group of `in`'s rows and encodes
     * the rows it emits; a grouped map of another shape (a cogroup) that
-    * runs a kernel's function uses it the same way.
+    * runs a kernel's function uses it the same way. An int append takes
+    * the emitted double's integer value.
     */
-  final class Codec(in: StructType, reads: Seq[String], appends: Seq[String],
-                    nullable: Boolean) extends Serializable {
+  final class Codec(in: StructType, reads: Seq[String], appends: Seq[StructField])
+      extends Serializable {
     private val at = reads.map(in.fieldIndex).toArray
 
     /** `in` with the replaced columns retyped, then the added ones. */
-    val schema: StructType = StructType(in.fields.map(c =>
-      if (appends.contains(c.name)) c.copy(dataType = DoubleType, nullable = nullable) else c) ++
-      appends.filterNot(in.fieldNames.contains).map(StructField(_, DoubleType, nullable)))
+    val schema: StructType = StructType(in.fields.map(c => appends.find(_.name == c.name) match {
+      case Some(a) => c.copy(dataType = a.dataType, nullable = a.nullable)
+      case None => c
+    }) ++ appends.filterNot(a => in.fieldNames.contains(a.name)))
     /** Each appended column's place in the output row. */
-    private val slot = appends.map(schema.fieldIndex).toArray
+    private val slot = appends.map(a => schema.fieldIndex(a.name)).toArray
+    private val isInt = appends.map(_.dataType == IntegerType).toArray
 
     /** `f` run on one keyed group of rows: the rows it emits. */
     def apply(rows: Iterator[Row])(f: Group => Emit): Iterator[Row] = {
@@ -193,7 +198,11 @@ object Panel {
         var j = 0
         while (j < r.length) { out(j) = r.get(j); j += 1 }
         j = 0
-        while (j < slot.length) { out(slot(j)) = if (e.nulls(j)(k)) null else e.values(j)(k); j += 1 }
+        while (j < slot.length) {
+          val x = e.values(j)(k)
+          out(slot(j)) = if (e.nulls(j)(k)) null else if (isInt(j)) Int.box(x.toInt) else Double.box(x)
+          j += 1
+        }
         new GenericRow(out)
       }
     }

@@ -6,16 +6,15 @@ import org.apache.spark.sql.functions._
 /** Panel storage layout for cluster scale.
   *
   * At 100 TB the panel must land on disk so that (a) time-range queries
-  * prune partitions at planning time and (b) the per-unit window family
-  * and unit-keyed joins avoid re-shuffling. The layout:
+  * prune partitions at planning time and (b) the per-unit scan and
+  * unit-keyed joins avoid re-shuffling. The layout:
   *
   *   - `partitionBy(month_id)` → directory-level partition pruning: a
   *     transform over months [a, b] reads only those directories
   *     (`PartitionFilters` in the scan, zero I/O elsewhere);
-  *   - `bucketBy(n, unit_id)` (table form) → unit-hash co-location: a
-  *     per-unit window operator (`TemporalOps`) called on the table
-  *     plans no exchange, nor does the per-unit scan (`UnitScan`) or a
-  *     registry pipeline when `n` equals their exchange's width
+  *   - `bucketBy(n, unit_id)` (table form) → unit-hash co-location: the
+  *     per-unit scan (`UnitScan`) or a registry pipeline called on the
+  *     table plans no exchange when `n` equals the exchange's width
   *     ([[Shuffle.width]]); unit-keyed joins between two bucketed
   *     panels are shuffle-free.
   *

@@ -11,14 +11,13 @@ import org.apache.spark.sql.functions._
   * (`{"type":"tlag","args":[10]}`, reference README.md:28-30), composed
   * left-to-right. Here the same spec builds a single lazy Catalyst plan
   * over the panel's `value` column: composing transforms never
-  * materialises intermediates. A run of per-unit series steps
-  * (lag/lead/delta/moving/cweq/time_since/tick, mean/demean) compiles to
-  * one [[UnitScan]] — one input-sized `unit_id` exchange
-  * ([[Shuffle.by]]), one sort, one pass over each unit's rows — and the
-  * remaining per-unit windows share one such exchange per run. Every
-  * column-producing panel lag appends its column to the panel's own
-  * rows and writes it into `value` through one wrapper
-  * ([[appendT]]): no step re-joins its result on the panel key.
+  * materialises intermediates. Every per-unit series step is a step of
+  * [[UnitScan]], and a run of them compiles to one scan — one
+  * input-sized `unit_id` exchange ([[Shuffle.by]]), one sort, one pass
+  * over each unit's rows. Every column-producing panel lag appends its
+  * column to the panel's own rows and writes it into `value` through
+  * one wrapper ([[appendT]]): no step re-joins its result on the panel
+  * key.
   */
 object Registry {
 
@@ -102,7 +101,33 @@ object Registry {
     "time_since" -> (a =>
       UnitScan.timeSince(a.numOpt(0).getOrElse(0.0), a.numOpt(1).map(_.toInt))),
     // incremental tick (views_2.py:385-418) — the q_tick composition
-    "tick_time_since" -> (_ => Seq(UnitScan.TickTimeSince)))
+    "tick_time_since" -> (_ => Seq(UnitScan.TickTimeSince)),
+    "onset_possible" -> (a => Seq(UnitScan.OnsetPossible(a.num(0).toInt))),
+    "onset" -> (a => Seq(UnitScan.Onset(a.num(0).toInt))),
+    // args: [win, offset]
+    "temporal_entropy" -> (a => Seq(UnitScan.TemporalEntropy(a.num(0).toInt, a.num(1)))),
+    // appends a 0-filled `tlag_<k>` column per lag (tlag3d.py:6)
+    "tlags3d" -> (a => Seq(UnitScan.TLags(a.indices.map(a.num(_).toInt)))),
+    // args: [direction?, area?] (missing.py)
+    "fill" -> (a => Seq(UnitScan.Fill(a.strOpt(0).getOrElse("both"), a.strOpt(1)))),
+    "extrapolate" -> (a =>
+      Seq(UnitScan.Extrapolate(a.strOpt(0).getOrElse("both"), a.strOpt(1)))),
+    // extensions: quantile clip, robust standardisation
+    "winsorize" -> (a => Seq(UnitScan.Winsorize(a.num(0), a.num(1)))),
+    "robust_scale" -> (_ => Seq(UnitScan.RobustScale)),
+    // args: [alpha, span] — truncated exponentially weighted mean
+    "ewma" -> (a => Seq(UnitScan.Ewma(a.num(0), a.num(1).toInt))),
+    // args: [h?] — appends (cusum, breach) over the series' 1e-9 fixing
+    "cusum" -> (a => Seq(UnitScan.Cusum(a.numOpt(0).getOrElse(3.0), Fixed))),
+    // args: [period, half] — appends (trend, seasonal, residual)
+    "decompose" -> (a => Seq(UnitScan.Decompose(a.num(0).toInt, a.num(1).toInt))),
+    // appends (slope, fitted, detrended): per-unit OLS detrend
+    "trend" -> (_ => Seq(UnitScan.Trend)),
+    // args: [win] — appends rcorr, the trailing corr(value, value2)
+    "rolling_corr" -> (a => Seq(UnitScan.RollingCorr(a.num(0).toInt))))
+
+  /** The column a scan's `cusum` reads: `Panel.fix9(value)`. */
+  private val Fixed = "__v9"
 
   /** Panel transforms that are not scan steps. */
   val transforms: Map[String, Transform] = Map(
@@ -113,36 +138,6 @@ object Registry {
     "in_range" -> colT((c, a) => PointwiseOps.inRange(c, a.num(0), a.num(1)).cast("double")),
     "ln" -> colT((c, _) => PointwiseOps.ln(c)),
     "decay" -> colT((c, a) => PointwiseOps.decay(c, a.num(0))),
-    // extensions: quantile clip + robust standardisation (per-unit
-    // windows over the unit's whole series)
-    "winsorize" -> colT((c, a) => TemporalOps.winsorize(c, a.num(0), a.num(1))),
-    "robust_scale" -> colT((c, _) => TemporalOps.robustScale(c)),
-    // args: [alpha, span] — truncated exponentially weighted mean
-    "ewma" -> colT((c, a) => TemporalOps.ewma(c, a.num(0), a.num(1).toInt)),
-    // args: [h?] — appends (cusum, breach): sequential drift statistic
-    "cusum" -> ((df, a) => {
-      val cs = TemporalOps.cusum(col("value"), a.numOpt(0).getOrElse(3.0))
-      df.withColumn("cusum", cs.getField("cusum"))
-        .withColumn("breach", cs.getField("breach"))
-    }),
-    // args: [period, half] — appends (trend, seasonal, residual)
-    "decompose" -> ((df, a) => {
-      val d = TemporalOps.decompose(col("value"), a.num(0).toInt, a.num(1).toInt)
-      df.withColumn("trend", d.getField("trend"))
-        .withColumn("seasonal", d.getField("seasonal"))
-        .withColumn("residual", d.getField("residual"))
-    }),
-    // appends (slope, fitted, detrended): per-unit OLS detrend
-    "trend" -> ((df, _) => {
-      val f = TemporalOps.trendFit(col("value"))
-      df.withColumn("slope", f.getField("slope"))
-        .withColumn("fitted", f.getField("fitted"))
-        .withColumn("detrended", f.getField("detrended"))
-    }),
-    // args: [win] — trailing Pearson correlation of value vs value2
-    "rolling_corr" -> ((df, a) =>
-      df.withColumn("rcorr",
-        TemporalOps.rollingCorr(col("value"), col("value2"), a.num(0).toInt))),
     // args: [maxLag?] — terminal per-unit autocorrelation table
     "acf" -> ((df, a) =>
       TemporalOps.acf(df, "value", a.numOpt(0).getOrElse(3.0).toInt)),
@@ -172,16 +167,6 @@ object Registry {
       spatial.SpatialStats.getisOrdGi(withGrid(df), "value")),
     "local_moran" -> ((df, _) =>
       spatial.SpatialStats.localMoran(withGrid(df), "value")),
-    "onset_possible" -> colT((c, a) => TemporalOps.onsetPossible(c, a.num(0).toInt).cast("double")),
-    "onset" -> colT((c, a) => TemporalOps.onset(c, a.num(0).toInt).cast("double")),
-    "temporal_entropy" -> colT((c, a) => TemporalOps.temporalEntropy(c, a.num(0).toInt, a.num(1))),
-    // multi-lag family (tlag3d.py:6): appends a 0-filled `tlag_<k>`
-    // column per requested lag; `value` rides through unchanged, so
-    // later steps still compose on the series
-    "tlags3d" -> ((df, a) => {
-      require(a.nonEmpty, "tlags3d needs at least one lag")
-      TemporalOps.tlags(df, "value", a.indices.map(i => a.num(i).toInt))
-    }),
     "replace_na" -> ((df, a) =>
       MissingOps.replaceNa(df, Seq("value"), a.numOpt(0).getOrElse(0.0))),
     "fill_with_group_and_global_means" -> ((df, _) =>
@@ -197,14 +182,6 @@ object Registry {
     "list_totally_missing" -> ((df, _) =>
       MissingOps.listTotallyMissing(df,
         df.columns.filterNot(Set(Panel.TimeCol, Panel.UnitCol)).toSeq)),
-    "fill" -> ((df, a) =>
-      MissingOps.fill(df, "value", a.strOpt(0).getOrElse("both"),
-        a.strOpt(1), out = "__f")
-        .withColumn("value", col("__f")).drop("__f")),
-    "extrapolate" -> ((df, a) =>
-      MissingOps.extrapolate(df, "value", a.strOpt(0).getOrElse("both"),
-        a.strOpt(1), out = "__f")
-        .withColumn("value", col("__f")).drop("__f")),
 
     // two-column family (multi_column.py:5-46)
     "add_column" -> colT2(PointwiseOps.addColumn),
@@ -786,29 +763,6 @@ object Registry {
         (reg.keys ++ alsoKnown).toSeq.sorted.mkString(", ")))
       .apply(df, step.args)
 
-  /** Panel transforms that are per-unit windows: each needs its input
-    * clustered on `unit_id`, and its output stays clustered so.
-    */
-  private val unitWindowed: Set[String] = Set(
-    "winsorize", "robust_scale", "ewma", "cusum", "decompose", "trend",
-    "rolling_corr", "onset_possible", "onset", "temporal_entropy", "tlags3d",
-    "fill", "extrapolate")
-
-  /** Row-local panel transforms: they keep their input's partitioning. */
-  private val rowLocal: Set[String] = Set(
-    "identity", "ge", "le", "in_range", "ln", "decay", "replace_na",
-    "add_column", "subtract_column", "multiply_column", "divide_column")
-
-  /** Apply a named panel transform that is not a scan step; `keyed`: `df`
-    * is already clustered on `unit_id` by an earlier step's [[Shuffle.by]].
-    */
-  private def applyPanel(df: DataFrame, step: Step, keyed: Boolean): DataFrame = {
-    val in =
-      if (unitWindowed(step.name) && !keyed) Shuffle.by(df, col(Panel.UnitCol))
-      else df
-    applyIn(transforms, "panel", scanSteps.keys)(in, step)
-  }
-
   /** Apply a named panel transform. */
   def apply(df: DataFrame, step: Step): DataFrame = pipeline(df, Seq(step))
 
@@ -816,24 +770,25 @@ object Registry {
     *
     * Each maximal run of scan steps ([[UnitScan]]) becomes one scan: one
     * `unit_id` exchange, one sort and one grouped map for the whole
-    * run. A run of the remaining per-unit windows, with row-local steps
-    * between them, shares one `unit_id` exchange, added where the run
-    * starts (an exchange of another width would not be planned away).
-    * Spark cannot see a scan's output clustering, and a scan does not
-    * reuse a clustering it did not make, so a switch between the two
-    * kinds — a window step after a scan or a scan after a window, with
-    * or without row-local steps between — pays one more [[Shuffle.by]]
-    * exchange, and so does each scan run when row-local steps split one.
+    * run; every other step applies between runs. A `cusum` reads the
+    * 1e-9 fixing of its input, which Spark projects where the scan
+    * starts: after a step of the same run that rewrote `value`, it
+    * starts a scan of its own.
     */
   def pipeline(df: DataFrame, steps: Seq[Step]): DataFrame = {
     def flush(d: DataFrame, run: Seq[UnitScan.Step]) =
-      if (run.isEmpty) d else UnitScan(d, run)
-    val (out, _, run) = steps.foldLeft((df, false, Vector.empty[UnitScan.Step])) {
-      case ((d, keyed, run), step) => scanSteps.get(step.name) match {
-        case Some(compile) => (d, false, run ++ compile(step.args))
+      if (run.isEmpty) d
+      else if (!run.exists(_.isInstanceOf[UnitScan.Cusum])) UnitScan(d, run)
+      else UnitScan(d.withColumn(Fixed, Panel.fix9(col("value"))), run).drop(Fixed)
+    val (out, run) = steps.foldLeft((df, Vector.empty[UnitScan.Step])) {
+      case ((d, run), step) => scanSteps.get(step.name) match {
+        case Some(compile) =>
+          val next = compile(step.args)
+          if (next.exists(_.isInstanceOf[UnitScan.Cusum]) && run.exists(_.writesValue))
+            (flush(d, run), next.toVector)
+          else (d, run ++ next)
         case None =>
-          (applyPanel(flush(d, run), step, keyed),
-            unitWindowed(step.name) || (keyed && rowLocal(step.name)), Vector.empty)
+          (applyIn(transforms, "panel", scanSteps.keys)(flush(d, run), step), Vector.empty)
       }
     }
     flush(out, run)

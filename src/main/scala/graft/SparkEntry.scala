@@ -54,6 +54,12 @@ object SparkEntry {
   private def onMissing(f: DataFrame => DataFrame): (SparkSession, String) => DataFrame =
     (s, dir) => f(Panel.withMissing(cachedPanel(s, dir)))
 
+  /** Select (month_id, unit_id, the scanned `value` as name) on the
+    * panel with missing cells.
+    */
+  private def missingScanQ(name: String, steps: UnitScan.Step*): (SparkSession, String) => DataFrame =
+    onMissing(p => UnitScan(p, steps).select(col(T), col(U), col("value").as(name)))
+
   /** Select (month_id, unit_id, expr as name) on the dense panel. */
   private def colQ(name: String, expr: Column): (SparkSession, String) => DataFrame =
     onPanel(p => p.select(col(T), col(U), expr.as(name)))
@@ -64,9 +70,20 @@ object SparkEntry {
   private def scanQ(name: String, steps: UnitScan.Step*): (SparkSession, String) => DataFrame =
     onPanel(p => UnitScan(p, steps).select(col(T), col(U), col("value").as(name)))
 
+  /** [[scanQ]] rounded to 1e-6, for the steps whose last bits depend on
+    * summation order or quantile interpolation across engines.
+    */
+  private def scanRoundQ(name: String, steps: UnitScan.Step*): (SparkSession, String) => DataFrame =
+    onPanel(p => UnitScan(p, steps).select(col(T), col(U), round(col("value"), 6).as(name)))
+
   /** [[scanQ]] of a counter: the count as an int column. */
   private def scanCountQ(name: String, steps: UnitScan.Step*): (SparkSession, String) => DataFrame =
     onPanel(p => UnitScan(p, steps).select(col(T), col(U), col("value").cast("int").as(name)))
+
+  /** [[scanQ]] of a 0/1 flag: an int column that is never null. */
+  private def scanFlagQ(name: String, steps: UnitScan.Step*): (SparkSession, String) => DataFrame =
+    onPanel(p => UnitScan(p, steps).select(col(T), col(U),
+      when(col("value") === 1.0, 1).otherwise(0).as(name)))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.2 pointwise
@@ -85,7 +102,7 @@ object SparkEntry {
     // §2.5 temporal windows
     "q_tlag" -> scanQ("tlag_2", UnitScan.Lag(2)),
     "q_tlags3d" -> onPanel(p =>
-      TemporalOps.tlags(p, "value", Seq(1, 3, 6))
+      UnitScan(p, Seq(UnitScan.TLags(Seq(1, 3, 6))))
         .select(col(T), col(U), col("tlag_1"), col("tlag_3"), col("tlag_6"))),
     "q_tlead" -> scanQ("tlead_2", UnitScan.Lead(2)),
     "q_delta" -> scanQ("delta_1", UnitScan.Delta(1)),
@@ -98,27 +115,21 @@ object SparkEntry {
     "q_mean" -> scanQ("mean_val", UnitScan.Mean),
     "q_demean" -> scanQ("demeaned", UnitScan.Demean),
     // r8 extensions: quantile clip + outlier-insensitive scaling, both
-    // per-unit windows over the unit's whole series
+    // over the unit's whole series
     // (rounded 1e-6 in-query on both sides: quantile interpolation may
     // differ in the last float bits across engines)
-    "q_winsorize" -> colQ("winsorized",
-      round(TemporalOps.winsorize(col("value"), 0.05, 0.95), 6)),
-    "q_robust_scale" -> colQ("scaled",
-      round(TemporalOps.robustScale(col("value")), 6)),
+    "q_winsorize" -> scanRoundQ("winsorized", UnitScan.Winsorize(0.05, 0.95)),
+    "q_robust_scale" -> scanRoundQ("scaled", UnitScan.RobustScale),
     // r8: classical time-series family (EWMA / CUSUM drift / additive
-    // seasonal decomposition), all on the shared unit partitioning
-    "q_ewma" -> colQ("ewma",
-      round(TemporalOps.ewma(col("value"), alpha = 0.5, span = 6), 6)),
+    // seasonal decomposition), all steps of the per-unit scan
+    "q_ewma" -> scanRoundQ("ewma", UnitScan.Ewma(alpha = 0.5, span = 6)),
     // r14: fed from the integer-grid panel — v9 is an integer SUM of
     // per-event 1e-9 fixings (merge-order-invariant by construction),
     // and the emitted cusum is integer-grid-derived inside the
     // operator, so no output rounding exists or is needed
-    "q_cusum" -> ((s, dir) => {
-      val cs = TemporalOps.cusumFixed(col("v9"), 3.0)
-      cachedPanel9(s, dir).select(col(T), col(U),
-        cs.getField("cusum").as("cusum"),
-        cs.getField("breach").as("breach"))
-    }),
+    "q_cusum" -> ((s, dir) =>
+      UnitScan(cachedPanel9(s, dir), Seq(UnitScan.Cusum(3.0, "v9")))
+        .select(col(T), col(U), col("cusum"), col("breach"))),
     // r9: the STREAMING EWMA in batch mode — per-unit trailing-window
     // state (last span−1 values); same oracle as q_ewma
     "q_ewma_stream" -> onPanel { p =>
@@ -142,15 +153,13 @@ object SparkEntry {
         .select(col(T), col(U), col("cusum"), col("breach"))
     }),
     // r9: per-unit OLS detrend + rolling co-movement — the remaining
-    // classical panel-analytics pair, both on the shared unit window
-    "q_trend" -> onPanel { p =>
-      val f = TemporalOps.trendFit(col("value"))
-      p.select(col(T), col(U), f.getField("slope").as("slope"),
-        round(f.getField("fitted"), 6).as("fitted"),
-        round(f.getField("detrended"), 6).as("detrended"))
-    },
-    "q_rolling_corr" -> colQ("rcorr",
-      round(TemporalOps.rollingCorr(col("value"), col("value2"), 6), 6)),
+    // classical panel-analytics pair, both steps of the per-unit scan
+    "q_trend" -> onPanel(p =>
+      UnitScan(p, Seq(UnitScan.Trend)).select(col(T), col(U), col("slope"),
+        round(col("fitted"), 6).as("fitted"), round(col("detrended"), 6).as("detrended"))),
+    "q_rolling_corr" -> onPanel(p =>
+      UnitScan(p, Seq(UnitScan.RollingCorr(6))).select(col(T), col(U),
+        round(col("rcorr"), 6).as("rcorr"))),
     // r9: per-unit autocorrelation at lags 1..3 — the seasonality
     // diagnostic, one row per (unit, lag), all on the shared unit
     // partitioning
@@ -173,36 +182,27 @@ object SparkEntry {
       streaming.DriftStream.scoreAgainst(
         p.filter(col(T) > 15), base, "value")
     },
-    "q_decompose" -> onPanel { p =>
-      val d = TemporalOps.decompose(col("value"), period = 7, half = 2)
-      p.select(col(T), col(U),
-        round(d.getField("trend"), 6).as("trend"),
-        round(d.getField("seasonal"), 6).as("seasonal"),
-        round(d.getField("residual"), 6).as("residual"))
-    },
+    "q_decompose" -> onPanel(p =>
+      UnitScan(p, Seq(UnitScan.Decompose(period = 7, half = 2))).select(col(T), col(U),
+        round(col("trend"), 6).as("trend"), round(col("seasonal"), 6).as("seasonal"),
+        round(col("residual"), 6).as("residual"))),
     "q_cweq" -> scanCountQ("cweq", UnitScan.Cweq(0.0)),
     "q_cweq_seed" -> scanCountQ("cweq", UnitScan.Cweq(0.0, seed = Some(12))),
     "q_time_since" -> scanCountQ("time_since", UnitScan.timeSince(0.0): _*),
-    "q_onset_possible" -> colQ("onset_possible", TemporalOps.onsetPossible(col("value"), 6)),
-    "q_onset" -> colQ("onset", TemporalOps.onset(col("value"), 6)),
+    "q_onset_possible" -> scanFlagQ("onset_possible", UnitScan.OnsetPossible(6)),
+    "q_onset" -> scanFlagQ("onset", UnitScan.Onset(6)),
     "q_tick" -> scanQ("tick", UnitScan.TickTimeSince),
-    "q_entropy" -> colQ("entropy", TemporalOps.temporalEntropy(col("value"), 12, 1.0)),
+    "q_entropy" -> scanQ("entropy", UnitScan.TemporalEntropy(12, 1.0)),
 
     // §2.10 missing data
     "q_replace_na" -> onMissing(p => p.select(col(T), col(U),
       coalesce(col("value"), lit(0.0)).as("filled"))),
-    "q_ffill" -> onMissing(p =>
-      MissingOps.fill(p, "value", "forward", None).select(col(T), col(U), col("filled"))),
-    "q_bfill" -> onMissing(p =>
-      MissingOps.fill(p, "value", "backward", None).select(col(T), col(U), col("filled"))),
-    "q_fill_both" -> onMissing(p =>
-      MissingOps.fill(p, "value", "both", None).select(col(T), col(U), col("filled"))),
-    "q_fill_inside" -> onMissing(p =>
-      MissingOps.fill(p, "value", "both", Some("inside")).select(col(T), col(U), col("filled"))),
-    "q_fill_outside" -> onMissing(p =>
-      MissingOps.fill(p, "value", "both", Some("outside")).select(col(T), col(U), col("filled"))),
-    "q_interpolate" -> onMissing(p =>
-      MissingOps.extrapolate(p, "value", "both", None).select(col(T), col(U), col("interp"))),
+    "q_ffill" -> missingScanQ("filled", UnitScan.Fill("forward")),
+    "q_bfill" -> missingScanQ("filled", UnitScan.Fill("backward")),
+    "q_fill_both" -> missingScanQ("filled", UnitScan.Fill("both")),
+    "q_fill_inside" -> missingScanQ("filled", UnitScan.Fill("both", Some("inside"))),
+    "q_fill_outside" -> missingScanQ("filled", UnitScan.Fill("both", Some("outside"))),
+    "q_interpolate" -> missingScanQ("interp", UnitScan.Extrapolate("both")),
     "q_group_global_means" -> onMissing(p =>
       MissingOps.fillWithGroupAndGlobalMeans(p, "value").select(col(T), col(U), col("filled"))),
     "q_time_means" -> onPanel { p =>

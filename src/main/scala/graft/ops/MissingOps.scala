@@ -1,101 +1,24 @@
 package graft.ops
 
 import graft.Panel
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Missing-data operators (SURVEY §2.10) — reference missing.py.
-  *
-  * All formulated as window expressions over the shared per-unit
-  * partitioning: ffill is `last(ignoreNulls)` over an unbounded-preceding
-  * frame, bfill its mirror, linear interpolation a closed form over the
-  * previous/next valid row — no per-group loops, one shuffle for the
-  * whole family.
+/** Missing-data operators (SURVEY §2.10) — reference missing.py: the
+  * constant and mean fills, which read whole units or whole months
+  * (per-unit and per-month window aggregates), and the completeness
+  * diagnostics. The per-unit fills along time — ffill/bfill with
+  * limit_direction/limit_area and linear interpolation — are steps of
+  * the per-unit scan ([[UnitScan.Fill]], [[UnitScan.Extrapolate]]).
   */
 object MissingOps {
   private val TimeC = Panel.TimeCol
   private val UnitC = Panel.UnitCol
-  private def w = Panel.w
-  private def past = Panel.cumulative
-  private def future = Panel.w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
 
   /** NaN → constant — missing.py:18-28. */
   def replaceNa(df: DataFrame, cols: Seq[String], replacement: Double = 0.0): DataFrame =
     df.na.fill(replacement, cols)
-
-  /** Forward/backward fill per unit with pandas-style limit_direction /
-    * limit_area — missing.py:100-161.
-    *
-    * direction ∈ {forward, backward, both}; area ∈ {None, inside, outside}:
-    *  - area None:   forward→ffill, backward→bfill, both→ffill then bfill
-    *  - inside:      fill only NaNs bracketed by valid values (ffill when
-    *                 direction != backward, else bfill) — missing.py:110-114
-    *  - outside:     bfill before the first valid, ffill after the last —
-    *                 missing.py:115-119 (interior untouched)
-    */
-  def fill(df: DataFrame, valueCol: String,
-           direction: String = "both", area: Option[String] = None,
-           out: String = "filled"): DataFrame = {
-    val v = col(valueCol)
-    val ff = last(v, ignoreNulls = true).over(past)
-    val bf = first(v, ignoreNulls = true).over(future)
-    val hasPrev = ff.isNotNull
-    val hasNext = bf.isNotNull
-    val interior = hasPrev && hasNext
-    val filled = area match {
-      case Some("inside") =>
-        val src = if (direction == "backward") bf else ff
-        when(v.isNull && interior, src).otherwise(v)
-      case Some("outside") =>
-        when(v.isNull && !hasPrev, bf)
-          .when(v.isNull && !hasNext, ff)
-          .otherwise(v)
-      case None =>
-        direction match {
-          case "forward"  => coalesce(v, ff)
-          case "backward" => coalesce(v, bf)
-          case _          => coalesce(v, ff, bf)
-        }
-      case Some(other) =>
-        throw new IllegalArgumentException(s"unknown limit_area: $other")
-    }
-    df.withColumn(out, filled)
-  }
-
-  /** Per-unit linear interpolation / constant extrapolation of NaNs —
-    * missing.py:72-98 (pandas `interpolate(method='linear')` semantics:
-    * interior NaNs get the linear blend of the bracketing valid values;
-    * edge NaNs get the nearest valid value — constant, not sloped —
-    * gated by limit_direction; limit_area restricts to interior
-    * ('inside') or edges ('outside')).
-    */
-  def extrapolate(df: DataFrame, valueCol: String,
-                  direction: String = "both", area: Option[String] = None,
-                  out: String = "interp"): DataFrame = {
-    val v = col(valueCol)
-    val rn = row_number().over(w)
-    val withRn = df.withColumn("__rn", rn)
-    val validRn = when(col(valueCol).isNotNull, col("__rn"))
-    val prevVal = last(col(valueCol), ignoreNulls = true).over(past)
-    val nextVal = first(col(valueCol), ignoreNulls = true).over(future)
-    val prevRn = last(validRn, ignoreNulls = true).over(past)
-    val nextRn = first(validRn, ignoreNulls = true).over(future)
-    val blend = prevVal +
-      (nextVal - prevVal) * (col("__rn") - prevRn) / (nextRn - prevRn)
-    val fillEdges = !area.contains("inside")
-    val canForward = direction == "forward" || direction == "both"
-    val canBackward = direction == "backward" || direction == "both"
-    var filled: Column = col(valueCol)
-    val interior = prevVal.isNotNull && nextVal.isNotNull
-    if (area.isEmpty || area.contains("inside"))
-      filled = when(col(valueCol).isNull && interior, blend).otherwise(filled)
-    if (fillEdges && canForward)
-      filled = when(col(valueCol).isNull && nextVal.isNull, prevVal).otherwise(filled)
-    if (fillEdges && canBackward)
-      filled = when(col(valueCol).isNull && prevVal.isNull, nextVal).otherwise(filled)
-    withRn.withColumn(out, filled).drop("__rn")
-  }
 
   /** Impute NaN to the per-unit mean, falling back to the global mean —
     * missing.py:58-69. The global mean joins in as a broadcast 1-row

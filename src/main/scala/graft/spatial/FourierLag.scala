@@ -332,7 +332,7 @@ object FourierLag {
       if (dimensionality == 3) solveSlice3d else solveSlice
 
     Panel.kernel(panel, Panel.TimeCol, None, Seq(Panel.TimeCol, Panel.UnitCol) ++ valueCols,
-        outs) { g =>
+        Panel.doubles(outs: _*)) { g =>
       val (cells, nc) = bc.value
       require(!g.nulls(1).contains(true), "the Fourier lag needs a unit on every row")
       val at = g.longs(1).map(u => cells(u) match { case (ex, ey) => ex * nc + ey })

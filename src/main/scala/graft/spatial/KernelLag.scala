@@ -64,7 +64,7 @@ object KernelLag {
     val kernel = Grid.kernelOffsets(inner, width, power, norm).toArray
 
     Panel.kernel(panel, Panel.TimeCol, None, Seq(Panel.TimeCol, lonCol, latCol) ++ valueCols,
-        outs) { g =>
+        Panel.doubles(outs: _*)) { g =>
       val month = g.nulls(0)
       val (lon, lonNul) = (g.doubles(1), g.nulls(1))
       val (lat, latNul) = (g.doubles(2), g.nulls(2))

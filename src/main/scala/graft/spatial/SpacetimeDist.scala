@@ -202,7 +202,8 @@ object SpacetimeDist {
       byMonth.map(_.getLong(0)), byMonth.map(_.getDouble(1)), byMonth.map(_.getDouble(2)),
       byMonth.map(_.getDouble(3)), byMonth.map(_.getLong(4))))
 
-    Panel.kernel(panel, Panel.UnitCol, None, Seq(Panel.TimeCol, lonCol, latCol), Seq(out)) { g =>
+    Panel.kernel(panel, Panel.UnitCol, None, Seq(Panel.TimeCol, lonCol, latCol),
+        Panel.doubles(out)) { g =>
       val (eT, eLon, eLat, eSize, eU) = ev.value
       val cT = Array.newBuilder[Long]
       val cSd2 = Array.newBuilder[Double]
@@ -323,7 +324,7 @@ object SpacetimeDist {
     // both sides at one width, so the cogroup plans no exchange of its own
     val n = Shuffle.width(panel)
     val keyEnc = Encoders.row(StructType(Seq(schema(U))))
-    val codec = new Panel.Codec(schema, Seq(Panel.TimeCol), Seq(out), nullable = false)
+    val codec = new Panel.Codec(schema, Seq(Panel.TimeCol), Panel.doubles(out))
     panel.repartition(n, col(U)).groupBy(col(U)).as[Row, Row](keyEnc, Encoders.row(schema))
       .cogroup(cands.repartition(n, col(U)).groupBy(col(U))
         .as[Row, Row](keyEnc, Encoders.row(candSchema))) {

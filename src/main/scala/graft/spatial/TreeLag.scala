@@ -373,23 +373,27 @@ object TreeLag {
         val lo = b * block
         val hi = math.min(lo + block, targets.length)
         val acc = Array.ofDim[Double](hi - lo, nW)
-        it.foreach { case (_, (_, lvl, nx, ny, v, s)) =>
-          val cx = nx * s + s / 2.0
-          val cy = ny * s + s / 2.0
-          var i = lo
-          while (i < hi) {
-            val (_, ex, ey) = targets(i)
-            // a leaf never lags against its own mesh node
-            if (!(lvl == power && nx == ex && ny == ey)) {
-              val dx = ex + 0.5 - cx
-              val dy = ey + 0.5 - cy
-              val d = math.sqrt(dx * dx + dy * dy)
-              var k = 0
-              while (k < nW) { acc(i - lo)(k) += v * fns(k)(d); k += 1 }
+        // each target sums the mesh rows in one order, whatever order
+        // the exchange delivers them in
+        it.map(_._2).toArray.sortBy(n => (n._2, n._3, n._4, n._5))(Ordering.Tuple4(
+            Ordering.Int, Ordering.Int, Ordering.Int, Ordering.Double.TotalOrdering))
+          .foreach { case (_, lvl, nx, ny, v, s) =>
+            val cx = nx * s + s / 2.0
+            val cy = ny * s + s / 2.0
+            var i = lo
+            while (i < hi) {
+              val (_, ex, ey) = targets(i)
+              // a leaf never lags against its own mesh node
+              if (!(lvl == power && nx == ex && ny == ey)) {
+                val dx = ex + 0.5 - cx
+                val dy = ey + 0.5 - cy
+                val d = math.sqrt(dx * dx + dy * dy)
+                var k = 0
+                while (k < nW) { acc(i - lo)(k) += v * fns(k)(d); k += 1 }
+              }
+              i += 1
             }
-            i += 1
           }
-        }
         Iterator.range(lo, hi).map(i =>
           (t, targets(i)._1, acc(i - lo).toSeq))
       }

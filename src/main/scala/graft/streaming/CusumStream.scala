@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming CUSUM drift detection — the incremental twin of
-  * [[graft.ops.TemporalOps.cusum]], which is inherently a monitoring
+  * [[graft.ops.UnitScan.Cusum]], which is inherently a monitoring
   * (streaming) use case: watch each unit's series as it arrives and
   * flag when the cumulative deviation from a FITTED baseline crosses
   * h·σ.
@@ -48,7 +48,7 @@ object CusumStream {
   /** Per-unit reference stats, the batch fit, over an ALREADY-FIXED
     * 1e-9-grid long column: (unit_id, mu9, nb, ex) with μ fixed to
     * the grid from the exact integer value total and `ex` the exact
-    * integer N²σ9² — TemporalOps.cusumFixed's discipline, symbol for
+    * integer N²σ9² — UnitScan.Cusum's discipline, symbol for
     * symbol. A NULL `ex` under a non-empty fit can only be decimal
     * overflow with ANSI off (the certificate's loud-failure contract,
     * ADVICE r13) — promoted to the named error here, at fit time,
@@ -142,7 +142,7 @@ object CusumStream {
     * the supplied baseline. On a stream, feed in-order per-unit
     * micro-batches (the state carries (n, Σx) across batches); in
     * batch mode the group iterator sees the whole series and the
-    * result equals [[graft.ops.TemporalOps.cusum]] row for row.
+    * result equals [[graft.ops.UnitScan.Cusum]] row for row.
     */
   def cusum(scored: Dataset[ScoredRow], h: Double = 3.0): Dataset[CusumOut] = {
     val spark = scored.sparkSession

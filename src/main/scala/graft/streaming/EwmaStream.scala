@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming EWMA — the incremental twin of
-  * [[graft.ops.TemporalOps.ewma]] (span-truncated, `adjust=true`
+  * [[graft.ops.UnitScan.Ewma]] (span-truncated, `adjust=true`
   * renormalisation at the leading edge). Per-unit state is the last
   * span−1 observations, newest first — O(span) per unit, bounded by
   * construction; each arriving row folds the identical

@@ -219,7 +219,7 @@ object TreeLag {
     val wm: Map[Long, Seq[(Long, Double)]] = weightMatrix(times, thetacrit, fname, sigma)
       .groupBy(_._1).map { case (tnow, ws) => tnow -> ws.map(w => (w._2, w._3)).sortBy(_._1) }
 
-    Panel.kernel(panel, Panel.UnitCol, None, Seq(T, valueCol), Seq(out)) { g =>
+    Panel.kernel(panel, Panel.UnitCol, None, Seq(T, valueCol), Panel.doubles(out)) { g =>
       val (t, tNul) = (g.longs(0), g.nulls(0))
       val (x, xNul) = (g.doubles(1), g.nulls(1))
       // month → the unit's values there, sorted so that the sum does

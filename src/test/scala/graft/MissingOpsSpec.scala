@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.MissingOps
+import graft.ops.{MissingOps, UnitScan}
 import org.apache.spark.sql.functions._
 
 /** Golden tests for the missing-data family (missing.py semantics),
@@ -20,32 +20,36 @@ class MissingOpsSpec extends SparkSpec {
   private def vals(df: org.apache.spark.sql.DataFrame, c: String): Seq[Any] =
     df.orderBy(T).select(c).collect().map(r => if (r.isNullAt(0)) null else r.getDouble(0)).toSeq
 
+  /** The panel after one scan step, the series as `out`. */
+  private def scan(step: UnitScan.Step, out: String) =
+    UnitScan(p, Seq(step)).withColumnRenamed("value", out)
+
   test("fill forward / backward / both (missing.py:120-127)") {
-    assert(vals(MissingOps.fill(p, "value", "forward"), "filled")
+    assert(vals(scan(UnitScan.Fill("forward"), "filled"), "filled")
       == Seq(null, null, 2.0, 2.0, 6.0, 6.0))
-    assert(vals(MissingOps.fill(p, "value", "backward"), "filled")
+    assert(vals(scan(UnitScan.Fill("backward"), "filled"), "filled")
       == Seq(2.0, 2.0, 2.0, 6.0, 6.0, null))
-    assert(vals(MissingOps.fill(p, "value", "both"), "filled")
+    assert(vals(scan(UnitScan.Fill("both"), "filled"), "filled")
       == Seq(2.0, 2.0, 2.0, 2.0, 6.0, 6.0))
   }
 
   test("fill limit_area inside / outside (missing.py:108-119)") {
-    assert(vals(MissingOps.fill(p, "value", "both", Some("inside")), "filled")
+    assert(vals(scan(UnitScan.Fill("both", Some("inside")), "filled"), "filled")
       == Seq(null, null, 2.0, 2.0, 6.0, null))
-    assert(vals(MissingOps.fill(p, "value", "backward", Some("inside")), "filled")
+    assert(vals(scan(UnitScan.Fill("backward", Some("inside")), "filled"), "filled")
       == Seq(null, null, 2.0, 6.0, 6.0, null))
-    assert(vals(MissingOps.fill(p, "value", "both", Some("outside")), "filled")
+    assert(vals(scan(UnitScan.Fill("both", Some("outside")), "filled"), "filled")
       == Seq(2.0, 2.0, 2.0, null, 6.0, 6.0))
   }
 
   test("extrapolate: linear interior, constant edges (missing.py:72-98)") {
-    assert(vals(MissingOps.extrapolate(p, "value", "both"), "interp")
+    assert(vals(scan(UnitScan.Extrapolate("both"), "interp"), "interp")
       == Seq(2.0, 2.0, 2.0, 4.0, 6.0, 6.0))
-    assert(vals(MissingOps.extrapolate(p, "value", "forward"), "interp")
+    assert(vals(scan(UnitScan.Extrapolate("forward"), "interp"), "interp")
       == Seq(null, null, 2.0, 4.0, 6.0, 6.0))
-    assert(vals(MissingOps.extrapolate(p, "value", "both", Some("inside")), "interp")
+    assert(vals(scan(UnitScan.Extrapolate("both", Some("inside")), "interp"), "interp")
       == Seq(null, null, 2.0, 4.0, 6.0, null))
-    assert(vals(MissingOps.extrapolate(p, "value", "both", Some("outside")), "interp")
+    assert(vals(scan(UnitScan.Extrapolate("both", Some("outside")), "interp"), "interp")
       == Seq(2.0, 2.0, 2.0, null, 6.0, 6.0))
   }
 

@@ -46,22 +46,20 @@ class PanelIOSpec extends SparkSpec {
       val plan = df.queryExecution.executedPlan.toString()
       (plan.split("\n").count(_.contains("Exchange")), plan)
     }
-    // a per-unit window operator reads the buckets as they lie
-    val windowed = t.select(col(T), col(U),
-      ops.TemporalOps.ewma(col("value"), 0.5, 3).as("ew"))
-    val (n, plan) = exchanges(windowed)
-    assert(n == 0, s"bucketed window should be shuffle-free, got $n exchanges:\n$plan")
-    assert(windowed.count() == 40)
-    // so does the per-unit scan, and each unit's rows stay together
+    // the per-unit scan reads the buckets as they lie, and each unit's
+    // rows stay together
     val scanned = Registry.apply(t, Registry.Step("tlag", Seq(1.0)))
     val (ns, scanPlan) = exchanges(scanned)
     assert(ns == 0, s"bucketed scan should be shuffle-free, got $ns exchanges:\n$scanPlan")
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select(T, U, "value").collect().map(_.toString).sorted.toSeq
+      df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).sorted.toSeq
     assert(rows(scanned) ==
       rows(t.withColumn("value", WindowReference.tlag(col("value"), 1))))
-    // the unit-keyed kernels of the other panel lags read it the same way
-    Seq(Registry.Step("temporal_tree_lag", Seq(0.8, "uniform")),
+    // so do the scan steps that were windows, and the unit-keyed kernels
+    // of the other panel lags
+    Seq(Registry.Step("ewma", Seq(0.5, 3.0)), Registry.Step("onset", Seq(2.0)),
+        Registry.Step("tlags3d", Seq(1.0, 2.0)),
+        Registry.Step("temporal_tree_lag", Seq(0.8, "uniform")),
         Registry.Step("spacetime_dist", Seq("distances", 2.0, 1.0, 0.0, 5.0))).foreach { step =>
       val lagged = Registry.apply(t, step)
       val (nk, kernelPlan) = exchanges(lagged)

@@ -114,10 +114,8 @@ class PlanLintSpec extends SparkSpec {
       (m, u, (m * 7 + u).toDouble / 3.0)))
       .toDF(Panel.TimeCol, Panel.UnitCol, "value")
     // the shipped fix: 1e-9-unit long summands, integer cancellation
-    val fixed = panel.select(col(Panel.TimeCol), col(Panel.UnitCol),
-      graft.ops.TemporalOps.cusum(col("value")).as("c"))
-      .select(col(Panel.TimeCol), col(Panel.UnitCol),
-        col("c.cusum"), col("c.breach"))
+    val fixed = Registry.apply(panel, Registry.Step("cusum", Nil))
+      .select(col(Panel.TimeCol), col(Panel.UnitCol), col("cusum"), col("breach"))
     assert(PlanLint.floatGateFatal(fixed).isEmpty,
       PlanLint.floatGate(fixed).mkString("; "))
     // a bounded trailing float sum feeding a rounded output is fine:
@@ -281,8 +279,7 @@ class PlanLintSpec extends SparkSpec {
       graft.text.TextOps.chunkDocuments(docs, 3, 1)).isEmpty)
     val panel = (1L to 3L).flatMap(m => (0L to 5L).map(u =>
       (m, u, (m + u).toDouble))).toDF(Panel.TimeCol, Panel.UnitCol, "value")
-    assert(PlanLint.fatal(panel.select(col(Panel.TimeCol), col(Panel.UnitCol),
-      graft.ops.TemporalOps.ewma(col("value"), 0.5, 3).as("e"))).isEmpty)
+    assert(PlanLint.fatal(Registry.apply(panel, Registry.Step("ewma", Seq(0.5, 3.0)))).isEmpty)
   }
 }
 
@@ -301,9 +298,6 @@ object PlanLintSpec {
   /** The adjudicated exact-percentile BUFFER set (r13): queries whose
     * exact percentile aggregates over a group/frame that is bounded by
     * construction —
-    *   - per-unit panel windows capped by the month horizon (≤600, the
-    *     reference cap): q_winsorize, q_robust_scale and their
-    *     pipeline twins;
     *   - exact/approx envelope gates whose EXACT percentile exists
     *     precisely to envelope-check the approx sketch on test-scale
     *     data, with the 100 TB swap documented at the source
@@ -313,12 +307,13 @@ object PlanLintSpec {
     *   - bounded two-pass trims documented to swap for
     *     approx_percentile at corpus scale: q_trimmed_mean.
     * q_rolling_median is NOT here: its trailing ROW frame buffers ≤t
-    * values by construction, which the lint already exempts.
+    * values by construction, which the lint already exempts. Neither
+    * are q_winsorize and q_robust_scale: their quantiles are computed
+    * inside the per-unit scan, over one unit's series.
     * q_event_anomaly / q_anomaly_stream are deliberately NOT here —
     * their baseline fit rides the exact-rank machinery as of r13.
     */
   val PercentileBufferBlessed: Set[String] = Set(
-    "q_winsorize", "q_robust_scale",
     "q_length_quantiles", "q_length_quantiles_approx",
     "q_profile", "q_profile_approx", "q_trimmed_mean")
 
@@ -327,7 +322,6 @@ object PlanLintSpec {
     // fixed-window rolling sums)
     "q_psi", "q_psi_stream", "q_benford", "q_dsir_sample",
     "q_dsir_weights", "q_dsir_weights_bigram", "q_minhash_estimate",
-    "q_rolling_corr",
     // class (b) — per-entity series bounded by the month horizon
     // (≤600, the reference cap) or a document's token count
     // q_cusum left this list in r13: its breach margin became a pure
@@ -338,7 +332,9 @@ object PlanLintSpec {
     // was the shared panel's float SUM(value) aggregation, which is
     // now an integer sum of per-event 1e-9 fixings (Panel.fromEvents
     // r14) — their own arithmetic was already fixing/percentile-based.
-    "q_acf", "q_pacf", "q_trend", "q_decompose",
+    // q_rolling_corr, q_trend and q_decompose left this list when their
+    // sums moved inside the per-unit scan, where no plan holds them.
+    "q_acf", "q_pacf",
     "q_theil_sen", "q_runs_test", "q_mice_gen",
     "q_bm25", "q_lm_score", "q_pipeline_corpus_signals")
 }

@@ -24,10 +24,8 @@ class PlanSpec extends SparkSpec {
     val rows = for (m <- 1L to 10L; u <- 0L until 8L)
       yield (m, u, u * 31L + m)
     val p = rows.toDF(T, U, "v9")
-    val cs = graft.ops.TemporalOps.cusumFixed(col("v9"), 3.0)
-    val plan = p.select(col(T), col(U),
-        cs.getField("cusum").as("cusum"),
-        cs.getField("breach").as("breach"))
+    val plan = graft.ops.UnitScan(p, Seq(graft.ops.UnitScan.Cusum(3.0, "v9")))
+      .select(col(T), col(U), col("cusum"), col("breach"))
       .queryExecution.executedPlan.toString
     assert(plan.split("Exchange").length - 1 == 1, plan)
   }

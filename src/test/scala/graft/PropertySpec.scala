@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{TemporalOps, UnitScan}
+import graft.ops.UnitScan
 import graft.spatial.{Grid, KernelLag}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -82,9 +82,8 @@ class PropertySpec extends AnyFunSuite {
   test("temporal entropy lies in [0, log2(window)]") {
     forAll(gen2(seriesGen, Gen.chooseNum(2, 6))) { case (vs, w) =>
       val p = panel1(vs.map(math.abs)) // entropy needs non-negative inputs
-      val out = p.select(col(T),
-          TemporalOps.temporalEntropy(col("value"), w, 1.0).as("h"))
-        .orderBy(T).collect().map(_.getDouble(1))
+      val out = UnitScan(p, Seq(UnitScan.TemporalEntropy(w, 1.0)))
+        .orderBy(T).select("value").collect().map(_.getDouble(0))
       out.foreach { h =>
         assert(h >= -1e-9 && h <= math.log(w) / math.log(2) + 1e-9,
           s"entropy $h out of bounds for $vs w=$w")
@@ -459,28 +458,22 @@ class PropertySpec extends AnyFunSuite {
     }.toDF(T, U, "value")
 
     def cusumOf(parts: Int) = {
-      val cs = TemporalOps.cusum(col("value"), 3.0)
-      panel.repartition(parts)
-        .select(col(T), col(U), round(cs.getField("cusum"), 6).as("c"),
-          cs.getField("breach").as("b"))
+      Registry.apply(panel.repartition(parts), Registry.Step("cusum", Seq(3.0)))
+        .select(col(T), col(U), round(col("cusum"), 6).as("c"), col("breach").as("b"))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
         .toSet
     }
     assert(cusumOf(2) == cusumOf(13))
 
-    def ewmaOf(parts: Int) = panel.repartition(parts)
-      .select(col(T), col(U),
-        round(TemporalOps.ewma(col("value"), alpha = 0.5, span = 6), 6)
-          .as("e"))
+    def ewmaOf(parts: Int) = Registry.apply(panel.repartition(parts), Registry.Step("ewma", Seq(0.5, 6.0)))
+      .select(col(T), col(U), round(col("value"), 6).as("e"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(ewmaOf(2) == ewmaOf(13))
 
     def decomposeOf(parts: Int) = {
-      val d = TemporalOps.decompose(col("value"), period = 7, half = 2)
-      panel.repartition(parts)
-        .select(col(T), col(U), round(d.getField("trend"), 6).as("t"),
-          round(d.getField("seasonal"), 6).as("s"))
+      Registry.apply(panel.repartition(parts), Registry.Step("decompose", Seq(7.0, 2.0)))
+        .select(col(T), col(U), round(col("trend"), 6).as("t"), round(col("seasonal"), 6).as("s"))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
         .toSet
@@ -499,10 +492,8 @@ class PropertySpec extends AnyFunSuite {
       }
     }.toDF(T, U, "value")
     def trendOf(parts: Int) = {
-      val f = graft.ops.TemporalOps.trendFit(col("value"))
-      panel.repartition(parts)
-        .select(col(T), col(U), round(f.getField("fitted"), 6).as("f"),
-          round(f.getField("detrended"), 6).as("d"))
+      Registry.apply(panel.repartition(parts), Registry.Step("trend", Nil))
+        .select(col(T), col(U), round(col("fitted"), 6).as("f"), round(col("detrended"), 6).as("d"))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
         .toSet

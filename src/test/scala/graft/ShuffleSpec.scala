@@ -61,7 +61,18 @@ class ShuffleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "splag4d" -> """[{"type":"splag4d","args":[1,1,0]}]""",
     "spacetime_dist" -> """[{"type":"spacetime_dist","args":["distances",1,1,0,0]}]""",
     "fourier_lag" -> """[{"type":"replace_na","args":[0]},{"type":"fourier_lag","args":[2]}]""",
-    "temporal_tree_lag" -> """[{"type":"temporal_tree_lag","args":[0.8,"expon",4]}]""")
+    "temporal_tree_lag" -> """[{"type":"temporal_tree_lag","args":[0.8,"expon",4]}]""",
+    "mixed per-unit steps" -> ("""[{"type":"replace_na","args":[0]},{"type":"tlag","args":[1]},""" +
+      """{"type":"ewma","args":[0.5,3]},{"type":"onset","args":[6]},""" +
+      """{"type":"tlags3d","args":[1,2]}]"""))
+
+  /** The wire's per-unit requests that ran as Spark windows before they
+    * joined the scan.
+    */
+  private val wireSpecs = Seq(
+    """[{"type":"replace_na","args":[0]},{"type":"tlags3d","args":[1,2,3]}]""",
+    """[{"type":"replace_na","args":[0]},{"type":"onset","args":[12]}]""",
+    """[{"type":"replace_na","args":[0]},{"type":"ewma","args":[0.3,6]}]""")
 
   /** Rows as sorted strings, doubles by their bits. */
   private def bits(rows: Array[Row]): Seq[String] =
@@ -97,6 +108,10 @@ class ShuffleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         assert(shape(one) == ((1, 1, 0)),
           s"$name session, ${st.name}:\n${one.queryExecution.executedPlan}")
       }
+      wireSpecs.foreach { sp =>
+        val one = Registry.run(s.read.parquet(panelPath), sp)
+        assert(shape(one) == ((1, 1, 0)), s"$name session, $sp:\n${one.queryExecution.executedPlan}")
+      }
     } finally OpCache.clear(s200)
   }
 
@@ -117,6 +132,8 @@ class ShuffleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           s"$name: ${e.numPartitions} partitions, width $width\n${df.queryExecution.executedPlan}"))
         val (_, want) = run(spark, spec)
         assert(rows.nonEmpty && rows == want, s"$name: rows differ from the suite session's")
+        if (name == "mixed per-unit steps")
+          assert(shape(df) == ((1, 1, 0)), s"$name: ${df.queryExecution.executedPlan}")
       }
     } finally OpCache.clear(s200)
   }

@@ -339,5 +339,13 @@ class SpatialKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(outInt.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap ==
         rows.map(r => r.getString(0) -> r.getDouble(1)).toMap, name)
     }
+    // the grid lag sums a target's mesh rows in one order: the int-keyed
+    // copy, whose keys hash to other partitions, gives the same bits
+    def gridLagBits(df: DataFrame) =
+      TreeLag.withGridLag(withGrid(df.drop("lon", "lat")), "value", 300.0,
+          Seq("__gl" -> TreeLag.dfunction(0)))
+        .collect().map(r => r.getAs[String]("extra") ->
+          java.lang.Double.doubleToLongBits(r.getAs[Double]("__gl"))).toMap
+    assert(gridLagBits(intKeyed) == gridLagBits(p))
   }
 }

@@ -52,10 +52,9 @@ class StreamingSpec extends SparkSpec {
       vs.zipWithIndex.map { case (v, i) => (i.toLong + 1L, u, v) }
     }
     val p = rows.toDF(Panel.TimeCol, Panel.UnitCol, "value")
-    val batchOut = p.select(col(Panel.TimeCol), col(Panel.UnitCol),
-        graft.ops.TemporalOps.cusum(col("value"), 2.0).as("cs"))
+    val batchOut = graft.Registry.apply(p, graft.Registry.Step("cusum", Seq(2.0)))
       .select(col(Panel.TimeCol), col(Panel.UnitCol),
-        round(col("cs.cusum"), 6).as("cusum"), col("cs.breach").as("breach"))
+        round(col("cusum"), 6).as("cusum"), col("breach"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> (r.getDouble(2), r.getInt(3)))
       .toMap
@@ -192,8 +191,8 @@ class StreamingSpec extends SparkSpec {
     val rows = (1L to 10L).map(m => (m, 1L, m * 1.7 % 5.0)) ++
       (1L to 4L).map(m => (m, 2L, 10.0 - m))
     val p = rows.toDF(Panel.TimeCol, Panel.UnitCol, "value")
-    val batchOut = p.select(col(Panel.TimeCol), col(Panel.UnitCol),
-        round(graft.ops.TemporalOps.ewma(col("value"), 0.5, 3), 6).as("e"))
+    val batchOut = graft.Registry.apply(p, graft.Registry.Step("ewma", Seq(0.5, 3.0)))
+      .select(col(Panel.TimeCol), col(Panel.UnitCol), round(col("value"), 6).as("e"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val src = MemoryStream[EwmaStream.PanelRow]

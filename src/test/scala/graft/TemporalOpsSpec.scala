@@ -27,6 +27,11 @@ class TemporalOpsSpec extends SparkSpec {
   private def scan(p: org.apache.spark.sql.DataFrame, out: String, steps: UnitScan.Step*) =
     UnitScan(p, steps).withColumnRenamed("value", out)
 
+  /** (cusum, breach) per row in month order, through the wire step. */
+  private def cusum(p: org.apache.spark.sql.DataFrame, h: Double): Seq[(Double, Int)] =
+    Registry.apply(p, Registry.Step("cusum", Seq(h))).orderBy(T).select("cusum", "breach")
+      .collect().map(r => (r.getDouble(0), r.getInt(1))).toSeq
+
   /** A counting scan's series as an int column `out`, like the direct queries. */
   private def count(p: org.apache.spark.sql.DataFrame, out: String, steps: UnitScan.Step*) =
     UnitScan(p, steps).withColumn(out, col("value").cast("int"))
@@ -104,20 +109,17 @@ class TemporalOpsSpec extends SparkSpec {
   test("onset semantics (views_2.py:354-383)") {
     // events at months 2 and 5; window 2
     val p = panel1(0, 3, 0, 0, 7, 0)
-    val op = outInts(p.select(col(T), col(U),
-      TemporalOps.onsetPossible(col("value"), 2).as("op")), "op")
+    val op = outInts(count(p, "op", OnsetPossible(2)), "op")
     // lagged series: -,0,3,0,0,7 filled 0 -> rollmax2: 0,0,3,3,0,7
     assert(op == Seq(1, 1, 0, 0, 1, 0))
-    val on = outInts(p.select(col(T), col(U),
-      TemporalOps.onset(col("value"), 2).as("on")), "on")
+    val on = outInts(count(p, "on", Onset(2)), "on")
     assert(on == Seq(0, 1, 0, 0, 1, 0))
   }
 
   test("temporal entropy: uniform window hits log2(w), constant-zero is 0") {
     // all-equal values with offset keep x_i identical -> H = log2(#rows in frame)
     val p = panel1(0, 0, 0, 0)
-    val h = outDoubles(p.select(col(T), col(U),
-      TemporalOps.temporalEntropy(col("value"), 4, 1.0).as("h")), "h")
+    val h = outDoubles(scan(p, "h", TemporalEntropy(4, 1.0)), "h")
     val exp = Seq(0.0, 1.0, math.log(3) / math.log(2), 2.0)
     h.zip(exp).foreach { case (a, e) =>
       assert(math.abs(a.asInstanceOf[Double] - e) < 1e-12)
@@ -132,31 +134,29 @@ class TemporalOpsSpec extends SparkSpec {
   }
 
   test("winsorize clips to the unit's own quantiles; robustScale centres on the median") {
-    // unit 0: 1..9 plus an outlier 100 at month 10
-    val rows = (1L to 9L).map(m => (m, 0L, m.toDouble)) :+ (10L, 0L, 100.0)
+    // unit 0: 1..9 plus an outlier 100 at month 10 and a missing cell
+    // at month 11
+    val rows = (1L to 9L).map(m => (m, 0L, Option(m.toDouble))) :+ ((10L, 0L, Some(100.0))) :+
+      ((11L, 0L, None))
     val p = rows.toDF(T, U, "value")
-    val w = p.select(col(T), col(U),
-        TemporalOps.winsorize(col("value"), 0.0, 0.9).as("w"))
-      .orderBy(T).collect().map(_.getDouble(2))
+    val w = outDoubles(scan(p, "w", Winsorize(0.0, 0.9)), "w")
     // p90 of (1..9,100) at index 0.9*(10-1)=8.1 → 9 + 0.1*(100-9) = 18.1
-    assert(math.abs(w.last - 18.1) < 1e-9, w.last)
-    assert(w.init.zip(1 to 9).forall { case (v, e) => v == e.toDouble })
-    val rs = p.select(col(T), col(U),
-        TemporalOps.robustScale(col("value")).as("s"))
-      .orderBy(T).collect().map(_.getDouble(2))
+    assert(math.abs(w(9).asInstanceOf[Double] - 18.1) < 1e-9, w(9))
+    assert(w.take(9) == (1 to 9).map(_.toDouble))
+    // the missing cell stays missing (not the low quantile)
+    assert(w(10) == null, w)
+    val rs = outDoubles(scan(p, "s", RobustScale), "s")
     // median 5.5, IQR = 7.75 − 3.25 = 4.5
-    assert(math.abs(rs.head - (1.0 - 5.5) / 4.5) < 1e-9)
+    assert(math.abs(rs.head.asInstanceOf[Double] - (1.0 - 5.5) / 4.5) < 1e-9)
     // constant unit → IQR 0 → all zeros, no division error
     val const = Seq((1L, 7L, 3.0), (2L, 7L, 3.0)).toDF(T, U, "value")
-    val cs = const.select(TemporalOps.robustScale(col("value")).as("s"))
-      .collect().map(_.getDouble(0))
+    val cs = outDoubles(scan(const, "s", RobustScale), "s")
     assert(cs.forall(_ == 0.0))
   }
 
   test("ewma matches the hand-computed adjusted weighted mean") {
     val p = Seq((1L, 0L, 2.0), (2L, 0L, 4.0), (3L, 0L, 8.0)).toDF(T, U, "value")
-    val got = p.select(col(T), TemporalOps.ewma(col("value"), 0.5, 4).as("e"))
-      .orderBy(T).collect().map(_.getDouble(1))
+    val got = outDoubles(scan(p, "e", Ewma(0.5, 4)), "e").map(_.asInstanceOf[Double])
     // t1: 2/1; t2: (4 + 2·0.5)/1.5; t3: (8 + 4·0.5 + 2·0.25)/1.75
     assert(math.abs(got(0) - 2.0) < 1e-12)
     assert(math.abs(got(1) - 5.0 / 1.5) < 1e-12)
@@ -168,10 +168,7 @@ class TemporalOpsSpec extends SparkSpec {
     val rows = (1L to 10L).map(m => (m, 0L, 0.0)) ++
       (11L to 20L).map(m => (m, 0L, 10.0))
     val p = rows.toDF(T, U, "value")
-    val out = p.select(col(T),
-        TemporalOps.cusum(col("value"), 1.0).as("c"))
-      .orderBy(T).collect()
-      .map(r => (r.getStruct(1).getDouble(0), r.getStruct(1).getInt(1)))
+    val out = cusum(p, 1.0)
     // mean 5, sd 5: cusum walks to −25 then back; |−25| > 1·5 → breaches
     assert(math.abs(out.head._1 - (-5.0)) < 1e-9)
     assert(math.abs(out(9)._1 - (-50.0 + 0.0)) < 1e-9 || out(9)._1 == -50.0)
@@ -204,9 +201,7 @@ class TemporalOpsSpec extends SparkSpec {
     // mean 4, σ = 4; walk: −4, −8, −4, 0 ⇒ |−8| ≥ 2·4 exactly at t=2:
     // margin 0 < 0.5e-6 ⇒ NOT a breach at h=2 (the old round-6 > 0
     // boundary, preserved exactly); at h=1.9 the margin is 0.4 ⇒ breach
-    def breaches(h: Double) = p.select(col(T),
-        TemporalOps.cusum(col("value"), h).as("c"))
-      .orderBy(T).collect().map(_.getStruct(1).getInt(1)).toSeq
+    def breaches(h: Double) = cusum(p, h).map(_._2)
     assert(breaches(2.0) == Seq(0, 0, 0, 0))
     assert(breaches(1.9) == Seq(0, 1, 0, 0))
   }
@@ -221,7 +216,7 @@ class TemporalOpsSpec extends SparkSpec {
       (m, 0L, if (m % 2 == 0) 4.0e8 else -4.0e8))
     val p = rows.toDF(T, U, "value")
     val e = intercept[Exception] {
-      p.select(TemporalOps.cusum(col("value"), 3.0).as("c")).collect()
+      Registry.apply(p, Registry.Step("cusum", Seq(3.0))).collect()
     }
     def chain = Iterator.iterate(e: Throwable)(_.getCause)
       .takeWhile(_ != null).take(10).map(t => String.valueOf(t.getMessage))
@@ -241,12 +236,11 @@ class TemporalOpsSpec extends SparkSpec {
       (1L, 0L, None), (2L, 0L, Some(2.0)), (3L, 0L, Some(4.0)),
       (1L, 1L, None), (2L, 1L, None))
     val p = rows.toDF(T, U, "value")
-    val out = p.select(col(T), col(U),
-        TemporalOps.cusum(col("value"), 3.0).as("c"))
-      .orderBy(U, T).collect()
-      .map(r => (r.getLong(1),
-        if (r.getStruct(2).isNullAt(0)) None else Some(r.getStruct(2).getDouble(0)),
-        if (r.getStruct(2).isNullAt(1)) None else Some(r.getStruct(2).getInt(1))))
+    val out = Registry.apply(p, Registry.Step("cusum", Seq(3.0)))
+      .orderBy(U, T).select(U, "cusum", "breach").collect()
+      .map(r => (r.getLong(0),
+        if (r.isNullAt(1)) None else Some(r.getDouble(1)),
+        if (r.isNullAt(2)) None else Some(r.getInt(2))))
     // unit 0: null row, then exact walk around mean 3: −1, 0
     assert(out(0) == ((0L, None, None)))
     assert(out(1) == ((0L, Some(-1.0), Some(0))))
@@ -261,11 +255,10 @@ class TemporalOpsSpec extends SparkSpec {
     // cusumFixed(v9) consumes the already-fixed grid — identical output
     val rows = (1L to 8L).map(m => (m, 0L, m * 0.7300001))
     val p = rows.toDF(T, U, "value")
-    val viaFloat = p.select(col(T), TemporalOps.cusum(col("value"), 3.0).as("c"))
-      .orderBy(T).collect().map(r => (r.getStruct(1).getDouble(0), r.getStruct(1).getInt(1))).toSeq
-    val viaFixed = p.select(col(T),
-        TemporalOps.cusumFixed(graft.Panel.fix9(col("value")), 3.0).as("c"))
-      .orderBy(T).collect().map(r => (r.getStruct(1).getDouble(0), r.getStruct(1).getInt(1))).toSeq
+    val viaFloat = cusum(p, 3.0)
+    val viaFixed = UnitScan(p.withColumn("v9", graft.Panel.fix9(col("value"))),
+        Seq(Cusum(3.0, "v9")))
+      .orderBy(T).collect().map(r => (r.getAs[Double]("cusum"), r.getAs[Int]("breach"))).toSeq
     assert(viaFloat == viaFixed)
     // a .5e-6 tie: cs9 lands exactly on ±(k·1000 + 500) — the integer
     // HALF-UP must resolve away from zero deterministically (a float
@@ -274,8 +267,7 @@ class TemporalOpsSpec extends SparkSpec {
     // cs9 walk: −750, 0 — not a tie; use (0, 1e-6) : v9=(0,1000),
     // mu9=500, cs9: −500, 0 → |−500|+500 = 1000 → cs6 = −1 → −1e-6
     val tie = Seq((1L, 0L, 0.0), (2L, 0L, 1.0e-6)).toDF(T, U, "value")
-    val got = tie.select(TemporalOps.cusum(col("value"), 3.0).as("c"))
-      .orderBy(col("c.cusum")).collect().map(_.getStruct(0).getDouble(0)).toSeq
+    val got = cusum(tie, 3.0).map(_._1).sorted
     assert(got == Seq(-1.0e-6, 0.0))
   }
 
@@ -283,9 +275,8 @@ class TemporalOpsSpec extends SparkSpec {
     val season = Array(3.0, -1.0, -2.0)
     val rows = (0L until 30L).map(m => (m, 0L, 10.0 + season((m % 3).toInt)))
     val p = rows.toDF(T, U, "value")
-    val out = p.select(col(T),
-        TemporalOps.decompose(col("value"), period = 3, half = 3).as("d"))
-      .orderBy(T).collect()
+    val out = UnitScan(p, Seq(Decompose(period = 3, half = 3)))
+      .orderBy(T).select(col(T), struct("trend", "seasonal", "residual")).collect()
       .map(r => (r.getLong(0), r.getStruct(1)))
     // away from the edges, trend ≈ level and seasonal ≈ planted values
     // (half=3 spans 7 rows ≈ 2⅓ periods; the seasonal means then absorb
@@ -304,9 +295,8 @@ class TemporalOpsSpec extends SparkSpec {
     val rows = (1L to 10L).map(m => (m, 0L, 3.0 * m + 7.0)) ++
       (1L to 10L).map(m => (m, 1L, 5.0))
     val p = rows.toDF(T, U, "value")
-    val out = p.select(col(T), col(U),
-        TemporalOps.trendFit(col("value")).as("f"))
-      .collect()
+    val out = UnitScan(p, Seq(Trend))
+      .select(col(T), col(U), struct("slope", "fitted", "detrended")).collect()
       .map(r => ((r.getLong(1), r.getLong(0)), r.getStruct(2)))
       .toMap
     val f0 = out((0L, 4L))
@@ -324,9 +314,7 @@ class TemporalOpsSpec extends SparkSpec {
       (1L to 8L).map(m => (m, 1L, m.toDouble, -m.toDouble)) ++
       (1L to 8L).map(m => (m, 2L, m.toDouble, 4.0))
     val p = rows.toDF(T, U, "value", "value2")
-    val out = p.select(col(T), col(U),
-        TemporalOps.rollingCorr(col("value"), col("value2"), 4).as("r"))
-      .collect()
+    val out = UnitScan(p, Seq(RollingCorr(4))).select(col(T), col(U), col("rcorr")).collect()
       .map(r => ((r.getLong(1), r.getLong(0)),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
     assert(math.abs(out((0L, 6L)).get - 1.0) < 1e-9)
