@@ -11,11 +11,13 @@ import org.apache.spark.sql.SparkSession
   * host's processor count, and `n` shuffle partitions.
   *
   * The library sizes its own keyed exchanges from their input
-  * ([[Shuffle]]), so the panel transforms, the spatial kernels, the
-  * global ranking and the shingle repartition run the same under a
-  * preset master's 200 partitions. The shuffle-partition setting still
-  * governs the joins and aggregations Spark plans itself (re-joins,
-  * `groupBy`s, distincts), and it caps [[Shuffle.width]].
+  * ([[Shuffle]]), so the panel transforms, the spatial kernels and the
+  * global ranking run the same under a preset master's 200 partitions:
+  * a small pass is one task either way. The shuffle-partition setting
+  * still governs the joins and aggregations Spark plans itself
+  * (re-joins, `groupBy`s, distincts), and it caps [[Shuffle.width]]:
+  * here `n`, so a pass larger than `n` advisory-sized partitions is
+  * held to one partition per core.
   */
 object LocalSession {
 

@@ -16,7 +16,11 @@ import org.apache.spark.sql.functions._
   *     per-unit scan (`UnitScan`) or a registry pipeline called on the
   *     table plans no exchange when `n` equals the exchange's width
   *     ([[Shuffle.width]]); unit-keyed joins between two bucketed
-  *     panels are shuffle-free.
+  *     panels are shuffle-free. That width is 1 below AQE's minimum
+  *     partition size (1 MB by default) and grows with the table's
+  *     size, so `n` is the width of the table as written: a table
+  *     written with more buckets than the rule gives its size is read
+  *     through an exchange.
   *
   * Parquet column pruning + min/max row-group statistics come free.
   */

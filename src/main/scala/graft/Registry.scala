@@ -118,16 +118,13 @@ object Registry {
     // args: [alpha, span] — truncated exponentially weighted mean
     "ewma" -> (a => Seq(UnitScan.Ewma(a.num(0), a.num(1).toInt))),
     // args: [h?] — appends (cusum, breach) over the series' 1e-9 fixing
-    "cusum" -> (a => Seq(UnitScan.Cusum(a.numOpt(0).getOrElse(3.0), Fixed))),
+    "cusum" -> (a => Seq(UnitScan.Cusum(a.numOpt(0).getOrElse(3.0)))),
     // args: [period, half] — appends (trend, seasonal, residual)
     "decompose" -> (a => Seq(UnitScan.Decompose(a.num(0).toInt, a.num(1).toInt))),
     // appends (slope, fitted, detrended): per-unit OLS detrend
     "trend" -> (_ => Seq(UnitScan.Trend)),
     // args: [win] — appends rcorr, the trailing corr(value, value2)
     "rolling_corr" -> (a => Seq(UnitScan.RollingCorr(a.num(0).toInt))))
-
-  /** The column a scan's `cusum` reads: `Panel.fix9(value)`. */
-  private val Fixed = "__v9"
 
   /** Panel transforms that are not scan steps. */
   val transforms: Map[String, Transform] = Map(
@@ -770,23 +767,13 @@ object Registry {
     *
     * Each maximal run of scan steps ([[UnitScan]]) becomes one scan: one
     * `unit_id` exchange, one sort and one grouped map for the whole
-    * run; every other step applies between runs. A `cusum` reads the
-    * 1e-9 fixing of its input, which Spark projects where the scan
-    * starts: after a step of the same run that rewrote `value`, it
-    * starts a scan of its own.
+    * run; every other step applies between runs.
     */
   def pipeline(df: DataFrame, steps: Seq[Step]): DataFrame = {
-    def flush(d: DataFrame, run: Seq[UnitScan.Step]) =
-      if (run.isEmpty) d
-      else if (!run.exists(_.isInstanceOf[UnitScan.Cusum])) UnitScan(d, run)
-      else UnitScan(d.withColumn(Fixed, Panel.fix9(col("value"))), run).drop(Fixed)
+    def flush(d: DataFrame, run: Seq[UnitScan.Step]) = if (run.isEmpty) d else UnitScan(d, run)
     val (out, run) = steps.foldLeft((df, Vector.empty[UnitScan.Step])) {
       case ((d, run), step) => scanSteps.get(step.name) match {
-        case Some(compile) =>
-          val next = compile(step.args)
-          if (next.exists(_.isInstanceOf[UnitScan.Cusum]) && run.exists(_.writesValue))
-            (flush(d, run), next.toVector)
-          else (d, run ++ next)
+        case Some(compile) => (d, run ++ compile(step.args))
         case None =>
           (applyIn(transforms, "panel", scanSteps.keys)(flush(d, run), step), Vector.empty)
       }

@@ -7,25 +7,32 @@ import org.apache.spark.sql.internal.SQLConf
   * input instead of `spark.sql.shuffle.partitions`.
   *
   * Every panel transform is a per-unit or per-month pass, so a wire
-  * request is one or two keyed exchanges over a small frame. At Spark's
-  * default of 200 shuffle partitions each such exchange writes and
-  * commits one shuffle file per non-empty reduce partition on the map
-  * side, which AQE's read-side coalescing does not undo; on a 9,600-row
-  * panel that cost 0.6 s of task CPU per request.
+  * request is one or two keyed exchanges over a small frame. Each reduce
+  * task of such an exchange pays a fixed cost whatever its share of the
+  * rows: task deserialization, code generation for the grouped map's
+  * row deserializer, sorter setup, and one shuffle file per non-empty
+  * partition on the map side (one output file per task when the pass
+  * ends in a write). On a 5,760-row grid or a 9,600-row wire panel those
+  * costs are most of the pass, so a tiny pass runs as one task.
   *
-  * The rule: the input's estimated size in advisory-sized partitions
-  * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`), at least the
-  * context's default parallelism, at most the session's shuffle
-  * partitions. It reads the optimized plan's statistics, so it runs no
-  * job; a plan without a size estimate gets the session's count.
+  * The rule is the plan-time twin of AQE's coalescing policy: the input's
+  * estimated size in advisory-sized partitions
+  * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`), and at least as
+  * many partitions as the context's default parallelism allows without
+  * one falling below AQE's minimum partition size
+  * (`spark.sql.adaptive.coalescePartitions.minPartitionSize`); at least
+  * one and at most the session's shuffle partitions. It reads the
+  * optimized plan's statistics, so it runs no job; a plan without a size
+  * estimate gets the session's count.
   */
 object Shuffle {
 
   /** The rule itself, over an estimated size in bytes. */
-  def width(sizeInBytes: BigInt, advisoryBytes: Long, parallelism: Int,
-            maxPartitions: Int): Int = {
-    val bySize = (sizeInBytes + advisoryBytes - 1) / advisoryBytes
-    bySize.max(parallelism).min(maxPartitions).toInt
+  def width(sizeInBytes: BigInt, advisoryBytes: Long, minPartitionBytes: Long,
+            parallelism: Int, maxPartitions: Int): Int = {
+    def parts(bytes: Long) = (sizeInBytes + bytes - 1) / bytes
+    val floor = parts(minPartitionBytes).min(parallelism)
+    parts(advisoryBytes).max(floor).min(maxPartitions).max(1).toInt
   }
 
   /** The exchange width for `df`. */
@@ -33,6 +40,7 @@ object Shuffle {
     val conf = df.sparkSession.sessionState.conf
     width(df.queryExecution.optimizedPlan.stats.sizeInBytes,
       conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
+      conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE),
       df.sparkSession.sparkContext.defaultParallelism,
       conf.numShufflePartitions)
   }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.{OpCache, Shuffle}
+import graft.OpCache
 import graft.graphs.Edges
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
@@ -90,7 +90,7 @@ object Dedup {
     * The cross-row set union (r6 review, duplicate-id inputs): the
     * id-keyed `collect_list` aggregation shuffles one compact shingle
     * ARRAY per input row, keyed by id — after the conditional
-    * `Shuffle.by(docs, id)` the child partitioning already
+    * repartition on id, the child partitioning already
     * satisfies the aggregation's distribution, so the common
     * underfilled-scan path adds NO extra shuffle (measured parity
     * with the r6 per-row shape at sf0.1); a well-split scan pays one
@@ -104,13 +104,17 @@ object Dedup {
     */
   def shingles(docs: DataFrame, n: Int, idCol: String = "doc_id",
                textCol: String = "text"): DataFrame = {
-    // only repartition when the input underfills the cluster (the
-    // single-file local layout); a well-split scan stays put. A
-    // streaming frame cannot be probed (no RDD before execution) and
-    // the stateful consumers repartition by their own keys anyway.
+    // only repartition when the input underfills the cores (the
+    // single-file local layout); a well-split scan stays put. The
+    // target is the cores, not `Shuffle.width`: that rule runs a small
+    // input as one task, and the point here is to spread a costly
+    // per-row step. A streaming frame cannot be probed (no RDD before
+    // execution) and the stateful consumers repartition by their own
+    // keys anyway.
+    val cores = docs.sparkSession.sparkContext.defaultParallelism
     val base =
       if (docs.isStreaming) docs
-      else if (inputPartitions(docs) < Shuffle.width(docs)) Shuffle.by(docs, col(idCol))
+      else if (inputPartitions(docs) < cores) docs.repartition(cores, col(idCol))
       else docs
     val words = split(TextOps.normalize(col(textCol)), " ")
     base.select(col(idCol),

@@ -4,8 +4,9 @@ import graft.Panel
 import graft.functions.SparkRound
 import java.math.BigInteger
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, NumericType, StructField}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, NumericType, StructField}
 
 /** Every per-unit series step of the panel family as ONE scan over each
   * unit's rows — the reference's reshape-operate-flatten idiom (it
@@ -168,9 +169,11 @@ object UnitScan {
     require(span > 0, s"span must be positive, got $span")
   }
 
-  /** CUSUM drift statistic on the 1e-9 integer grid, read from the long
-    * column `fixed` (`Panel.fix9` of the series, or the integer-grid
-    * panel's `v9`); appends `cusum` (double) and `breach` (int), both null
+  /** CUSUM drift statistic on the 1e-9 integer grid, read from `fixed`:
+    * the series itself, fixed in the scan as [[Panel.fix9]] fixes it (so a
+    * `cusum` after a step that rewrites `value` stays in the same scan),
+    * or a long column already on the grid (the integer-grid panel's
+    * `v9`). Appends `cusum` (double) and `breach` (int), both null
     * before the unit's first value. The running `cs9 = Σv9 − n·μ9`
     * (μ9 = round(Σv9 / N)) is exact long arithmetic, so no merge order
     * moves a bit; `cusum` is its HALF-UP 1e-6 grid value
@@ -182,7 +185,7 @@ object UnitScan {
     * the named "cusum breach certificate overflow" error; a long sum that
     * overflows raises `ArithmeticException`.
     */
-  final case class Cusum(h: Double, fixed: String) extends Step {
+  final case class Cusum(h: Double, fixed: String = V) extends Step {
     override def reads: Seq[String] = Seq(fixed)
     override def appends: Seq[StructField] = Seq(StructField("cusum", DoubleType, nullable = true),
       StructField("breach", IntegerType, nullable = true))
@@ -326,8 +329,9 @@ object UnitScan {
     val seed = if (seedMark) nullableDoubles(SeedCol) else Nil
     val extra = steps.flatMap(_.appends).distinctBy(_.name)
     val names = extra.map(_.name).toArray
+    val ansi = df.sparkSession.sessionState.conf.ansiEnabled
     Panel.kernel(df, U, Some(T), reads, value ++ seed ++ extra) { g =>
-      val s = new Series(g, reads, names)
+      val s = new Series(g, reads, names, ansi)
       stepArr.foreach(s.run)
       val vs = Array.newBuilder[Array[Double]]
       val ns = Array.newBuilder[Array[Boolean]]
@@ -343,6 +347,18 @@ object UnitScan {
       }
       new Panel.Emit(s.n, s.idx, vs.result(), ns.result())
     }
+  }
+
+  /** [[Panel.fix9]] of one value as Spark computes it: `round(x·1e9)`,
+    * then the double → long cast, which for NaN, ±Infinity and values
+    * outside the long range raises Spark's `CAST_OVERFLOW` error under
+    * ANSI and otherwise saturates (NaN to 0).
+    */
+  private def fix9(x: Double, ansi: Boolean): Long = {
+    val r = SparkRound(x * 1e9, 0)
+    if (r > -9.2e18 && r < 9.2e18) r.toLong
+    else Cast(Literal(r), LongType, None, if (ansi) EvalMode.ANSI else EvalMode.LEGACY)
+      .eval().asInstanceOf[Long]
   }
 
   /** Spark's exact `percentile` of the sorted non-empty `xs` at `p`:
@@ -363,7 +379,8 @@ object UnitScan {
     * swaps them in. Appended columns (`outNames`) are kept by input row,
     * so a row a later step drops takes its appended values with it.
     */
-  private final class Series(g: Panel.Group, reads: Seq[String], outNames: Array[String]) {
+  private final class Series(g: Panel.Group, reads: Seq[String], outNames: Array[String],
+                             ansi: Boolean) {
     private val readsValue = reads.contains(V)
     var v: Array[Double] = if (readsValue) g.doubles(reads.indexOf(V)) else new Array[Double](g.n)
     var nul: Array[Boolean] = if (readsValue) g.nulls(reads.indexOf(V)) else new Array[Boolean](g.n)
@@ -672,9 +689,13 @@ object UnitScan {
     }
 
     private def cusum(c: Cusum): Unit = {
-      val (f, fNul) = (g.longs(reads.indexOf(c.fixed)), g.nulls(reads.indexOf(c.fixed)))
-      val v9 = (i: Int) => if (fNul(idx(i))) None else Some(f(idx(i)))
-      val xs = (0 until n).flatMap(v9)
+      val v9: Array[Option[Long]] =
+        if (c.fixed == V) Array.tabulate(n)(i => if (nul(i)) None else Some(fix9(v(i), ansi)))
+        else {
+          val (f, fNul) = (g.longs(reads.indexOf(c.fixed)), g.nulls(reads.indexOf(c.fixed)))
+          Array.tabulate(n)(i => if (fNul(idx(i))) None else Some(f(idx(i))))
+        }
+      val xs = v9.flatten
       val big = BigInteger.TEN.pow(38)
       def dec(x: BigInteger): BigInteger =
         if (x.abs.compareTo(big) < 0) x

@@ -35,12 +35,17 @@ class PanelIOSpec extends SparkSpec {
       }
       rm(loc)
     }
-    val p = (for (m <- 1L to 5L; u <- 1L to 8L) yield (m, u, m + u * 1.0))
+    // a minimum partition size this small gives the 40-row fixture more
+    // than one partition, so the read must keep several buckets apart
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64")
+    val p = s.createDataFrame(for (m <- 1L to 5L; u <- 1L to 8L) yield (m, u, m + u * 1.0))
       .toDF(T, U, "value")
     // as many buckets as the scan's exchange would have partitions
     val buckets = Shuffle.width(p)
+    assert(buckets >= 2, s"width $buckets")
     PanelIO.writeBucketed(p, "panel_bucketed", buckets)
-    val t = spark.table("panel_bucketed")
+    val t = s.table("panel_bucketed")
     assert(Shuffle.width(t) == buckets)
     def exchanges(df: org.apache.spark.sql.DataFrame): (Int, String) = {
       val plan = df.queryExecution.executedPlan.toString()

@@ -35,7 +35,7 @@ class PlanSpec extends SparkSpec {
     plan.split("\n").toSeq.filter(_.contains("Exchange hashpartitioning")),
     plan.contains("Join") || plan.contains("CartesianProduct"))
 
-  test("splag4d is one month_id hash exchange into the per-month stencil, no join") {
+  testAtCoreWidth("splag4d is one month_id hash exchange into the per-month stencil, no join") {
     val plan = KernelLag.splag4d(gridPanel, "value", 1, 1, 1.0, norm = false)
       .queryExecution.executedPlan.toString()
     val (exchanges, joins) = exchangesAndJoins(plan)
@@ -68,7 +68,7 @@ class PlanSpec extends SparkSpec {
     assert(plan.split("\n").count(_.trim.startsWith("+- Exchange")) <= 2, plan)
   }
 
-  test("banded spacetime never nested-loops the event set — ring-bounded candidates") {
+  testAtCoreWidth("banded spacetime never nested-loops the event set — ring-bounded candidates") {
     val df = spatial.SpacetimeDist.spacetimeDistances(
       gridPanel, "value", "distances", k = 5, nu = 2.0, power = 0.0,
       eventThreshold = 30.0, banded = Some(spatial.SpacetimeDist.Band(2.0, 1)))
@@ -97,7 +97,7 @@ class PlanSpec extends SparkSpec {
         e.contains(s"hashpartitioning($U#")), exec.toString())
   }
 
-  test("spacetime auto-dispatch: broadcast under the event threshold, banded above") {
+  testAtCoreWidth("spacetime auto-dispatch: broadcast under the event threshold, banded above") {
     import spatial.SpacetimeDist
     // the pure dispatch rule, pinned at the switch point
     assert(SpacetimeDist.chooseBand(
@@ -296,7 +296,7 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
-  test("spacetime kernel path is one unit_id hash exchange into the per-unit top-k, no join") {
+  testAtCoreWidth("spacetime kernel path is one unit_id hash exchange into the per-unit top-k, no join") {
     val plan = spatial.SpacetimeDist.spacetimeDistances(
         gridPanel, "value", "distances", k = 1, nu = 1.0, power = 0.0)
       .queryExecution.executedPlan.toString()

@@ -16,19 +16,29 @@ import org.apache.spark.sql.functions._
 class ShuffleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
-  test("Shuffle.width: parallelism floor, advisory-sized partitions, shuffle-partition cap") {
+  test("Shuffle.width: size floor at the minimum partition size, advisory-sized " +
+      "partitions, shuffle-partition cap") {
     val mb = 1L << 20
-    assert(Shuffle.width(BigInt(1), mb, 4, 200) == 4)
-    assert(Shuffle.width(BigInt(16 * mb), mb, 4, 200) == 16)
-    assert(Shuffle.width(BigInt(16 * mb + 1), mb, 4, 200) == 17)
-    assert(Shuffle.width(BigInt(Long.MaxValue) * 4, mb, 4, 200) == 200)
-    assert(Shuffle.width(BigInt(1), mb, 4, 2) == 2)
+    val advisory = 64 * mb
+    // (size, advisory, minimum partition size, parallelism, cap)
+    assert(Shuffle.width(BigInt(0), advisory, mb, 4, 200) == 1, "an empty input")
+    assert(Shuffle.width(BigInt(1), advisory, mb, 4, 200) == 1)
+    assert(Shuffle.width(BigInt(mb), advisory, mb, 4, 200) == 1)
+    assert(Shuffle.width(BigInt(mb + 1), advisory, mb, 4, 200) == 2)
+    assert(Shuffle.width(BigInt(4 * mb - 1), advisory, mb, 4, 200) == 4,
+      "just under parallelism × minimum partition size")
+    assert(Shuffle.width(BigInt(4 * mb + 1), advisory, mb, 4, 200) == 4,
+      "just over: held at the parallelism")
+    assert(Shuffle.width(BigInt(16 * mb), mb, mb, 4, 200) == 16)
+    assert(Shuffle.width(BigInt(16 * mb + 1), mb, mb, 4, 200) == 17)
+    assert(Shuffle.width(BigInt(Long.MaxValue) * 4, mb, mb, 4, 200) == 200)
+    assert(Shuffle.width(BigInt(8 * mb), advisory, mb, 4, 2) == 2)
 
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "200")
     s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1000")
     val par = s.sparkContext.defaultParallelism
-    assert(Shuffle.width(s.range(0, 2).toDF()) == par, "a tiny frame")
+    assert(Shuffle.width(s.range(0, 2).toDF()) == 1, "a tiny frame")
     val k = par + 12
     // a range's estimated size is 8 bytes a row
     val sized = s.range(0, k * 125L).toDF()
@@ -36,6 +46,17 @@ class ShuffleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(Shuffle.width(sized) == k)
     assert(Shuffle.by(sized, col("id")).rdd.getNumPartitions == k)
     assert(Shuffle.width(s.range(0, 1000000L).toDF()) == 200, "capped at the session's count")
+    val unknown = s.createDataFrame(s.sparkContext.parallelize(Seq(Row(1L))),
+      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT"))
+    assert(unknown.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      s.sessionState.conf.defaultSizeInBytes, "a frame without a size estimate")
+    assert(Shuffle.width(unknown) == 200, "an unknown size gets the session's count")
+
+    // the session's minimum partition size sets the floor
+    val small = spark.newSession()
+    small.conf.set("spark.sql.shuffle.partitions", "200")
+    small.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1000")
+    assert(Shuffle.width(small.range(0, 375L).toDF()) == par.min(3), "3000 bytes")
   }
 
   /** An 8 × 10 block of grid units over 24 months with events, zeros,
@@ -136,5 +157,67 @@ class ShuffleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           assert(shape(df) == ((1, 1, 0)), s"$name: ${df.queryExecution.executedPlan}")
       }
     } finally OpCache.clear(s200)
+  }
+
+  test("a 9,600-row panel's tlag is one exchange of width 1, with the rows of a " +
+      "200-partition exchange") {
+    val units = for (lat <- 0L until 20L; lon <- 0L until 20L) yield lat * Grid.UnitCols + lon
+    val rows = for (m <- 1L to 24L; u <- units) yield {
+      val h = (u * 5L + m * 11L) % 13L
+      (m, u, if (h == 0L) None else Some((u % 7L) * 0.5 + m * 0.25 - h))
+    }
+    assert(rows.size == 9600)
+    val dir = java.nio.file.Files.createTempDirectory("shuffle-spec").toString + "/wire"
+    rows.toDF(Panel.TimeCol, Panel.UnitCol, "value").write.parquet(dir)
+    def tlag(s: SparkSession): (Seq[Int], Seq[String]) = {
+      val df = Registry.apply(s.read.parquet(dir), Registry.Step("tlag", Seq(1.0)))
+      val out = bits(df.collect())
+      (collectWithSubqueries(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e.numPartitions
+      }, out)
+    }
+    // an advisory size of one byte gives the exchange the session's count
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "200")
+    wide.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")
+    val (narrow, got) = tlag(spark)
+    val (widths, want) = try tlag(wide) finally OpCache.clear(wide)
+    assert(narrow == Seq(1), s"widths $narrow")
+    assert(widths == Seq(200), s"widths $widths")
+    assert(got.size == 9600 && got == want, "rows differ from the 200-partition exchange's")
+  }
+
+  test("a cusum after a value-rewriting step stays in its scan: [tlag 1, cusum] is " +
+      "one exchange and one sort, with the rows of a second scan over Panel.fix9") {
+    val s200 = spark.newSession()
+    s200.conf.set("spark.sql.shuffle.partitions", "200")
+    try Seq("suite" -> spark, "200-partition" -> s200).foreach { case (name, s) =>
+      // NaN has no fixing under ANSI: the panel keeps its nulls and zeros
+      val p = s.read.parquet(panelPath).filter(!isnan(col("value")))
+      val df = Registry.run(p, """[{"type":"tlag","args":[1]},{"type":"cusum","args":[2]}]""")
+      assert(shape(df) == ((1, 1, 0)), s"$name session:\n${df.queryExecution.executedPlan}")
+      val twoScans = ops.UnitScan(ops.UnitScan(p, Seq(ops.UnitScan.Lag(1)))
+          .withColumn("__v9", Panel.fix9(col("value"))), Seq(ops.UnitScan.Cusum(2.0, "__v9")))
+        .drop("__v9")
+      assert(df.schema == twoScans.schema, name)
+      val rows = bits(df.collect())
+      assert(rows.nonEmpty && rows == bits(twoScans.collect()), s"$name: rows differ")
+    } finally OpCache.clear(s200)
+  }
+
+  test("Dedup.shingles spreads an underfilled single-partition corpus over the cores, " +
+      "not over Shuffle.width") {
+    val docs = (1L to 200L).map(i => (i, s"doc $i says ${"word " * (i % 7).toInt}and more $i"))
+      .toDF("doc_id", "text")
+    val one = docs.coalesce(1)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(Shuffle.width(one) == 1, "the corpus is small enough for one keyed task")
+    val sh = dedup.Dedup.shingles(one, 2)
+    val rows = bits(sh.collect())
+    val widths = collectWithSubqueries(sh.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e.numPartitions
+    }
+    if (cores > 1) assert(widths == Seq(cores), s"widths $widths\n${sh.queryExecution.executedPlan}")
+    assert(rows.nonEmpty && rows == bits(dedup.Dedup.shingles(docs, 2).collect()))
   }
 }

@@ -10,6 +10,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = () // keep the session for other suites
 
+  /** A plan-shape test that names the keys of the library's exchanges:
+    * `body` runs with AQE's minimum partition size at 64 bytes on the
+    * shared session, so that [[Shuffle.width]] gives a small test frame
+    * one partition per core and a keyed exchange plans as a hash
+    * exchange on its keys, as on a panel of production size. (A frame
+    * under the default 1 MB is one task: its exchange plans as
+    * `SinglePartition`, which names no key.)
+    */
+  def testAtCoreWidth(name: String)(body: => Any): Unit = test(name) {
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "64")
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** Spark jobs started while `body` runs. A marker job run afterwards
     * flushes the listener: job-start events arrive in submission order.
     */

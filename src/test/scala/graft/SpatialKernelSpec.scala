@@ -252,7 +252,7 @@ class SpatialKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     ("grid_lag", """[{"type":"grid_lag","args":[2000,0]}]""", None, 3, 10),
     ("splag_country", """[{"type":"splag_country","args":[1,1,0,false]}]""", None, 4, 8))
 
-  test("panel lags on the wire: the Fourier and temporal tree kernels are one hash " +
+  testAtCoreWidth("panel lags on the wire: the Fourier and temporal tree kernels are one hash " +
       "exchange and no join, the relational lags join once, all within the job budget") {
     val p = wirePanel
     panelLags.foreach { case (name, spec, hashExchanges, joins, budget) =>

@@ -2,7 +2,7 @@ package graft
 
 import graft.ops.UnitScan
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
@@ -175,10 +175,11 @@ class UnitScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val out = Registry.run(p, sp)
     assertSame(sp, out, WindowReference.pipeline(p, sp))
     val plan = out.queryExecution.executedPlan
-    // the unit_id exchange (the random panel adds a round-robin one):
+    // the unit_id exchange (the random panel adds a round-robin one; a
+    // width of 1 plans the unit_id exchange as a single partition):
     // ewma is a scan step, so the spec is one scan
     val byUnit = collectWithSubqueries(plan) {
-      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+      case e: ShuffleExchangeExec if !e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
     }
     assert(byUnit.size == 1, plan)
   }
@@ -242,7 +243,7 @@ class UnitScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       spec(step("tlags3d", 1, 2), step("cweq", 0), step("fill"), step("tlags3d", 2, 5)),
       spec(step("time_since", 0), step("temporal_entropy", 3, 1), step("extrapolate", "forward"),
         step("rolling_corr", 3), step("moving_sum", 2)),
-      // a cusum after a step that rewrote value starts a scan of its own
+      // a cusum after a step that rewrote value fixes the rewritten series
       spec(step("cusum"), step("tlag", 1), step("cusum", 2), step("onset_possible", 4)))
     Seq(14L, 15L).foreach { seed =>
       val p = withValue2(finitePanel(seed)).cache()
@@ -253,6 +254,37 @@ class UnitScanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         assertSame(s"seed $seed $sp", got, want)
       }
       p.unpersist()
+    }
+  }
+
+  test("cusum fixes NaN, ±Inf, −0.0 and out-of-range values in the scan as Spark's round " +
+      "and long cast do, under ANSI and legacy casts") {
+    val edges = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 1e12, -1e12,
+      9.3e9, 9.2233720368547758e9, -0.0, 2.5)
+    /** The rows, or the error's root cause: class, condition, first line. */
+    def outcome(df: => DataFrame): Either[String, Seq[String]] =
+      try Right(bits(df)) catch {
+        case e: Exception =>
+          var c: Throwable = e
+          while (c.getCause != null && !c.isInstanceOf[ArithmeticException]) c = c.getCause
+          val cond = c match { case t: org.apache.spark.SparkThrowable => t.getCondition; case _ => "" }
+          Left(s"${c.getClass.getName} $cond ${String.valueOf(c.getMessage).linesIterator.next()}")
+      }
+    for (ansi <- Seq(true, false); x <- edges) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      val p = s.createDataFrame(Seq((1L, 1L, Some(1.0)), (2L, 1L, Some(x)), (3L, 1L, Some(3.0)),
+        (4L, 1L, None), (5L, 1L, Some(0.5)), (1L, 2L, Some(4.0)), (2L, 2L, Some(1.0))))
+        .toDF(T, U, "value")
+      def projected(in: DataFrame, h: Double) = UnitScan(in.withColumn("__v9",
+        Panel.fix9(col("value"))), Seq(UnitScan.Cusum(h, "__v9"))).drop("__v9")
+      val one = outcome(Registry.run(p, spec(step("cusum"))))
+      assert(one == outcome(projected(p, 3.0)), s"ansi=$ansi x=$x cusum")
+      val two = outcome(Registry.run(p, spec(step("tlag", 1), step("cusum", 2))))
+      assert(two == outcome(projected(UnitScan(p, Seq(UnitScan.Lag(1))), 2.0)),
+        s"ansi=$ansi x=$x tlag 1, cusum")
+      if (x == 2.5) assert(one.isRight && two.isRight)
+      if (ansi && x.isNaN) assert(one.left.exists(_.contains("CAST_OVERFLOW")), one)
     }
   }
 
