@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRow
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
@@ -17,26 +16,17 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructT
   * tensorisation.
   *
   * At 100 TB the panel arrives partitioned by `month_id` (partition
-  * pruning), and a run of per-unit steps costs one hash-partition
-  * shuffle on `unit_id`. Catalyst merges only independent window
-  * expressions into one Window node — a chain of dependent windows
-  * stacks one operator per step — so every per-unit series step is a
-  * step of one per-unit scan (`graft.ops.UnitScan`) that applies a whole
-  * run in one pass.
+  * pruning), and a per-unit pass costs one hash-partition shuffle on
+  * `unit_id`. Every per-unit pass is one [[kernel]]: the per-unit scan
+  * (`graft.ops.UnitScan`) appends columns to each unit's rows, and the
+  * per-unit diagnostics (`graft.ops.TemporalOps`) [[reduce]] each
+  * unit's rows to rows of their own, both in one exchange, one sort and
+  * one grouped map — the reshape-operate-flatten idiom of the
+  * reference, one unit at a time.
   */
 object Panel {
   val TimeCol = "month_id"
   val UnitCol = "unit_id"
-
-  /** Per-unit time window — the order every per-unit op shares. */
-  def w: WindowSpec =
-    Window.partitionBy(UnitCol).orderBy(TimeCol)
-
-  /** w with a trailing row frame of `n` rows (current row included). */
-  def trailing(n: Int): WindowSpec = w.rowsBetween(-(n - 1), 0)
-
-  /** Cumulative (expanding) frame. */
-  def cumulative: WindowSpec = w.rowsBetween(Window.unboundedPreceding, 0)
 
   /** Sparse aggregated panel derived from the driver's `events` table:
     * time = day-of-month of `ts` (the synthetic data spans one calendar
@@ -158,12 +148,29 @@ object Panel {
   def kernel(df: DataFrame, key: String, orderBy: Option[String], reads: Seq[String],
              appends: Seq[StructField])(f: Group => Emit): DataFrame = {
     val codec = new Codec(df.schema, reads, appends)
+    groups(df, key, orderBy, codec.schema)((_, rows) => codec(rows)(f))
+  }
+
+  /** The reduce form of [[kernel]]: the same exchange, sort, clustering
+    * and group decode, but `f` answers each group with zero or more rows
+    * of the `out` columns (values of their external types), emitted
+    * after the group's `key`, which keeps the input's type.
+    */
+  def reduce(df: DataFrame, key: String, orderBy: Option[String], reads: Seq[String],
+             out: Seq[StructField])(f: Group => Seq[Row]): DataFrame = {
+    val at = reads.map(df.schema.fieldIndex).toArray
+    groups(df, key, orderBy, StructType(df.schema(key) +: out)) { (k, rows) =>
+      f(new Group(rows.toArray, at)).iterator.map(r => Row.fromSeq(k.get(0) +: r.toSeq))
+    }
+  }
+
+  private def groups(df: DataFrame, key: String, orderBy: Option[String], schema: StructType)
+                    (run: (Row, Iterator[Row]) => Iterator[Row]): DataFrame = {
     val grouped = Shuffle.by(df, col(key)).groupBy(col(key))
       .as[Row, Row](Encoders.row(StructType(Seq(df.schema(key)))), Encoders.row(df.schema))
-    val run = (_: Row, rows: Iterator[Row]) => codec(rows)(f)
     orderBy match {
-      case Some(o) => grouped.flatMapSortedGroups(col(o))(run)(Encoders.row(codec.schema))
-      case None => grouped.flatMapGroups(run)(Encoders.row(codec.schema))
+      case Some(o) => grouped.flatMapSortedGroups(col(o))(run)(Encoders.row(schema))
+      case None => grouped.flatMapGroups(run)(Encoders.row(schema))
     }
   }
 
@@ -219,6 +226,8 @@ object Panel {
     def nulls(c: Int): Array[Boolean] = Array.tabulate(n)(rows(_).isNullAt(at(c)))
     def doubles(c: Int): Array[Double] = Array.tabulate(n)(num(_, c).doubleValue)
     def longs(c: Int): Array[Long] = Array.tabulate(n)(num(_, c).longValue)
+    /** Column `c`'s cells as the rows hold them (null where null). */
+    def cells(c: Int): Array[Any] = Array.tabulate(n)(rows(_).get(at(c)))
     private def num(r: Int, c: Int): Number =
       if (rows(r).isNullAt(at(c))) Int.box(0) else rows(r).get(at(c)).asInstanceOf[Number]
   }

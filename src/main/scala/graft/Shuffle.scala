@@ -35,6 +35,12 @@ object Shuffle {
     parts(advisoryBytes).max(floor).min(maxPartitions).max(1).toInt
   }
 
+  /** Whether an input of `sizeInBytes` is one task's worth: at most AQE's
+    * minimum partition size, which [[width]] gives one partition.
+    */
+  def oneTask(sizeInBytes: BigInt, conf: SQLConf): Boolean =
+    sizeInBytes <= conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+
   /** The exchange width for `df`. */
   def width(df: DataFrame): Int = {
     val conf = df.sparkSession.sessionState.conf

@@ -110,8 +110,7 @@ object SparkEntry {
     "q_msum" -> scanQ("msum_5", UnitScan.MovingSum(5)),
     "q_rollmax" -> scanQ("rollmax_4", UnitScan.RollMax(4)),
     // r9: outlier-robust rolling smoother (pandas rolling(7).median())
-    "q_rolling_median" -> colQ("rmed",
-      round(TemporalOps.rollingMedian(col("value"), 7), 6)),
+    "q_rolling_median" -> scanRoundQ("rmed", UnitScan.RollingMedian(7)),
     "q_mean" -> scanQ("mean_val", UnitScan.Mean),
     "q_demean" -> scanQ("demeaned", UnitScan.Demean),
     // r8 extensions: quantile clip + outlier-insensitive scaling, both

@@ -1,34 +1,35 @@
 package graft.ops
 
 import graft.Panel
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import graft.functions.SparkRound
+import java.math.BigInteger
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{CheckOverflowInSum, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Per-unit time-series diagnostics (SURVEY §2.5) that emit one row per
   * unit (or per unit and lag): ACF/PACF, the seasonal-naive backtest,
   * the runs, Mann–Kendall and Theil–Sen tests, the dominant period, the
-  * seasonal/trend strength and the changepoint argmax — plus the rolling
-  * median, a trailing-window percentile that is not a wire step. Every
-  * per-unit series step of the reference (lag, moving frames, cweq,
-  * onset, entropy, the multi-lag, …) and the extensions winsorize,
-  * robust_scale, ewma, cusum, decompose, trend and rolling_corr run as
-  * one per-unit scan, [[UnitScan]].
+  * seasonal/trend strength and the changepoint argmax. Every per-unit
+  * series step (lag, moving frames, cweq, onset, entropy, the
+  * multi-lag, the rolling median, …) runs as one per-unit scan,
+  * [[UnitScan]].
+  *
+  * Plan shape: each diagnostic is one [[Panel.reduce]] on `unit_id`
+  * sorted by month (one exchange, one sort, one grouped map) that
+  * reduces a unit's values in month order to its statistics; the closed
+  * forms over them stay `select`s, so their rounding and null rules are
+  * Spark's. Values equal the SQL formulations the oracle mirrors (the
+  * test-side `DiagnosticReference`) bit for bit: `value` is read as a
+  * double, observed when neither null nor NaN; sums start from 0.0;
+  * sorts and comparisons are SQL's; a fixing, a long sum and a
+  * decimal(38,0) sum raise under ANSI and otherwise saturate, wrap or
+  * null as Spark's do. Theil–Sen and runs drop a null `unit_id`.
   */
 object TemporalOps {
-  private def w = Panel.w
-
-  /** Rolling MEDIAN over trailing `t` rows (min_periods=0, expanding
-    * at the series start) — the outlier-robust smoother pandas
-    * `rolling(t).median()` provides where the moving average chases
-    * spikes. Same shared unit partitioning as every temporal op; the
-    * exact interpolated percentile over a ≤t-row frame is
-    * engine-portable (quantile_cont parity).
-    */
-  def rollingMedian(c: Column, t: Int): Column = {
-    require(t >= 1, s"rollingMedian requires t >= 1, got $t")
-    percentile(c, lit(0.5)).over(Panel.trailing(t))
-  }
+  private val T = Panel.TimeCol
+  private val U = Panel.UnitCol
 
   /** h² as a rational u/d (d = 10^s, s ≤ 12), shared by the batch
     * operator, the streaming twin and the oracle generator so all
@@ -50,56 +51,80 @@ object TemporalOps {
       .movePointRight(s)))
   }
 
+  /** One unit's rows in month order: `x` read as a double (`nul`: SQL
+    * null), and the `month_id` cells.
+    */
+  private final class Series(val group: Panel.Group) {
+    val n: Int = group.n
+    val x: Array[Double] = group.doubles(0)
+    val nul: Array[Boolean] = group.nulls(0)
+    def month: Array[Any] = group.cells(1)
+    /** Whether row `i` holds an observed value (neither null nor NaN). */
+    def ok(i: Int): Boolean = !nul(i) && !java.lang.Double.isNaN(x(i))
+    /** The observed rows, in month order. */
+    lazy val obs: Array[Int] = (0 until n).filter(ok).toArray
+  }
+
+  private def longs(names: String*): Seq[StructField] = names.map(StructField(_, LongType))
+
+  /** One [[Panel.reduce]] per unit, in month order, over `valueCol` read
+    * as a double: `f` answers each unit with rows of the `out` columns.
+    */
+  private def perUnit(df: DataFrame, valueCol: String, out: Seq[StructField])
+                     (f: Series => Seq[Row]): DataFrame =
+    Panel.reduce(UnitScan.asDouble(df, valueCol, "a per-unit diagnostic"), U, Some(T),
+      Seq(valueCol, T), out)(g => f(new Series(g)))
+
+  private def ansi(df: DataFrame): Boolean = df.sparkSession.sessionState.conf.ansiEnabled
+
+  /** The lag-`l` pair statistics of one unit, for the [[acfOf]] closed
+    * form: the pair count n (as a double) and the sums of x, y, x², y²
+    * and xy over the pairs where both the value and its lag (positional
+    * over the unit's rows) are observed, null where there is no pair.
+    */
+  private def pairStats(s: Series, l: Int): Seq[Any] = {
+    var (n, sx, sy, sxx, syy, sxy) = (0L, 0.0, 0.0, 0.0, 0.0, 0.0)
+    for (i <- l until s.n if s.ok(i) && s.ok(i - l)) {
+      val (x, y) = (s.x(i), s.x(i - l))
+      n += 1; sx += x; sy += y; sxx += x * x; syy += y * y; sxy += x * y
+    }
+    n.toDouble +: (if (n == 0) Seq.fill(5)(null) else Seq(sx, sy, sxx, syy, sxy))
+  }
+
+  private def pairFields(suffix: String): Seq[StructField] =
+    StructField("n" + suffix, DoubleType, nullable = false) +:
+      Seq("sx", "sy", "sxx", "syy", "sxy").map(c => StructField(c + suffix, DoubleType))
+
+  /** The Pearson ratio over [[pairStats]]: both variance terms rounded
+    * 1e-9 before the ratio, the ratio rounded 1e-6; null under 2 pairs or
+    * on a variance ≤ 0.
+    */
+  private def acfOf(suffix: String): Column = {
+    def c(name: String) = col(name + suffix)
+    val n = c("n")
+    val vx = round(n * c("sxx") - c("sx") * c("sx"), 9)
+    val vy = round(n * c("syy") - c("sy") * c("sy"), 9)
+    when(n < 2.0 || vx <= 0.0 || vy <= 0.0, lit(null).cast("double"))
+      .otherwise(round(round(n * c("sxy") - c("sx") * c("sy"), 9) / sqrt(vx * vy), 6))
+  }
+
   /** Autocorrelation function — the seasonality/persistence diagnostic:
     * for each lag 1..maxLag, the Pearson correlation between the
     * unit's series and its own l-step lag over the overlapping pairs.
     * One output row per (unit, lag); lags with < 2 complete pairs or
     * zero variance on either side report null.
     *
-    * Scale shape: the lagged pairs and all six sufficient statistics
-    * per lag ride windows on the ONE shared unit partitioning (the
-    * family's single shuffle); the per-unit reduction to one row is a
-    * row_number on the same spec, and the lag dimension is an in-plan
-    * posexplode of a maxLag-wide array — no joins, no extra passes.
-    *
-    * Determinism: the [[UnitScan.RollingCorr]] discipline — explicit sums, both
-    * variance terms rounded 1e-9 before the ratio, output rounded 1e-6.
+    * Determinism: the [[UnitScan.RollingCorr]] discipline — explicit
+    * month-order sums, both variance terms rounded 1e-9 before the
+    * ratio, output rounded 1e-6.
     *
     * @return (unit_id, lag, n_pairs, acf)
     */
   def acf(df: DataFrame, valueCol: String, maxLag: Int): DataFrame = {
     require(maxLag >= 1, s"maxLag must be >= 1, got $maxLag")
-    val wAll = Window.partitionBy(Panel.UnitCol)
-    val x = col(valueCol)
-    val lagged = (1 to maxLag).foldLeft(df) { (d, l) =>
-      d.withColumn(s"__y$l", lag(x, l).over(w))
-    }
-    val stats = (1 to maxLag).foldLeft(lagged) { (d, l) =>
-      val y = col(s"__y$l")
-      val ok = x.isNotNull && !isnan(x) && y.isNotNull && !isnan(y)
-      val n = count(when(ok, 1)).over(wAll).cast("double")
-      val sx = sum(when(ok, x)).over(wAll)
-      val sy = sum(when(ok, y)).over(wAll)
-      val sxx = sum(when(ok, x * x)).over(wAll)
-      val syy = sum(when(ok, y * y)).over(wAll)
-      val sxy = sum(when(ok, x * y)).over(wAll)
-      val vx = round(n * sxx - sx * sx, 9)
-      val vy = round(n * syy - sy * sy, 9)
-      d.withColumn(s"__acf$l",
-        struct(n.cast("long").as("n_pairs"),
-          when(n < 2.0 || vx <= 0.0 || vy <= 0.0, lit(null).cast("double"))
-            .otherwise(round(round(n * sxy - sx * sy, 9) / sqrt(vx * vy), 6))
-            .as("acf")))
-    }
-    stats
-      .withColumn("__rn", row_number().over(
-        w.orderBy(col(Panel.TimeCol))))
-      .filter(col("__rn") === 1)
-      .select(col(Panel.UnitCol),
-        posexplode(array((1 to maxLag).map(l => col(s"__acf$l")): _*))
-          .as(Seq("__p", "__s")))
-      .select(col(Panel.UnitCol), (col("__p") + 1).cast("int").as("lag"),
-        col("__s.n_pairs").as("n_pairs"), col("__s.acf").as("acf"))
+    perUnit(df, valueCol, StructField("lag", IntegerType, nullable = false) +: pairFields("")) { s =>
+      (1 to maxLag).map(l => Row.fromSeq(l +: pairStats(s, l)))
+    }.select(col(U), col("lag"), col("n").cast("long").as("n_pairs"), acfOf("").as("acf"))
   }
 
   /** Partial autocorrelation (lags 1..3) via the Durbin–Levinson
@@ -116,12 +141,11 @@ object TemporalOps {
     * @return (unit_id, lag, pacf)
     */
   def pacf(df: DataFrame, valueCol: String): DataFrame = {
-    val a = acf(df, valueCol, maxLag = 3)
-    val wide = a.groupBy(col(Panel.UnitCol))
-      .agg(max(when(col("lag") === 1, col("acf"))).as("__r1"),
-        max(when(col("lag") === 2, col("acf"))).as("__r2"),
-        max(when(col("lag") === 3, col("acf"))).as("__r3"))
-    val r1 = col("__r1"); val r2 = col("__r2"); val r3 = col("__r3")
+    val lags = 1 to 3
+    val wide = perUnit(df, valueCol, lags.flatMap(l => pairFields(l.toString))) { s =>
+      Seq(Row.fromSeq(lags.flatMap(pairStats(s, _))))
+    }
+    val Seq(r1, r2, r3) = lags.map(l => acfOf(l.toString))
     val den2 = lit(1.0) - r1 * r1
     val phi22 = (r2 - r1 * r1) / den2
     val phi21 = r1 * (lit(1.0) - phi22)
@@ -132,10 +156,8 @@ object TemporalOps {
       .otherwise(round(phi22, 6))
     val p3 = when(den2 === 0.0 || den3 === 0.0, lit(null).cast("double"))
       .otherwise(round(phi33, 6))
-    wide.select(col(Panel.UnitCol),
-        posexplode(array(p1, p2, p3)).as(Seq("__p", "pacf")))
-      .select(col(Panel.UnitCol), (col("__p") + 1).cast("int").as("lag"),
-        col("pacf"))
+    wide.select(col(U), posexplode(array(p1, p2, p3)).as(Seq("__p", "pacf")))
+      .select(col(U), (col("__p") + 1).cast("int").as("lag"), col("pacf"))
   }
 
   /** Seasonal-naive forecast backtest: predict x(t) = x(t − period)
@@ -143,28 +165,31 @@ object TemporalOps {
     * exists — the baseline any real forecaster must beat, and the
     * drift smoke test (a regime change blows the score up). Per-row
     * terms 2|f−a|/(|f|+|a|) (0 when both sides are 0) are fixed to
-    * 1e-9 integers before the per-unit mean — one lag window on the
-    * shared unit partitioning, exact integer aggregation.
+    * 1e-9 integers before the per-unit mean — exact integer
+    * aggregation. A unit with no forecast month is absent.
     *
     * @return (unit_id, n_eval, smape) — smape in [0, 2]
     */
   def forecastBacktest(df: DataFrame, valueCol: String,
                        period: Int = 7): DataFrame = {
     require(period >= 1, s"period must be >= 1, got $period")
-    val x = col(valueCol)
-    val f = lag(x, period).over(w)
-    val ok = x.isNotNull && !isnan(x) && f.isNotNull && !isnan(f)
-    val denom = abs(f) + abs(x)
-    val term = when(denom === 0.0, lit(0.0))
-      .otherwise(lit(2.0) * abs(f - x) / denom)
-    df.select(col(Panel.UnitCol),
-        when(ok, round(term * 1e9).cast("long")).as("__t9"))
-      .filter(col("__t9").isNotNull)
-      .groupBy(col(Panel.UnitCol))
-      .agg(count(lit(1)).as("n_eval"),
-        round(sum(col("__t9")).cast("double") / count(lit(1)) / 1e9, 6)
-          .as("smape"))
+    val a = ansi(df)
+    perUnit(df, valueCol, Seq(StructField("n_eval", LongType, nullable = false),
+        StructField("__s9", LongType))) { s =>
+      val t9 = (period until s.n).filter(i => s.ok(i) && s.ok(i - period)).map { i =>
+        val (x, f) = (s.x(i), s.x(i - period))
+        val denom = math.abs(f) + math.abs(x)
+        UnitScan.roundLong((if (denom == 0.0) 0.0 else 2.0 * math.abs(f - x) / denom) * 1e9, a)
+      }
+      if (t9.isEmpty) Nil else Seq(Row(t9.size.toLong, t9.reduce(UnitScan.plus(_, _, a))))
+    }.select(col(U), col("n_eval"),
+      round(col("__s9").cast("double") / col("n_eval") / 1e9, 6).as("smape"))
   }
+
+  /** The positions (0-based) of `n` sorted items' middle order
+    * statistics: one when `n` is odd, two when even, none when 0.
+    */
+  private def middle(n: Int): Seq[Int] = if (n == 0) Nil else ((n + 1) / 2 to (n + 2) / 2).map(_ - 1)
 
   /** Wald–Wolfowitz RUNS test per unit — "is the series random noise
     * around its level, or does it streak": rows are classified
@@ -175,96 +200,83 @@ object TemporalOps {
     * persistence/regimes; too many means oscillation.
     *
     * Determinism: the median is the average of the explicit middle
-    * order statistics (the [[theilSen]] discipline); a, b, R are exact
-    * integers; z is one closed form, 1e-6-rounded.
+    * order statistics (the [[theilSen]] discipline, ties by month); a,
+    * b, R are exact integers; z is one closed form, 1e-6-rounded. A
+    * unit whose every value sits at its median is absent.
     *
     * @return (unit_id, n_above, n_below, runs, z)
     */
   def runsTest(df: DataFrame, valueCol: String): DataFrame = {
-    val x = col(valueCol)
-    val obs = df.filter(x.isNotNull && !isnan(x))
-      .select(col(Panel.UnitCol), col(Panel.TimeCol), x.as("__v"))
-    val wS = Window.partitionBy(Panel.UnitCol)
-      .orderBy(col("__v"), col(Panel.TimeCol))
-    val wA = Window.partitionBy(Panel.UnitCol)
-    val med = obs
-      .withColumn("__rn", row_number().over(wS))
-      .withColumn("__nn", count(lit(1)).over(wA))
-      .filter(col("__rn") === floor((col("__nn") + 1) / lit(2.0)) ||
-        col("__rn") === floor((col("__nn") + 2) / lit(2.0)))
-      .groupBy(col(Panel.UnitCol))
-      .agg((sum(col("__v")) / count(lit(1))).as("__med"))
-    val signed = obs.join(med, Panel.UnitCol)
-      .filter(col("__v") =!= col("__med"))
-      .withColumn("__s", (col("__v") > col("__med")).cast("int"))
-    val wT = Window.partitionBy(Panel.UnitCol).orderBy(col(Panel.TimeCol))
-    val st = signed
-      .withColumn("__chg",
-        when(lag(col("__s"), 1).over(wT).isNull ||
-          lag(col("__s"), 1).over(wT) =!= col("__s"), 1L).otherwise(0L))
-      .groupBy(col(Panel.UnitCol))
-      .agg(sum(col("__s").cast("long")).as("n_above"),
-        sum(lit(1L) - col("__s")).as("n_below"),
-        sum(col("__chg")).as("runs"))
+    val u = perUnit(df.filter(col(U).isNotNull), valueCol, longs("n_above", "n_below", "runs")) { s =>
+      val byValue = s.obs.sortWith((i, j) => UnitScan.sqlOrder.compare(s.x(i), s.x(j)) < 0)
+      val mid = middle(byValue.length).map(k => s.x(byValue(k)))
+      val med = mid.foldLeft(0.0)(_ + _) / mid.size
+      val above = s.obs.filterNot(i => UnitScan.sqlEq(s.x(i), med))
+        .map(i => UnitScan.sqlGreater(s.x(i), med))
+      if (above.isEmpty) Nil
+      else Seq(Row(above.count(identity).toLong, above.count(!_).toLong,
+        1L + above.indices.tail.count(k => above(k) != above(k - 1))))
+    }
     val a = col("n_above"); val b = col("n_below")
     val muR = lit(2.0) * a * b / (a + b) + 1.0
     val sigR = sqrt(lit(2.0) * a * b * (lit(2.0) * a * b - a - b) /
       ((a + b) * (a + b) * (a + b - 1)).cast("double"))
-    st.select(col(Panel.UnitCol), a, b, col("runs"),
+    u.select(col(U), a, b, col("runs"),
       when(a === 0 || b === 0 || (a + b) < 2, lit(null).cast("double"))
         .otherwise(round((col("runs") - muR) / sigR, 6)).as("z"))
   }
 
   /** Dominant PERIOD per unit — the argmax of the discrete-Fourier
     * power spectrum over frequencies k = 1..⌊n/2⌋ (the "what cycle
-    * does this series actually run on" answer [[UnitScan.Decompose]] makes the
-    * caller guess): power(k) = (Σxₜ·cos(2πkt/n))² + (Σxₜ·sin(2πkt/n))².
+    * does this series actually run on" answer [[UnitScan.Decompose]]
+    * makes the caller guess): power(k) = (Σxₜ·cos(2πkt/n))² +
+    * (Σxₜ·sin(2πkt/n))², over the unit's observed values with t their
+    * rank in month order. A one-value unit tries k = 1 and 0 (SQL's
+    * descending `sequence(1, 0)`), so its period divides by zero.
     *
-    * Scale shape: an in-plan explode of ⌊n/2⌋ frequencies per row —
-    * n·⌊n/2⌋ terms per unit through one (unit, k) aggregation, all on
-    * series-bounded cardinalities. Determinism: each trig factor is
-    * rounded 1e-9 BEFORE the multiply (collapsing libm's cross-engine
-    * ULP — the Survival log discipline), each term fixed to 1e-9
-    * integers before the sum, the power to 1e-6 integers before the
-    * struct-max argmax (smallest-k tie-break).
+    * Determinism: each trig factor is rounded 1e-9 BEFORE the multiply
+    * (collapsing libm's cross-engine ULP — the Survival log
+    * discipline), each term fixed to 1e-9 integers before the sum, the
+    * power to 1e-6 integers before the argmax (smallest-k tie-break).
     *
     * @return (unit_id, n, k, period, power) — period = n/k
     */
   def dominantPeriod(df: DataFrame, valueCol: String): DataFrame = {
-    val x = col(valueCol)
-    val wAll = Window.partitionBy(Panel.UnitCol)
-    val obs = df.filter(x.isNotNull && !isnan(x))
-      .select(col(Panel.UnitCol), x.as("__v"),
-        (row_number().over(w) - 1).cast("long").as("__t"),
-        count(lit(1)).over(wAll).as("__n"))
-    val twoPi = lit(2.0 * math.Pi)
-    val ang = twoPi * col("k") * col("__t") / col("__n")
-    val terms = obs
-      .select(col(Panel.UnitCol), col("__v"), col("__t"), col("__n"),
-        explode(sequence(lit(1L),
-          floor(col("__n") / lit(2.0)).cast("long"))).as("k"))
-      .select(col(Panel.UnitCol), col("__n"), col("k"),
-        round(col("__v") * round(cos(ang), 9) * 1e9).cast("long").as("__c9"),
-        round(col("__v") * round(sin(ang), 9) * 1e9).cast("long").as("__s9"))
-    val g = terms.groupBy(col(Panel.UnitCol), col("__n"), col("k"))
-      .agg(sum(col("__c9")).as("__c"), sum(col("__s9")).as("__s"))
-    val p9 = round(((col("__c") / 1e9) * (col("__c") / 1e9) +
-      (col("__s") / 1e9) * (col("__s") / 1e9)) * 1e6).cast("long")
-    g.select(col(Panel.UnitCol), col("__n"), col("k"), p9.as("__p9"))
-      .groupBy(col(Panel.UnitCol))
-      .agg(max(struct(col("__p9"), (-col("k")).as("__nk"),
-        col("k").as("__k"), col("__n").as("__nn"))).as("__b"))
-      .select(col(Panel.UnitCol), col("__b.__nn").as("n"),
-        col("__b.__k").as("k"),
-        round(col("__b.__nn").cast("double") / col("__b.__k"), 6)
-          .as("period"),
-        round(col("__b.__p9") / 1e6, 6).as("power"))
+    val a = ansi(df)
+    val twoPi = 2.0 * math.Pi
+    perUnit(df, valueCol, longs("n", "k", "__p9")) { s =>
+      val v = s.obs.map(s.x)
+      val n = v.length.toLong
+      def fixed(k: Long, trig: Double => Double) = v.indices.map { t =>
+        UnitScan.roundLong(v(t) * SparkRound(trig(twoPi * k * t / n), 9) * 1e9, a)
+      }.foldLeft(0L)(UnitScan.plus(_, _, a))
+      val p9 = (if (n >= 2) 1L to n / 2 else if (n == 1) Seq(1L, 0L) else Nil).map { k =>
+        val (c, sn) = (fixed(k, math.cos) / 1e9, fixed(k, math.sin) / 1e9)
+        UnitScan.roundLong((c * c + sn * sn) * 1e6, a) -> k
+      }
+      p9.reduceOption((x, y) => if (y._1 > x._1 || (y._1 == x._1 && y._2 < x._2)) y else x)
+        .map { case (p, k) => Row(n, k, p) }.toSeq
+    }.select(col(U), col("n"), col("k"),
+      round(col("n").cast("double") / col("k"), 6).as("period"),
+      round(col("__p9") / 1e6, 6).as("power"))
   }
 
-  /** Seasonal/trend STRENGTH per unit from the [[UnitScan.Decompose]] components
-    * (Hyndman's FeatureS/T): F_t = max(0, 1 − Var(R)/Var(T+R)) and
-    * F_s = max(0, 1 − Var(R)/Var(S+R)) — "how much of the series the
-    * trend/seasonal structure explains" (≈0 noise, →1 structured).
+  private val Dec2 = "decimal(38,0)"
+  private val Big38 = BigInteger.TEN.pow(38)
+
+  /** A decimal(38,0) `sum` of exact integers as Spark ends it: null out
+    * of range, or Spark's overflow error under ANSI.
+    */
+  private def decSum(x: BigInteger, ansi: Boolean): java.math.BigDecimal =
+    if (x.abs.compareTo(Big38) < 0) new java.math.BigDecimal(x)
+    else CheckOverflowInSum(Literal(null, DecimalType(38, 0)), DecimalType(38, 0), !ansi, null)
+      .eval().asInstanceOf[java.math.BigDecimal]
+
+  /** Seasonal/trend STRENGTH per unit from the [[UnitScan.Decompose]]
+    * components (Hyndman's FeatureS/T): F_t = max(0, 1 − Var(R)/Var(T+R))
+    * and F_s = max(0, 1 − Var(R)/Var(S+R)) — "how much of the series the
+    * trend/seasonal structure explains" (≈0 noise, →1 structured). The
+    * decomposition and the reduction run in the same kernel.
     *
     * Determinism: the components are fixed to 1e-6 integers per row
     * (collapsing the decomposition's sub-1e-6 summation-order noise
@@ -276,102 +288,93 @@ object TemporalOps {
     */
   def seasonalStrength(df: DataFrame, valueCol: String,
                        period: Int, half: Int): DataFrame = {
-    val d = UnitScan(df.select(col(Panel.TimeCol), col(Panel.UnitCol), col(valueCol).as("value")),
-      Seq(UnitScan.Decompose(period, half)))
-    val (x, trend, seasonal) = (col("value"), col("trend"), col("seasonal"))
-    val comp = d.select(col(Panel.UnitCol),
-        round((x - trend - seasonal) * 1e6).cast("long").as("__r6"),
-        round((x - trend) * 1e6).cast("long").as("__dt6"),
-        round((x - seasonal) * 1e6).cast("long").as("__ds6"))
-      .filter(col("__r6").isNotNull)
-    def ss(c: String) =
-      (count(lit(1)).cast(Dec2) * sum(col(c).cast(Dec2) * col(c)) -
-        sum(col(c).cast(Dec2)) * sum(col(c).cast(Dec2)))
-    val g = comp.groupBy(col(Panel.UnitCol))
-      .agg(count(lit(1)).as("n"), ss("__r6").as("__vr"),
-        ss("__dt6").as("__vdt"), ss("__ds6").as("__vds"))
+    val a = ansi(df)
+    val step = UnitScan.Decompose(period, half)
+    val comps = Seq("r", "dt", "ds")
+    val sums = comps.flatMap(c => Seq(s"__s_$c", s"__q_$c")).map(StructField(_, DecimalType(38, 0)))
+    val in = df.select(col(T), col(U), col(valueCol).as("value"))
+    val g = perUnit(in, "value", StructField("n", LongType, nullable = false) +: sums) { s =>
+      val scan = new UnitScan.Series(s.group, Seq("value", T), step.appends.map(_.name).toArray, a)
+      scan.run(step)
+      def comp(j: Int, i: Int) = if (scan.outNul(j)(i)) None else Some(scan.outV(j)(i))
+      val rows = (0 until s.n).flatMap { i =>
+        for (t <- comp(0, i); se <- comp(1, i) if !s.nul(i)) yield {
+          val x = s.x(i)
+          Seq(x - t - se, x - t, x - se).map(d => BigInteger.valueOf(UnitScan.roundLong(d * 1e6, a)))
+        }
+      }
+      if (rows.isEmpty) Nil
+      else Seq(Row.fromSeq(rows.size.toLong +: comps.indices.flatMap { c =>
+        val xs = rows.map(_(c))
+        Seq(decSum(xs.reduce(_ add _), a), decSum(xs.map(x => x.multiply(x)).reduce(_ add _), a))
+      }))
+    }
+    def ss(c: String) = col("n").cast(Dec2) * col(s"__q_$c") - col(s"__s_$c") * col(s"__s_$c")
     def f(v: String) = when(col(v) === 0, lit(null).cast("double"))
       .otherwise(round(greatest(lit(0.0),
         lit(1.0) - col("__vr").cast("double") / col(v).cast("double")), 6))
-    g.select(col(Panel.UnitCol), col("n"),
-      f("__vds").as("f_trend"), f("__vdt").as("f_seasonal"))
+    g.select(col(U), col("n"), ss("r").as("__vr"), ss("dt").as("__vdt"), ss("ds").as("__vds"))
+      .select(col(U), col("n"), f("__vds").as("f_trend"), f("__vdt").as("f_seasonal"))
   }
 
-  private val Dec2 = "decimal(38,0)"
+  /** Mann–Kendall S = Σ_{i<j} sign(xⱼ − xᵢ) over `xs` in month order
+    * (equal values and NaN differences contribute 0).
+    */
+  private[graft] def mannKendallS(xs: Array[Double]): Long = {
+    var s = 0L
+    for (i <- xs.indices; j <- i + 1 until xs.length) {
+      val d = xs(j) - xs(i)
+      if (d > 0) s += 1 else if (d < 0) s -= 1
+    }
+    s
+  }
 
   /** Mann–Kendall trend test per unit: S = Σ_{i<j} sign(xⱼ − xᵢ) and
     * Kendall's tau = S / (n(n−1)/2) — the nonparametric "IS there a
     * monotone trend" decision that pairs with [[theilSen]]'s "how
-    * steep" estimate (same pair generation, same unit-keyed self-join
-    * bounded by the series length). S is an exact integer; tau one
-    * division. Sign ties (equal values) contribute 0, the standard
-    * treatment.
+    * steep" estimate (the same pairs, in the unit's kernel: O(T²) sign
+    * comparisons per unit, T bounded by the panel's months). S is an
+    * exact integer; tau one division. Sign ties (equal values)
+    * contribute 0, the standard treatment. A unit with fewer than two
+    * observed values is absent.
     *
     * @return (unit_id, n, s, tau)
     */
   def mannKendall(df: DataFrame, valueCol: String): DataFrame = {
-    val x = col(valueCol)
-    val obs = df.filter(x.isNotNull && !isnan(x))
-      .select(col(Panel.UnitCol), col(Panel.TimeCol), x.as("__v"))
-    // bounded single-pass aggregate (graft.ops.MannKendall — r15)
-    // instead of the former T²-row self-join: same pairs, same sign
-    // comparisons, same associative ±1 sum — identical S — with one
-    // exchange and no pair table. Single-observation units produced
-    // no pair rows under the inner join (absent from the output), so
-    // the n ≥ 2 filter preserves the exact row set.
-    val mkS = udaf(new graft.ops.MannKendall.MkS)
-    val np = (col("__mk.n") * (col("__mk.n") - 1) / lit(2L)).cast("long")
-    obs.groupBy(col(Panel.UnitCol))
-      .agg(mkS(col(Panel.TimeCol).cast("long"), col("__v")).as("__mk"))
-      .filter(col("__mk.n") >= 2)
-      .select(col(Panel.UnitCol), col("__mk.n").as("n"),
-        col("__mk.s").as("s"),
-        round(col("__mk.s") / np, 6).as("tau"))
+    val np = (col("n") * (col("n") - 1) / lit(2L)).cast("long")
+    perUnit(df, valueCol, longs("n", "s")) { s =>
+      if (s.obs.length < 2) Nil else Seq(Row(s.obs.length.toLong, mannKendallS(s.obs.map(s.x))))
+    }.select(col(U), col("n"), col("s"), round(col("s") / np, 6).as("tau"))
   }
 
   /** Theil–Sen robust trend: per unit, the MEDIAN of all pairwise
     * slopes (vⱼ−vᵢ)/(tⱼ−tᵢ) — the outlier-proof companion of
     * [[UnitScan.Trend]]'s OLS (one wild month barely moves it; breakdown
-    * point 29%). The pair generation is a unit-keyed self-join (O(T²)
+    * point 29%). The pairs are formed inside the unit's kernel (O(T²)
     * per unit — T is the series length, bounded and small by the panel
-    * contract, never corpus-sized), so the quadratic blowup stays
-    * inside one unit's partition and scales out across units.
+    * contract, never corpus-sized).
     *
-    * Determinism: the median is taken as the average of the explicit
-    * middle order statistics (row_number over the unit's sorted
-    * slopes; one value when odd, two when even) rather than an
-    * engine-native percentile — both engines then average the SAME two
-    * floats, and two-term IEEE addition is commutative, so no
-    * interpolation-formula or summation-order variance exists.
+    * Determinism: the median is the average of the explicit middle
+    * order statistics (slopes in SQL order, ties by the pair's months),
+    * not an engine-native percentile: both engines average the SAME one
+    * or two floats. A unit with fewer than two observed values is absent.
     *
     * @return (unit_id, n_pairs, ts_slope)
     */
-  def theilSen(df: DataFrame, valueCol: String): DataFrame = {
-    val x = col(valueCol)
-    val a = df.filter(x.isNotNull && !isnan(x))
-      .select(col(Panel.UnitCol), col(Panel.TimeCol).as("__m1"),
-        x.as("__v1"))
-    val b = df.filter(x.isNotNull && !isnan(x))
-      .select(col(Panel.UnitCol), col(Panel.TimeCol).as("__m2"),
-        x.as("__v2"))
-    val pairs = a.join(b, Seq(Panel.UnitCol))
-      .filter(col("__m1") < col("__m2"))
-      .select(col(Panel.UnitCol),
-        ((col("__v2") - col("__v1")) /
-          (col("__m2") - col("__m1")).cast("double")).as("__s"),
-        col("__m1"), col("__m2"))
-    val wS = Window.partitionBy(Panel.UnitCol)
-      .orderBy(col("__s"), col("__m1"), col("__m2"))
-    val wA = Window.partitionBy(Panel.UnitCol)
-    pairs
-      .withColumn("__rn", row_number().over(wS))
-      .withColumn("__np", count(lit(1)).over(wA))
-      .filter(col("__rn") === floor((col("__np") + 1) / lit(2.0)) ||
-        col("__rn") === floor((col("__np") + 2) / lit(2.0)))
-      .groupBy(col(Panel.UnitCol))
-      .agg(max(col("__np")).as("n_pairs"),
-        round(sum(col("__s")) / count(lit(1)), 6).as("ts_slope"))
-  }
+  def theilSen(df: DataFrame, valueCol: String): DataFrame =
+    perUnit(df.filter(col(U).isNotNull), valueCol, Seq(StructField("n_pairs", LongType),
+        StructField("__ssum", DoubleType), StructField("__scnt", LongType, nullable = false))) { s =>
+      val at = s.obs.filter(s.month(_) != null)
+      val m = s.month.map(t => if (t == null) 0L else t.asInstanceOf[Number].longValue)
+      val pairs = for (i <- at; j <- at if m(i) < m(j))
+        yield ((s.x(j) - s.x(i)) / (m(j) - m(i)).toDouble, m(i), m(j))
+      if (pairs.isEmpty) Nil
+      else {
+        val sorted = pairs.sorted(Ordering.Tuple3(UnitScan.sqlOrder, Ordering.Long, Ordering.Long))
+        val mid = middle(pairs.length).map(sorted(_)._1)
+        Seq(Row(pairs.length.toLong, mid.foldLeft(0.0)(_ + _), mid.size.toLong))
+      }
+    }.select(col(U), col("n_pairs"), round(col("__ssum") / col("__scnt"), 6).as("ts_slope"))
 
   /** Single most-likely level-shift changepoint per unit — the offline
     * companion of [[UnitScan.Cusum]]'s sequential drift flag: for every split
@@ -380,44 +383,35 @@ object TemporalOps {
     * and the argmax boundary is reported (the first step of binary
     * segmentation). All candidate statistics derive from ONE ordered
     * cumulative sum of 1e-9-FIXED INTEGER values (the fixed-cusum
-    * discipline: values quantize to longs at the scan, so the running
-    * sum is exact under ANY accumulation order — no cross-engine
-    * window-reassociation noise can exist, which is what lets the
-    * statistic survive the 1e-6 gate rounding by construction rather
-    * than by magnitude luck), the statistic is fixed to 1e-9 integers,
-    * and the argmax is a lexicographic struct-max with a
-    * smallest-month tie-break — engine- and layout-deterministic.
+    * discipline: the running sum is exact in any accumulation order, so
+    * the statistic survives the 1e-6 gate rounding by construction),
+    * the statistic is fixed to 1e-9 integers, and the argmax takes the
+    * largest statistic, the earliest month on a tie.
     *
     * @return (unit_id, n, cp_month, shift, stat) — cp_month is the
     *   LAST month of the left segment; shift = mean_R − mean_L
     */
   def changepoint(df: DataFrame, valueCol: String): DataFrame = {
-    val x = col(valueCol)
-    val ok = x.isNotNull && !isnan(x)
-    val x9 = when(ok, round(x * 1e9).cast("long"))
-    val wAll = Window.partitionBy(Panel.UnitCol)
-    val cSum9 = sum(x9).over(Panel.cumulative)
-    val tIdx = count(x9).over(Panel.cumulative)
-    val sTot9 = sum(x9).over(wAll)
-    val nTot = count(x9).over(wAll)
-    val meanL = cSum9.cast("double") / 1e9 / tIdx
-    val meanR = (sTot9 - cSum9).cast("double") / 1e9 / (nTot - tIdx)
-    val shift = meanR - meanL
-    val stat = abs(shift) *
-      sqrt((tIdx * (nTot - tIdx)).cast("double") / nTot)
-    df.select(col(Panel.UnitCol), col(Panel.TimeCol),
-        round(stat * 1e9).cast("long").as("__s9"),
-        round(shift * 1e9).cast("long").as("__d9"),
-        tIdx.as("__cpt"), nTot.as("__cpn"), ok.as("__ok"))
-      .filter(col("__ok") && col("__cpt") >= 1 && col("__cpt") < col("__cpn"))
-      .groupBy(col(Panel.UnitCol))
-      .agg(max(struct(col("__s9"), (-col(Panel.TimeCol)).as("__nm"),
-        col(Panel.TimeCol).as("__m"), col("__d9"), col("__cpn"))).as("__b"))
-      .select(col(Panel.UnitCol), col("__b.__cpn").as("n"),
-        col("__b.__m").as("cp_month"),
-        round(col("__b.__d9") / 1e9, 6).as("shift"),
-        round(col("__b.__s9") / 1e9, 6).as("stat"))
+    val a = ansi(df)
+    val out = longs("n") ++ Seq(StructField("cp_month", df.schema(T).dataType)) ++ longs("__d9", "__s9")
+    perUnit(df, valueCol, out) { s =>
+      val x9 = s.obs.map(i => UnitScan.roundLong(s.x(i) * 1e9, a))
+      val cum = x9.scanLeft(0L)(UnitScan.plus(_, _, a))
+      val (total, n) = (cum.last, x9.length.toLong)
+      val cands = (1 until x9.length).map { t =>
+        val meanL = cum(t).toDouble / 1e9 / t
+        val meanR = UnitScan.minus(total, cum(t), a).toDouble / 1e9 / (n - t)
+        val shift = meanR - meanL
+        val stat = math.abs(shift) * math.sqrt((t * (n - t)).toDouble / n)
+        (UnitScan.roundLong(stat * 1e9, a), UnitScan.roundLong(shift * 1e9, a), s.obs(t - 1))
+      }
+      if (cands.isEmpty) Nil
+      else {
+        val (s9, d9, i) = cands.reduce((p, q) => if (q._1 > p._1) q else p)
+        Seq(Row(n, s.month(i), d9, s9))
+      }
+    }.select(col(U), col("n"), col("cp_month"),
+      round(col("__d9") / 1e9, 6).as("shift"),
+      round(col("__s9") / 1e9, 6).as("stat"))
   }
-
-
 }

@@ -4,7 +4,7 @@ import graft.Panel
 import graft.functions.SparkRound
 import java.math.BigInteger
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Add, Cast, EvalMode, Expression, Literal, Subtract}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, NumericType, StructField}
 
@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, NumericTyp
   * applied per unit: lag, lead, delta, the moving frames, mean, cweq,
   * time_since, tick and onset (views_2.py), temporal entropy, the
   * multi-lag (tlag3d.py), fill and extrapolate (missing.py), and the
-  * extensions winsorize, robust_scale, ewma, cusum, decompose, trend
-  * and rolling_corr.
+  * extensions winsorize, robust_scale, ewma, cusum, decompose, trend,
+  * rolling_corr and the rolling median.
   *
   * Plan shape: one [[Panel.kernel]] on `unit_id`, sorted by month — one
   * input-sized exchange, one sort and one grouped map that reads each
@@ -97,6 +97,15 @@ object UnitScan {
   /** Max over the trailing `t` rows, min_periods=0 — views_2.py:337-352. */
   final case class RollMax(t: Int) extends Step {
     require(t >= 1, s"rollmax requires a window >= 1, got $t")
+  }
+
+  /** Spark's exact `percentile` at 0.5 of the non-null values over the
+    * trailing `t` rows (min_periods=0), null where there is none — the
+    * outlier-robust smoother pandas `rolling(t).median()` provides where
+    * the moving average chases spikes.
+    */
+  final case class RollingMedian(t: Int) extends Step {
+    require(t >= 1, s"rollingMedian requires t >= 1, got $t")
   }
 
   /** The unit's mean over all its rows, on every row (nulls skipped;
@@ -289,12 +298,7 @@ object UnitScan {
     */
   def apply(df: DataFrame, steps: Seq[Step]): DataFrame = {
     require(steps.nonEmpty, "a scan needs at least one step")
-    val in = df.schema.find(_.name == V).map(_.dataType) match {
-      case None | Some(DoubleType) => df
-      case Some(_: NumericType) => df.withColumn(V, col(V).cast(DoubleType))
-      case Some(t) => throw new IllegalArgumentException(
-        s"the per-unit scan reads a numeric `$V` column, got ${t.simpleString}")
-    }
+    val in = asDouble(df, V, "the per-unit scan")
     val cut = steps.indexWhere(seeded)
     if (cut < 0) scan(in, steps, seedMark = false)
     else {
@@ -303,6 +307,18 @@ object UnitScan {
       if (cut + 1 == steps.size) out else apply(out, steps.drop(cut + 1))
     }
   }
+
+  /** `df` with its column `c`, where it has one, read as a double: another
+    * numeric type is cast, anything else is rejected (`reader` names the
+    * operator in the error).
+    */
+  private[ops] def asDouble(df: DataFrame, c: String, reader: String): DataFrame =
+    df.schema.find(_.name == c).map(_.dataType) match {
+      case None | Some(DoubleType) => df
+      case Some(_: NumericType) => df.withColumn(c, col(c).cast(DoubleType))
+      case Some(t) => throw new IllegalArgumentException(
+        s"$reader reads a numeric `$c` column, got ${t.simpleString}")
+    }
 
   /** Adds `seed − 1` to the counts of the runs marked by the scan that
     * start at the panel's first kept month.
@@ -349,17 +365,46 @@ object UnitScan {
     }
   }
 
-  /** [[Panel.fix9]] of one value as Spark computes it: `round(x·1e9)`,
-    * then the double → long cast, which for NaN, ±Infinity and values
-    * outside the long range raises Spark's `CAST_OVERFLOW` error under
-    * ANSI and otherwise saturates (NaN to 0).
+  /** [[Panel.fix9]] of one value as Spark computes it. */
+  private def fix9(x: Double, ansi: Boolean): Long = roundLong(x * 1e9, ansi)
+
+  /** `round(x)` cast to long as Spark computes it: the double → long cast
+    * raises Spark's `CAST_OVERFLOW` error for NaN, ±Infinity and values
+    * outside the long range under ANSI, and otherwise saturates (NaN to 0).
     */
-  private def fix9(x: Double, ansi: Boolean): Long = {
-    val r = SparkRound(x * 1e9, 0)
+  private[ops] def roundLong(x: Double, ansi: Boolean): Long = {
+    val r = SparkRound(x, 0)
     if (r > -9.2e18 && r < 9.2e18) r.toLong
-    else Cast(Literal(r), LongType, None, if (ansi) EvalMode.ANSI else EvalMode.LEGACY)
-      .eval().asInstanceOf[Long]
+    else Cast(Literal(r), LongType, None, mode(ansi)).eval().asInstanceOf[Long]
   }
+
+  private def mode(ansi: Boolean) = if (ansi) EvalMode.ANSI else EvalMode.LEGACY
+
+  /** Spark's long `+` and `-` (a `sum`'s running total among them):
+    * two's-complement wrapping, or Spark's `ARITHMETIC_OVERFLOW` error
+    * under ANSI.
+    */
+  private[ops] def plus(a: Long, b: Long, ansi: Boolean): Long = exact(a, b, ansi)(Math.addExact, Add(_, _, _))
+  private[ops] def minus(a: Long, b: Long, ansi: Boolean): Long =
+    exact(a, b, ansi)(Math.subtractExact, Subtract(_, _, _))
+
+  private def exact(a: Long, b: Long, ansi: Boolean)(op: (Long, Long) => Long,
+                    expr: (Expression, Expression, EvalMode.Value) => Expression): Long =
+    try op(a, b) catch {
+      case _: ArithmeticException => expr(Literal(a), Literal(b), mode(ansi)).eval().asInstanceOf[Long]
+    }
+
+  /** SQL `x === y` on doubles: NaN equals NaN, −0.0 equals 0.0. */
+  private[ops] def sqlEq(x: Double, y: Double): Boolean =
+    x == y || (java.lang.Double.isNaN(x) && java.lang.Double.isNaN(y))
+
+  /** SQL ordering on doubles: NaN above everything, −0.0 equal to 0.0. */
+  private[ops] val sqlOrder: Ordering[Double] = (x, y) =>
+    if (sqlEq(x, y)) 0 else java.lang.Double.compare(x, y)
+
+  /** SQL `x > y` on doubles. */
+  private[graft] def sqlGreater(x: Double, y: Double): Boolean =
+    x != y && java.lang.Double.compare(x, y) > 0
 
   /** Spark's exact `percentile` of the sorted non-empty `xs` at `p`:
     * linear interpolation between the order statistics around
@@ -379,7 +424,7 @@ object UnitScan {
     * swaps them in. Appended columns (`outNames`) are kept by input row,
     * so a row a later step drops takes its appended values with it.
     */
-  private final class Series(g: Panel.Group, reads: Seq[String], outNames: Array[String],
+  private[ops] final class Series(g: Panel.Group, reads: Seq[String], outNames: Array[String],
                              ansi: Boolean) {
     private val readsValue = reads.contains(V)
     var v: Array[Double] = if (readsValue) g.doubles(reads.indexOf(V)) else new Array[Double](g.n)
@@ -420,14 +465,6 @@ object UnitScan {
     }
 
     private def slot(name: String): Int = outNames.indexOf(name)
-
-    /** SQL `x === y` on doubles. */
-    private def sqlEq(x: Double, y: Double): Boolean =
-      x == y || (java.lang.Double.isNaN(x) && java.lang.Double.isNaN(y))
-
-    /** SQL ordering on doubles: NaN above everything, −0.0 equal to 0.0. */
-    private def sqlGreater(x: Double, y: Double): Boolean =
-      x != y && java.lang.Double.compare(x, y) > 0
 
     /** Σ of `f(j)` over the rows `from..to` where it is defined, from
       * 0.0 in row order; None where no row is.
@@ -500,6 +537,11 @@ object UnitScan {
       case MovingSum(t) => frame(t, average = false)
       case MovingAverage(t) => frame(t, average = true)
       case RollMax(t) => rewrite(i => max(i - t + 1, i)(value))
+      case RollingMedian(t) => rewrite { i =>
+        val xs = (math.max(0, i - t + 1) to i).filterNot(nul).map(v)
+          .sorted(Ordering.Double.TotalOrdering).toArray
+        if (xs.isEmpty) None else Some(percentile(xs, 0.5))
+      }
       case Mean | Demean =>
         val mean = avg(0, n - 1)(value)
         rewrite(i => if (step == Mean) mean else for (x <- value(i); m <- mean) yield x - m)

@@ -18,7 +18,9 @@ import org.apache.spark.sql.execution.SparkPlan
   *   - a global `Sort` feeding something other than a bounded
   *     take — full-data single ordering;
   *   - single-partition `Exchange` (`SinglePartition`) below a
-  *     non-limit operator.
+  *     non-limit operator, unless its input is no bigger than AQE's
+  *     minimum partition size (`graft.Shuffle.oneTask`, the size that
+  *     `Shuffle.width` gives one partition).
   *
   * Returns findings rather than throwing: callers decide what is
   * acceptable (tests assert `fatal.isEmpty`, a service might log).
@@ -108,12 +110,19 @@ object PlanLint {
           }
         case _ => ()
       }
-      if (node.toString.startsWith("Exchange SinglePartition"))
+      if (node.toString.startsWith("Exchange SinglePartition") && !oneTaskInput(node))
         findings += Finding("advisory", "Exchange",
           "single-partition exchange — downstream runs on one task")
     }
     findings.toSeq
   }
+
+  // an input that [[graft.Shuffle.width]] sizes to one partition: one
+  // task is the right width for it, not a funnel
+  private def oneTaskInput(node: SparkPlan): Boolean =
+    node.logicalLink.orElse(node.children.headOption.flatMap(_.logicalLink))
+      .exists(l => graft.Shuffle.oneTask(l.stats.sizeInBytes,
+        org.apache.spark.sql.internal.SQLConf.get))
 
   // a window partition key is usually an AttributeReference to a
   // `_w0 = <expr>` alias the planner extracted into a child Project

@@ -1,8 +1,10 @@
 package graft.spatial
 
 import graft.Panel
-import org.apache.spark.sql.DataFrame
+import graft.ops.{TemporalOps, UnitScan}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField}
 
 /** Classical spatial-autocorrelation statistics over the unit grid —
   * the inference companions of the spatial-LAG features (splag4d and
@@ -22,7 +24,9 @@ import org.apache.spark.sql.functions._
   * integers at the scan; every neighbour sum, cross-sectional moment
   * and demeaned cross-product is EXACT integer/DECIMAL arithmetic
   * (Moran's numerator uses z_i = n·x_i − Σx so no rational mean is
-  * ever summed); floats appear only in the final closed forms.
+  * ever summed); floats appear only in the final closed forms. The
+  * emerging-hot-spot taxonomy reduces each cell's Gi* series in one
+  * [[Panel.reduce]] per cell, as the per-unit diagnostics do.
   */
 object SpatialStats {
 
@@ -173,7 +177,8 @@ object SpatialStats {
     * screening: WHERE is escalation starting, persisting, fading): the
     * monthly [[getisOrdGi]] z-scores per cell feed a Mann–Kendall
     * trend (exact integer S over the 1e-6-rounded gi series) plus
-    * hot/cold month counts, and a deterministic taxonomy labels each
+    * hot/cold month counts — one [[Panel.reduce]] per cell over its gi
+    * series in month order — and a deterministic taxonomy labels each
     * cell:
     *  - `intensifying` — hot ≥ 90% of months AND rising (S > 0)
     *  - `persistent`   — hot ≥ 90% of months
@@ -191,29 +196,20 @@ object SpatialStats {
     val gi = getisOrdGi(panel, valueCol, lonCol, latCol)
       .select(col(Panel.TimeCol), col(Panel.UnitCol), col("gi"))
       .filter(col("gi").isNotNull)
-    // Mann–Kendall S through the bounded single-pass aggregate
-    // (graft.ops.MannKendall — r15): the former unit-keyed self-join
-    // (T²/2 pair rows per unit through a join + shuffle) is folded
-    // into the SAME aggregation that computes the month counters —
-    // one exchange for the whole taxonomy, no pair table. S is the
-    // identical integer (same sign comparisons, associative ±1 sum);
-    // a single-month unit gets S = 0 exactly as the old left-join +
-    // fill(0) did for its empty pair set.
-    val mkS = udaf(new graft.ops.MannKendall.MkS)
-    val per = gi.groupBy(col(Panel.UnitCol))
-      .agg(count(lit(1)).as("n_months"),
-        sum(when(col("gi") > z, 1L).otherwise(0L)).as("n_hot"),
-        sum(when(col("gi") < -z, 1L).otherwise(0L)).as("n_cold"),
-        max(struct(col(Panel.TimeCol), col("gi"))).as("__last"),
-        mkS(col(Panel.TimeCol).cast("long"), col("gi")).as("__mk"))
-    per
-      .withColumn("mk_s", col("__mk.s"))
-      .select(col(Panel.UnitCol), col("n_months"), col("n_hot"),
+    val per = Panel.reduce(gi, Panel.UnitCol, Some(Panel.TimeCol), Seq("gi"),
+        Seq(StructField("n_months", LongType, nullable = false), StructField("n_hot", LongType),
+          StructField("n_cold", LongType), StructField("__last_gi", DoubleType),
+          StructField("mk_s", LongType))) { g =>
+      val v = g.doubles(0)
+      Seq(Row(v.length.toLong, v.count(UnitScan.sqlGreater(_, z)).toLong,
+        v.count(UnitScan.sqlGreater(-z, _)).toLong, v.last, TemporalOps.mannKendallS(v)))
+    }
+    per.select(col(Panel.UnitCol), col("n_months"), col("n_hot"),
         col("n_cold"), col("mk_s"),
         when(col("n_hot") * 10 >= col("n_months") * 9 && col("mk_s") > 0,
           "intensifying")
           .when(col("n_hot") * 10 >= col("n_months") * 9, "persistent")
-          .when(col("__last.gi") > z &&
+          .when(col("__last_gi") > z &&
             col("n_hot") * 2 <= col("n_months"), "emerging")
           .when(col("n_hot") > 0, "sporadic")
           .otherwise("none").as("pattern"))

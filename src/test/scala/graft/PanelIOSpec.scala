@@ -60,12 +60,13 @@ class PanelIOSpec extends SparkSpec {
       df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).sorted.toSeq
     assert(rows(scanned) ==
       rows(t.withColumn("value", WindowReference.tlag(col("value"), 1))))
-    // so do the scan steps that were windows, and the unit-keyed kernels
-    // of the other panel lags
+    // so do the scan steps that were windows, the unit-keyed kernels of
+    // the other panel lags and the reduce form of a diagnostic
     Seq(Registry.Step("ewma", Seq(0.5, 3.0)), Registry.Step("onset", Seq(2.0)),
         Registry.Step("tlags3d", Seq(1.0, 2.0)),
         Registry.Step("temporal_tree_lag", Seq(0.8, "uniform")),
-        Registry.Step("spacetime_dist", Seq("distances", 2.0, 1.0, 0.0, 5.0))).foreach { step =>
+        Registry.Step("spacetime_dist", Seq("distances", 2.0, 1.0, 0.0, 5.0)),
+        Registry.Step("acf", Seq(3.0))).foreach { step =>
       val lagged = Registry.apply(t, step)
       val (nk, kernelPlan) = exchanges(lagged)
       assert(nk == 0, s"bucketed ${step.name} should be shuffle-free, got $nk exchanges:\n$kernelPlan")

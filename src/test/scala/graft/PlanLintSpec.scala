@@ -98,7 +98,7 @@ class PlanLintSpec extends SparkSpec {
     // rounded to 1e-6 — the cancellation amplifies cross-engine window
     // reassociation noise above the output grid
     val wAll = Window.partitionBy(Panel.UnitCol)
-    val cum = Panel.cumulative
+    val cum = WindowReference.cumulative
     val mean = round(avg(col("value")).over(wAll), 9)
     val sd = round(stddev_pop(col("value")).over(wAll), 9)
     val cs = sum(col("value")).over(cum) - count(col("value")).over(cum) * mean
@@ -151,7 +151,7 @@ class PlanLintSpec extends SparkSpec {
       .toDF(Panel.TimeCol, Panel.UnitCol, "value")
     // quantizing AFTER an ordered unbounded SUM(double) grids noise
     // that already exceeded the grid — the exemption must not bless it
-    val cum = Panel.cumulative
+    val cum = WindowReference.cumulative
     val late = panel.select(col(Panel.TimeCol), col(Panel.UnitCol),
       (round(sum(col("value")).over(cum) * 1e9).cast("long")
         .cast("double") / 1e9).as("cs"))
@@ -271,6 +271,20 @@ class PlanLintSpec extends SparkSpec {
       s"blessed names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
   }
 
+  test("a single-partition exchange is a finding only over an input bigger than one " +
+      "task's worth") {
+    val panel = (1L to 5L).flatMap(m => (0L to 3L).map(u => (m, u, m * 1.0)))
+      .toDF(Panel.TimeCol, Panel.UnitCol, "value")
+    val tlag = Registry.apply(panel, Registry.Step("tlag", Seq(1.0)))
+    val plan = tlag.queryExecution.sparkPlan.toString
+    assert(plan.contains("Exchange SinglePartition"), plan)
+    assert(!PlanLint.lint(tlag).exists(_.node == "Exchange"), PlanLint.lint(tlag).mkString("; "))
+    // 8 MB of estimated input through one task is still the funnel
+    val big = spark.range(0, 1000000L).toDF().repartition(1)
+    assert(PlanLint.lint(big).exists(f => f.node == "Exchange" &&
+      f.detail.startsWith("single-partition exchange")), PlanLint.lint(big).mkString("; "))
+  }
+
   test("the engine's own scale-audited operators lint clean of fatals") {
     val docs = Seq((1L, "a b c d e"), (2L, "b c d e f"), (3L, "x y z w q"))
       .toDF("doc_id", "text")
@@ -333,8 +347,9 @@ object PlanLintSpec {
     // now an integer sum of per-event 1e-9 fixings (Panel.fromEvents
     // r14) — their own arithmetic was already fixing/percentile-based.
     // q_rolling_corr, q_trend and q_decompose left this list when their
-    // sums moved inside the per-unit scan, where no plan holds them.
-    "q_acf", "q_pacf",
-    "q_theil_sen", "q_runs_test", "q_mice_gen",
+    // sums moved inside the per-unit scan, where no plan holds them;
+    // q_acf, q_pacf, q_theil_sen and q_runs_test when their window sums
+    // and median aggregates moved inside their per-unit reduce kernels.
+    "q_mice_gen",
     "q_bm25", "q_lm_score", "q_pipeline_corpus_signals")
 }

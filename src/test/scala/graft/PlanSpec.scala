@@ -499,14 +499,17 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
-  test("dominantPeriod explodes in-plan — no join, no product") {
+  test("dominantPeriod is one unit kernel — no join, no product, no window") {
     val p = Seq((1L, 1L, 1.0), (2L, 1L, 2.0))
       .toDF(Panel.TimeCol, Panel.UnitCol, "value")
     val plan = ops.TemporalOps.dominantPeriod(p, "value")
       .queryExecution.executedPlan.toString()
     assert(!plan.contains("CartesianProduct"), plan)
-    assert(!plan.contains("Join"), plan) // explode + aggregates only
-    assert(plan.contains("Generate"), plan)
+    assert(!plan.contains("Join"), plan)
+    // one exchange and one sort under the grouped map
+    assert(plan.split("\n").count(_.contains("Exchange")) == 1, plan)
+    assert(plan.split("\n").count(_.contains("Sort")) == 1, plan)
+    assert(!plan.contains("Window") && plan.contains("MapGroups"), plan)
   }
 
   test("exactQuantiles is a range exchange, never a value-buffer agg") {

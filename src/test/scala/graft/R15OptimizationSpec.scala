@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class R15OptimizationSpec extends SparkSpec {
   import spark.implicits._
 
-  // ---- MannKendall.MkS: the bounded aggregate vs the pair self-join
+  // ---- mannKendall: the per-unit kernel vs the brute-force pair loop
 
   private def series = Seq(
     // unit 1: noisy up-trend with ties; unit 2: flat (all ties);
@@ -24,11 +24,9 @@ class R15OptimizationSpec extends SparkSpec {
     (4L, 1L, 9.0), (4L, 2L, 5.0), (4L, 3L, 1.0)
   ).toDF("unit_id", "month_id", "value")
 
-  test("MkS aggregate equals the brute-force pair loop per unit") {
-    val mk = udaf(new graft.ops.MannKendall.MkS)
-    val got = series.groupBy(col("unit_id"))
-      .agg(mk(col("month_id").cast("long"), col("value")).as("m"))
-      .select(col("unit_id"), col("m.s"), col("m.n"))
+  test("mannKendall's S and n equal the brute-force pair loop per unit") {
+    val got = graft.ops.TemporalOps.mannKendall(series, "value")
+      .select(col("unit_id"), col("s"), col("n"))
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     val rows = series.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -39,7 +37,9 @@ class R15OptimizationSpec extends SparkSpec {
       } yield math.signum(v(j) - v(i)).toLong).sum
       u -> ((s, v.length.toLong))
     }
-    assert(got == want)
+    // the single-observation unit 3 has no pair and no output row
+    assert(want(3L) == ((0L, 1L)))
+    assert(got == want - 3L)
   }
 
   test("mannKendall output matches the pre-r15 join form's row set") {

@@ -159,6 +159,32 @@ class ShuffleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     } finally OpCache.clear(s200)
   }
 
+  /** The wire's per-unit diagnostics, one [[Panel.reduce]] each. */
+  private val diagnosticSpecs = Seq("""[{"type":"acf","args":[3]}]""", """[{"type":"pacf"}]""",
+    """[{"type":"theil_sen"}]""", """[{"type":"mann_kendall"}]""", """[{"type":"runs_test"}]""",
+    """[{"type":"seasonal_strength","args":[7,2]}]""",
+    """[{"type":"forecast_backtest","args":[7]}]""", """[{"type":"changepoint"}]""")
+
+  test("each per-unit diagnostic wire step is at most one exchange and one sort, with no " +
+      "window and no join, and its rows are bit-identical in a 200-partition session") {
+    val s200 = spark.newSession()
+    s200.conf.set("spark.sql.shuffle.partitions", "200")
+    try diagnosticSpecs.foreach { sp =>
+      val rows = Seq("suite" -> spark, "200-partition" -> s200).map { case (name, s) =>
+        // NaN has no 1e-6 or 1e-9 fixing under ANSI: the panel keeps its nulls and zeros
+        val df = Registry.run(s.read.parquet(panelPath).filter(!isnan(col("value"))), sp)
+        val (exchanges, sorts, windows) = shape(df)
+        val joins = collectWithSubqueries(df.queryExecution.executedPlan) {
+          case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+        }
+        assert(exchanges <= 1 && sorts <= 1 && windows == 0 && joins.isEmpty,
+          s"$name session, $sp:\n${df.queryExecution.executedPlan}")
+        bits(df.collect())
+      }
+      assert(rows.head.nonEmpty && rows.head == rows(1), s"$sp: rows differ between the sessions")
+    } finally OpCache.clear(s200)
+  }
+
   test("a 9,600-row panel's tlag is one exchange of width 1, with the rows of a " +
       "200-partition exchange") {
     val units = for (lat <- 0L until 20L; lon <- 0L until 20L) yield lat * Grid.UnitCols + lon

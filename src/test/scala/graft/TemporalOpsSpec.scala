@@ -90,8 +90,7 @@ class TemporalOpsSpec extends SparkSpec {
     // rolling median ignores a spike the moving average would chase:
     // series 1,100,3,5 window 3 -> 1, 50.5 (interp of 2), 3, 5
     val sp = panel1(1, 100, 3, 5)
-    assert(outDoubles(sp.select(col(T),
-        TemporalOps.rollingMedian(col("value"), 3).as("m")), "m")
+    assert(outDoubles(scan(sp, "m", RollingMedian(3)), "m")
       == Seq(1.0, 50.5, 3.0, 5.0))
   }
 

@@ -2,11 +2,11 @@ package graft
 
 import graft.ops.TemporalOps
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** The window formulation of the per-unit steps that run as
-  * [[graft.ops.UnitScan]]: each step Spark windows over `Panel.w`
+  * [[graft.ops.UnitScan]]: each step Spark windows over [[w]]
   * (partition by unit, order by month) or over the unit's whole series.
   * This is the semantics the scan reproduces — bit for bit where the
   * window's frame is month-ordered — kept here as the reference the
@@ -16,9 +16,15 @@ import org.apache.spark.sql.functions._
   * tlag3d.py, temporal_entropy.py, missing.py (fill/extrapolate).
   */
 object WindowReference {
-  private def w = Panel.w
-  private def trailing(n: Int) = Panel.trailing(n)
-  private def cum = Panel.cumulative
+  /** Per-unit time window — the order every per-unit step shares. */
+  def w: WindowSpec = Window.partitionBy(Panel.UnitCol).orderBy(Panel.TimeCol)
+
+  /** `w` with a trailing row frame of `n` rows (current row included). */
+  def trailing(n: Int): WindowSpec = w.rowsBetween(-(n - 1), 0)
+
+  /** Cumulative (expanding) frame. */
+  def cumulative: WindowSpec = w.rowsBetween(Window.unboundedPreceding, 0)
+  private def cum = cumulative
 
   /** Shift back `t` steps (t >= 1) — views_2.py:82-97. */
   def tlag(c: Column, t: Int): Column = {
